@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warm up JVM/codegen per query at the smallest SF: generated code
     // depends on plan structure, not data volume, so a tiny-SF pass

@@ -36,6 +36,9 @@ object GraftSession {
       // small local[N] rigs (all task slots block in its async close);
       // plain checkpoint files are fine for our durability model.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      // `file:` through FileSystem and FileContext sets permissions in
+      // process instead of forking chmod per file (see ForkFreeLocalFs)
+      .config(graft.log.ForkFreeLocalFs.confs)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
 
@@ -83,8 +86,20 @@ object GraftSession {
       })
   private def parAll(thunks: Seq[() => AnyRef]): Seq[AnyRef] = {
     import scala.jdk.CollectionConverters._
+    // Pool threads keep the active session they inherited when they
+    // were created, which need not be the caller's: each thunk runs
+    // under the caller's active session instead.
+    val active = SparkSession.getActiveSession
     val futures = parPool.invokeAll(thunks.map { th =>
-      new java.util.concurrent.Callable[AnyRef] { def call(): AnyRef = th() }
+      new java.util.concurrent.Callable[AnyRef] {
+        def call(): AnyRef = {
+          active match {
+            case Some(s) => SparkSession.setActiveSession(s)
+            case None    => SparkSession.clearActiveSession()
+          }
+          th()
+        }
+      }
     }.asJava)
     // Unwrap the pool's ExecutionException so callers see the thunk's
     // own failure (e.g. ckpt's fail-fast IllegalArgumentException when

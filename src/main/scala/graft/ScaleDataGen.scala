@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch diagnostic main (not part of the driver contract): builds a
@@ -39,14 +39,11 @@ object ScaleDataGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/root/scaledata/sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // the per-copy alphabet rotation has period 26: copy 26 would
+    // repeat copy 0's text and every doc would gain a verbatim twin
+    require(k >= 1 && k <= 26, s"copy count k must be in 1..26 (got $k)")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val OFF = 10000000L
     val alpha = "abcdefghijklmnopqrstuvwxyz"

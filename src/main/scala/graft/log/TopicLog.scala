@@ -326,13 +326,11 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   private def publishLocked(records: DataFrame,
       held: FsLease.Held): Map[Int, TopicLog.OffsetRange] = {
     val base = headsPersist()
-    val baseDf = spark.createDataFrame(
-      java.util.Arrays.asList(
-        (0 until numPartitions).map(p =>
-          org.apache.spark.sql.Row(p, base.getOrElse(p, -1L))): _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("log_part", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("base_offset", org.apache.spark.sql.types.LongType))))
+    // per-partition base offsets as an array literal indexed by
+    // log_part: no join (and no broadcast job), and the literal reaches
+    // generated code by reference, so the code is the same on every
+    // publish and is not recompiled
+    val bases = typedLit((0 until numPartitions).map(p => base.getOrElse(p, -1L)))
     val w = Window.partitionBy(col("log_part"))
       .orderBy(col("ts"), col("event"), col("key"), col("message"))
     val obs = Observation()
@@ -342,8 +340,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
       .withColumn("log_part",
         pmod(hash(coalesce(col("key"), col("message"))), lit(numPartitions)).cast("int"))
       .withColumn("seq", row_number().over(w).cast("long"))
-      .join(broadcast(baseDf), Seq("log_part"))
-      .withColumn("offset", col("base_offset") + col("seq"))
+      .withColumn("offset", element_at(bases, col("log_part") + 1) + col("seq"))
       .withColumn("log_date", to_date(col("ts")))
       .select(col("offset"), col("ts"), col("event"), col("key"),
         col("message"), col("log_part"), col("log_date"))

@@ -23,7 +23,15 @@ object Relational {
     * then multiplies a 15-row frame instead of the fact table. `s` is
     * the exact decimal(28,2) quantity sum — re-summing decimals is
     * order-independent, so the coarser sets' totals (and their double
-    * casts) are bit-identical to a direct dsum over raw rows. */
+    * casts) are bit-identical to a direct dsum over raw rows.
+    *
+    * NOTE: the pre-aggregation is decomposition-exact ONLY for sum and
+    * count — consumers re-aggregate `s` and `n` with `sum`. An average
+    * of the pre-aggregated rows weighs each (flag, status) group equally
+    * and a countDistinct counts groups, not rows: a new aggregate in
+    * q13/q44/q106 needs its own decomposition (avg = sum(s) / sum(n))
+    * and a re-check against the raw formulation. RelationalSpec pins
+    * both the aggregate set and the raw-formulation equality. */
   private def groupedBase(s: SparkSession, dir: String): DataFrame =
     table(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))

@@ -82,6 +82,41 @@ class RelationalSpec extends AnyFunSuite {
       s"cube Expand factor ${expands.map(_.projections.size)} — expected 4")
   }
 
+  test("groupedBase consumers (q13/q44/q106) re-aggregate by sum only and equal the raw rows") {
+    // groupedBase pre-aggregates lineitem to (flag, status) with sum and
+    // count; only a plain sum of those partials decomposes exactly — an
+    // avg or countDistinct over them would aggregate groups, not rows
+    import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.functions._
+    val (f, st) = (col("l_returnflag"), col("l_linestatus"))
+    val cases = Seq[(String, String, DataFrame => RelationalGroupedDataset)](
+      ("q13_rollup", "ALL", _.rollup(f, st)),
+      ("q44_grouping_sets", "ALL", _.groupingSets(Seq(Seq(f), Seq(st)), f, st)),
+      ("q106_cube", "all", _.cube(f, st)))
+    val li = GraftSession.table(spark, sf, "lineitem")
+    cases.foreach { case (q, all, grouping) =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      val consumers = df.queryExecution.analyzed.collect {
+        case a: Aggregate if a.child.exists(_.isInstanceOf[Aggregate]) => a
+      }
+      assert(consumers.nonEmpty, s"$q no longer aggregates over groupedBase")
+      val bad = consumers.flatMap(_.aggregateExpressions.flatMap(_.collect {
+        case ae: AggregateExpression
+            if ae.isDistinct || !ae.aggregateFunction.isInstanceOf[Sum] => ae
+      }))
+      assert(bad.isEmpty, s"$q re-aggregates groupedBase with ${bad.mkString(", ")}: " +
+        "only sum is decomposition-exact — re-derive against the raw rows")
+      val raw = grouping(li)
+        .agg(GraftSession.dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n_rows"))
+        .select(coalesce(f, lit(all)).as("returnflag"), coalesce(st, lit(all)).as("linestatus"),
+          col("sum_qty"), col("n_rows"))
+        .orderBy(col("returnflag"), col("linestatus"))
+      assert(df.collect().toSeq == raw.collect().toSeq, s"$q differs from the raw formulation")
+    }
+  }
+
   test("q48 shards its window — no 3-reducer status-partition sort") {
     // Scale property (r9 done-criterion, implementation-agnostic):
     // ntile/percent_rank/cume_dist derive from a ShardedCum prefix sum,
