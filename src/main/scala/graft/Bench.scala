@@ -12,8 +12,7 @@ object Bench {
     // Optional local-iteration filter (regex over query names); the
     // driver sets no filter and always measures the full suite.
     val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val warmDir = new java.io.File(sfDir).getParent + "/sf0.001"
-    val warm = if (new java.io.File(warmDir).isDirectory) warmDir else sfDir
+    val warm = warmDir(sfDir)
     SparkEntry.queries.foreach { case (name, fn) =>
       if (nameFilter.forall(_.findFirstIn(name).isDefined))
         try fn(spark, warm).write.format("noop").mode("overwrite").save()
@@ -126,20 +125,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
-    // Full JSON string escape (Verify's q() rule): exception messages
-    // are routinely multi-line, and a raw newline inside the quoted
-    // string broke BOTH the one-line stdout artifact and json.load of
-    // the file artifact (r9 review fix).
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val errJson = errors.map(jstr).mkString("[", ",", "]")
+    val errJson = errors.map(Json.str).mkString("[", ",", "]")
     // "failed" is an explicit first-class field (not just -1.000
     // sentinels a reader has to notice): round 7 shipped a green-rc
     // bench with a third of the suite erroring and nothing flagged it.
@@ -284,6 +270,13 @@ object Bench {
     println(
       s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"failed":$failed,"n":${results.size},"value":$total}""")
     spark.stop()
+  }
+
+  /** The warm-up scale for `sfDir`: its sibling `sf0.001` when that
+    * exists, else `sfDir` itself. */
+  private[graft] def warmDir(sfDir: String): String = {
+    val d = new java.io.File(sfDir).getParent + "/sf0.001"
+    if (new java.io.File(d).isDirectory) d else sfDir
   }
 
   /** Drift-normalized regression gate (r9 verdict ask #4), pure so a

@@ -659,7 +659,7 @@ object ScaleSmoke {
     // reads the index (the corpus is never touched — zero corpus-scan
     // jobs), and total scanned rows are index-sized (one probe-table
     // read), not corpus-pass-sized
-    val ixScans = PlanAudit.collectScans(
+    val ixScans = Diag.collectScans(
       ixProbeAgg.queryExecution.executedPlan,
       new java.util.IdentityHashMap[org.apache.spark.sql.execution.SparkPlan, Boolean]())
     val ixScanPaths = ixScans

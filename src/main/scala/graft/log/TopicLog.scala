@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    insert callback returning the stored doc)
   *  - ack upsert (`topic.js:198-223`)      -> [[ack]] subscriber watermark
   *  - replay from last ack                 -> [[replay]] offset-predicate
-  *    (`topic.js:142-197` replayFrom)         scan, pushed to parquet
+  *    (`topic.js:142-197` replayFrom)         scan
   *  - latest() head (`topic.js:224-250`)   -> [[latest]] / [[heads]]
   *  - capped-size retention (`topic.js:8`) -> [[retainToSize]] oldest-file
   *    drop; plus [[retainAfter]] (time) and [[retainFrom]] (offset)
@@ -66,9 +66,10 @@ import org.apache.spark.sql.functions._
   *    take the SAME lease, so a maintenance swap can never race a
   *    concurrent publish (which would silently drop the appended
   *    batch); the lease renews itself for the duration of long jobs.
-  *  - Replay is `offset > watermark` + event filter, both pushed into
-  *    the parquet scan, so a subscriber reading the tail of a 100 TB
-  *    topic scans only the tail row groups.
+  *  - Replay is `offset > watermark` + event filter, evaluated per row
+  *    after the scan: the watermark is a per-partition array literal
+  *    indexed by `log_part` ([[TopicLog.after]]), which parquet cannot
+  *    push down, so a replay still lists and reads every retained file.
   */
 final class TopicLog(val spark: SparkSession, val path: String, val numPartitions: Int = 8) {
 
@@ -422,8 +423,8 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
 
   /** Durable subscriber watermarks (name, log_part, last_offset): one
     * tiny `subscribers/<name>.json` sidecar per subscriber, parsed
-    * driver-side (subscriber counts are human-scale; the frame is only
-    * ever broadcast). */
+    * driver-side (subscriber counts are human-scale) — the all-
+    * subscribers view for monitoring; replays read [[watermarks]]. */
   def subscribers(): DataFrame = {
     val d = new Path(subsDir)
     val rows: Seq[org.apache.spark.sql.Row] =
@@ -453,17 +454,18 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     writeKv(f, merged)
   }
 
+  /** One subscriber's acked watermarks (log_part -> last acked
+    * offset), read from its own sidecar — the file [[ack]] merges into.
+    * Empty for a subscriber that never acked. */
+  def watermarks(name: String): Map[Int, Long] =
+    readKv(subFile(name)).getOrElse(Map.empty)
+
   /** Replay for a durable subscriber (reference `replay`/`replayFrom`,
     * topic.js:118-197): records strictly after the acked watermark of
     * `name`, optionally filtered to one event type (null = all, matching
     * topic.js:169-171). New subscribers replay from the beginning. */
   def replay(name: String, event: Option[String] = None): DataFrame = {
-    val marks = subscribers().filter(col("name") === name)
-      .select(col("log_part"), col("last_offset"))
-    val base = read()
-      .join(broadcast(marks), Seq("log_part"), "left")
-      .filter(col("last_offset").isNull || col("offset") > col("last_offset"))
-      .drop("last_offset")
+    val base = TopicLog.after(read(), watermarks(name), numPartitions)
     event.fold(base)(e => base.filter(col("event") === e))
       .orderBy(col("log_part"), col("offset"))
   }
@@ -793,6 +795,21 @@ object TopicLog {
     * "size-capped retention deletions", "the N partition-dir swap(s)",
     * and the per-delete retention fences. */
   private[graft] var testBeforeCommit: String => Unit = _ => ()
+
+  /** Records of `log` strictly after per-partition watermarks
+    * (log_part -> last acked offset): one per-row predicate
+    * `offset > marks[log_part]` over an array literal indexed by
+    * log_part (the [[TopicLog.publish]] base-offset mechanism), −1 for a
+    * partition without a mark — exact, since offsets start at 0. An
+    * empty map adds no filter. Batch [[TopicLog.replay]] and the
+    * streaming backlog cut both go through here. */
+  private[graft] def after(log: DataFrame, marks: Map[Int, Long],
+      numPartitions: Int): DataFrame =
+    if (marks.isEmpty) log
+    else {
+      val cut = typedLit((0 until numPartitions).map(p => marks.getOrElse(p, -1L)))
+      log.filter(col("offset") > element_at(cut, col("log_part") + 1))
+    }
 
   /** The offsets a publish assigned in one partition: records got
     * offsets (base, base + count] — base is the partition's previous

@@ -209,62 +209,34 @@ object Dedup {
   }
   private val ccLog = org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
 
-  /** Iterative-lineage truncation for the clustering loops.
-    * `reliable = false` uses `localCheckpoint` — fastest, but blocks
-    * are pinned to the executors that computed them, so an executor
-    * loss (or dynamic-allocation scale-down) mid-loop kills the job.
-    * `reliable = true` writes through the RELIABLE checkpoint
-    * directory (`spark.sparkContext.setCheckpointDir`, typically on
-    * the cluster's shared store) — the deployment-safe mode for a real
-    * cluster; the caller must have set the checkpoint dir (fail fast
-    * here, not N rounds in). Results are identical either way
-    * (spec-proved); only fault tolerance and per-round IO differ. */
-  private def iterCheckpoint(df: DataFrame, reliable: Boolean): DataFrame =
-    if (!reliable) ckpt(df) // honors spark.graft.reliableCheckpoints too
-    else {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliable=true needs spark.sparkContext.setCheckpointDir(...) — " +
-          "set it to a shared-store path before iterative clustering")
-      df.checkpoint()
-    }
-
-  /** The reliable-checkpoint files behind `df`, when `df` came out of
-    * an (eager) `Dataset.checkpoint()` — i.e. its plan ROOT is the
-    * `LogicalRDD` over the checkpointed RDD. Root-only on purpose: a
-    * derived frame (e.g. the first-round labels, an Aggregate OVER the
-    * pinned edge checkpoint) contains a LogicalRDD deeper in its tree,
-    * and matching there would delete a checkpoint that later rounds
-    * still read. */
-  private def checkpointFilesOf(df: DataFrame): Option[org.apache.hadoop.fs.Path] =
-    (df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
-      case _ => None
-    }).map(new Path(_))
-
-  /** Delete the reliable checkpoint behind a ROTATED round frame so a
-    * long clustering loop does not grow the shared checkpoint dir by
-    * one copy of the label/edge set PER ROUND (the driver GC's
-    * `cleanCheckpoints` conf is off by default and fires late). Call
-    * only after nothing reads the frame again — i.e. after the round's
-    * convergence check, just before re-binding the loop variable. The
-    * PINNED initial edge list and the FINAL round's checkpoint are
-    * intentionally kept (the caller still consumes them); they are
-    * app-teardown / `spark.cleaner.referenceTracking.cleanCheckpoints`
-    * territory. No-op in localCheckpoint mode (blocks are GC-managed)
-    * and on frames that were never round-checkpointed. */
-  private def dropRoundCheckpoint(df: DataFrame, reliable: Boolean): Unit =
-    if (reliable) checkpointFilesOf(df).foreach { p =>
-      val fs = p.getFileSystem(
-        df.sparkSession.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
-      ()
-    } else df.queryExecution.logical match {
-      // local mode pins each round's blocks in executor storage until
-      // driver GC notices — a 30-round loop otherwise carries every
-      // superseded label set in memory (the ScaleSmoke CC phase tipped
-      // a 16G heap over exactly this). Same root-only contract as the
-      // reliable branch: only called once nothing reads the frame.
+  /** Drop the checkpoint behind a ROTATED round frame (its plan ROOT
+    * is the `LogicalRDD` an eager [[ckpt]] leaves). Call only after
+    * nothing reads the frame again — i.e. after the round's
+    * convergence check, just before re-binding the loop variable.
+    * Root-only on purpose: a derived frame (e.g. the first-round
+    * labels, an Aggregate OVER the pinned edge checkpoint) contains a
+    * LogicalRDD deeper in its tree, and matching there would drop a
+    * checkpoint that later rounds still read. The PINNED initial edge
+    * list and the FINAL round's checkpoint are intentionally kept (the
+    * caller still consumes them).
+    *  - reliable checkpoint (`spark.graft.reliableCheckpoints`): delete
+    *    its files, so a long clustering loop does not grow the shared
+    *    checkpoint dir by one copy of the label/edge set PER ROUND (the
+    *    driver GC's `cleanCheckpoints` conf is off by default and fires
+    *    late);
+    *  - local checkpoint: unpersist its blocks — a 30-round loop
+    *    otherwise carries every superseded label set in executor memory
+    *    until driver GC notices (the ScaleSmoke CC phase tipped a 16G
+    *    heap over exactly this).
+    * The checkpoint file is present exactly when [[ckpt]] took the
+    * reliable branch, so the frame itself says which applies. */
+  private def dropRoundCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.getCheckpointFile.map(new Path(_)).foreach { p =>
+          p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(p, true)
+        }
         r.rdd.unpersist(blocking = false); ()
       case _ => ()
     }
@@ -344,18 +316,16 @@ object Dedup {
     * the per-round edges⋈labels sort-merge join buffers every match of
     * a hub key (ScaleSmoke's 125k-degree hub OOMs a default driver
     * heap here; the star variant does not). */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
-      reliable: Boolean = false): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     // Materialize the edge list ONCE: every round (and every
     // convergence check) re-reads it, and without this the whole
     // upstream pair-generation pipeline would re-execute per round.
     val obsE = new org.apache.spark.sql.Observation(
       s"graft-cc-${java.util.UUID.randomUUID()}")
-    val edges = iterCheckpoint(
+    val edges = ckpt(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .observe(obsE, count(lit(1)).as("n")),
-      reliable)
+        .observe(obsE, count(lit(1)).as("n")))
     // small-graph fast path: both directions were counted, so the bar
     // doubles (see localEdgeThreshold)
     if (obsCount(obsE.getAsJava.get("n")) <
@@ -363,7 +333,7 @@ object Dedup {
       val arr = edges.collect().map(r => (
         r.get(0).asInstanceOf[Number].longValue(),
         r.get(1).asInstanceOf[Number].longValue()))
-      dropRoundCheckpoint(edges, reliable)
+      dropRoundCheckpoint(edges)
       lastCcRounds = 0
       return unionFindLabels(pairs.sparkSession, arr)
     }
@@ -398,20 +368,19 @@ object Dedup {
       // relies on.
       val obs = new org.apache.spark.sql.Observation(
         s"graft-cc-${java.util.UUID.randomUUID()}")
-      val next = iterCheckpoint(edges
+      val next = ckpt(edges
         .join(labels.withColumnRenamed("node", "dst"), "dst")
         .select(col("src").as("node"), col("label"))
         .unionByName(labels)
         .groupBy(col("node"))
         .agg(min(col("label")).as("label"))
-        .observe(obs, sumExpr),
-        reliable) // truncate the growing iterative lineage
-      // the (local|reliable) checkpoint was the eager action, so the
-      // metric is already resolved — this get never waits on a job
+        .observe(obs, sumExpr)) // truncate the growing iterative lineage
+      // the checkpoint was the eager action, so the metric is
+      // already resolved — this get never waits on a job
       val s = asSum(obs.getAsJava.get("s"))
       converged = s.compareTo(prevSum) == 0
       prevSum = s
-      dropRoundCheckpoint(labels, reliable) // round N-1 no longer read
+      dropRoundCheckpoint(labels) // round N-1 no longer read
       labels = next
       i += 1
     }
@@ -431,8 +400,7 @@ object Dedup {
     * the edge list), so it drops in wherever chains/deep graphs make
     * min-label slow. Each round strictly shrinks edge count toward the
     * star form, so later rounds get cheaper. Public df-level API. */
-  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 50,
-      reliable: Boolean = false): DataFrame = {
+  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     // Convergence witness (r14, the r12 observe-metric reclaim applied
     // to the star variant): fixpoint = identical edge SET round over
     // round, but a full-outer set comparison is its own exchange-heavy
@@ -452,13 +420,12 @@ object Dedup {
     }
     val obs0 = new org.apache.spark.sql.Observation(
       s"graft-ccstar-${java.util.UUID.randomUUID()}")
-    var edges = iterCheckpoint(
+    var edges = ckpt(
       pairs.select(
           greatest(col("doc_a"), col("doc_b")).as("hi"),
           least(col("doc_a"), col("doc_b")).as("lo"))
         .filter(col("hi") =!= col("lo")).distinct()
-        .observe(obs0, wCnt, wSum("hi"), wSum("lo")),
-      reliable)
+        .observe(obs0, wCnt, wSum("hi"), wSum("lo")))
     var w = witnessOf(obs0)
     // small-graph fast path (see localEdgeThreshold): the count rides
     // the witness metrics already observed on the checkpoint job
@@ -466,7 +433,7 @@ object Dedup {
       val arr = edges.collect().map(r => (
         r.get(0).asInstanceOf[Number].longValue(),
         r.get(1).asInstanceOf[Number].longValue()))
-      dropRoundCheckpoint(edges, reliable)
+      dropRoundCheckpoint(edges)
       lastCcRounds = 0
       return unionFindLabels(pairs.sparkSession, arr)
     }
@@ -489,15 +456,14 @@ object Dedup {
       val smins = afterLarge.groupBy(col("hi").as("x")).agg(min(col("lo")).as("m"))
       val obs = new org.apache.spark.sql.Observation(
         s"graft-ccstar-${java.util.UUID.randomUUID()}")
-      val next = iterCheckpoint(
+      val next = ckpt(
         afterLarge.join(smins, col("hi") === col("x"))
           .select(col("lo").as("node"), col("m"))
           .union(smins.select(col("x").as("node"), col("m")))
           .filter(col("node") =!= col("m"))
           .select(col("node").as("hi"), col("m").as("lo"))
           .distinct()
-          .observe(obs, wCnt, wSum("hi"), wSum("lo")),
-        reliable)
+          .observe(obs, wCnt, wSum("hi"), wSum("lo")))
       val wNext = witnessOf(obs)
       // fixpoint = identical edge set (stars centered at component
       // mins); the exact comparison runs only when the witness is
@@ -508,7 +474,7 @@ object Dedup {
             "full_outer")
           .filter(col("n.hi").isNull || col("o.hi").isNull).isEmpty
       w = wNext
-      dropRoundCheckpoint(edges, reliable) // round N-1 no longer read
+      dropRoundCheckpoint(edges) // round N-1 no longer read
       edges = next
       i += 1
     }
@@ -1488,23 +1454,16 @@ object Dedup {
       // r15 (guide §1.2/§2.4): the per-doc novelty frame is ckpt'd ONCE
       // — the old plan re-ran the whole two-shuffle novelty pipeline
       // THREE times (range-sampling pass, shard ckpt, and the nTot
-      // count agg) — and the rank runs through the sampling-free
-      // cumSumsBucketed with an id-range bucket: one 1-row stats job
-      // replaces the range-sampling job + shard-pinning ckpt. Bucket
-      // width (id span)/4096 bounds per-bucket volume by the span/4096
-      // id slots (ids are unique) and keeps the offsets table ≤4097
-      // rows — broadcast class at any corpus size. The 1-row collect
-      // is a scalar, not a data pull (the HITS-normalizer precedent).
+      // count agg). doc_id is unique, so idRank's 1-row stats job
+      // picks the shard source: dense ids (every corpus here) take the
+      // sampling-free id grid, clustered ids the range-sampled rank.
+      // The 1-row collect is a scalar, not a data pull (the
+      // HITS-normalizer precedent).
       val nv = graft.GraftSession.ckpt(
         shingleNovelty(table(s, dir, "documents"))
           .select(col("doc_id"), col("novelty")))
-      val stats = nv.agg(count(lit(1)), min(col("doc_id")),
-        max(col("doc_id"))).head()
-      val nDocs = stats.getLong(0)
-      val w = if (nDocs == 0L) 1L
-        else math.max(1L, (stats.getLong(2) - stats.getLong(1) + 1L) / 4096L)
-      ShardedCum.cumSumsBucketed(nv, Nil, Seq(col("doc_id")),
-          expr(s"doc_id div $w"), Seq((lit(1L), "_rn")))
+      val (ranked, nDocs) = ShardedCum.idRank(nv, "doc_id", "_rn")
+      ranked
         .withColumn("_n", lit(nDocs))
         .withColumn("decile", ShardedCum.ntileFromRank("_rn", "_n", 10))
         .groupBy(col("decile"))
@@ -1544,7 +1503,7 @@ object Dedup {
       // CC over its candidate pairs), the CDC rolling-hash checkpoint,
       // and the semantic rung (RHP ckpt + CC inside semDedup) — are
       // mutually independent, but ran strictly serially because the
-      // builder called them serially (JobProfile: 48 jobs, >half the
+      // builder called them serially (`graft.Diag jobs`: 48 jobs, >half the
       // wall in construction). They now build concurrently; each
       // rung's frames are identical, so the report's bytes are too.
       //

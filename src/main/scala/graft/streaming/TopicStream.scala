@@ -117,42 +117,22 @@ object TopicStream {
     * a new subscriber) and then keeps tailing live, with the sink
     * checkpoint carrying the position from there on. */
   def replayThenLive(topic: TopicLog, name: String,
-      event: Option[String] = None): DataFrame = {
-    val marks = topic.subscribers()
-      .filter(col("name") === name)
-      .select(col("log_part"), col("last_offset"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    subscribeAfter(topic, marks, event)
-  }
+      event: Option[String] = None): DataFrame =
+    subscribeAfter(topic, topic.watermarks(name), event)
 
-  /** Backlog cut: records strictly after the per-partition watermarks.
-    * The watermark table rides a BROADCAST stream-static left join (the
-    * same shape as batch [[graft.log.TopicLog.replay]]) — one hash probe
-    * per record regardless of partition count, where a per-partition
-    * filter disjunction would be O(partitions) predicate evaluations per
-    * row and an O(partitions)-node plan. File-source LISTING stays
-    * incremental either way (append-only log); partition-directory
-    * pruning is not available to a streaming source for either shape,
-    * which is why the cut is per-row in the first place. */
+  /** Backlog cut: records strictly after the per-partition watermarks
+    * ([[graft.log.TopicLog.after]], the same per-row predicate as batch
+    * [[graft.log.TopicLog.replay]]). File-source LISTING stays
+    * incremental (append-only log); partition-directory pruning is not
+    * available to a streaming source, which is why the cut is per-row
+    * in the first place. */
   private def subscribeAfter(topic: TopicLog, watermarks: Map[Int, Long],
       event: Option[String]): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val base = topic.spark.readStream
       .schema(TopicLog.SCHEMA)
       .option("maxFilesPerTrigger", "32")
       .parquet(s"${topic.path}/log")
-    val afterMark = if (watermarks.isEmpty) base else {
-      val wm = topic.spark.createDataFrame(
-        java.util.Arrays.asList(watermarks.toSeq.sorted.map { case (p, h) =>
-          Row(p, h)
-        }: _*),
-        StructType(Seq(StructField("wm_part", IntegerType),
-          StructField("wm_off", LongType))))
-      base.join(broadcast(wm), col("log_part") === col("wm_part"), "left")
-        .filter(col("wm_off").isNull || col("offset") > col("wm_off"))
-        .drop("wm_part", "wm_off")
-    }
+    val afterMark = TopicLog.after(base, watermarks, topic.numPartitions)
     event.fold(afterMark)(e => afterMark.filter(col("event") === e))
   }
 

@@ -94,4 +94,13 @@ class BenchGateSpec extends AnyFunSuite {
     val (median, regs) = Bench.findRegressions(Map.empty, Map("q1" -> 1.0))
     assert(median == 1.0 && regs.isEmpty)
   }
+
+  test("Json.str round-trips quote, backslash, newline, tab and control chars") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (s <- Seq("\"", "\\", "\n", "\t", "\u0001", "a\"b\\c\nd\te\u0001f\r")) {
+      val lit = Json.str(s)
+      assert(!lit.exists(_ < ' '), s"raw control char in $lit")
+      assert(mapper.readValue(lit, classOf[String]) == s, lit)
+    }
+  }
 }

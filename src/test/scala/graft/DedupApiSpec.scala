@@ -101,24 +101,25 @@ class DedupApiSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val prior = sc.getCheckpointDir
     assert(prior.isEmpty, "test assumes no ambient checkpoint dir")
-    // fail fast, not N rounds in, when the reliable dir is missing
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponentsStar(pairs, reliable = true)
-    }
-    val ckptDir = java.nio.file.Files.createTempDirectory("cc-reliable")
-    sc.setCheckpointDir(ckptDir.toString)
+    val local = Dedup.connectedComponentsStar(pairs).collect()
+      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
+    spark.conf.set(GraftSession.ReliableCheckpointsConf, "true")
     try {
-      val local = Dedup.connectedComponentsStar(pairs).collect()
-        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-      val reliable = Dedup.connectedComponentsStar(pairs, reliable = true)
+      // fail fast, not N rounds in, when the reliable dir is missing
+      intercept[IllegalArgumentException] {
+        Dedup.connectedComponentsStar(pairs)
+      }
+      val ckptDir = java.nio.file.Files.createTempDirectory("cc-reliable")
+      sc.setCheckpointDir(ckptDir.toString)
+      val reliable = Dedup.connectedComponentsStar(pairs)
         .collect()
         .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
       assert(reliable == local, "checkpoint mode changed cluster labels")
-      val ml = Dedup.connectedComponents(pairs, maxIters = 100,
-        reliable = true).collect()
+      val ml = Dedup.connectedComponents(pairs, maxIters = 100).collect()
         .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
       assert(ml == local)
     } finally {
+      spark.conf.unset(GraftSession.ReliableCheckpointsConf)
       // SparkContext has no unsetCheckpointDir; the conf object does —
       // keep the shared session pristine for other suites
       sc.setCheckpointDir(null)
@@ -292,9 +293,9 @@ class DedupApiSpec extends AnyFunSuite {
     assert(sc.getCheckpointDir.isEmpty, "test assumes no ambient checkpoint dir")
     val ckptDir = java.nio.file.Files.createTempDirectory("cc-rotate")
     sc.setCheckpointDir(ckptDir.toString)
+    spark.conf.set(GraftSession.ReliableCheckpointsConf, "true")
     try {
-      val labels = Dedup.connectedComponents(pairs, maxIters = 100,
-        reliable = true).collect()
+      val labels = Dedup.connectedComponents(pairs, maxIters = 100).collect()
         .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
       assert(labels.values.toSet == Set(2000L), "chain must collapse to one cluster")
       val rounds = Dedup.lastCcRounds
@@ -308,13 +309,14 @@ class DedupApiSpec extends AnyFunSuite {
       assert(rddDirs <= 2,
         s"expected <=2 surviving checkpoints after $rounds rounds, found $rddDirs")
       // star contraction rotates its edge variable every round too
-      val star = Dedup.connectedComponentsStar(pairs, reliable = true)
+      val star = Dedup.connectedComponentsStar(pairs)
         .collect()
         .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
       assert(star == labels)
       assert(rddDirs <= 3, // + the star loop's final edge set
         s"star loop leaked round checkpoints: $rddDirs dirs")
     } finally {
+      spark.conf.unset(GraftSession.ReliableCheckpointsConf)
       sc.setCheckpointDir(null)
       spark.conf.unset("spark.graft.cc.localEdgeThreshold")
     }

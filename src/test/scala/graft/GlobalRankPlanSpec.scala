@@ -8,10 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Lorenz rank) formerly ranked through an unpartitioned or
   * low-cardinality window — the whole frame sorted on one (or few)
   * reducer(s) at scale. They now derive ranks from ShardedCum prefix
-  * counts: every remaining window in the plan must carry a shard
-  * column — `_shard` (range-sampled cumSums) or `_bucket` (the
-  * sampling-free monotone cumSumsBucketed), either of which bounds
-  * the per-partition sort (the range exchange itself is eager inside
+  * counts: every remaining window in the plan must carry ShardedCum's
+  * `_shard` column, which bounds the per-partition sort whichever
+  * shard source made it (the range exchange itself is eager inside
   * cumSums' ckpt, so it does not always print in the final plan).
   * q71's source totals must ride a broadcast, not an
   * empty-partition window.
@@ -29,11 +28,9 @@ class GlobalRankPlanSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       val windows = plan.linesIterator
         .filter(_.contains("windowspecdefinition")).toSeq
-      assert(windows.nonEmpty &&
-          windows.forall(w => w.contains("_shard") || w.contains("_bucket")),
-        s"$name has a window without a shard/bucket column:\n" +
-          windows.filterNot(w =>
-            w.contains("_shard") || w.contains("_bucket")).mkString("\n"))
+      assert(windows.nonEmpty && windows.forall(_.contains("_shard")),
+        s"$name has a window without the shard column:\n" +
+          windows.filterNot(_.contains("_shard")).mkString("\n"))
       assert(!plan.contains("ntile("),
         s"$name still plans an ntile window:\n${plan.take(1200)}")
     }

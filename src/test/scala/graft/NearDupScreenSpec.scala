@@ -85,7 +85,7 @@ class NearDupScreenSpec extends AnyFunSuite {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           durationNs: Long): Unit =
-        PlanAudit.collectScans(qe.executedPlan,
+        Diag.collectScans(qe.executedPlan,
           new java.util.IdentityHashMap[
             org.apache.spark.sql.execution.SparkPlan, Boolean]())
           .foreach(scans.add)

@@ -121,17 +121,22 @@ class RelationalSpec extends AnyFunSuite {
     // Scale property (r9 done-criterion, implementation-agnostic):
     // ntile/percent_rank/cume_dist derive from a ShardedCum prefix sum,
     // so no Window may partition on o_orderstatus ALONE — that would be
-    // the 3-reducer funnel the rewrite removes. The shard can be the
-    // range-sampled `_shard` (cumSums) or the sampling-free monotone
-    // `_bucket` (cumSumsBucketed); either bounds the per-partition sort.
+    // the 3-reducer funnel the rewrite removes. Every such window must
+    // carry ShardedCum's `_shard` column, and the rows must reach it
+    // through an exchange that spreads a status over many reducers:
+    // hash-partitioned on (status, _shard), or range-partitioned.
     val df = SparkEntry.queries("q48_ntile_rank")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     val windowSpecs = plan.linesIterator
       .filter(l => l.contains("windowspecdefinition") && l.contains("o_orderstatus"))
       .toSeq
     assert(windowSpecs.nonEmpty, "expected sharded windows over o_orderstatus")
-    assert(windowSpecs.forall(l => l.contains("_shard") || l.contains("_bucket")),
-      s"a window partitions on o_orderstatus without a shard/bucket column:\n${windowSpecs.mkString("\n")}")
+    assert(windowSpecs.forall(_.contains("_shard")),
+      s"a window partitions on o_orderstatus without the shard column:\n${windowSpecs.mkString("\n")}")
+    val shardExchange = "hashpartitioning\\(o_orderstatus#\\d+, _shard#\\d+".r
+    assert(plan.linesIterator.exists(l => l.contains("Exchange") &&
+        (shardExchange.findFirstIn(l).isDefined || l.contains("rangepartitioning"))),
+      s"no exchange partitions on the shard column:\n$plan")
   }
 
   test("q91 plans a broadcast stats join, never a low-cardinality window") {

@@ -429,7 +429,7 @@ class TopicStreamSpec extends AnyFunSuite {
     assert(!sub.isActive)
   }
 
-  test("backlog cut is one broadcast watermark join, not a filter chain") {
+  test("backlog cut is one array-literal watermark predicate, no join or filter chain") {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
     val dir = Files.createTempDirectory("stream").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 32)
@@ -439,9 +439,43 @@ class TopicStreamSpec extends AnyFunSuite {
     val plan = stream.queryExecution.analyzed
     val joins = plan.collect { case j: Join => j }
     val filters = plan.collect { case f: Filter => f }
-    assert(joins.size == 1, s"expected the broadcast watermark join, got $joins")
-    assert(filters.size <= 2,
-      s"per-partition filter chain is back (${filters.size} Filter nodes)")
+    assert(joins.isEmpty, s"the watermark cut must not join: $joins")
+    assert(filters.size == 1 && filters.head.condition.toString.contains("element_at"),
+      s"expected one element_at watermark predicate, got $filters")
+    // a fresh durable subscriber has no marks: no filter at all
+    val fresh = TopicStream.replayThenLive(topic, "fresh").queryExecution.analyzed
+    assert(fresh.collect { case f: Filter => f }.isEmpty, fresh.toString)
+  }
+
+  test("watermarks missing some partitions: replay and replayThenLive keep those partitions whole") {
+    val dir = Files.createTempDirectory("partial").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 4)
+    import spark.implicits._
+    // 80 distinct keys, so every partition receives records
+    topic.publish((0 until 80).map(i => ("evt", s"k-$i", s"""{"i":$i}""",
+      new java.sql.Timestamp(1700000000000L + i * 60000L)))
+      .toDF("event", "key", "message", "ts"))
+    val heads = topic.heads()
+    assert(heads.keySet == Set(0, 1, 2, 3), heads)
+    // only partitions 1 and 3 ever acked: 0 (the array's first slot)
+    // and 2 (a middle one) have no mark and replay from offset 0
+    val marks = Map(1 -> heads(1) / 2, 3 -> heads(3) / 2)
+    topic.ack("sub", marks)
+    assert(topic.watermarks("sub") == marks)
+    def expected(p: Int): Set[Long] =
+      ((marks.getOrElse(p, -1L) + 1) to heads(p)).toSet
+    def byPart(rows: Array[org.apache.spark.sql.Row]): Map[Int, Set[Long]] =
+      rows.groupBy(_.getAs[Int]("log_part"))
+        .map { case (p, rs) => p -> rs.map(_.getAs[Long]("offset")).toSet }
+    val want = (0 until 4).map(p => p -> expected(p)).toMap
+    assert(byPart(topic.replay("sub").collect()) == want)
+    val q = TopicStream.replayThenLive(topic, "sub")
+      .writeStream.format("memory").queryName("partial_rtl")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(byPart(spark.sql("SELECT * FROM partial_rtl").collect()) == want)
+    } finally q.stop()
   }
 
   test("enrichAsof joins each live record to the latest dim state at event time") {

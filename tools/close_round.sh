@@ -15,7 +15,7 @@ N="${1:?usage: close_round.sh <round-number>}"
 cd "$(dirname "$0")/.."
 
 echo "== plan audit (sf0.01) =="
-sbt -batch "runMain graft.PlanAudit /root/testdata/sf0.01" 2>&1 \
+sbt -batch "runMain graft.Diag audit /root/testdata/sf0.01" 2>&1 \
   | grep -a '\[audit\]' | sed 's/^\[info\] //' > "PLAN_AUDIT_r${N}.txt"
 wc -l "PLAN_AUDIT_r${N}.txt"
 
