@@ -86,22 +86,22 @@ object ScaleSmoke {
     val rocksSec = (System.nanoTime() - t0) / 1e9
 
     // Connected-components phase: cluster a 10M-edge near-dup pair
-    // graph (alternating 32-node stars and 32-deep chains — chains are
-    // the min-label worst case, diameter rounds; stars exercise the
-    // high-degree agg). Runs BOTH algorithms on the same edge list to
-    // compare rounds-to-convergence and wall clock.
+    // graph (alternating 32-node stars and 32-deep chains — chains
+    // are deep, stars exercise the high-degree agg) with star
+    // contraction; reports rounds-to-convergence and wall clock.
     //
-    // HEAP FLOOR, asserted up front (r10 verdict ask #6): the
-    // min-label arm's 33 rounds of edges⋈labels sort-merge joins OOM a
-    // 16G heap roughly 1 run in 3 on this box; 20G has been reliable.
-    // Failing HERE, deterministically, with the working recipe beats a
-    // random OOM 3 minutes into the phase. `run` is FORKED — the app
-    // heap comes from build.sbt's -Xmx${SPARK_DRIVER_MEM:-8g}, NOT
-    // from launcher-side `sbt -mem`/-J flags (the GCLocker retry bump
-    // is baked into build.sbt javaOptions for the same reason):
+    // HEAP FLOOR, asserted up front (r10 verdict ask #6): 20G is the
+    // heap every recorded full run used. The recorded 16G OOMs were in
+    // the since-deleted min-label CC arm, but the other volume phases
+    // have not been re-measured at 16G, so the floor stays. Failing
+    // HERE, deterministically, with the working recipe beats a random
+    // OOM minutes into a phase. `run` is FORKED
+    // — the app heap comes from build.sbt's -Xmx${SPARK_DRIVER_MEM:-8g},
+    // NOT from launcher-side `sbt -mem`/-J flags (the GCLocker retry
+    // bump is baked into build.sbt javaOptions for the same reason):
     //   SPARK_DRIVER_MEM=20g sbt -batch "runMain graft.ScaleSmoke"
     require(Runtime.getRuntime.maxMemory >= 17L * 1024 * 1024 * 1024,
-      s"min-label CC A/B at 10M edges needs a ~20G heap (have " +
+      s"ScaleSmoke's volume phases need a ~20G heap (have " +
         s"${Runtime.getRuntime.maxMemory / (1024 * 1024 * 1024)}G) — " +
         "run with: SPARK_DRIVER_MEM=20g sbt -batch " +
         "\"runMain graft.ScaleSmoke\" (run forks; sbt -mem does not " +
@@ -112,14 +112,9 @@ object ScaleSmoke {
         .cast("long").as("doc_a"),
       (expr("id div 32 * 32") + (col("id") % 32)).cast("long").as("doc_b"))
       .filter(col("doc_a") < col("doc_b"))
-      .localCheckpoint() // both algorithms read the same materialized edges
+      .localCheckpoint() // edge generation stays out of the timed region
     t0 = System.nanoTime()
-    val nClusters = graft.operators.Dedup.connectedComponents(pairEdges, maxIters = 100)
-      .select(countDistinct(col("label"))).collect().head.getLong(0)
-    val ccSec = (System.nanoTime() - t0) / 1e9
-    val ccRounds = graft.operators.Dedup.lastCcRounds
-    t0 = System.nanoTime()
-    val nClustersStar = graft.operators.Dedup.connectedComponentsStar(pairEdges)
+    val nClustersStar = graft.operators.Dedup.connectedComponents(pairEdges)
       .select(countDistinct(col("label"))).collect().head.getLong(0)
     val ccStarSec = (System.nanoTime() - t0) / 1e9
     val ccStarRounds = graft.operators.Dedup.lastCcRounds
@@ -904,7 +899,6 @@ object ScaleSmoke {
       f""""tail_replay_sec":$tailSec%.2f,""" +
       f""""stream_drain_rows":$streamedRows,"stream_drain_sec":$streamSec%.2f,""" +
       f""""rocksdb_drain_rows":$rocksRows,"rocksdb_drain_sec":$rocksSec%.2f,""" +
-      f""""cc_clusters":$nClusters,"cc_sec":$ccSec%.2f,"cc_rounds":$ccRounds,""" +
       f""""cc_star_clusters":$nClustersStar,"cc_star_sec":$ccStarSec%.2f,""" +
       f""""cc_star_rounds":$ccStarRounds,""" +
       f""""asof_rows":$asofMergeRows,"asof_merge_sec":$asofMergeSec%.2f,""" +

@@ -303,7 +303,7 @@ object Curation {
       .select(col("h1"), col("h2")).distinct()
     val (nearDropped, contaminated) = graft.GraftSession.par2(
       ckpt(Dedup
-        .connectedComponentsStar(
+        .connectedComponents(
           candPairs.getOrElse(
             Dedup.lshCandidatesFromSignatures(Dedup.minhashFromHashes(sh)))
             .select(col("doc_a"), col("doc_b")))

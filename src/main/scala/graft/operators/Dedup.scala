@@ -213,21 +213,20 @@ object Dedup {
     * is the `LogicalRDD` an eager [[ckpt]] leaves). Call only after
     * nothing reads the frame again — i.e. after the round's
     * convergence check, just before re-binding the loop variable.
-    * Root-only on purpose: a derived frame (e.g. the first-round
-    * labels, an Aggregate OVER the pinned edge checkpoint) contains a
-    * LogicalRDD deeper in its tree, and matching there would drop a
-    * checkpoint that later rounds still read. The PINNED initial edge
-    * list and the FINAL round's checkpoint are intentionally kept (the
-    * caller still consumes them).
+    * Root-only on purpose: a derived frame (e.g. the returned labels,
+    * an Aggregate OVER the last round's edges) contains a LogicalRDD
+    * deeper in its tree, and matching there would drop a checkpoint
+    * that is still read. The FINAL round's checkpoint is intentionally
+    * kept (the caller still consumes it).
     *  - reliable checkpoint (`spark.graft.reliableCheckpoints`): delete
     *    its files, so a long clustering loop does not grow the shared
-    *    checkpoint dir by one copy of the label/edge set PER ROUND (the
+    *    checkpoint dir by one copy of the edge set PER ROUND (the
     *    driver GC's `cleanCheckpoints` conf is off by default and fires
     *    late);
-    *  - local checkpoint: unpersist its blocks — a 30-round loop
-    *    otherwise carries every superseded label set in executor memory
-    *    until driver GC notices (the ScaleSmoke CC phase tipped a 16G
-    *    heap over exactly this).
+    *  - local checkpoint: unpersist its blocks — a long loop otherwise
+    *    carries every superseded edge set in executor memory until
+    *    driver GC notices (the ScaleSmoke CC phase tipped a 16G heap
+    *    over exactly this).
     * The checkpoint file is present exactly when [[ckpt]] took the
     * reliable branch, so the frame itself says which applies. */
   private def dropRoundCheckpoint(df: DataFrame): Unit =
@@ -241,17 +240,17 @@ object Dedup {
       case _ => ()
     }
 
-  /** Rounds the most recent connectedComponents* call took to converge
-    * (diagnostics for ScaleSmoke's algorithm comparison). 0 when the
-    * call took the [[unionFindLabels]] small-graph fast path. */
+  /** Rounds the most recent [[connectedComponents]] call took to
+    * converge (diagnostics for ScaleSmoke's CC phase and the specs).
+    * 0 when the call took the [[unionFindLabels]] small-graph fast
+    * path. */
   @volatile private[graft] var lastCcRounds: Int = 0
 
-  /** Edge-count bar under which both CC variants solve the components
-    * driver-side instead of looping distributed rounds
-    * (`spark.graft.cc.localEdgeThreshold`, default 1M edges ≈ 16 MB of
-    * id pairs; 0 forces the distributed loops). Same adaptive logic as
-    * a broadcast-join threshold, and like it exact either way: the
-    * distributed loops cost 3-5 AQE stage-jobs of fixed scheduling
+  /** Edge-count bar under which [[connectedComponents]] solves the
+    * components driver-side instead of looping distributed rounds
+    * (1M edges ≈ 16 MB of id pairs). Same adaptive logic as a
+    * broadcast-join threshold, and like it exact either way: the
+    * distributed loop costs 3-5 AQE stage-jobs of fixed scheduling
     * overhead PER ROUND, which dominates end-to-end latency precisely
     * when the edge list is broadcast-class — and near-dup edge lists
     * are corpus-DUPLICATE-sized, not corpus-sized, so even large
@@ -260,13 +259,12 @@ object Dedup {
     * the checkpoint job — zero extra jobs), so the decision costs
     * nothing and the expensive upstream pair generation still runs
     * distributed exactly once. */
-  private def localEdgeThreshold(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.cc.localEdgeThreshold", "1000000").toLong
+  private val LocalEdgeThreshold = 1000000L
 
   /** Driver-side exact union-find over a collected edge array — the
-    * CC fast path (see [[localEdgeThreshold]]). Union-by-min keeps
-    * every tree's root at its component MINIMUM (the shared label
-    * contract of both CC variants); path-halving keeps finds near
+    * CC fast path (see [[LocalEdgeThreshold]]). Union-by-min keeps
+    * every tree's root at its component MINIMUM (the label contract of
+    * [[connectedComponents]]); path-halving keeps finds near
     * amortized-constant. Duplicate and reversed edges are harmless. */
   private def unionFindLabels(spark: SparkSession,
       edges: Array[(Long, Long)]): DataFrame = {
@@ -294,142 +292,66 @@ object Dedup {
     nodes.map(n => (n, find(n))).toSeq.toDF("node", "label")
   }
 
-  private def obsCount(v: Any): Long = v match {
-    case null => 0L
-    case x: Number => x.longValue()
-  }
-
   /** Connected components over an undirected pair list
     * (doc_a, doc_b): every node gets the MINIMUM doc_id reachable from
-    * it (the cluster id / dedup survivor). Pregel-style min-label
-    * propagation: each round joins labels to edges and takes the
-    * neighborhood min; rounds needed = graph diameter (near-dup
-    * clusters are shallow — dups of a common source — so this is a
-    * handful of uniform-key shuffles, each O(|edges|)). For deep graphs
-    * use [[connectedComponentsStar]] (O(log n) rounds). Early-exits
-    * when a round changes no label; if `maxIters` rounds pass without
-    * convergence the returned labels may still be split across a
-    * component — a warning is logged (raise `maxIters`, or switch to
-    * the star variant). Public df-level API. */
-  /** Min-label propagation components. Prefer [[connectedComponentsStar]]
-    * for deep or hub-heavy graphs: besides needing diameter rounds,
-    * the per-round edges⋈labels sort-merge join buffers every match of
-    * a hub key (ScaleSmoke's 125k-degree hub OOMs a default driver
-    * heap here; the star variant does not). */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    // Materialize the edge list ONCE: every round (and every
-    // convergence check) re-reads it, and without this the whole
-    // upstream pair-generation pipeline would re-execute per round.
-    val obsE = new org.apache.spark.sql.Observation(
-      s"graft-cc-${java.util.UUID.randomUUID()}")
-    val edges = ckpt(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .observe(obsE, count(lit(1)).as("n")))
-    // small-graph fast path: both directions were counted, so the bar
-    // doubles (see localEdgeThreshold)
-    if (obsCount(obsE.getAsJava.get("n")) <
-        2 * localEdgeThreshold(pairs.sparkSession)) {
-      val arr = edges.collect().map(r => (
-        r.get(0).asInstanceOf[Number].longValue(),
-        r.get(1).asInstanceOf[Number].longValue()))
-      dropRoundCheckpoint(edges)
-      lastCcRounds = 0
-      return unionFindLabels(pairs.sparkSession, arr)
-    }
-    var labels = edges.groupBy(col("src").as("node"))
-      .agg(min(col("dst")).as("mdst"))
-      .select(col("node"), least(col("node"), col("mdst")).as("label"))
-    // Labels only ever DECREASE (each round takes a min that includes
-    // the node's own current label via the self-union below), so the
-    // label SUM is a strictly-monotone convergence witness: unchanged
-    // sum ⇔ no label moved. The per-round sum rides the round's OWN
-    // checkpoint job as an `observe` metric — the old labels⋈labels
-    // convergence join (an exchange + its own job tree per round
-    // under AQE) costs zero extra jobs now. decimal(38,0) keeps the
-    // sum exact far beyond any real node count (n·maxLong needs < 29
-    // digits at n = 10^9).
-    val sumExpr = sum(col("label").cast("decimal(38,0)")).as("s")
-    def asSum(v: Any): java.math.BigDecimal =
-      if (v == null) java.math.BigDecimal.ZERO
-      else v.asInstanceOf[java.math.BigDecimal]
-    var prevSum = {
-      val r = labels.agg(sumExpr).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      // neighborhood min in ONE join + ONE aggregate: each node's new
-      // label = min over (its own label ∪ its in-neighbors' labels).
-      // The self-union replaces the old second labels-join — same
-      // values (least(own, neighbor-min)), one exchange fewer per
-      // round, and it also guarantees the monotonicity the sum check
-      // relies on.
-      val obs = new org.apache.spark.sql.Observation(
-        s"graft-cc-${java.util.UUID.randomUUID()}")
-      val next = ckpt(edges
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
-        .select(col("src").as("node"), col("label"))
-        .unionByName(labels)
-        .groupBy(col("node"))
-        .agg(min(col("label")).as("label"))
-        .observe(obs, sumExpr)) // truncate the growing iterative lineage
-      // the checkpoint was the eager action, so the metric is
-      // already resolved — this get never waits on a job
-      val s = asSum(obs.getAsJava.get("s"))
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      dropRoundCheckpoint(labels) // round N-1 no longer read
-      labels = next
-      i += 1
-    }
-    lastCcRounds = i
-    if (!converged) ccLog.warn(
-      s"connectedComponents did not converge in $maxIters rounds — " +
-        "labels may split components; raise maxIters or use connectedComponentsStar")
-    labels
-  }
+    * it (the cluster id / dedup survivor), as (node, label). Under
+    * [[LocalEdgeThreshold]] edges the components come from an exact
+    * driver-side union-find; above it from alternating
+    * large-star/small-star contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond"): O(log n) rounds regardless
+    * of component diameter, each a uniform-key groupBy over the edge
+    * list that strictly shrinks it toward star form, so later rounds
+    * get cheaper. Self-loops: a `(a, a)` pair contributes no node on
+    * either path (both drop `hi == lo` edges), so `a` is labelled only
+    * through an edge to another node — the in-repo pair generators
+    * never emit one (LSH pairs have doc_a < doc_b). Early-exits at the
+    * fixpoint; if `maxIters` rounds pass without it the labels may
+    * still split a component and a warning is logged. Public
+    * df-level API. */
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
+    connectedComponents(pairs, maxIters, LocalEdgeThreshold)
 
-  /** Connected components via alternating large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond"): O(log n) rounds regardless of component diameter,
-    * where min-label propagation needs diameter rounds. Same contract
-    * as [[connectedComponents]] — (node, label) with label = component
-    * minimum — and the same per-round shape (uniform-key groupBy over
-    * the edge list), so it drops in wherever chains/deep graphs make
-    * min-label slow. Each round strictly shrinks edge count toward the
-    * star form, so later rounds get cheaper. Public df-level API. */
-  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    // Convergence witness (r14, the r12 observe-metric reclaim applied
-    // to the star variant): fixpoint = identical edge SET round over
-    // round, but a full-outer set comparison is its own exchange-heavy
-    // job per round under AQE. Instead (count, Σhi, Σlo) rides each
-    // round's checkpoint job as observe metrics — a changed set almost
-    // always moves one of the three — and only a STABLE witness pays
-    // for the exact set comparison, which then either confirms the
-    // fixpoint (the normal case: one confirmation job per CC call
-    // instead of one per round) or, on a sum collision, sends the loop
-    // around again with correctness untouched. Decimal sums stay exact
-    // far beyond any real node count.
+  /** [[connectedComponents]] with an explicit fast-path bar: 0 forces
+    * the distributed loop on any graph (the specs' round and
+    * checkpoint-rotation checks). */
+  private[graft] def connectedComponents(pairs: DataFrame, maxIters: Int,
+      localEdgeThreshold: Long): DataFrame = {
+    // Convergence witness (r14): fixpoint = identical edge SET round
+    // over round, but a full-outer set comparison is its own
+    // exchange-heavy job per round under AQE. Instead (count, Σhi, Σlo)
+    // rides each round's checkpoint job as observe metrics — a changed
+    // set almost always moves one of the three — and only a STABLE
+    // witness pays for the exact set comparison, which then either
+    // confirms the fixpoint (the normal case: one confirmation job per
+    // CC call instead of one per round) or, on a sum collision, sends
+    // the loop around again with correctness untouched. Decimal sums
+    // stay exact far beyond any real node count.
     val wCnt = count(lit(1)).as("w_n")
     def wSum(c: String) = sum(col(c).cast("decimal(38,0)")).as(s"w_$c")
     def witnessOf(obs: org.apache.spark.sql.Observation): (Any, Any, Any) = {
       val m = obs.getAsJava
       (m.get("w_n"), m.get("w_hi"), m.get("w_lo"))
     }
+    // The input edges are NOT deduplicated: a `distinct` here would add
+    // an exchange job to every call, fast path included. Duplicates are
+    // harmless to union-find, and the first round's `distinct` drops
+    // them (at worst one extra round, when they alone move the witness).
     val obs0 = new org.apache.spark.sql.Observation(
-      s"graft-ccstar-${java.util.UUID.randomUUID()}")
+      s"graft-cc-${java.util.UUID.randomUUID()}")
     var edges = ckpt(
       pairs.select(
           greatest(col("doc_a"), col("doc_b")).as("hi"),
           least(col("doc_a"), col("doc_b")).as("lo"))
-        .filter(col("hi") =!= col("lo")).distinct()
+        .filter(col("hi") =!= col("lo"))
         .observe(obs0, wCnt, wSum("hi"), wSum("lo")))
     var w = witnessOf(obs0)
-    // small-graph fast path (see localEdgeThreshold): the count rides
-    // the witness metrics already observed on the checkpoint job
-    if (obsCount(w._1) < localEdgeThreshold(pairs.sparkSession)) {
+    // small-graph fast path: the count rides the witness metrics
+    // already observed on the checkpoint job
+    val nEdges = w._1 match {
+      case null => 0L
+      case x: Number => x.longValue()
+    }
+    if (nEdges < localEdgeThreshold) {
       val arr = edges.collect().map(r => (
         r.get(0).asInstanceOf[Number].longValue(),
         r.get(1).asInstanceOf[Number].longValue()))
@@ -455,7 +377,7 @@ object Dedup {
       // itself) to the min of those
       val smins = afterLarge.groupBy(col("hi").as("x")).agg(min(col("lo")).as("m"))
       val obs = new org.apache.spark.sql.Observation(
-        s"graft-ccstar-${java.util.UUID.randomUUID()}")
+        s"graft-cc-${java.util.UUID.randomUUID()}")
       val next = ckpt(
         afterLarge.join(smins, col("hi") === col("x"))
           .select(col("lo").as("node"), col("m"))
@@ -480,7 +402,7 @@ object Dedup {
     }
     lastCcRounds = i
     if (!converged) ccLog.warn(
-      s"connectedComponentsStar did not converge in $maxIters rounds — " +
+      s"connectedComponents did not converge in $maxIters rounds — " +
         "labels may split components; raise maxIters")
     edges.select(col("hi").as("node"), col("lo").as("label"))
       .union(edges.select(col("lo").as("node"), col("lo").as("label")))
@@ -1705,7 +1627,7 @@ object Dedup {
     "q72_dedup_clusters" -> ((s, dir) => {
       // The stage after pair generation: group near-dup pairs into
       // clusters (connected components), survivor = min doc_id. Each
-      // propagation round is a uniform-key shuffle over the PAIR list
+      // contraction round is a uniform-key shuffle over the PAIR list
       // (tiny vs the corpus), never the corpus itself.
       val cand = snapshotCandidates(s, dir)
       connectedComponents(cand.select(col("doc_a"), col("doc_b")))
@@ -1749,15 +1671,13 @@ object Dedup {
       // is one uniform-key agg over the pair list; the argmax is a
       // max(struct) per cluster — no windows, all map-side-combinable.
       // The pair list is checkpointed ONCE so the LSH pipeline doesn't
-      // re-execute for the degree branch, and the components come from
-      // the O(log n) star contraction (label contract identical to
-      // min-label — q77 proves it against the same oracle).
+      // re-execute for the degree branch.
       val cand = ckpt(snapshotCandidates(s, dir)
         .select(col("doc_a"), col("doc_b")))
       val degree = cand.select(col("doc_a").as("node"))
         .union(cand.select(col("doc_b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      connectedComponentsStar(cand)
+      connectedComponents(cand)
         .join(degree, "node")
         .groupBy(col("label").as("cluster_id"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1770,12 +1690,10 @@ object Dedup {
     }),
 
     "q77_dedup_clusters_star" -> ((s, dir) => {
-      // Same clustering contract as q72, via large-star/small-star
-      // contraction — O(log n) rounds instead of diameter rounds, for
-      // corpora whose dup graphs have deep chains. Oracle-identical
-      // output proves the two algorithms agree end to end.
+      // The same pipeline as q72; it stays in the catalog so the gated
+      // query set — and its recursive-CTE oracle — keeps its size.
       val cand = snapshotCandidates(s, dir)
-      connectedComponentsStar(cand.select(col("doc_a"), col("doc_b")))
+      connectedComponents(cand.select(col("doc_a"), col("doc_b")))
         .groupBy(col("label").as("cluster_id"))
         .agg(count(lit(1)).as("n_docs"), max(col("node")).as("max_doc"))
         .orderBy(col("cluster_id"))
@@ -2237,8 +2155,7 @@ object Dedup {
         |FROM sizes s JOIN ec ON ec.cluster_id = s.cluster_id
         |ORDER BY s.cluster_id""".stripMargin),
 
-    // identical ground truth: the star-contraction variant must produce
-    // byte-identical clusters to min-label propagation
+    // identical ground truth: q77 runs q72's pipeline
     "q77_dedup_clusters_star" -> dedupClustersSql,
 
     "q93_cluster_representatives" ->

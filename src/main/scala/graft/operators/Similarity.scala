@@ -236,21 +236,20 @@ object Similarity {
     // decimal(18,2) sum cast to double that dsum produced (decimal
     // addition is order-independent, so fusing cannot perturb it); a
     // missing hour is a NULL sum exactly like the old missing pivot
-    // cell. `tot` was the double sum of the per-hour doubles — here the
-    // same 24 doubles are added in fixed ascending-hour order
-    // (coalesce(·, 0.0) for absent hours adds exact zeros), which the
-    // oracle gate confirms is value-identical on this data.
+    // cell. `tot` adds the 24 DECIMAL hourly sums (absent hours add an
+    // exact 0) and casts to double once, so it is exact by
+    // construction, not by the data's luck with double rounding.
     val hd = (0 until 24).map(d =>
       sum(when(hour(col("ts")) === d, graft.GraftSession.dec(col("value"))))
-        .cast("double").as(s"h$d"))
+        .as(s"h$d"))
     val wide = graft.GraftSession.eventsTable(s, dir)
       .groupBy(col("user_id")).agg(hd.head, hd.tail: _*)
-    val tot = (0 until 24).map(d => coalesce(col(s"h$d"), lit(0.0)))
-      .reduce(_ + _)
+    val tot = (0 until 24).map(d => coalesce(col(s"h$d"), lit(0)))
+      .reduce(_ + _).cast("double")
     wide.select(col("user_id").as("vec_id"),
       array((0 until 64).map(d =>
         if (d < 24)
-          round(coalesce(col(s"h$d"), lit(0.0)) - tot / 24.0, 6)
+          round(coalesce(col(s"h$d").cast("double"), lit(0.0)) - tot / 24.0, 6)
         else lit(0.0).cast("double")): _*).as("embedding"))
   }
 
@@ -481,15 +480,16 @@ object Similarity {
   // mirrors the exact q53 RHP pipeline over them.
   private val behaviorSeriesSql: String = {
     val hcols = (0 until 24)
-      .map(d => s"MAX(CASE WHEN h = $d THEN s END) AS h$d").mkString(", ")
+      .map(d => s"MAX(CASE WHEN h = $d THEN CAST(ds AS DOUBLE) END) AS h$d")
+      .mkString(", ")
     val entries = (0 until 24)
       .map(d => s"ROUND(COALESCE(h$d, 0.0) - tot / 24.0, 6)").mkString(", ")
     s"""SELECT user_id AS vec_id, [$entries] AS embedding
        |FROM (
-       |  SELECT user_id, SUM(s) AS tot, $hcols
+       |  SELECT user_id, CAST(SUM(ds) AS DOUBLE) AS tot, $hcols
        |  FROM (
        |    SELECT user_id, EXTRACT(hour FROM ts) AS h,
-       |      CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s
+       |      SUM(CAST(value AS DECIMAL(18,2))) AS ds
        |    FROM events GROUP BY 1, 2)
        |  GROUP BY user_id)""".stripMargin
   }

@@ -40,7 +40,7 @@ class DedupApiSpec extends AnyFunSuite {
 
   test("connected components cluster transitive near-dups under the min id") {
     import spark.implicits._
-    // path graph 1-2-3 plus isolated pair 7-9: min-label must cross the
+    // path graph 1-2-3 plus isolated pair 7-9: the label must cross the
     // full path (transitivity), and separate components stay separate
     val pairs = Seq((2L, 3L), (1L, 2L), (7L, 9L)).toDF("doc_a", "doc_b")
     val comp = Dedup.connectedComponents(pairs).collect()
@@ -58,40 +58,46 @@ class DedupApiSpec extends AnyFunSuite {
     assert(broken.isEmpty, "pair endpoints landed in different clusters")
   }
 
-  test("star contraction matches min-label propagation, in fewer rounds on chains") {
+  private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
+
+  test("distributed star loop matches union-find, in fewer rounds than chain diameter") {
     import spark.implicits._
-    // 3 components: a 60-node chain (diameter 59 — the min-label worst
-    // case), a star, and a pair
+    // 3 components: a 60-node chain (diameter 59 — what label
+    // propagation would need in rounds), a star, and a pair
     val chain = (1000L until 1059L).map(i => (i, i + 1))
     val star = Seq((1L, 5000L), (1L, 5001L), (1L, 5002L))
     val pair = Seq((7L, 9L))
     val pairs = (chain ++ star ++ pair).toDF("doc_a", "doc_b")
-    // force the distributed loops: this test asserts ROUND counts, and
-    // a graph this small otherwise takes the union-find fast path
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    val (minLabel, mlRounds, starLabels, starRounds) =
-      try {
-        val ml = Dedup.connectedComponents(pairs, maxIters = 100).collect()
-          .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-        val mlR = Dedup.lastCcRounds
-        val st = Dedup.connectedComponentsStar(pairs).collect()
-          .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-        (ml, mlR, st, Dedup.lastCcRounds)
-      } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
-    assert(starLabels == minLabel, "algorithms disagree on labels")
-    assert(starLabels(1059L) == 1000L && starLabels(5002L) == 1L && starLabels(9L) == 7L)
-    assert(starRounds < mlRounds,
-      s"star should converge in O(log n) rounds ($starRounds) vs diameter ($mlRounds)")
+    val exact = labelsOf(Dedup.connectedComponents(pairs))
+    assert(Dedup.lastCcRounds == 0, "expected the union-find fast path")
+    // threshold 0 forces the distributed loop: a graph this small
+    // otherwise takes the union-find fast path
+    val looped = labelsOf(Dedup.connectedComponents(pairs, 50, 0L))
+    val rounds = Dedup.lastCcRounds
+    assert(looped == exact, "star loop disagrees with union-find")
+    assert(looped(1059L) == 1000L && looped(5002L) == 1L && looped(9L) == 7L)
+    assert(rounds > 0 && rounds < 59,
+      s"star should converge in O(log n) rounds, took $rounds (diameter 59)")
   }
 
-  test("star contraction matches min-label on the q72 LSH-pair corpus") {
+  test("distributed star loop matches union-find on the q72 LSH-pair corpus") {
     val docs = GraftSession.table(spark, sf, "documents")
     val cand = Dedup.lshCandidates(docs).localCheckpoint()
-    val a = Dedup.connectedComponents(cand).collect()
-      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-    val b = Dedup.connectedComponentsStar(cand).collect()
-      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-    assert(a.nonEmpty && a == b)
+    val exact = labelsOf(Dedup.connectedComponents(cand))
+    val looped = labelsOf(Dedup.connectedComponents(cand, 50, 0L))
+    assert(Dedup.lastCcRounds > 0, "threshold 0 must force the loop")
+    assert(exact.nonEmpty && looped == exact)
+  }
+
+  test("self-loop pairs contribute no node, on both paths") {
+    import spark.implicits._
+    // (5, 5) is dropped with every other hi == lo edge: 5 gets no label
+    // row, and the real pair is clustered as usual
+    val pairs = Seq((5L, 5L), (1L, 2L)).toDF("doc_a", "doc_b")
+    val exact = labelsOf(Dedup.connectedComponents(pairs))
+    assert(exact == Map(1L -> 1L, 2L -> 1L))
+    assert(labelsOf(Dedup.connectedComponents(pairs, 50, 0L)) == exact)
   }
 
   test("reliable checkpoints yield identical clusters (and fail fast without a checkpoint dir)") {
@@ -101,23 +107,20 @@ class DedupApiSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val prior = sc.getCheckpointDir
     assert(prior.isEmpty, "test assumes no ambient checkpoint dir")
-    val local = Dedup.connectedComponentsStar(pairs).collect()
-      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
+    val exact = labelsOf(Dedup.connectedComponents(pairs))
+    val local = labelsOf(Dedup.connectedComponents(pairs, 50, 0L))
+    assert(local == exact)
     spark.conf.set(GraftSession.ReliableCheckpointsConf, "true")
     try {
       // fail fast, not N rounds in, when the reliable dir is missing
       intercept[IllegalArgumentException] {
-        Dedup.connectedComponentsStar(pairs)
+        Dedup.connectedComponents(pairs)
       }
       val ckptDir = java.nio.file.Files.createTempDirectory("cc-reliable")
       sc.setCheckpointDir(ckptDir.toString)
-      val reliable = Dedup.connectedComponentsStar(pairs)
-        .collect()
-        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
+      val reliable = labelsOf(Dedup.connectedComponents(pairs, 50, 0L))
       assert(reliable == local, "checkpoint mode changed cluster labels")
-      val ml = Dedup.connectedComponents(pairs, maxIters = 100).collect()
-        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-      assert(ml == local)
+      assert(labelsOf(Dedup.connectedComponents(pairs)) == exact)
     } finally {
       spark.conf.unset(GraftSession.ReliableCheckpointsConf)
       // SparkContext has no unsetCheckpointDir; the conf object does —
@@ -283,11 +286,10 @@ class DedupApiSpec extends AnyFunSuite {
 
   test("reliable round checkpoints rotate: old rounds are deleted, not accumulated") {
     import spark.implicits._
-    // a 30-node chain forces many min-label rounds — without rotation
-    // the shared checkpoint dir would hold one label-set copy PER ROUND
-    // (distributed loops forced: the rotation under test only exists
+    // a 30-node chain forces several star rounds — without rotation
+    // the shared checkpoint dir would hold one edge-set copy PER ROUND
+    // (distributed loop forced: the rotation under test only exists
     // there; a graph this small otherwise union-finds driver-side)
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
     val pairs = (2000L until 2030L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "test assumes no ambient checkpoint dir")
@@ -295,62 +297,41 @@ class DedupApiSpec extends AnyFunSuite {
     sc.setCheckpointDir(ckptDir.toString)
     spark.conf.set(GraftSession.ReliableCheckpointsConf, "true")
     try {
-      val labels = Dedup.connectedComponents(pairs, maxIters = 100).collect()
-        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
+      val labels = labelsOf(Dedup.connectedComponents(pairs, 50, 0L))
       assert(labels.values.toSet == Set(2000L), "chain must collapse to one cluster")
       val rounds = Dedup.lastCcRounds
       assert(rounds >= 3, s"chain should need several rounds, took $rounds")
-      def rddDirs: Long = {
+      val rddDirs = {
         val s = java.nio.file.Files.walk(ckptDir)
         try s.filter(p => p.getFileName.toString.startsWith("rdd-")).count()
         finally s.close()
       }
-      // only the PINNED edge list and the FINAL round's labels remain
-      assert(rddDirs <= 2,
-        s"expected <=2 surviving checkpoints after $rounds rounds, found $rddDirs")
-      // star contraction rotates its edge variable every round too
-      val star = Dedup.connectedComponentsStar(pairs)
-        .collect()
-        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-      assert(star == labels)
-      assert(rddDirs <= 3, // + the star loop's final edge set
-        s"star loop leaked round checkpoints: $rddDirs dirs")
+      // only the FINAL round's edge set remains
+      assert(rddDirs <= 1,
+        s"expected <=1 surviving checkpoint after $rounds rounds, found $rddDirs")
     } finally {
       spark.conf.unset(GraftSession.ReliableCheckpointsConf)
       sc.setCheckpointDir(null)
-      spark.conf.unset("spark.graft.cc.localEdgeThreshold")
     }
   }
 
   test("small-graph CC fast path matches the distributed loops exactly") {
     import spark.implicits._
-    // r14: under spark.graft.cc.localEdgeThreshold (default 1M edges)
-    // both CC variants solve components via driver-side union-find —
-    // the distributed loops' 3-5 AQE jobs PER ROUND are pure fixed
-    // overhead on a broadcast-class edge list. Exactness contract:
-    // identical (node, label = component min) either way, on messy
-    // input (duplicate + reversed duplicate edges included).
+    // r14: under 1M edges connectedComponents solves components via
+    // driver-side union-find — the distributed loop's 3-5 AQE jobs PER
+    // ROUND are pure fixed overhead on a broadcast-class edge list.
+    // Exactness contract: identical (node, label = component min)
+    // either way, on messy input (duplicate + reversed duplicate edges
+    // included).
     val pairs = ((1000L until 1040L).map(i => (i, i + 1)) ++
       Seq((1L, 5000L), (5000L, 1L), (1L, 5001L), (7L, 9L), (9L, 7L),
         (5001L, 5002L))).toDF("doc_a", "doc_b")
-    def labelsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("node"), r.getAs[Long]("label"))).toMap
-    val fastStar = labelsOf(Dedup.connectedComponentsStar(pairs))
+    val fast = labelsOf(Dedup.connectedComponents(pairs))
     assert(Dedup.lastCcRounds == 0, "expected the union-find fast path")
-    val fastMl = labelsOf(Dedup.connectedComponents(pairs))
-    assert(Dedup.lastCcRounds == 0, "expected the union-find fast path")
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    val (distStar, distMl) =
-      try {
-        val s = labelsOf(Dedup.connectedComponentsStar(pairs))
-        assert(Dedup.lastCcRounds > 0, "conf 0 must force the loop")
-        (s, labelsOf(Dedup.connectedComponents(pairs, maxIters = 100)))
-      } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
-    assert(fastStar == distStar, "star fast path diverged")
-    assert(fastMl == distMl, "min-label fast path diverged")
-    assert(fastStar == fastMl)
-    assert(fastStar(1040L) == 1000L && fastStar(5002L) == 1L &&
-      fastStar(9L) == 7L)
+    val dist = labelsOf(Dedup.connectedComponents(pairs, 50, 0L))
+    assert(Dedup.lastCcRounds > 0, "threshold 0 must force the loop")
+    assert(fast == dist, "fast path diverged from the distributed loop")
+    assert(fast(1040L) == 1000L && fast(5002L) == 1L && fast(9L) == 7L)
   }
 
   test("spark.graft.reliableCheckpoints conf flips ckpt sites with identical results") {
