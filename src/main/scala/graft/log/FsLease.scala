@@ -2,10 +2,10 @@ package graft.log
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Reusable filesystem lease lock — [[TopicLog]]'s `_publish.lock`
-  * discipline extracted for other single-writer artifacts (the
-  * standing [[graft.operators.LshIndex]]'s generation publish, r10
-  * verdict ask #2). Semantics, kept identical to the topic lock:
+/** Filesystem lease lock for single-writer artifacts — [[TopicLog]]'s
+  * `_publish.lock` and the standing [[graft.operators.LshIndex]]'s
+  * `_writer.lock`. The one place that knows how a lease is judged,
+  * fenced and tested:
   *
   *  - acquisition is an atomic create-if-absent (`O_EXCL` via
   *    `File.createNewFile` on the local scheme — Hadoop's local
@@ -17,31 +17,31 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    alone has filesystem-tick granularity, and a lock broken and
   *    re-acquired within one tick could otherwise be mistaken for the
   *    stale one and wrongly deleted;
-  *  - a daemon refreshes the lock mtime IN PLACE every `leaseMs / 3`,
-  *    CAPPED at [[TopicLog.RenewalCapMs]] — staleness is judged by
-  *    each observer's own floor, so a holder configured with a long
-  *    lease must still renew fast enough for a default-config peer;
-  *  - staleness floors at `2 × RenewalCapMs` so a mis-configured tiny
-  *    lease cannot break a live, renewing holder.
+  *  - a daemon refreshes the lock mtime IN PLACE every
+  *    [[FsLease.RenewEveryMs]] (60 s), for as long as the holder runs;
+  *  - a lock whose mtime is older than [[FsLease.StaleAfterMs]]
+  *    (300 s, five missed renewals) is judged dead. Both are constants,
+  *    the same for every holder and every observer, so no observer can
+  *    judge a live, renewing holder dead; a long publish needs no
+  *    longer lease, because renewal covers it.
   *
-  * Unlike the topic lock there is no sidecar to reconcile on a stale
-  * break — callers pass `onStaleBreak` when breaking a dead holder's
-  * lock must first repair the artifact it was mid-way through writing
-  * BEFORE the break frees other waiters to build on it. The LshIndex
-  * deliberately passes NONE: its repair runs post-acquisition
-  * (`validatedManifestLocked` re-checks the signature watermark as
-  * the first act under any fresh lease), which covers the stale-break
-  * path and every other entry equally — LshIndexSpec's stale-lock
-  * test pins that a broken dead holder's half-written state is
-  * repaired by the breaker before it appends.
+  * There is no sidecar to reconcile on a stale break — callers pass
+  * `onStaleBreak` when breaking a dead holder's lock must first repair
+  * the artifact it was mid-way through writing BEFORE the break frees
+  * other waiters to build on it (TopicLog's heads reconcile). The
+  * LshIndex deliberately passes NONE: its repair runs post-acquisition
+  * (`validatedManifestLocked` re-checks the signature watermark as the
+  * first act under any fresh lease), which covers the stale-break path
+  * and every other entry equally.
   *
   * A stale break means a SLOW holder may still be alive (GC pause, FS
-  * hang past the staleness floor) and now believes it holds a lock it
-  * lost. [[FsLease.Held.stillHeld]] is the fence: re-read the lock
-  * token immediately before the irreversible step (the LshIndex
-  * checks it before its manifest write and generation-marker rename)
-  * and abort if the token is no longer ours. `release()` is likewise
-  * a compare-and-delete on the token. BOTH are best-effort
+  * hang past the stale window) and now believes it holds a lock it
+  * lost. [[FsLease.Held.fence]] is the fence: re-read the lock token
+  * immediately before the irreversible step and abort with
+  * [[FsLease.FencedException]] if the token is no longer ours
+  * ([[FsLease.Held.check]] is the non-throwing form, for sweeps that
+  * stop rather than abort). `release()` is likewise a
+  * compare-and-delete on the token. BOTH are best-effort
   * check-then-act on a plain filesystem, not atomic CAS: a steal can
   * land between the token read and the following write/delete, so a
   * fenced-out holder can still (rarely) free a thief's fresh lock or
@@ -52,16 +52,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * injected-steal specs pin both windows.
   */
 final class FsLease(fs: FileSystem, lockPath: Path,
-    leaseMs: Long = 5 * 60 * 1000L, onStaleBreak: () => Unit = () => ()) {
-
-  private def staleAfterMs: Long = math.max(leaseMs, 2 * TopicLog.RenewalCapMs)
-
-  /** The observer-side staleness floor this instance judges other
-    * holders by — exposed so callers that approximate "is a writer
-    * alive" from the lock mtime alone use the SAME window as the
-    * lease itself (a divergent hardcoded window could judge a live,
-    * renewing holder dead). */
-  def staleAfterMillis: Long = staleAfterMs
+    onStaleBreak: () => Unit = () => ()) {
 
   private def tryCreate(token: String): Boolean =
     if (fs.getScheme == "file") {
@@ -80,11 +71,21 @@ final class FsLease(fs: FileSystem, lockPath: Path,
       } catch { case _: java.io.IOException => false }
     }
 
-  private def readToken(): String =
-    try {
-      val in = fs.open(lockPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    } catch { case _: java.io.IOException => "" }
+  /** The lock's mtime, or None when no lock exists (or it was released
+    * between our look and our stat). */
+  private def lockMtime(): Option[Long] =
+    try Some(fs.getFileStatus(lockPath).getModificationTime)
+    catch { case _: java.io.IOException => None }
+
+  /** The one staleness rule: a lock last renewed more than
+    * [[FsLease.StaleAfterMs]] ago belongs to a dead holder. */
+  private def isStale(mtime: Long): Boolean =
+    System.currentTimeMillis() - mtime > FsLease.StaleAfterMs
+
+  /** Whether a holder's lock exists and is not stale right now — for
+    * callers that must tell a live writer's in-flight state from a
+    * crashed writer's leftovers without acquiring. */
+  def liveHolder(): Boolean = lockMtime().exists(m => !isStale(m))
 
   /** Compare-and-delete of a lock OBSERVED as stale: `onStaleBreak`
     * (the artifact repair) may take seconds, so only delete if the
@@ -94,7 +95,7 @@ final class FsLease(fs: FileSystem, lockPath: Path,
     onStaleBreak()
     try {
       if (fs.getFileStatus(lockPath).getModificationTime == observedMod &&
-          readToken() == observedToken)
+          FsLease.readToken(fs, lockPath) == observedToken)
         fs.delete(lockPath, false)
     } catch { case _: java.io.IOException => () } // already released
   }
@@ -104,44 +105,34 @@ final class FsLease(fs: FileSystem, lockPath: Path,
     * `onStaleBreak` first, exactly like a waiter's break) WITHOUT
     * acquiring. A fresh lock — a live holder in another process — is
     * left alone to complete its own commit. */
-  def breakIfStale(): Unit = {
-    val mod =
-      try {
-        if (fs.exists(lockPath)) fs.getFileStatus(lockPath).getModificationTime
-        else -1L
-      } catch { case _: java.io.IOException => -1L }
-    if (mod >= 0 && System.currentTimeMillis() - mod > staleAfterMs)
-      breakStale(mod, readToken())
-  }
+  def breakIfStale(): Unit =
+    lockMtime().filter(isStale).foreach(m =>
+      breakStale(m, FsLease.readToken(fs, lockPath)))
 
   /** Blocks until the lease is held; returns a handle whose `release()`
     * stops renewal and frees the lock. Default wait outlasts a live
-    * holder's full lease plus margin — giving up earlier than the
-    * lease can expire turns a slow-but-alive holder into a spurious
-    * failure. */
+    * holder's full stale window plus one renewal — giving up earlier
+    * than the lease can expire turns a slow-but-alive holder into a
+    * spurious failure. */
   def acquire(timeoutMs: Long = -1L): FsLease.Held = {
-    val waitMs = if (timeoutMs > 0) timeoutMs else staleAfterMs + 60 * 1000L
+    val waitMs =
+      if (timeoutMs > 0) timeoutMs else FsLease.StaleAfterMs + FsLease.RenewEveryMs
     val deadline = System.currentTimeMillis() + waitMs
     val token = java.util.UUID.randomUUID().toString
     while (!tryCreate(token)) {
-      val mod =
-        try fs.getFileStatus(lockPath).getModificationTime
-        catch { case _: java.io.IOException => -1L } // just released
-      if (mod >= 0 && System.currentTimeMillis() - mod > staleAfterMs)
-        breakStale(mod, readToken())
-      else if (System.currentTimeMillis() > deadline)
-        throw new IllegalStateException(
-          s"timed out after ${waitMs}ms waiting for lease on $lockPath")
-      else Thread.sleep(25)
+      lockMtime() match {
+        case Some(m) if isStale(m) => breakStale(m, FsLease.readToken(fs, lockPath))
+        case _ if System.currentTimeMillis() > deadline =>
+          throw new IllegalStateException(
+            s"timed out after ${waitMs}ms waiting for lease on $lockPath")
+        case _ => Thread.sleep(25)
+      }
     }
-    new FsLease.Held(fs, lockPath, leaseMs, token)
+    new FsLease.Held(fs, lockPath, token)
   }
 
-  /** Run `body` under the lease, releasing on all paths. */
-  def withLease[T](body: => T): T = withLeaseHeld(_ => body)
-
-  /** [[withLease]] handing `body` the [[FsLease.Held]] handle, for
-    * callers that fence an irreversible step on [[FsLease.Held.stillHeld]]. */
+  /** Run `body` holding the lease, handing it the [[FsLease.Held]]
+    * handle for its fences; releases on all paths. */
   def withLeaseHeld[T](body: FsLease.Held => T): T = {
     val held = acquire()
     try body(held) finally held.release()
@@ -149,24 +140,35 @@ final class FsLease(fs: FileSystem, lockPath: Path,
 }
 
 object FsLease {
-  /** Thrown by consumers whose [[Held.stillHeld]] fence failed before
-    * an irreversible commit step: the lease was stale-broken (renewal
-    * starvation) and a thief may be mid-write — abort without touching
-    * published state and let the caller's retry re-validate. */
+  /** A lock not renewed for this long belongs to a dead holder. */
+  val StaleAfterMs: Long = 5 * 60 * 1000L
+
+  /** How often a live holder refreshes its lock's mtime — a fifth of
+    * [[StaleAfterMs]], so a holder must miss five renewals in a row
+    * before anyone may break its lock. */
+  val RenewEveryMs: Long = 60 * 1000L
+
+  private def readToken(fs: FileSystem, lockPath: Path): String =
+    try {
+      val in = fs.open(lockPath)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    } catch { case _: java.io.IOException => "" }
+
+  /** Thrown by [[Held.fence]] before an irreversible commit step: the
+    * lease was stale-broken (renewal starvation) and a thief may be
+    * mid-write — abort without touching published state and let the
+    * caller's retry re-validate. */
   final class FencedException(msg: String) extends IllegalStateException(msg)
 
-  /** A held lease: renewal daemon + release. Renewal refreshes mtime
-    * IN PLACE (a delete-and-recreate would open a just-released window
-    * in which a waiter's create-if-absent succeeds → two holders).
-    * Stop signalling is a latch, not interruption — Hadoop's local-FS
-    * calls can swallow the interrupt flag. */
-  final class Held private[log] (fs: FileSystem, lockPath: Path,
-      leaseMs: Long, token: String) {
+  /** A held lease: renewal daemon, fence and release. Renewal refreshes
+    * mtime IN PLACE (a delete-and-recreate would open a just-released
+    * window in which a waiter's create-if-absent succeeds → two
+    * holders). Stop signalling is a latch, not interruption — Hadoop's
+    * local-FS calls can swallow the interrupt flag. */
+  final class Held private[log] (fs: FileSystem, lockPath: Path, token: String) {
     private val done = new java.util.concurrent.CountDownLatch(1)
     private val t = new Thread(() => {
-      val interval =
-        math.min(math.max(leaseMs / 3, 50L), TopicLog.RenewalCapMs)
-      while (!done.await(interval, java.util.concurrent.TimeUnit.MILLISECONDS)) {
+      while (!done.await(RenewEveryMs, java.util.concurrent.TimeUnit.MILLISECONDS)) {
         try fs.setTimes(lockPath, System.currentTimeMillis(), -1L)
         catch { case _: java.io.IOException => () } // transient: retry next tick
       }
@@ -175,18 +177,22 @@ object FsLease {
     t.setName(s"graft-lease-renewal-$lockPath")
     t.start()
 
-    private def tokenOnDisk(): String =
-      try {
-        val in = fs.open(lockPath)
-        try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      } catch { case _: java.io.IOException => "" }
+    /** Pre-commit check for the step labelled `what`: true iff the lock
+      * file still carries OUR token. False means a waiter judged us
+      * dead and token-CAS-broke the lock — the caller must not take its
+      * irreversible step. Fires [[testBeforeFence]] with `what` first. */
+    def check(what: String): Boolean = {
+      testBeforeFence(what)
+      readToken(fs, lockPath) == token
+    }
 
-    /** Pre-publish fence: true iff the lock file still carries OUR
-      * token. False means a waiter judged us dead and token-CAS-broke
-      * the lock (renewal starved past the staleness floor) — the
-      * caller must abort its irreversible step and retry from the
-      * re-validated artifact under a fresh acquisition. */
-    def stillHeld(): Boolean = tokenOnDisk() == token
+    /** [[check]], throwing [[FencedException]] when it fails: the
+      * caller aborts and retries from the re-validated artifact under
+      * a fresh acquisition. */
+    def fence(what: String): Unit =
+      if (!check(what)) throw new FencedException(
+        s"lease $lockPath was stale-broken before $what; aborting " +
+          "without touching published state")
 
     /** Stop renewal and free the lock — compare-and-delete on our
       * token: if the lock was stale-broken and re-acquired by another
@@ -199,13 +205,24 @@ object FsLease {
     def release(): Unit = {
       done.countDown(); t.join()
       try {
-        if (tokenOnDisk() == token) {
-          FsLease.testBeforeReleaseDelete()
+        if (readToken(fs, lockPath) == token) {
+          testBeforeReleaseDelete()
           fs.delete(lockPath, false)
         }
       } catch { case _: java.io.IOException => () }
     }
   }
+
+  /** Test-only injection point fired inside every fence, BEFORE the
+    * token read, with the step's label — lets a spec steal the lock
+    * (or simulate a crash) at the exact pre-commit instant the fence
+    * must catch. Labels: TopicLog's "the heads sidecar",
+    * "txn marker <id>", "txn-marker pruning", "retention directory
+    * drops", "retention drop of <dir>", "size-capped retention
+    * deletions", "retention trim of <file>", "the N partition-dir
+    * swap(s)"; LshIndex's staged dir name (`seg-N`, `seg-Nf`,
+    * `seg-NmR`), "gen-N manifest", "gen-N marker" and "gc <dir>". */
+  private[graft] var testBeforeFence: String => Unit = _ => ()
 
   /** Test-only injection point inside `release()`'s check-then-act
     * window — after the token compared equal, before the delete —

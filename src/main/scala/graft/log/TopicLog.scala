@@ -32,8 +32,10 @@ import org.apache.spark.sql.functions._
   * oldest RETAINED offset with no error — the records between the
   * watermark and the retention horizon are a silent data-loss window,
   * exactly the reference's capped-collection overwrite semantics
-  * (`topic.js:8-10`). Monitor [[q22-style consumer lag]] against the
-  * retention horizon to catch subscribers drifting toward the edge.
+  * (`topic.js:8-10`). Monitor consumer lag (head − acked watermark
+  * per partition, from [[heads]] and [[watermarks]]; the
+  * `q22_consumer_lag` query computes it for every subscriber) against
+  * the retention horizon to catch subscribers drifting toward the edge.
   *
   * Scale design:
   *  - Offsets need no global coordination — each log_part numbers
@@ -78,11 +80,6 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   private val headsPath = s"$path/_offsets.json"
   private val lockPath = new Path(s"$path/_publish.lock")
 
-  /** How long a publish lock is honored before it is presumed dead and
-    * broken (with a sidecar reconcile). A publish job that legitimately
-    * runs longer than this must raise it. */
-  var publishLeaseMs: Long = 5 * 60 * 1000L
-
   /** How long committed-txn markers (`txns/<txnId>`, written by
     * [[publishIdempotent]]) are kept before maintenance prunes them. A
     * marker is only needed while a redelivery of its batch is still
@@ -95,6 +92,21 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The topic's writer lease. `onStaleBreak` is the sidecar
+    * reconcile: a stale lock means a publisher died between append and
+    * sidecar write, and the breaker must heal heads BEFORE freeing
+    * other waiters to publish against them. Every write that COMMITS
+    * state under the lease — the heads-sidecar replace, a txn marker, a
+    * partition-dir swap, each retention deletion — first passes
+    * `held.fence`: a renewal-starved publisher whose lock was
+    * stale-broken must not land them, because the thief reconciled
+    * heads and may be committing its own (a zombie sidecar replace
+    * would REGRESS heads the thief advanced; a zombie swap or deletion
+    * could drop records the thief just published). Declared before the
+    * constructor's [[recover]] call, which uses it. */
+  private val publishLease: FsLease =
+    new FsLease(fs, lockPath, () => reconcileHeads())
 
   // Partition count is LAYOUT, not a per-open knob: record routing
   // (pmod(hash, numPartitions)), offset assignment, and the
@@ -193,6 +205,19 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
 
   // -------------------------------------------------------------- publish
 
+  /** Run `body` holding the topic's exclusive writer lease, renewed
+    * for the duration. Publish, compaction, and retention all take it:
+    * a compactor swapping a partition directory while a publisher
+    * appends into it would silently drop the concurrent batch. */
+  private def withPublishLock[T](body: FsLease.Held => T): T =
+    publishLease.withLeaseHeld(body)
+
+  /** Test-only accessor: acquire the topic's publish lease directly
+    * (the lock-honoring/stale-window specs need to drive `acquire`
+    * with a short timeout without going through a publish). */
+  private[graft] def acquirePublishLockForTest(timeoutMs: Long): FsLease.Held =
+    publishLease.acquire(timeoutMs)
+
   /** Publish a batch of records: columns (event, key, message, ts).
     * Assigns log_part = pmod(hash(key)) and per-partition monotonic
     * offsets continuing from the current heads. The whole batch is
@@ -204,53 +229,6 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * (`topic.js:25-40` returns the inserted doc). Counts come from an
     * Observation on the write job itself — publishing does zero reads
     * of the log. */
-  /** The topic's writer lease — the [[FsLease]] discipline this lock
-    * originated (atomic create-if-absent, unique token, capped renewal,
-    * staleness floored at 2×[[TopicLog.RenewalCapMs]], token-CAS stale
-    * break). `onStaleBreak` is the sidecar reconcile: a stale lock
-    * means a publisher died between append and sidecar write, and the
-    * breaker must heal heads BEFORE freeing other waiters to publish
-    * against them. Constructed per use because `publishLeaseMs` is a
-    * mutable per-topic knob. Migrating to the shared class (r13) also
-    * buys what the in-class copy lacked: a compare-and-delete
-    * `release()` (a fenced-out publisher can no longer free the
-    * thief's fresh lock on its way out) and the [[FsLease.Held]]
-    * fence used by [[fenceCommit]] below. */
-  private def publishLease: FsLease =
-    new FsLease(fs, lockPath, publishLeaseMs, () => reconcileHeads())
-
-  /** Run `body` holding the topic's exclusive writer lease, renewed
-    * for the duration. Publish, compaction, and retention all take it:
-    * a compactor swapping a partition directory while a publisher
-    * appends into it would silently drop the concurrent batch. */
-  private def withPublishLock[T](body: FsLease.Held => T): T =
-    publishLease.withLeaseHeld(body)
-
-  /** Test-only accessor: acquire the topic's publish lease directly
-    * (the lock-honoring/staleness-floor specs need to drive `acquire`
-    * with a short timeout without going through a publish). */
-  private[graft] def acquirePublishLockForTest(timeoutMs: Long): FsLease.Held =
-    publishLease.acquire(timeoutMs)
-
-  /** Commit fence (r13, mirroring the LshIndex publish fences): called
-    * immediately before every write that COMMITS state under the lease
-    * — the heads-sidecar replace, a txn marker, a partition-dir swap,
-    * retention deletions. A renewal-starved publisher whose lock was
-    * stale-broken must not land these: the thief that broke the lock
-    * reconciled heads and may be committing its own — a zombie sidecar
-    * replace would REGRESS heads the thief advanced (permanent
-    * duplicate offsets, healed only by the next stale break), and a
-    * zombie swap/deletion could drop records the thief just published.
-    * Check-then-act like every fence here: the residual window is the
-    * same one the crash story already covers (at-least-once, sidecar
-    * reconcile on the next stale break). */
-  private def fenceCommit(held: FsLease.Held, what: String): Unit = {
-    TopicLog.testBeforeCommit(what)
-    if (!held.stillHeld()) throw new FsLease.FencedException(
-      s"publish lease for $path was stale-broken before committing " +
-        s"$what; aborting without touching published state")
-  }
-
   def publish(records: DataFrame): Map[Int, TopicLog.OffsetRange] =
     withPublishLock { held => publishLocked(records, held) }
 
@@ -301,7 +279,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
           // committed-but-unmarked window and must not look like a
           // retryable publish failure
           try {
-            fenceCommit(held, s"txn marker $txnId")
+            held.fence(s"txn marker $txnId")
             writeKv(marker, ranges.flatMap { case (p, r) =>
               Seq(p -> r.base, (p + numPartitions) -> r.count)
             })
@@ -362,7 +340,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     // the same at-least-once window a crash here always had; the
     // reconcile heals it.
     try {
-      fenceCommit(held, "the heads sidecar")
+      held.fence("the heads sidecar")
       writeSidecar(base ++ ranges.map { case (p, r) => p -> (r.base + r.count) })
     } catch {
       // a FENCED abort means a thief broke our lease and already
@@ -506,7 +484,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   private def pruneTxnMarkersLocked(held: FsLease.Held): Unit = {
     val d = new Path(s"$path/txns")
     if (fs.exists(d)) {
-      fenceCommit(held, "txn-marker pruning")
+      held.fence("txn-marker pruning")
       val cutoff = System.currentTimeMillis() - txnMarkerTtlMs
       fs.listStatus(d).foreach { st =>
         if (st.isFile && st.getModificationTime < cutoff)
@@ -583,7 +561,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     var boundaryParts = List.empty[String]
     // fenced: a record can carry an OLD ts, so a zombie's directory
     // drop could delete a date dir the thief just published into
-    fenceCommit(held, "retention directory drops")
+    held.fence("retention directory drops")
     listSubdirs(logDir, "log_part=").foreach { partDir =>
       listSubdirs(partDir.toString, "log_date=").foreach { dateDir =>
         val d = java.time.LocalDate.parse(
@@ -596,7 +574,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
           // skipping) also keeps the boundary rewrite below from
           // running fenced; retention is idempotent, so the caller
           // just re-runs.
-          fenceCommit(held, s"retention drop of ${dateDir.getName}")
+          held.fence(s"retention drop of ${dateDir.getName}")
           fs.delete(dateDir, true) // directory drop
         } else if (d == cutoff && boundaryHasOlder)
           boundaryParts ::= s"${partDir.getName}/${dateDir.getName}"
@@ -647,7 +625,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     }
     // fenced: a zombie's oldest-first deletions racing a thief's
     // publish could push the trim past records the thief just landed
-    fenceCommit(held, "size-capped retention deletions")
+    held.fence("size-capped retention deletions")
     var excess = files.map(_.size).sum - maxBytes
     files.sortBy(f => (f.date, f.mtime, f.p.toString)).foreach { f =>
       if (excess > 0) {
@@ -655,7 +633,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
         // longest deletion path in the class — a steal mid-loop must
         // stop the sweep before it trims files a thief is publishing
         // next to. Idempotent; the caller re-runs.
-        fenceCommit(held, s"retention trim of ${f.p.getName}")
+        held.fence(s"retention trim of ${f.p.getName}")
         fs.delete(f.p, false); excess -= f.size
       }
     }
@@ -714,7 +692,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     // fenced AFTER the (long) staging write, immediately before the
     // live swaps: a zombie compactor swapping a partition dir a thief
     // just published into would silently drop the concurrent batch
-    fenceCommit(held, s"the ${subdirs.size} partition-dir swap(s)")
+    held.fence(s"the ${subdirs.size} partition-dir swap(s)")
     subdirs.foreach { rel =>
       val live = new Path(s"$logDir/$rel")
       val stag = new Path(s"$tmp/$rel")
@@ -776,25 +754,6 @@ case class TopicRecord(
 
 object TopicLog {
   import org.apache.spark.sql.types._
-
-  /** Universal lease-renewal cadence cap (ms). Every live holder
-    * refreshes its lock at LEAST this often (see LeaseRenewer), so
-    * staleness judgments floor at 2× this constant — a SHARED horizon,
-    * not each observer's own `publishLeaseMs`: an observer configured
-    * with a short lease must never judge a live-but-long-leased holder
-    * stale just because its own patience is shorter than the holder's
-    * renewal tick (r9 ADVICE fix). */
-  val RenewalCapMs: Long = 60 * 1000L
-
-  /** Test-only injection point fired inside every commit fence BEFORE
-    * the token check — lets a spec steal the publish lock (or simulate
-    * a crash) at the exact pre-commit instant the fence must catch.
-    * Receives the fence's `what` label (r14, for the chaos suite's
-    * targeted injections): "the heads sidecar", "txn marker <id>",
-    * "txn-marker pruning", "retention directory drops",
-    * "size-capped retention deletions", "the N partition-dir swap(s)",
-    * and the per-delete retention fences. */
-  private[graft] var testBeforeCommit: String => Unit = _ => ()
 
   /** Records of `log` strictly after per-partition watermarks
     * (log_part -> last acked offset): one per-row predicate

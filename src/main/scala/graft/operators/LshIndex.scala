@@ -78,12 +78,12 @@ import graft.log.FsLease
   *
   * All writers (build, append, repair) serialize under a `_writer.lock`
   * lease ([[graft.log.FsLease]] — the TopicLog `publishLocked`
-  * discipline: atomic create-if-absent, capped renewal, staleness
-  * floor, token-CAS stale break). Generations publish atomically via
-  * one marker rename, FENCED on the lease token at both the manifest
-  * write and the rename (r11 ask #3 + r12 ADVICE): a holder whose
-  * renewal starved past the staleness floor and whose lock was
-  * stale-broken aborts before touching published state and retries —
+  * discipline: atomic create-if-absent, periodic renewal, a fixed
+  * stale window, token-CAS stale break). Generations publish
+  * atomically via one marker rename, FENCED on the lease token at both
+  * the manifest write and the rename (r11 ask #3 + r12 ADVICE): a
+  * holder whose renewal starved past the stale window and whose lock
+  * was stale-broken aborts before touching published state and retries —
   * two concurrent writers can never interleave a torn generation
   * (the fences are check-then-act with a documented residual window;
   * see [[publish]] for the three mechanisms that make it benign). An
@@ -199,19 +199,6 @@ object LshIndex {
 
   private def lease(spark: SparkSession, path: String): FsLease =
     new FsLease(fs(spark, path), lockPath(path))
-
-  /** A writer lease that looks alive right now — during a live append
-    * the signatures lawfully run ahead of the manifest watermark, so
-    * validation must not mistake that window for a crash. Judged by
-    * the lease's OWN staleness window ([[FsLease.staleAfterMillis]]),
-    * so a lease ever constructed with a longer `leaseMs` cannot be
-    * mistaken for dead by a validator using a shorter hardcoded one. */
-  private def writerLockLive(spark: SparkSession, path: String): Boolean =
-    try {
-      val st = fs(spark, path).getFileStatus(lockPath(path))
-      System.currentTimeMillis() - st.getModificationTime <=
-        lease(spark, path).staleAfterMillis
-    } catch { case _: java.io.IOException => false }
 
   private def readMarker(spark: SparkSession, path: String): Option[String] = {
     val f = fs(spark, path)
@@ -372,9 +359,10 @@ object LshIndex {
           sigRowCount(spark, path, m.sigDir) == m.sigRows)
         consistent match {
           case Some(m) => validated.add((path, m.gen)); m
-          case None if maybe.isDefined && writerLockLive(spark, path) =>
-            // an append is in flight: signatures lawfully run ahead of
-            // the watermark; answer from the still-consistent published
+          case None if maybe.isDefined && lease(spark, path).liveHolder() =>
+            // a live writer lease means an append is in flight:
+            // signatures lawfully run ahead of the watermark, which is
+            // no crash; answer from the still-consistent published
             // generation (and do NOT cache the verdict)
             maybe.get
           case _ =>
@@ -388,7 +376,7 @@ object LshIndex {
               try lease(spark, path).withLeaseHeld { held =>
                 validatedManifestLocked(spark, path, held)
               } catch {
-                case e: FencedPublishException if n > 1 =>
+                case e: FsLease.FencedException if n > 1 =>
                   org.slf4j.LoggerFactory.getLogger(getClass)
                     .warn(s"retrying fenced LSH repair on $path: $e")
                   attempt(n - 1)
@@ -602,28 +590,18 @@ object LshIndex {
     *    fenced-out predecessor's rename landed — also
     *    chaos-spec-found; deleting `seg-${gen}*` then guts a
     *    published generation).
-    * Check-then-act like the publish fences, with the same backstops. */
+    * Check-then-act like the publish fences, with the same backstops.
+    * Either failure throws [[FsLease.FencedException]]: nothing
+    * irreversible happened, so the caller retries under a fresh lease,
+    * whose first act re-validates the manifest. */
   private def fenceStagingDelete(spark: SparkSession, held: FsLease.Held,
       path: String, gen: Long, what: String): Unit = {
-    testBeforeStagingDelete(what)
-    if (!held.stillHeld()) throw new FencedPublishException(
-      s"lease for $path was stale-broken before deleting $what; " +
-        "aborting the staging rewrite")
+    held.fence(what)
     if (markerGenOr(spark, path, -1L) >= gen)
-      throw new FencedPublishException(
+      throw new FsLease.FencedException(
         s"gen-$gen was published while we staged $what (our generation " +
           "read went stale mid-steal); aborting the staging rewrite")
   }
-
-  /** A publish aborted by the pre-marker lease fence: the lock no
-    * longer carries our token (a waiter judged us dead past the
-    * staleness floor and token-CAS-broke it). Nothing irreversible
-    * happened — the marker still points at the old generation — so
-    * the caller retries the whole operation under a fresh lease,
-    * whose first act re-validates the manifest against whatever the
-    * thief published. */
-  final class FencedPublishException(msg: String)
-    extends IllegalStateException(msg)
 
   /** The generation-retention window a WRITER requests for its next
     * publish — `spark.graft.lsh.retainGenerations`, default and floor
@@ -723,19 +701,13 @@ object LshIndex {
   private def publish(spark: SparkSession, path: String, m: Manifest,
       held: FsLease.Held): Unit = {
     val f = fs(spark, path)
-    testBeforePublishEntry()
-    if (!held.stillHeld()) throw new FencedPublishException(
-      s"lease for $path was stale-broken before the gen-${m.gen} " +
-        "manifest write; aborting without touching published state")
+    held.fence(s"gen-${m.gen} manifest")
     if (markerGenOr(spark, path, -1L) >= m.gen)
-      throw new FencedPublishException(
+      throw new FsLease.FencedException(
         s"gen-${m.gen} was already published by another writer " +
           s"(our lease must have been stale-broken); aborting")
     writeManifest(spark, path, m)
-    testBeforePublish()
-    if (!held.stillHeld()) throw new FencedPublishException(
-      s"lease for $path was stale-broken mid-write; aborting the " +
-        s"gen-${m.gen} publish before the marker rename")
+    held.fence(s"gen-${m.gen} marker")
     testAfterFenceCheck()
     writeMarkerFile(spark, path, m.gen)
     val k = m.retainK
@@ -765,24 +737,11 @@ object LshIndex {
         // (gen collisions — both compute m0.gen+1) — our live set
         // simply doesn't know about them (chaos-spec-found). A fenced
         // writer stops sweeping; a later publish collects the rest.
-        if (retiredGen || retiredSeg) {
-          testBeforeGcDelete(n)
-          if (held.stillHeld()) f.delete(st.getPath, true)
-        }
+        if ((retiredGen || retiredSeg) && held.check(s"gc $n"))
+          f.delete(st.getPath, true)
       }
     } catch { case _: java.io.IOException => () } // GC is best-effort
   }
-
-  /** Test-only injection point, invoked between the manifest write
-    * and the pre-marker fence check — lets a spec steal the lock at
-    * the exact moment the fence must catch. */
-  private[graft] var testBeforePublish: () => Unit = () => ()
-
-  /** Test-only injection point at the very top of [[publish]], BEFORE
-    * the pre-write fence — lets a spec steal the lock and prove the
-    * fenced-out writer never writes its doomed same-numbered manifest
-    * over the thief's (r12 ADVICE). */
-  private[graft] var testBeforePublishEntry: () => Unit = () => ()
 
   /** Test-only injection point in the residual check-then-act window —
     * AFTER the pre-marker fence check passed, BEFORE the marker
@@ -790,20 +749,6 @@ object LshIndex {
     * scaladoc documents and prove exactly-once still holds via
     * last-writer-wins + the next writer's re-validation. */
   private[graft] var testAfterFenceCheck: () => Unit = () => ()
-
-  /** Test-only injection point at the top of [[fenceStagingDelete]]
-    * (r13 verdict ask #5): receives the staged dir name about to be
-    * deleted-and-rewritten — append segments (`seg-N`) and tier-merge
-    * outputs (`seg-NmR`), so the chaos schedule can land steals/kills
-    * INSIDE compaction's staging windows, not just the publish ones. */
-  private[graft] var testBeforeStagingDelete: String => Unit = _ => ()
-
-  /** Test-only injection point fired inside [[publish]]'s GC sweep for
-    * each dir that qualified for retirement, BEFORE that delete's
-    * individual lease fence — lets the chaos schedule land steals/kills
-    * mid-sweep and prove a fenced writer stops deleting (r13 verdict
-    * ask #5). */
-  private[graft] var testBeforeGcDelete: String => Unit = _ => ()
 
   /** Marker publish — one atomic whole-file replace through the
     * shared [[graft.log.AtomicFiles]] discipline (java.nio ATOMIC_MOVE
@@ -847,7 +792,7 @@ object LshIndex {
       assumeNew: Boolean, attempts: Int): Index =
     try appendSignaturesOnce(index, newSig, assumeNew)
     catch {
-      case e: FencedPublishException if attempts > 1 =>
+      case e: FsLease.FencedException if attempts > 1 =>
         org.slf4j.LoggerFactory.getLogger(getClass)
           .warn(s"retrying fenced LSH append on ${index.path}: $e")
         // drop this path's in-JVM watermark verdicts: our aborted

@@ -249,14 +249,6 @@ object TopicStream {
         s"no query id found in $p: $text"))
   }
 
-  /** The reference's `subscribe(event, name, callback)` in full
-    * (topic.js:89-117): drain the named subscriber's backlog, keep
-    * tailing live, run `process` on every micro-batch, and ack the
-    * batch's max offsets per partition AFTER processing succeeds
-    * (at-least-once — a crash between process and ack redelivers).
-    * Returns a [[Subscription]] handle; its `unsubscribe()` stops the
-    * tail and the persisted acks let `replay(name)` pick up exactly
-    * where processing stopped. */
   /** The ONE ack-after-process micro-batch body shared by
     * [[subscribeDurable]] and [[drainOnce]] (r9 review fix — two
     * verbatim copies had already begun to drift): persist, run the
@@ -275,6 +267,14 @@ object TopicStream {
     } finally { b.unpersist(); () }
   }
 
+  /** The reference's `subscribe(event, name, callback)` in full
+    * (topic.js:89-117): drain the named subscriber's backlog, keep
+    * tailing live, run `process` on every micro-batch, and ack the
+    * batch's max offsets per partition AFTER processing succeeds
+    * (at-least-once — a crash between process and ack redelivers).
+    * Returns a [[Subscription]] handle; its `unsubscribe()` stops the
+    * tail and the persisted acks let `replay(name)` pick up exactly
+    * where processing stopped. */
   def subscribeDurable(topic: TopicLog, name: String,
       checkpointDir: String, event: Option[String] = None)
       (process: DataFrame => Unit): Subscription = {

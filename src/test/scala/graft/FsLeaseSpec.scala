@@ -1,0 +1,96 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.Path
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.log.FsLease
+
+/** The lease rules every single-writer artifact shares: the fence, its
+  * test hook, and the stale-break protocol. */
+class FsLeaseSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  private def freshLock(): (java.io.File, Path) = {
+    val f = new java.io.File(Files.createTempDirectory("fslease").toFile, "_x.lock")
+    (f, new Path(f.toURI))
+  }
+
+  private def fsOf(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def writeLock(f: java.io.File, token: String, ageMs: Long): Unit = {
+    Files.writeString(f.toPath, token)
+    assert(f.setLastModified(System.currentTimeMillis() - ageMs))
+  }
+
+  test("fence passes while the token is ours") {
+    val (f, p) = freshLock()
+    val held = new FsLease(fsOf(p), p).acquire()
+    try {
+      held.fence("the commit")
+      assert(held.check("the commit"))
+    } finally held.release()
+    assert(!f.exists(), "release frees our own lock")
+  }
+
+  test("fence throws FencedException once the token is replaced; check does not") {
+    val (f, p) = freshLock()
+    val held = new FsLease(fsOf(p), p).acquire()
+    Files.writeString(f.toPath, "thief-token")
+    try {
+      val ex = intercept[FsLease.FencedException](held.fence("the commit"))
+      assert(ex.getMessage.contains("stale-broken before the commit"), ex.getMessage)
+      assert(!held.check("the commit"))
+    } finally held.release()
+    assert(Files.readString(f.toPath) == "thief-token",
+      "a fenced-out holder must not free the thief's lock")
+  }
+
+  test("the fence hook sees the label before the token read") {
+    val (f, p) = freshLock()
+    val held = new FsLease(fsOf(p), p).acquire()
+    val labels = scala.collection.mutable.ArrayBuffer.empty[String]
+    FsLease.testBeforeFence = what => {
+      labels += what
+      if (what == "steal here") Files.writeString(f.toPath, "thief-token")
+    }
+    try {
+      assert(held.check("plain step"))
+      // the steal lands inside the hook, so the token read that follows
+      // must already see it
+      assert(!held.check("steal here"))
+      intercept[FsLease.FencedException](held.fence("after the steal"))
+    } finally {
+      FsLease.testBeforeFence = _ => ()
+      held.release()
+    }
+    assert(labels.toSeq == Seq("plain step", "steal here", "after the steal"))
+  }
+
+  test("breakIfStale repairs before its compare-and-delete and spares a fresh lock") {
+    val (f, p) = freshLock()
+    val stale = FsLease.StaleAfterMs + 10 * 1000L
+    // a dead holder's lock: the repair runs while the lock still exists,
+    // then the lock is deleted
+    var lockSeenByRepair = false
+    writeLock(f, "dead-token", stale)
+    val lease = new FsLease(fsOf(p), p, () => lockSeenByRepair = f.exists())
+    assert(!lease.liveHolder())
+    lease.breakIfStale()
+    assert(lockSeenByRepair, "onStaleBreak must run before the delete")
+    assert(!f.exists(), "a stale lock is broken")
+    assert(!lease.liveHolder())
+    // a waiter re-acquires while our repair runs: the compare-and-delete
+    // sees a different (mtime, token) and leaves the live lock alone
+    writeLock(f, "dead-token", stale)
+    new FsLease(fsOf(p), p, () => writeLock(f, "live-token", 0L)).breakIfStale()
+    assert(f.exists() && Files.readString(f.toPath) == "live-token")
+    // a fresh lock is a live holder: no repair, no delete
+    var repaired = false
+    val observer = new FsLease(fsOf(p), p, () => repaired = true)
+    assert(observer.liveHolder())
+    observer.breakIfStale()
+    assert(!repaired && f.exists(), "a fresh lock must be left alone")
+  }
+}

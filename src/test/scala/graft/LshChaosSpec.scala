@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.log.FsLease
 import graft.operators.{Dedup, LshIndex}
 
 /** Randomized multi-writer chaos coverage for the standing LSH index
@@ -67,11 +68,6 @@ class LshChaosSpec extends AnyFunSuite {
       def chance(p: Double): Boolean =
         Thread.currentThread().getName.startsWith("chaos-writer") && roll(p)
       def steal(): Unit = new java.io.File(s"$path/_writer.lock").delete()
-      LshIndex.testBeforePublishEntry = () => if (chance(0.2)) steal()
-      LshIndex.testBeforePublish = () => {
-        if (chance(0.15)) steal()
-        if (chance(0.15)) throw new ChaosKill // crash: manifest written, no marker
-      }
       LshIndex.testAfterFenceCheck = () => if (chance(0.1)) steal()
       // r13 verdict ask #5: compaction and GC windows get their own
       // adversary. 3 appends/writer guarantee tier 0 reaches MergeAt=8
@@ -81,26 +77,32 @@ class LshChaosSpec extends AnyFunSuite {
       // merge) and mid-GC-sweep (a fenced writer must stop deleting).
       val mergeAttempts = new java.util.concurrent.atomic.AtomicInteger(0)
       val gcFences = new java.util.concurrent.atomic.AtomicInteger(0)
-      LshIndex.testBeforeStagingDelete = what => {
-        val isMerge = what.matches("seg-\\d+m\\d+")
-        if (isMerge) mergeAttempts.incrementAndGet()
-        if (chance(0.08)) steal()
-        if (chance(0.08)) throw new ChaosKill // crash mid-staging
-        // the scheduled phase (below) injects ONLY into merge-staging
-        // windows, and lightly: its job is to drive tier 0 to MergeAt
-        // and prove a merge lands THROUGH the adversary, so its filler
-        // appends must not keep resetting the tier count via the
-        // abort -> watermark-repair -> single-rebuilt-segment path
-        if (Thread.currentThread().getName.startsWith("chaos-sched") && isMerge) {
-          if (roll(0.05)) steal()
-          if (roll(0.05)) throw new ChaosKill
+      // one fence hook, dispatched on the fence's label
+      FsLease.testBeforeFence = what =>
+        if (what.matches("gen-\\d+ manifest")) { // publish entry
+          if (chance(0.2)) steal()
+        } else if (what.matches("gen-\\d+ marker")) { // manifest written
+          if (chance(0.15)) steal()
+          if (chance(0.15)) throw new ChaosKill // crash: manifest written, no marker
+        } else if (what.startsWith("gc ")) { // one GC delete
+          gcFences.incrementAndGet()
+          if (chance(0.08)) steal()
+          if (chance(0.08)) throw new ChaosKill // crash mid-sweep (post-publish)
+        } else { // a staged dir name: seg-N, seg-Nf or seg-NmR
+          val isMerge = what.matches("seg-\\d+m\\d+")
+          if (isMerge) mergeAttempts.incrementAndGet()
+          if (chance(0.08)) steal()
+          if (chance(0.08)) throw new ChaosKill // crash mid-staging
+          // the scheduled phase (below) injects ONLY into merge-staging
+          // windows, and lightly: its job is to drive tier 0 to MergeAt
+          // and prove a merge lands THROUGH the adversary, so its filler
+          // appends must not keep resetting the tier count via the
+          // abort -> watermark-repair -> single-rebuilt-segment path
+          if (Thread.currentThread().getName.startsWith("chaos-sched") && isMerge) {
+            if (roll(0.05)) steal()
+            if (roll(0.05)) throw new ChaosKill
+          }
         }
-      }
-      LshIndex.testBeforeGcDelete = _ => {
-        gcFences.incrementAndGet()
-        if (chance(0.08)) steal()
-        if (chance(0.08)) throw new ChaosKill // crash mid-sweep (post-publish)
-      }
       val writerErrs =
         new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val probeErrs =
@@ -201,11 +203,8 @@ class LshChaosSpec extends AnyFunSuite {
         stop.set(true)
         prober.join()
         watcher.join()
-        LshIndex.testBeforePublishEntry = () => ()
-        LshIndex.testBeforePublish = () => ()
+        FsLease.testBeforeFence = _ => ()
         LshIndex.testAfterFenceCheck = () => ()
-        LshIndex.testBeforeStagingDelete = _ => ()
-        LshIndex.testBeforeGcDelete = _ => ()
       }
       assert(writerErrs.isEmpty, s"writers gave up: $writerErrs")
       val gens = gensSeen.synchronized(gensSeen.toSeq)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.log.FsLease
 import graft.operators.{Dedup, LshIndex}
 
 /** The standing near-dup index (r10 verdict ask #1): a probe against a
@@ -461,14 +462,15 @@ class LshIndexSpec extends AnyFunSuite {
     val ix = LshIndex.build(corpus, s"$dir/ix")
     val markerGen0 = ix.currentManifest.gen
     @volatile var fired = 0
-    LshIndex.testBeforePublish = () => {
-      fired += 1
-      if (fired == 1) // simulate a waiter's token-CAS break of OUR lock
-        new java.io.File(s"$dir/ix/_writer.lock").delete()
-    }
+    FsLease.testBeforeFence = what =>
+      if (what.endsWith(" marker")) {
+        fired += 1
+        if (fired == 1) // simulate a waiter's token-CAS break of OUR lock
+          new java.io.File(s"$dir/ix/_writer.lock").delete()
+      }
     try {
       LshIndex.append(ix, docs(777L -> base), assumeNew = true)
-    } finally LshIndex.testBeforePublish = () => ()
+    } finally FsLease.testBeforeFence = _ => ()
     assert(fired >= 2, s"the fenced attempt must retry (fired=$fired)")
     // no torn generation: the index loads, validates, and the marker
     // points at a manifest whose watermark matches the signatures
@@ -481,6 +483,33 @@ class LshIndexSpec extends AnyFunSuite {
     // and probes see it
     assert(probeSet(LshIndex.probe(reloaded, docs(9000L -> base)))
       .exists(_._2 == 777L))
+  }
+
+  test("a writer fenced on every retry surfaces FsLease.FencedException") {
+    // The append retries a fenced publish a bounded number of times; a
+    // writer whose lock is stolen before EVERY marker rename must give
+    // up with the fence's own exception type, never having moved the
+    // marker, and the next load must fold its orphaned rows in once.
+    val dir = Files.createTempDirectory("lshix").toString
+    val ix = LshIndex.build(corpus, s"$dir/ix")
+    val markerGen0 = ix.currentManifest.gen
+    val fired = new java.util.concurrent.atomic.AtomicInteger(0)
+    FsLease.testBeforeFence = what =>
+      if (what.endsWith(" marker")) {
+        fired.incrementAndGet()
+        new java.io.File(s"$dir/ix/_writer.lock").delete()
+      }
+    try intercept[FsLease.FencedException] {
+      LshIndex.append(ix, docs(777L -> base), assumeNew = true)
+    } finally FsLease.testBeforeFence = _ => ()
+    assert(fired.get() == 3, s"one fenced marker per attempt (fired=$fired)")
+    val markerTxt = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/ix/_graft_lsh_index")), "UTF-8")
+    assert(markerTxt.trim.endsWith(s"gen=$markerGen0"),
+      s"a fenced writer must never move the marker: $markerTxt")
+    val reloaded = LshIndex.load(spark, s"$dir/ix")
+    assert(reloaded.currentManifest.gen > markerGen0)
+    assert(reloaded.signatures.filter(col("doc_id") === 777L).count() == 1L)
   }
 
   test("standing index stands across sessions: a fresh session resolves the same cache entry with zero jobs") {
@@ -554,8 +583,8 @@ class LshIndexSpec extends AnyFunSuite {
     val writes = scala.collection.mutable.ArrayBuffer.empty[Long]
     val phase = new java.util.concurrent.atomic.AtomicInteger(0)
     LshIndex.testOnManifestWrite = g => writes.synchronized { writes += g }
-    LshIndex.testBeforePublishEntry = () =>
-      if (phase.incrementAndGet() == 1) {
+    FsLease.testBeforeFence = what =>
+      if (what.endsWith(" manifest") && phase.incrementAndGet() == 1) {
         // our lock is token-CAS-broken while we stall...
         new java.io.File(s"$dir/ix/_writer.lock").delete()
         // ...and the thief completes a FULL append before we resume.
@@ -569,7 +598,7 @@ class LshIndexSpec extends AnyFunSuite {
       }
     try LshIndex.append(ix, docs(777L -> base), assumeNew = true)
     finally {
-      LshIndex.testBeforePublishEntry = () => ()
+      FsLease.testBeforeFence = _ => ()
       LshIndex.testOnManifestWrite = _ => ()
     }
     // the ONLY manifest writes: the thief's repair (gen-2) and its own

@@ -8,16 +8,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.log.TopicLog
+import graft.log.{FsLease, TopicLog}
 
 /** Randomized multi-writer chaos coverage for the TOPIC LOG (r13
   * verdict ask #2, the [[LshChaosSpec]] analogue): the single-injection
   * fence specs in TopicLogSpec each pin ONE steal/kill at ONE point;
   * this suite drives 3 concurrent idempotent publishers × 2 batches
-  * with SEEDED random steal/kill injections at every `fenceCommit`
-  * hook, a compaction + retention + marker-pruning maintainer, and a
-  * replaying/acking durable consumer running throughout, and asserts
-  * the invariants that must survive ANY interleaving:
+  * with SEEDED random steal/kill injections at every commit fence
+  * (`FsLease.testBeforeFence`), a compaction + retention +
+  * marker-pruning maintainer, and a replaying/acking durable consumer
+  * running throughout, and asserts the invariants that must survive
+  * ANY interleaving:
   *
   *  - (log_part, offset) pairs are globally unique end-to-end — the
   *    one invariant the publish lock exists to protect;
@@ -108,7 +109,7 @@ class TopicChaosSpec extends AnyFunSuite {
       val lock = new java.io.File(s"$dir/_publish.lock")
       val orphans = new AtomicInteger(0)
       val firings = new AtomicInteger(0)
-      TopicLog.testBeforeCommit = what => {
+      FsLease.testBeforeFence = what => {
         val name = Thread.currentThread().getName
         if (name.startsWith("topicchaos-writer")) {
           if (what == "the heads sidecar") {
@@ -261,7 +262,7 @@ class TopicChaosSpec extends AnyFunSuite {
       } finally {
         stop.set(true)
         maint.join(); consumer.join(); watcher.join()
-        TopicLog.testBeforeCommit = _ => ()
+        FsLease.testBeforeFence = _ => ()
       }
 
       assert(firings.get() > 0, "seed produced zero injections — the test exercised nothing")

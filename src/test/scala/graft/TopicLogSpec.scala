@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.log.TopicLog
+import graft.log.{FsLease, TopicLog}
 
 class TopicLogSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -569,10 +569,6 @@ class TopicLogSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("topic").toString
     val a = TopicLog.prepare(spark, dir, numPartitions = 2)
     val b = TopicLog.prepare(spark, dir, numPartitions = 2)
-    // lease far shorter than A's publish: without renewal, B declares A
-    // dead mid-append, breaks the lock, and re-issues A's offsets
-    a.publishLeaseMs = 500L
-    b.publishLeaseMs = 500L
     val crawl = udf((s: String) => { Thread.sleep(25); s })
     val slow = mkRecords(100).repartition(1)
       .withColumn("message", crawl(col("message"))) // ~2.5 s publish
@@ -642,7 +638,7 @@ class TopicLogSpec extends AnyFunSuite {
     val headsBefore = topic.heads()
     val lock = new java.io.File(s"$dir/_publish.lock")
     val fired = new java.util.concurrent.atomic.AtomicInteger(0)
-    TopicLog.testBeforeCommit = _ =>
+    FsLease.testBeforeFence = _ =>
       if (fired.incrementAndGet() == 1) {
         // a waiter judged us dead mid-append and token-CAS-broke our
         // lock; a thief now holds a fresh lease of its own
@@ -650,9 +646,9 @@ class TopicLogSpec extends AnyFunSuite {
         java.nio.file.Files.writeString(lock.toPath, "thief-token")
       }
     val ex =
-      try intercept[IllegalStateException] {
+      try intercept[FsLease.FencedException] {
         topic.publish(mkRecords(20, startId = 20))
-      } finally TopicLog.testBeforeCommit = _ => ()
+      } finally FsLease.testBeforeFence = _ => ()
     assert(ex.getMessage.contains("stale-broken"), ex.getMessage)
     assert(topic.heads() == headsBefore,
       "a fenced publish must not touch the heads sidecar")
@@ -807,29 +803,28 @@ class TopicLogSpec extends AnyFunSuite {
     }
   }
 
-  test("staleness floors at the shared renewal cap: a short-leased observer honors a 90s-old lock") {
-    // r9 ADVICE fix: a live holder renews at most every RenewalCapMs
-    // (60 s), so its lock can look up to ~60 s old to any observer. An
-    // observer configured with a short lease (fast-failover config)
-    // judging staleness by its OWN lease would break that live lock
-    // and duplicate offsets. The floor is 2× the shared cap: a lock
-    // 90 s old is NOT stale to anyone, whatever their lease.
+  test("stale window: a lock just under it is honored, one just over it is broken") {
+    // Staleness is one fixed window (FsLease.StaleAfterMs) for every
+    // holder and observer: a live holder renews every RenewEveryMs, so
+    // a lock younger than the window belongs to a live writer and must
+    // be waited on; only a lock older than it may be broken (with the
+    // sidecar reconcile) and taken over.
     val dir = Files.createTempDirectory("topic").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
     topic.publish(mkRecords(4))
     val lock = new java.io.File(s"$dir/_publish.lock")
     assert(lock.createNewFile())
-    assert(lock.setLastModified(System.currentTimeMillis() - 90 * 1000L))
-    val impatient = TopicLog.prepare(spark, dir, numPartitions = 2)
-    impatient.publishLeaseMs = 500L // would have judged 90s-old stale pre-fix
+    assert(lock.setLastModified(
+      System.currentTimeMillis() - FsLease.StaleAfterMs + 10 * 1000L))
+    val observer = TopicLog.prepare(spark, dir, numPartitions = 2)
     val ex = intercept[IllegalStateException] {
-      impatient.acquirePublishLockForTest(400L)
+      observer.acquirePublishLockForTest(400L)
     }
     assert(ex.getMessage.contains("lease"))
-    assert(lock.exists(), "the 90s-old lock must be honored, not broken")
-    // past the 2-minute floor the same observer DOES break it
-    assert(lock.setLastModified(System.currentTimeMillis() - 150 * 1000L))
-    assert(impatient.publish(mkRecords(4, startId = 10)).values
+    assert(lock.exists(), "a lock just under the stale window must be honored")
+    assert(lock.setLastModified(
+      System.currentTimeMillis() - FsLease.StaleAfterMs - 10 * 1000L))
+    assert(observer.publish(mkRecords(4, startId = 10)).values
       .map(_.count).sum == 4)
     assert(!new java.io.File(s"$dir/_publish.lock").exists(),
       "the truly-stale lock was broken and publish released its own")
@@ -859,7 +854,7 @@ class TopicLogSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("topic").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
     val lock = new java.io.File(s"$dir/_publish.lock")
-    TopicLog.testBeforeCommit = what =>
+    FsLease.testBeforeFence = what =>
       if (what.startsWith("txn marker")) {
         lock.delete()
         java.nio.file.Files.writeString(lock.toPath, "thief-token")
@@ -867,7 +862,7 @@ class TopicLogSpec extends AnyFunSuite {
     val ex =
       try intercept[TopicLog.CommittedButUnmarkedException] {
         topic.publishIdempotent(mkRecords(20), "tx-window")
-      } finally TopicLog.testBeforeCommit = _ => ()
+      } finally FsLease.testBeforeFence = _ => ()
     assert(ex.txnId == "tx-window")
     assert(ex.ranges.values.map(_.count).sum == 20L,
       "the exception must carry the COMMITTED ranges")
@@ -895,15 +890,15 @@ class TopicLogSpec extends AnyFunSuite {
     val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
     topic.publish(mkRecords(20))
     final class Boom extends RuntimeException("simulated sidecar IO failure")
-    TopicLog.testBeforeCommit = what =>
+    FsLease.testBeforeFence = what =>
       if (what == "the heads sidecar") {
-        TopicLog.testBeforeCommit = _ => () // fire once
+        FsLease.testBeforeFence = _ => () // fire once
         throw new Boom
       }
     val ex =
       try intercept[RuntimeException] {
         topic.publish(mkRecords(20, startId = 20))
-      } finally TopicLog.testBeforeCommit = _ => ()
+      } finally FsLease.testBeforeFence = _ => ()
     assert(ex.isInstanceOf[Boom], ex.toString)
     // the crashed batch stays behind (at-least-once), heads healed
     assert(topic.read().count() == 40)
@@ -939,16 +934,16 @@ class TopicLogSpec extends AnyFunSuite {
     assert(nDateDirs >= 4, s"test shape: want several date dirs, got $nDateDirs")
     val lock = new java.io.File(s"$dir/_publish.lock")
     val drops = new java.util.concurrent.atomic.AtomicInteger(0)
-    TopicLog.testBeforeCommit = what =>
+    FsLease.testBeforeFence = what =>
       if (what.startsWith("retention drop of") &&
           drops.incrementAndGet() == 2) {
         lock.delete()
         java.nio.file.Files.writeString(lock.toPath, "thief-token")
       }
     val ex =
-      try intercept[IllegalStateException] {
+      try intercept[FsLease.FencedException] {
         topic.retainAfter(new java.sql.Timestamp(base + 11 * 86400000L))
-      } finally TopicLog.testBeforeCommit = _ => ()
+      } finally FsLease.testBeforeFence = _ => ()
     assert(ex.getMessage.contains("stale-broken"), ex.getMessage)
     // the sweep stopped at the fence: old date dirs SURVIVE past the
     // one deleted before the steal landed
