@@ -60,16 +60,6 @@ object AtomicFiles {
     }
   }
 
-  /** Atomically rename an ALREADY-WRITTEN temp file over `dest`. The
-    * caller owns the temp's uniqueness (a token-unique name, or a
-    * path no other writer can be using). */
-  def replace(fs: FileSystem, conf: Configuration, tmp: Path,
-      dest: Path): Unit =
-    if (fs.getScheme == "file")
-      move(java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(dest.toUri.getPath))
-    else fcRename(fs, conf, tmp, dest)
-
   private def move(tmp: java.nio.file.Path, dest: java.nio.file.Path): Unit = {
     java.nio.file.Files.move(tmp, dest,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,

@@ -80,16 +80,6 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   private val headsPath = s"$path/_offsets.json"
   private val lockPath = new Path(s"$path/_publish.lock")
 
-  /** How long committed-txn markers (`txns/<txnId>`, written by
-    * [[publishIdempotent]]) are kept before maintenance prunes them. A
-    * marker is only needed while a redelivery of its batch is still
-    * possible — for a checkpointed streaming sink that window is one
-    * restart, not forever — so any horizon comfortably past the
-    * longest plausible recovery gap is safe. After the horizon a
-    * redelivered txn re-appends (at-least-once), the same contract as
-    * the marker-loss window publishIdempotent already documents. */
-  var txnMarkerTtlMs: Long = 7 * 24 * 60 * 60 * 1000L
-
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -292,13 +282,11 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     }
   }
 
-  /** Whether a committed-txn marker exists for `txnId`. Lock-free
-    * read — markers are written tmp+rename, so the probe is atomic;
-    * it can only race a CONCURRENT commit of the same id, which the
-    * upgrade-migration use case (probing a txn-id format no current
-    * deployment writes — see
-    * [[graft.streaming.TopicStream.publishSinkExactlyOnce]]) never
-    * does. */
+  /** Whether a committed-txn marker exists for `txnId` — the
+    * supervisor's check after [[TopicLog.CommittedButUnmarkedException]]
+    * before deciding whether to retry that txn. Lock-free read —
+    * markers are written tmp+rename, so the probe is atomic; it can
+    * only race a CONCURRENT commit of the same id. */
   def hasTxnMarker(txnId: String): Boolean =
     readKv(new Path(s"$path/txns/$txnId")).isDefined
 
@@ -470,9 +458,9 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
 
   // ----------------------------------------------- compaction / retention
 
-  /** Drop committed-txn markers older than [[txnMarkerTtlMs]] — without
-    * this a long-running exactly-once sink accumulates one small
-    * filesystem object per micro-batch forever. Runs under the writer
+  /** Drop committed-txn markers older than [[TopicLog.TxnMarkerTtlMs]]
+    * — without this a long-running exactly-once sink accumulates one
+    * small filesystem object per micro-batch forever. Runs under the writer
     * lease (a marker must never vanish while its publish could still
     * be mid-commit) and is invoked by every maintenance op (compact,
     * all three retention flavors), so a topic that gets ANY maintenance
@@ -485,7 +473,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     val d = new Path(s"$path/txns")
     if (fs.exists(d)) {
       held.fence("txn-marker pruning")
-      val cutoff = System.currentTimeMillis() - txnMarkerTtlMs
+      val cutoff = System.currentTimeMillis() - TopicLog.TxnMarkerTtlMs
       fs.listStatus(d).foreach { st =>
         if (st.isFile && st.getModificationTime < cutoff)
           fs.delete(st.getPath, false)
@@ -681,7 +669,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
 
   /** Rewrite exactly the given partition subdirs (relative to logDir)
     * with df's output; everything else is untouched. Crash-safe per
-    * subdir: live is renamed to `<dir>.old` before staging moves in;
+    * subdir: live is renamed to `_old.<dir>` before staging moves in;
     * [[recover]] rolls back any torn swap. */
   private def swapLogSubdirs(df: DataFrame, subdirs: Seq[String],
       held: FsLease.Held): Unit = {
@@ -696,10 +684,10 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     subdirs.foreach { rel =>
       val live = new Path(s"$logDir/$rel")
       val stag = new Path(s"$tmp/$rel")
-      // "_old." PREFIX, not ".old" suffix: these dirs sit inside the
-      // partition-discovery tree, and Spark ignores underscore-prefixed
-      // names — a lock-free concurrent read() planned mid-swap must not
-      // see "log_part=5.old" (unparseable partition value / double read)
+      // "_old." PREFIX, which recover() keys on. Spark's listing skips
+      // underscore names only when they hold no "=", so a lock-free
+      // read() planned mid-swap still lists "_old.log_part=5" and can
+      // fail with CONFLICTING_PARTITION_COLUMN_NAMES
       val old = new Path(live.getParent, "_old." + live.getName)
       fs.delete(old, true)
       if (fs.exists(live)) fs.rename(live, old)
@@ -709,11 +697,12 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     fs.delete(new Path(tmp), true)
   }
 
-  /** Roll back any swap a crash tore mid-flight: a `<dir>.old` (or
-    * `log_part=N.old` / `log_date=D.old`) whose live twin is missing is
-    * renamed back; leftover `.old`/`.staging` dirs with a healthy live
-    * twin are droppable garbage. Compaction/retention are idempotent,
-    * so rolling BACK is always safe — the caller just re-runs. */
+  /** Roll back any swap a crash tore mid-flight: an `_old.log_part=N`
+    * or `_old.log_date=D` dir whose live twin is missing is renamed
+    * back; a leftover `_old.` dir with a healthy live twin and the
+    * `log.staging` dir are droppable garbage. Compaction/retention are
+    * idempotent, so rolling BACK is always safe — the caller just
+    * re-runs. */
   private def recover(): Unit = {
     def heal(dir: Path): Unit = {
       if (!fs.exists(dir)) return
@@ -723,16 +712,12 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
           val live = new Path(dir, n.stripPrefix("_old."))
           if (!fs.exists(live)) fs.rename(st.getPath, live)
           else fs.delete(st.getPath, true)
-        } else if (n.endsWith(".old")) { // legacy suffix (pre-r9 logs)
-          val live = new Path(dir, n.stripSuffix(".old"))
-          if (!fs.exists(live)) fs.rename(st.getPath, live)
-          else fs.delete(st.getPath, true)
         } else if (n.endsWith(".staging")) fs.delete(st.getPath, true)
       }
     }
-    heal(new Path(path))                 // log.old / subscribers.old
-    heal(new Path(logDir))               // log_part=N.old
-    listSubdirs(logDir, "log_part=").foreach(heal) // log_date=D.old
+    heal(new Path(path))                 // log.staging
+    heal(new Path(logDir))               // _old.log_part=N
+    listSubdirs(logDir, "log_part=").foreach(heal) // _old.log_date=D
     // A leftover publish lock past its lease = a publisher died between
     // append and sidecar write; reconcile so heads() never re-issues
     // offsets (FsLease.breakIfStale runs onStaleBreak = reconcileHeads
@@ -754,6 +739,17 @@ case class TopicRecord(
 
 object TopicLog {
   import org.apache.spark.sql.types._
+
+  /** How long committed-txn markers (`txns/<txnId>`, written by
+    * [[TopicLog.publishIdempotent]]) are kept before maintenance
+    * prunes them: 7 days. A marker is only needed while a redelivery
+    * of its batch is still possible — for a checkpointed streaming
+    * sink that window is one restart, not forever — so any horizon
+    * comfortably past the longest plausible recovery gap is safe.
+    * After the horizon a redelivered txn re-appends (at-least-once),
+    * the same contract as the marker-loss window publishIdempotent
+    * already documents. */
+  val TxnMarkerTtlMs: Long = 7 * 24 * 60 * 60 * 1000L
 
   /** Records of `log` strictly after per-partition watermarks
     * (log_part -> last acked offset): one per-row predicate

@@ -119,8 +119,8 @@ object Curation {
       corpus: => DataFrame, verdictTopic: graft.log.TopicLog,
       checkpointDir: String, minJaccard: Double = 0.0)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val mint = graft.streaming.TopicStream
-      .txnIdMinter(verdictTopic.spark, checkpointDir)
+    val mint = new graft.streaming.TopicStream.TxnIdMinter(
+      verdictTopic.spark, checkpointDir)
     screenNearDups(docs, ix, corpus, checkpointDir) { (verdicts, batchId) =>
       verdictTopic.publishIdempotent(
         verdicts.filter(col("jaccard") >= minJaccard)
@@ -581,6 +581,9 @@ object Curation {
     })
   )
 
+  // `edges` is MATERIALIZED: DuckDB otherwise re-runs the whole
+  // shingle/minhash/band pipeline on every iteration of the recursive
+  // `reach` and runs out of memory at sf0.01
   val oracle: Map[String, String] = Map(
     "q113_curation_verdicts" ->
       s"""WITH RECURSIVE corpus AS (
@@ -596,7 +599,7 @@ object Curation {
          |bands AS (${Dedup.bandsSql}),
          |bx AS (${Dedup.lshBxSql}),
          |cand AS (${Dedup.lshCandSql}),
-         |edges AS (
+         |edges AS MATERIALIZED (
          |  SELECT doc_a AS src, doc_b AS dst FROM cand
          |  UNION ALL SELECT doc_b, doc_a FROM cand),
          |reach AS (

@@ -77,11 +77,16 @@ final class Subscription private[streaming] (
   *    `_id > head`): capture the current heads at subscribe time and
   *    stream only records after them — subscribers "see messages
   *    published from now on".
-  *  - durable subscribe (topic.js:89-117 + ack): a checkpointed
-  *    `writeStream` — the checkpoint directory IS the acked watermark,
-  *    giving at-least-once delivery with resume-where-you-left-off,
-  *    exactly the reference's named-subscriber contract.
-  *  - event filter (topic.js:169-171): pushed into the stream source.
+  *  - durable subscribe (topic.js:89-117 + ack): [[subscribeDurable]]
+  *    (live) and [[drainOnce]] (backlog, then stop) resume after the
+  *    named subscriber's acked watermark and ack each processed
+  *    micro-batch into the topic's subscriber sidecar — the reference's
+  *    `<topic>_subscribers` document — so [[graft.log.TopicLog.replay]],
+  *    [[graft.log.TopicLog.watermarks]] and `q22_consumer_lag` see the
+  *    same position. Delivery is at-least-once (a crash between
+  *    processing and the ack redelivers the batch).
+  *  - event filter (topic.js:169-171): a row filter applied after the
+  *    read, not pushed into the source.
   *
   * At cluster scale the file source incrementally lists only new files
   * (the log is append-only), state is bounded by watermarks, and
@@ -136,32 +141,11 @@ object TopicStream {
     event.fold(afterMark)(e => afterMark.filter(col("event") === e))
   }
 
-  /** Durable subscription: checkpointed parquet sink. The checkpoint
-    * dir plays the role of the reference's `<topic>_subscribers`
-    * acked-offset collection. */
-  def durableSink(stream: DataFrame, outDir: String, checkpointDir: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-
-  /** Use a topic as a streaming SINK: each micro-batch is published
-    * through the topic's offset-assigning append path (foreachBatch), so
-    * a streaming pipeline can terminate in a durable, replayable topic.
-    * Expects the canonical record columns (event, key, message, ts). */
-  def publishSink(records: DataFrame, topic: TopicLog,
-      checkpointDir: String): DataStreamWriter[Row] =
-    records.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        topic.publish(batch.select(col("event"), col("key"),
-          col("message"), col("ts")))
-        ()
-      }
-
-  /** [[publishSink]] with exactly-once batches: the txn id mixes the
+  /** Use a topic as a streaming SINK with exactly-once batches: each
+    * micro-batch is published through
+    * [[graft.log.TopicLog.publishIdempotent]] (expects the canonical
+    * record columns event, key, message, ts), so a streaming pipeline
+    * can terminate in a durable, replayable topic. The txn id mixes the
     * checkpoint location, the streaming query's PERSISTENT id, and the
     * epoch batch id. The query id (minted at query start, stored in
     * `<checkpoint>/metadata`) is stable across restarts of the SAME
@@ -174,40 +158,30 @@ object TopicStream {
     * silent data loss; with it, a post-wipe run gets fresh txn ids and
     * degrades to at-least-once, the survivable direction
     * ([[graft.log.TopicLog.publishIdempotent]] documents the remaining
-    * at-least-once windows).
-    *
-    * UPGRADE MIGRATION: deployments older than the query-id mix wrote
-    * markers as `sink<id>b<batch>` (no `q<tag>` segment). Each batch
-    * probes that legacy id first and skips the append when the old
-    * marker exists, so upgrading mid-stream does not replay the
-    * in-flight batch. A legacy marker already pruned by
-    * [[graft.log.TopicLog.txnMarkerTtlMs]] degrades that one batch to
-    * at-least-once — the safe direction. */
+    * at-least-once windows). */
   def publishSinkExactlyOnce(records: DataFrame, topic: TopicLog,
       checkpointDir: String): DataStreamWriter[Row] = {
-    val mint = txnIdMinter(topic.spark, checkpointDir)
+    val mint = new TxnIdMinter(topic.spark, checkpointDir)
     records.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        // legacy (pre-queryTag) marker probe — see UPGRADE MIGRATION
-        if (!topic.hasTxnMarker(mint.legacy("sink", batchId)))
-          topic.publishIdempotent(
-            batch.select(col("event"), col("key"), col("message"), col("ts")),
-            mint("sink", batchId))
+        topic.publishIdempotent(
+          batch.select(col("event"), col("key"), col("message"), col("ts")),
+          mint("sink", batchId))
         ()
       }
   }
 
   /** The ONE txn-id minting discipline for every foreachBatch sink
     * that publishes into a topic exactly-once (shared so a future
-    * change to the scheme — like the UPGRADE MIGRATION above — lands
-    * everywhere at once): `<prefix><sinkId>q<queryTag>b<batchId>`,
-    * where sinkId derives from the checkpoint location and queryTag
-    * from the query's PERSISTENT id (resolved lazily on first use —
-    * the metadata file is written at query start, before any
-    * foreachBatch runs; see [[publishSinkExactlyOnce]]'s scaladoc for
-    * why the query id must participate). */
+    * change to the scheme lands everywhere at once):
+    * `<prefix><sinkId>q<queryTag>b<batchId>`, where sinkId derives
+    * from the checkpoint location and queryTag from the query's
+    * PERSISTENT id (resolved lazily on first use — the metadata file
+    * is written at query start, before any foreachBatch runs; see
+    * [[publishSinkExactlyOnce]]'s scaladoc for why the query id must
+    * participate). */
   private[graft] final class TxnIdMinter(spark: SparkSession,
       checkpointDir: String) {
     private val sinkId = java.util.UUID.nameUUIDFromBytes(
@@ -215,14 +189,7 @@ object TopicStream {
     private lazy val queryTag = persistentQueryId(spark, checkpointDir)
     def apply(prefix: String, batchId: Long): String =
       s"$prefix${sinkId}q${queryTag}b$batchId"
-    /** The pre-queryTag id shape — probe-only, for mid-stream upgrades. */
-    def legacy(prefix: String, batchId: Long): String =
-      s"$prefix${sinkId}b$batchId"
   }
-
-  private[graft] def txnIdMinter(spark: SparkSession,
-      checkpointDir: String): TxnIdMinter =
-    new TxnIdMinter(spark, checkpointDir)
 
   /** The streaming query's persistent id, read from the
     * `<checkpoint>/metadata` file Spark writes at query start (same id
@@ -249,23 +216,31 @@ object TopicStream {
         s"no query id found in $p: $text"))
   }
 
-  /** The ONE ack-after-process micro-batch body shared by
-    * [[subscribeDurable]] and [[drainOnce]] (r9 review fix — two
-    * verbatim copies had already begun to drift): persist, run the
-    * caller's `process`, ack the batch's max offsets, unpersist.
-    * Returns true iff the batch was non-empty (an ack happened). */
-  private def processAndAck(topic: TopicLog, name: String,
-      batch: org.apache.spark.sql.Dataset[Row])
-      (process: DataFrame => Unit): Boolean = {
-    val b = batch.persist()
-    try {
-      process(b.toDF())
-      val marks = b.groupBy(col("log_part"))
-        .agg(max(col("offset")).as("o"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      if (marks.nonEmpty) { topic.ack(name, marks); true } else false
-    } finally { b.unpersist(); () }
-  }
+  /** The one durable-consumer query behind [[subscribeDurable]] and
+    * [[drainOnce]]: [[replayThenLive]] from the subscriber's acked
+    * watermark, then per micro-batch persist, run the caller's
+    * `process`, ack the batch's max offset per partition into the
+    * subscriber sidecar, unpersist; checkpointed at `checkpointDir`.
+    * The trigger is the only difference between the two callers.
+    * `onAck` runs after each non-empty batch's ack. */
+  private def startDurable(topic: TopicLog, name: String,
+      checkpointDir: String, event: Option[String], trigger: Trigger,
+      onAck: () => Unit)(process: DataFrame => Unit): StreamingQuery =
+    replayThenLive(topic, name, event).writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+        val b = batch.persist()
+        try {
+          process(b.toDF())
+          val marks = b.groupBy(col("log_part"))
+            .agg(max(col("offset")).as("o"))
+            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+          if (marks.nonEmpty) { topic.ack(name, marks); onAck() }
+        } finally { b.unpersist(); () }
+      }
+      .start()
 
   /** The reference's `subscribe(event, name, callback)` in full
     * (topic.js:89-117): drain the named subscriber's backlog, keep
@@ -277,49 +252,30 @@ object TopicStream {
     * where processing stopped. */
   def subscribeDurable(topic: TopicLog, name: String,
       checkpointDir: String, event: Option[String] = None)
-      (process: DataFrame => Unit): Subscription = {
-    val stream = replayThenLive(topic, name, event)
-    val query = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        processAndAck(topic, name, batch)(process); ()
-      }
-      .start()
-    new Subscription(topic, name, query)
-  }
+      (process: DataFrame => Unit): Subscription =
+    new Subscription(topic, name, startDurable(topic, name, checkpointDir,
+      event, Trigger.ProcessingTime(0L), () => ())(process))
 
   /** Bounded catch-up drain: process the named subscriber's CURRENT
     * backlog and stop (`Trigger.AvailableNow` — everything present at
-    * start, nothing that arrives later). Same replay source and same
-    * ack-after-process discipline as [[subscribeDurable]], but the
-    * query terminates at the backlog end instead of tailing live — the
-    * shape for scheduled consumers (nightly syncs, cron-fed
-    * compaction) that want "replay then STOP" rather than the
-    * reference's replay-then-live. Acks persist through the topic's
-    * subscriber sidecar, so interleaved [[graft.log.TopicLog.replay]]
-    * calls and later drains all resume after the last processed
-    * record, even with a fresh checkpoint per drain. Blocks until the
-    * drain completes; returns the number of NON-EMPTY micro-batches
-    * (0 = the backlog was empty — an empty AvailableNow batch still
-    * runs `process` but is not counted, by the TopicStreamSpec
-    * drain-twice contract). */
+    * start, nothing that arrives later). Same query as
+    * [[subscribeDurable]], but it terminates at the backlog end
+    * instead of tailing live — the shape for scheduled consumers
+    * (nightly syncs, cron-fed compaction) that want "replay then STOP"
+    * rather than the reference's replay-then-live. Acks persist
+    * through the topic's subscriber sidecar, so interleaved
+    * [[graft.log.TopicLog.replay]] calls and later drains all resume
+    * after the last processed record, even with a fresh checkpoint per
+    * drain. Blocks until the drain completes; returns the number of
+    * NON-EMPTY micro-batches (0 = the backlog was empty — an empty
+    * AvailableNow batch still runs `process` but is not counted, by
+    * the TopicStreamSpec drain-twice contract). */
   def drainOnce(topic: TopicLog, name: String,
       checkpointDir: String, event: Option[String] = None)
       (process: DataFrame => Unit): Long = {
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val stream = replayThenLive(topic, name, event)
-    val query = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        if (processAndAck(topic, name, batch)(process)) {
-          batches.incrementAndGet(); ()
-        }
-      }
-      .start()
-    query.awaitTermination()
+    startDurable(topic, name, checkpointDir, event, Trigger.AvailableNow(),
+      () => { batches.incrementAndGet(); () })(process).awaitTermination()
     batches.get()
   }
 

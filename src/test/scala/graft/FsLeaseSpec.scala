@@ -93,4 +93,23 @@ class FsLeaseSpec extends AnyFunSuite {
     observer.breakIfStale()
     assert(!repaired && f.exists(), "a fresh lock must be left alone")
   }
+
+  test("the renewal daemon keeps a held lock live past the stale window") {
+    val (f, p) = freshLock()
+    val lease = new FsLease(fsOf(p), p)
+    val held = lease.acquire()
+    try {
+      val token = Files.readString(f.toPath)
+      // 30 s short of stale: without a renewal within the next
+      // RenewEveryMs the lock would be judged dead by the end of the wait
+      assert(f.setLastModified(
+        System.currentTimeMillis() - (FsLease.StaleAfterMs - 30 * 1000L)))
+      Thread.sleep(FsLease.RenewEveryMs + 5 * 1000L)
+      assert(lease.liveHolder(), "the daemon must have refreshed the mtime")
+      lease.breakIfStale()
+      assert(f.exists() && Files.readString(f.toPath) == token,
+        "a renewed lock must not be broken")
+      held.fence("after the renewal")
+    } finally held.release()
+  }
 }

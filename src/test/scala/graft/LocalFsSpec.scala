@@ -58,8 +58,11 @@ class LocalFsSpec extends AnyFunSuite {
         val topic = TopicLog.prepare(spark, s"$root/topic", numPartitions = 2)
         topic.publish(records(40))
         topic.publish(records(10))
-        val q = TopicStream.durableSink(TopicStream.subscribe(topic, fromNow = false),
-          s"$root/sink", s"$root/ckpt").start()
+        val q = TopicStream.subscribe(topic, fromNow = false).writeStream
+          .format("parquet")
+          .option("path", s"$root/sink")
+          .option("checkpointLocation", s"$root/ckpt")
+          .start()
         try q.processAllAvailable() finally q.stop()
       } finally {
         ForkFreeLocalFs.inProcess = savedInProcess

@@ -90,10 +90,10 @@ class TopicLogSpec extends AnyFunSuite {
       spark.sparkContext.hadoopConfiguration)
     val oldMarker = new org.apache.hadoop.fs.Path(s"$dir/txns/old-txn")
     assert(fs.exists(oldMarker))
-    // age the first marker past the horizon, keep the second fresh
-    fs.setTimes(oldMarker, System.currentTimeMillis() - 1000L, -1L)
+    // age the first marker just past the horizon, keep the second fresh
+    fs.setTimes(oldMarker,
+      System.currentTimeMillis() - TopicLog.TxnMarkerTtlMs - 60000L, -1L)
     topic.publishIdempotent(mkRecords(10, startId = 10), "fresh-txn")
-    topic.txnMarkerTtlMs = 500L
     topic.retainToSize(Long.MaxValue) // any maintenance op prunes
     assert(!fs.exists(oldMarker), "expired marker not pruned by maintenance")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/txns/fresh-txn")),
@@ -377,18 +377,21 @@ class TopicLogSpec extends AnyFunSuite {
     val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
     topic.publish(mkRecords(20))
     val n = topic.read().count()
-    // crash state: live renamed aside, staging never moved in
-    val log = new java.io.File(s"$dir/log")
-    assert(log.renameTo(new java.io.File(s"$dir/log.old")))
+    // crash state at the date level: one live log_date dir renamed
+    // aside, its staged twin never moved in, and the staging tree left
+    // behind
+    val part = new java.io.File(s"$dir/log").listFiles()
+      .filter(_.getName.startsWith("log_part=")).minBy(_.getName)
+    val date = part.listFiles()
+      .filter(_.getName.startsWith("log_date=")).minBy(_.getName)
+    val aside = new java.io.File(part, "_old." + date.getName)
+    assert(date.renameTo(aside))
+    val staging = new java.io.File(s"$dir/log.staging/${part.getName}")
+    assert(staging.mkdirs())
     val reopened = TopicLog.prepare(spark, dir, numPartitions = 2)
-    assert(reopened.read().count() == n, "rolled back from log.old")
-    // partition-level tear
-    val parts = new java.io.File(s"$dir/log").listFiles()
-      .filter(_.getName.startsWith("log_part=")).sortBy(_.getName)
-    val p0 = parts.head
-    assert(p0.renameTo(new java.io.File(p0.getPath + ".old")))
-    val again = TopicLog.prepare(spark, dir, numPartitions = 2)
-    assert(again.read().count() == n, "rolled back log_part .old")
+    assert(reopened.read().count() == n, "rolled back from _old.log_date")
+    assert(date.isDirectory && !aside.exists(), "live date dir restored")
+    assert(!new java.io.File(s"$dir/log.staging").exists(), "staging dropped")
   }
 
   test("compact touches only the requested partitions") {

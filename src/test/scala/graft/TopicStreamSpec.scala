@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,22 +56,30 @@ class TopicStreamSpec extends AnyFunSuite {
 
   test("durable subscription resumes from checkpoint after restart") {
     val dir = Files.createTempDirectory("stream").toString
-    val out = Files.createTempDirectory("out").toString + "/sink"
     val ckpt = Files.createTempDirectory("ckpt").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 4)
     topic.publish(mkRecords(20))
+    def ids(b: org.apache.spark.sql.DataFrame) =
+      b.select(get_json_object(col("message"), "$.i").cast("int"))
+        .collect().map(_.getInt(0))
     // first run drains the backlog (replay-from-beginning semantics)
-    val q1 = TopicStream.durableSink(
-      TopicStream.subscribe(topic, fromNow = false), out, ckpt).start()
-    try q1.processAllAvailable() finally q1.stop()
-    assert(spark.read.parquet(out).count() == 20)
-    // publish while "disconnected", then reconnect with the same name
-    // (= checkpoint): only the new records are delivered
+    val first = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sub1 = TopicStream.subscribeDurable(topic, "resumer", ckpt) { b =>
+      ids(b).foreach(first.add)
+    }
+    try sub1.drain() finally sub1.unsubscribe()
+    assert(first.asScala.toSeq.sorted == (0 until 20))
+    // publish while "disconnected", then restart the same name on the
+    // SAME checkpoint: exactly the new records are delivered
     topic.publish(mkRecords(7, startId = 20))
-    val q2 = TopicStream.durableSink(
-      TopicStream.subscribe(topic, fromNow = false), out, ckpt).start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(spark.read.parquet(out).count() == 27)
+    val second = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sub2 = TopicStream.subscribeDurable(topic, "resumer", ckpt) { b =>
+      ids(b).foreach(second.add)
+    }
+    try sub2.drain() finally sub2.unsubscribe()
+    assert(second.asScala.toSeq.sorted == (20 until 27),
+      s"restart delivered ${second.asScala.toSeq.sorted}")
+    assert(topic.replay("resumer").count() == 0, "the restart acked its batch")
   }
 
   test("watermarked windowed aggregation over the live topic") {
@@ -117,7 +128,7 @@ class TopicStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("publishSink: a streaming pipeline terminates in a replayable topic") {
+  test("publishSinkExactlyOnce: a streaming pipeline terminates in a replayable topic") {
     val dirIn = Files.createTempDirectory("ps-in").toString
     val dirOut = Files.createTempDirectory("ps-out").toString
     val ckpt = Files.createTempDirectory("ps-ckpt").toString
@@ -126,7 +137,7 @@ class TopicStreamSpec extends AnyFunSuite {
     src.publish(mkRecords(30))
     // stream src -> filter one event type -> publish into dst
     val filtered = TopicStream.subscribe(src, event = Some("evt-0"), fromNow = false)
-    val q = TopicStream.publishSink(filtered, dst, ckpt).start()
+    val q = TopicStream.publishSinkExactlyOnce(filtered, dst, ckpt).start()
     try q.processAllAvailable() finally q.stop()
     // dst is a real topic: offsets assigned, replayable
     assert(dst.replay("reader").count() == 10)
@@ -154,32 +165,6 @@ class TopicStreamSpec extends AnyFunSuite {
       .select(col("event"), col("key"), col("message"), col("ts")),
       s"sink${sinkId}q${queryTag}b0")
     assert(dst.read().count() == 30, "redelivered batch 0 duplicated rows")
-  }
-
-  test("publishSinkExactlyOnce: legacy (pre-queryTag) markers still skip their batch on upgrade") {
-    val dirIn = Files.createTempDirectory("pl-in").toString
-    val dirOut = Files.createTempDirectory("pl-out").toString
-    val ckpt = Files.createTempDirectory("pl-ckpt").toString
-    val src = TopicLog.prepare(spark, dirIn, numPartitions = 2)
-    val dst = TopicLog.prepare(spark, dirOut, numPartitions = 2)
-    src.publish(mkRecords(30))
-    // a PRE-UPGRADE deployment committed batch 0's data + marker under
-    // the old txn-id format (no q<tag> segment), then crashed before
-    // the checkpoint commit
-    val sinkId = java.util.UUID.nameUUIDFromBytes(
-      ckpt.getBytes("UTF-8")).toString.replace("-", "")
-    dst.publishIdempotent(src.read()
-      .select(col("event"), col("key"), col("message"), col("ts")),
-      s"sink${sinkId}b0")
-    assert(dst.read().count() == 30)
-    // the UPGRADED deployment restarts the same checkpoint and replays
-    // batch 0 — the legacy-marker probe must skip the append (without
-    // it, the format change would double every in-flight batch once)
-    val q = TopicStream.publishSinkExactlyOnce(
-      TopicStream.subscribe(src, fromNow = false), dst, ckpt).start()
-    try q.processAllAvailable() finally q.stop()
-    assert(dst.read().count() == 30,
-      "upgrade re-appended a batch the legacy marker had committed")
   }
 
   test("publishSinkExactlyOnce: a checkpoint wipe must NOT silently skip new batches") {
