@@ -1,38 +1,89 @@
 package graft
 object Bench {
+  /** One timed run of one query: wall seconds, the JVM's GC and
+    * process-CPU ms over it, and its layers. */
+  private[graft] final case class Run(wallS: Double, gcMs: Long, cpuMs: Long,
+      layers: QueryLayers)
+  private[graft] val FailedRun =
+    Run(-1.0, -1L, -1L, QueryLayers(-1, -1, -1, -1, -1, -1, -1, -1, -1))
+
+  /** Everything one bench run reports; [[fullLine]] and [[totalLine]]
+    * render it. `passes` holds each pass's per-query walls, `best` each
+    * query's min-wall run across passes (wall -1 = every pass failed). */
+  private[graft] final case class Report(sf: String, priorSf: String, cpus: Int,
+      errors: Seq[String], medianRatio: Double, regressions: Seq[String],
+      loadBegin: String, loadEnd: String, setupLsh: Double,
+      passes: Seq[Map[String, Double]], best: Map[String, Run]) {
+    def failed: Int = best.values.count(_.wallS < 0)
+    def total: Double = best.values.map(_.wallS).filter(_ >= 0).sum
+  }
+
+  private def fmt(v: Double): String = BigDecimal(v)
+    .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** The per-query layers `Bench` ships, under perfbench's `per_layer`
+    * names where it has one. */
+  private[graft] def layerFields(l: QueryLayers): Seq[(String, String)] =
+    Seq("construct_ms" -> fmt(l.constructMs), "exec_ms" -> fmt(l.execMs),
+      "spark.jobs" -> l.jobs.toString, "spark.construct_jobs" -> l.constructJobs.toString,
+      "spark.tasks" -> l.tasks.toString,
+      "spark.shuffle_write_bytes" -> l.shuffleWriteBytes.toString,
+      "spark.executor_busy_ms" -> l.executorBusyMs.toString)
+
+  /** The full result line: the stdout artifact with per-query walls
+    * rounded to ms (`rounded`), the file artifact at full precision.
+    * Keys are sorted so a clipped stdout tail loses entries from the
+    * FRONT deterministically, and "value" (the headline total) sits
+    * LAST so it always survives. */
+  private[graft] def fullLine(r: Report, rounded: Boolean): String = {
+    def obj(kv: Seq[(String, String)]) =
+      kv.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
+    def perQuery(f: Run => String) =
+      obj(r.best.toSeq.sortBy(_._1).map { case (q, run) => q -> f(run) })
+    obj(Seq("metric" -> "\"total\"", "unit" -> "\"sec\"", "sf" -> Json.str(r.sf),
+      "prior_sf" -> Json.str(r.priorSf), "failed" -> r.failed.toString,
+      "errors" -> r.errors.map(Json.str).mkString("[", ",", "]"),
+      "median_ratio" -> f"${r.medianRatio}%.4f",
+      "regressions" -> r.regressions.mkString("[", ",", "]"),
+      // box state + per-query JVM telemetry: loadavg shows how contended
+      // the box was, the gc/cpu maps and the layers let any flag be
+      // adjudicated without a re-run
+      "loadavg_begin" -> r.loadBegin, "loadavg_end" -> r.loadEnd,
+      "setup" -> obj(Seq("lsh_index" -> fmt(r.setupLsh))),
+      "passes" -> r.passes.map(p => obj(p.toSeq.sortBy(_._1)
+        .map { case (q, v) => q -> fmt(v) })).mkString("[", ",", "]"),
+      "gc_ms" -> perQuery(_.gcMs.toString), "cpu_ms" -> perQuery(_.cpuMs.toString),
+      "layers" -> perQuery(run => obj(layerFields(run.layers))),
+      "queries" -> perQuery(run => if (rounded) fmt(run.wallS) else run.wallS.toString),
+      "value" -> r.total.toString))
+  }
+
+  /** The last stdout line, compact (<200 chars): a bounded stdout tail
+    * front-clips the full line into unparseable JSON, but always keeps
+    * this one intact. */
+  private[graft] def totalLine(r: Report): String =
+    s"""{"metric":"total","unit":"sec","sf":"${r.sf}","cpus":${r.cpus},""" +
+      s""""failed":${r.failed},"n":${r.best.size},"value":${r.total}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
+    // optional regex over query names for local iteration; unset, the
+    // full suite is measured
+    val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
+    val selected = SparkEntry.selected(filter)
     // Warm up JVM/codegen per query at the smallest SF: generated code
-    // depends on plan structure, not data volume, so a tiny-SF pass
-    // fills the janino cache and the timed run measures steady-state
-    // execution instead of first-compile latency.
-    // Optional local-iteration filter (regex over query names); the
-    // driver sets no filter and always measures the full suite.
-    val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
+    // depends on plan structure, not data volume, so the timed runs
+    // measure steady-state execution, not first-compile latency.
     val warm = warmDir(sfDir)
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (nameFilter.forall(_.findFirstIn(name).isDefined))
-        try fn(spark, warm).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+    selected.foreach { case (_, fn) =>
+      try fn(spark, warm).write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
     }
-    // noop sink executes the FULL plan (sorts, projections) — a bare
-    // .count() lets Catalyst delete global sorts and prune most columns,
-    // under-measuring ORDER-BY-heavy queries. Each query is timed TWICE
-    // and the min reported: one GC pause or page-cache miss otherwise
-    // reads as a phantom 10-20x regression on a sub-second query (this
-    // is exactly what round 2's q47 artifact showed — 4.4 s for a query
-    // that steady-states at 0.7 s).
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Per-query GC and CPU telemetry (r10 verdict ask #3): five of
-    // r10's bench flags were suite-JVM noise that each cost an
-    // exclusive re-measure; with gc_ms in the artifact a flag whose
-    // wall excess is GC-dominated self-classifies. local[N] executors
-    // ARE the driver JVM, so the management beans read the whole
-    // execution SYNCHRONOUSLY — no async-listener attribution slop
-    // between back-to-back queries.
+    // Per-query GC and CPU telemetry: a regression flag whose wall
+    // excess is GC-dominated self-classifies. local[N] executors ARE
+    // the driver JVM, so the management beans see the whole execution.
     import scala.jdk.CollectionConverters._
     def jvmGcMs(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala
@@ -48,15 +99,10 @@ object Bench {
         .split(" ").take(3).mkString("[", ",", "]")
       catch { case _: Exception => "[]" }
     val loadBegin = loadavg()
-    // Named setup entry for the standing LSH index (r12 verdict ask
-    // #4): when buildOrLoad actually BUILDS during a timed query, the
-    // one-time build cost lands in that query's number (a cold
-    // filtered q143 run read ~20% high for exactly this reason). The
-    // index is resolved here, timed separately, and shipped as
-    // "setup":{"lsh_index":s} — a cache hit reads near zero, a fresh
-    // build shows its true price without polluting any query. Uses
-    // the same path string the queries use, so the fingerprint keys
-    // the same cache entry.
+    // The standing LSH index is resolved here and timed apart as
+    // "setup":{"lsh_index":s}: a build inside a timed query would land
+    // its one-time cost in that query's number. Same path string as
+    // the queries, so the fingerprint keys the same cache entry.
     val setupLsh: Double =
       try {
         if (new java.io.File(s"$sfDir/documents.parquet").exists) {
@@ -68,115 +114,67 @@ object Bench {
         } else -1.0
       } catch { case e: Throwable =>
         errors += s"setup:lsh_index: ${e.getMessage}"; -1.0 }
-    // Two-pass protocol (r12 verdict ask #2): the in-pass min-of-3
-    // suppresses single-run stalls but NOT the box's roving multi-
-    // minute contention windows — four same-day full runs at r12
-    // swung the headline total ±40% with no real per-query change.
-    // The whole suite therefore runs PASSES times (temporally
-    // separated sweeps) and each query reports its cross-pass MIN;
-    // both raw pass maps ship in the artifact so the spread is
-    // inspectable.
-    val passCount = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt)
-    def runPass(): Map[String, (Double, Long, Long)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) =>
-          nameFilter.forall(_.findFirstIn(name).isDefined) }
-        .map { case (name, fn) =>
-        def once(): (Double, Long, Long) = {
-          val (g0, c0, t0) = (jvmGcMs(), procCpuMs(), System.nanoTime())
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9, jvmGcMs() - g0, procCpuMs() - c0)
-        }
-        // min-of-3: round 3's q13 artifact showed a 1.8x phantom
-        // regression (3.25 s in-suite vs 0.92 s reproduced) that
-        // min-of-2 failed to suppress — one more sample makes a
-        // two-run-long stall (GC + page-cache eviction from the
-        // co-located driver) survive into the artifact far less often.
-        // gc/cpu are the MIN-wall run's own (the artifact number's run).
-        val best =
-          try Seq(once(), once(), once()).minBy(_._1)
-          catch { case e: Throwable =>
-            errors += s"$name: ${e.getMessage}"; (-1.0, -1L, -1L) }
-        name -> best
-      }.toMap
-    val passRuns = (1 to passCount).map(_ => runPass())
-    // cross-pass min per query; a query counts as failed only when NO
-    // pass measured it (a single-pass transient still logs its error)
-    val timings = passRuns.head.keys.map { name =>
-      val ok = passRuns.flatMap(_.get(name)).filter(_._1 >= 0)
-      name -> (if (ok.nonEmpty) ok.minBy(_._1) else (-1.0, -1L, -1L))
+    // The noop sink executes the FULL plan; a bare .count() lets
+    // Catalyst delete global sorts and prune most columns.
+    val profile = QueryProfile.install(spark)
+    def once(fn: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Run = {
+      val (g0, c0) = (jvmGcMs(), procCpuMs())
+      val (_, layers) = profile.measure(fn(spark, sfDir))(
+        _.write.format("noop").mode("overwrite").save())
+      Run(layers.wallMs / 1e3, jvmGcMs() - g0, procCpuMs() - c0, layers)
+    }
+    // Min of 3 runs per pass, so a one- or two-run stall (GC, page-cache
+    // eviction) rarely reaches the artifact; two temporally separated
+    // passes, so a multi-minute contention window does not either. Each
+    // query reports its cross-pass min-wall run (gc/cpu/layers included)
+    // and fails only when no pass measured it; both pass maps ship.
+    def runPass(): Map[String, Run] = selected.map { case (name, fn) =>
+      name -> (try Seq(once(fn), once(fn), once(fn)).minBy(_.wallS)
+        catch { case e: Throwable =>
+          errors += s"$name: ${e.getMessage}"; FailedRun })
     }.toMap
-    val results = timings.view.mapValues(_._1).toMap
-    val gcByQ = timings.view.mapValues(_._2).toMap
-    val cpuByQ = timings.view.mapValues(_._3).toMap
-    // Per-query timings rounded to ms in the printed line (the driver
-    // keeps only a bounded tail of stdout — rounds 1-3 lost the first
-    // ~35 entries to that clip); keys sorted so any clip truncates from
-    // the FRONT deterministically and "value" (the headline total) sits
-    // LAST so it always survives. The complete full-precision map is
-    // also written to a JSON file so no entry is ever lost.
-    def fmt(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val qsFull = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.values.filter(_ >= 0).sum
-    val errJson = errors.map(Json.str).mkString("[", ",", "]")
-    // "failed" is an explicit first-class field (not just -1.000
-    // sentinels a reader has to notice): round 7 shipped a green-rc
-    // bench with a third of the suite erroring and nothing flagged it.
-    // rc stays 0 on purpose — the round-6 rc=1 run recorded NO numbers
-    // at all, so a nonzero exit would trade visibility for data loss;
-    // the stderr summary covers interactive runs. A query failed only
-    // if EVERY pass failed it; single-pass transients stay visible in
-    // "errors" without flipping the gate.
+    val passRuns = Seq(runPass(), runPass())
+    val best = passRuns.head.keys.map { name =>
+      val ok = passRuns.flatMap(_.get(name)).filter(_.wallS >= 0)
+      name -> (if (ok.nonEmpty) ok.minBy(_.wallS) else FailedRun)
+    }.toMap
+    val results = best.view.mapValues(_.wallS).toMap
+    // "failed" is a first-class field and rc stays 0: a nonzero exit
+    // would trade visibility for data loss; stderr covers interactive use.
     val failed = results.values.count(_ < 0)
     if (failed > 0)
       System.err.println(
         s"bench: $failed quer${if (failed == 1) "y" else "ies"} FAILED: " +
           errors.map(_.takeWhile(_ != '\n')).mkString(" | "))
-    // Per-query regression gate (r9, verdict #8): compare against the
-    // previously-committed full-precision map and FLAG any query >2x
-    // its prior time in the artifact itself — r8's q50 4.8x regression
-    // was caught by the judge, not the tooling. Prior source: the
-    // repo-committed bench_full_latest.json (or SPARK_GRAFT_BENCH_PRIOR),
-    // read BEFORE this run overwrites it. Only meaningful when both
-    // runs measured the same sf; the artifact records prior_sf and a
-    // stderr notice fires when it mismatches, so a cross-sf comparison
-    // is visibly inert rather than silent.
+    // Per-query regression gate against the previous full-precision
+    // artifact (bench_full_latest.json or SPARK_GRAFT_BENCH_PRIOR), read
+    // before this run overwrites it. Inert, visibly, across sfs.
     val priorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR",
       "bench_full_latest.json")
     val (priorSf, priorTimes): (String, Map[String, Double]) =
       try {
         val txt = scala.io.Source.fromFile(priorPath, "UTF-8").mkString
         val sfRe = "\"sf\":\"([^\"]*)\"".r
-        // accept E-notation: qsFull writes raw Double.toString, so a
-        // sub-millisecond prior lands as 9.0E-4 — a digits-only regex
-        // would mis-read it as 9.0 and silently disarm the gate
+        // E-notation too (a sub-ms prior is written as 9.0E-4); the
+        // "queries" map is the line's last per-query number map, so its
+        // entries win
         val qRe = "\"(q[0-9][^\"]*)\":(-?[0-9.]+(?:[eE][-+]?[0-9]+)?)".r
         (sfRe.findFirstMatchIn(txt).map(_.group(1)).getOrElse(""),
           qRe.findAllMatchIn(txt)
             .map(m => m.group(1) -> m.group(2).toDouble).toMap)
       } catch { case _: Throwable => ("", Map.empty[String, Double]) }
     val (medianRatio, regressions0) =
-      if (priorSf == sfDir) Bench.findRegressions(priorTimes, results, gcByQ)
+      if (priorSf == sfDir)
+        Bench.findRegressions(priorTimes, results, best.view.mapValues(_.gcMs).toMap)
       else (1.0, Seq.empty[String])
     if (priorTimes.nonEmpty && priorSf != sfDir)
       System.err.println(s"bench: regression gate INERT — prior artifact " +
         s"measured sf '$priorSf', this run is '$sfDir' (see prior_sf in " +
         "the artifact)")
-    // Isolated re-measure of every flagged query (r11 verdict ask #4):
-    // by this point the suite has finished, so the process is as close
-    // to exclusive as it gets — re-time each flag min-of-3 after a GC
-    // settle and ship BOTH numbers (`isolated_s` alongside `now`), so
-    // a flag adjudicates itself in the artifact instead of costing a
-    // manual exclusive re-run. Capped, and the cap is REPORTED — a
-    // silent cap would read as "all flags re-measured" when they
-    // weren't.
+    // Each flag (at most 8, the rest reported) is re-measured min-of-3
+    // after a GC settle, now that the suite is done, and ships its
+    // `isolated_s` beside `now`, so it adjudicates itself.
     val isolatedCap = 8
     val flaggedQs = regressions0.flatMap(s =>
       "\"q\":\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1)))
@@ -189,12 +187,7 @@ object Bench {
         try {
           System.gc(); Thread.sleep(500)
           val fn = SparkEntry.queries(q)
-          def one(): Double = {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          Some(q -> Seq(one(), one(), one()).min)
+          Some(q -> Seq(once(fn), once(fn), once(fn)).map(_.wallS).min)
         } catch { case _: Throwable => None }
       }.toMap
     val regressions = regressions0.map { s =>
@@ -217,58 +210,26 @@ object Bench {
           s"vs $priorPath, UNEXPLAINED by GC — re-measure exclusively " +
           "before trusting: " + unexplained.mkString(" "))
     }
-    val regJson = regressions.mkString("[", ",", "]")
-    val medJson = f"$medianRatio%.4f"
-    // box-state + per-query JVM telemetry ride in the artifact (r10
-    // verdict asks #3-4): loadavg shows how contended the box was, the
-    // gc/cpu maps let any flag be adjudicated without a re-run
-    val gcJson = gcByQ.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val cpuJson = cpuByQ.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val loadEnd = loadavg()
-    val passesJson = passRuns.map(p => p.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v._1) }
-        .mkString("{", ",", "}"))
-      .mkString("[", ",", "]")
-    val telemetry =
-      s""""loadavg_begin":$loadBegin,"loadavg_end":$loadEnd,""" +
-        s""""setup":{"lsh_index":${fmt(setupLsh)}},""" +
-        s""""passes":$passesJson,""" +
-        s""""gc_ms":$gcJson,"cpu_ms":$cpuJson"""
-    val line =
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir","prior_sf":"$priorSf","failed":$failed,"errors":$errJson,"median_ratio":$medJson,"regressions":$regJson,$telemetry,"queries":$qs,"value":$total}"""
-    // cwd-relative default (sbt runs from the repo root); override with
-    // SPARK_GRAFT_BENCH_OUT. A failed write is REPORTED, not swallowed —
-    // the printed stdout line is still the primary artifact either way.
+    val report = Report(sfDir, priorSf, GraftSession.mainCpus, errors.toSeq,
+      medianRatio, regressions, loadBegin, loadavg(), setupLsh,
+      passRuns.map(_.view.mapValues(_.wallS).toMap), best)
+    // cwd-relative default, override with SPARK_GRAFT_BENCH_OUT. A
+    // filtered run writes it only when that is set: a partial map at the
+    // default path would disarm the gate for every unmeasured query.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_full_latest.json")
-    // A FILTERED local run must not clobber the committed full map at
-    // the default path — a partial queries file would silently disarm
-    // the >2x regression gate for every unmeasured query on the next
-    // full run (r9 review fix). Explicit SPARK_GRAFT_BENCH_OUT still
-    // writes wherever the caller pointed it.
-    if (nameFilter.isDefined && !sys.env.contains("SPARK_GRAFT_BENCH_OUT")) {
+    if (filter.isDefined && !sys.env.contains("SPARK_GRAFT_BENCH_OUT")) {
       System.err.println("bench: filter active — skipping the " +
         s"$fullPath artifact write (set SPARK_GRAFT_BENCH_OUT to force)")
     } else try {
       val w = new java.io.PrintWriter(fullPath, "UTF-8")
-      try w.println(
-        s"""{"metric":"total","unit":"sec","sf":"$sfDir","prior_sf":"$priorSf","failed":$failed,"errors":$errJson,"median_ratio":$medJson,"regressions":$regJson,$telemetry,"queries":$qsFull,"value":$total}""")
+      try w.println(fullLine(report, rounded = false))
       finally w.close()
     } catch { case e: java.io.IOException =>
       System.err.println(s"bench: could not write $fullPath: $e")
     }
-    println(line)
-    // Tail-proof contract line (r14 verdict ask #2): the full line above
-    // (~5 KB at 184 queries) overflows the driver's bounded stdout tail,
-    // which front-clips it into unparseable JSON — two rounds of PERF
-    // shipped with an empty per_query map because of it. The LAST stdout
-    // line is therefore a compact (<200 char) JSON the tail always
-    // preserves intact; the complete per-query map stays on the earlier
-    // full line and in the file artifact, so nothing is lost.
-    println(
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"failed":$failed,"n":${results.size},"value":$total}""")
+    println(fullLine(report, rounded = true))
+    println(totalLine(report))
     spark.stop()
   }
 
@@ -305,8 +266,6 @@ object Bench {
   private[graft] def findRegressions(prior: Map[String, Double],
       now: Map[String, Double],
       gcMs: Map[String, Long] = Map.empty): (Double, Seq[String]) = {
-    def fmt(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val joined = now.toSeq.sortBy(_._1).flatMap { case (name, v) =>
       prior.get(name) match {
         case Some(p) if p > 0 && v >= 0 => Some((name, p, v, v / p))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -19,19 +18,14 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   *    (expressions visible) to `<outDir>/<q>_<suffix>.txt` — the
   *    before/after plan evidence files under plans/. One `[plandump]`
   *    line per query.
-  *  - `jobs`: Spark jobs and their wall spans during one evaluation of
-  *    each query (after a warm-up run at the bench's warm-up scale),
-  *    construction timed apart from the noop action — whether a
-  *    query's wall is serial build-time jobs or the final plan's stage
-  *    jobs. One `== <q> construct=… wall=… jobs=N` line, then one line
-  *    per job.
-  * `audit` and `plans` execute each query to a noop sink first: AQE
-  * only finalizes join strategies and stage boundaries at runtime.
-  * `sfDir` defaults to `SPARK_GRAFT_SF_DIR` (as in [[Bench]]); cores
-  * and shuffle partitions come from `SPARK_GRAFT_CPUS` (default 8) and
-  * `SPARK_GRAFT_PARTS` (default the core count).
+  * Both execute each query to a noop sink first: AQE only finalizes
+  * join strategies and stage boundaries at runtime. Per-query job,
+  * task and shuffle figures come from [[Bench]]'s layer fields, per-job
+  * timelines from Spark's own event log (`spark.eventLog.enabled`).
+  * `sfDir` defaults to `SPARK_GRAFT_SF_DIR` (as in [[Bench]]); the
+  * session is [[GraftSession.forMain]].
   *
-  * Run: sbt "runMain graft.Diag <audit|plans|jobs> [sfDir] [nameRegex]
+  * Run: sbt "runMain graft.Diag <audit|plans> [sfDir] [nameRegex]
   *   [outDir suffix (plans only)]"
   */
 object Diag {
@@ -61,29 +55,22 @@ object Diag {
   private type Query = (SparkSession, String) => DataFrame
 
   def main(args: Array[String]): Unit = {
-    val usage = "usage: graft.Diag <audit|plans|jobs> [sfDir] [nameRegex] [outDir suffix]"
+    val usage = "usage: graft.Diag <audit|plans> [sfDir] [nameRegex] [outDir suffix]"
     val mode = args.headOption.getOrElse(sys.error(usage))
     val dir = args.lift(1).orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse(sys.error(usage))
-    val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus.toString).toInt
-    val spark = GraftSession.build(s"local[$cpus]", parts)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain("ERROR")
     val (tag, run): (String, (String, Query) => Unit) = mode match {
       case "audit" => ("[audit]", audit(spark, dir))
       case "plans" =>
         ("[plandump]", plans(spark, dir, args.lift(3).getOrElse("plans"),
           args.lift(4).getOrElse("before")))
-      case "jobs" => ("==", jobs(spark, dir))
       case _ => sys.error(usage)
     }
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => nameFilter.forall(_.findFirstIn(n).isDefined) }
-      .foreach { case (name, fn) =>
-        try run(name, fn)
-        catch { case e: Throwable => println(s"$tag $name :: ERROR ${e.getMessage}") }
-      }
+    SparkEntry.selected(args.lift(2)).foreach { case (name, fn) =>
+      try run(name, fn)
+      catch { case e: Throwable => println(s"$tag $name :: ERROR ${e.getMessage}") }
+    }
     spark.stop()
   }
 
@@ -93,25 +80,13 @@ object Diag {
     df.queryExecution.toRdd.foreachPartition(_ => ())
 
   private def audit(spark: SparkSession, dir: String): (String, Query) => Unit = {
-    // Listener-side input metrics: rows_scanned (plan walk) misses
-    // subtrees that execute as EAGER jobs during query construction —
-    // localCheckpoints, index builds — exactly where a recompute
-    // regression can hide. Task-level input metrics see every job the
-    // query triggers, whoever planned it.
-    val jobRows = new java.util.concurrent.atomic.AtomicLong
-    val jobBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach { m =>
-          jobRows.addAndGet(m.inputMetrics.recordsRead)
-          jobBytes.addAndGet(m.inputMetrics.bytesRead)
-          ()
-        }
-    })
+    // Task-level input (job_rows_read / job_mb_read) comes from the
+    // profiler: rows_scanned (plan walk) misses subtrees that execute
+    // as EAGER jobs during query construction — localCheckpoints, index
+    // builds — exactly where a recompute regression can hide.
+    val profile = QueryProfile.install(spark)
     (name, fn) => {
-      val rows0 = jobRows.get(); val bytes0 = jobBytes.get()
-      val df = fn(spark, dir)
-      executeFinal(df)
+      val (df, layers) = profile.measure(fn(spark, dir))(executeFinal)
       // The finalized AQE string echoes the initial plan below the
       // final one; audit only the final section. The final plan
       // renders codegen stages as "*(k)" prefixes — count distinct ids.
@@ -140,22 +115,10 @@ object Diag {
         .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
       val scanBytes = scans
         .flatMap(_.metrics.get("filesSize")).map(_.value).sum
-      // listener delta covers EVERY job this query triggered, eager
-      // ckpts and index builds included (listener events are async —
-      // settle until BOTH counters stop moving before snapshotting: a
-      // trailing job that reads bytes but zero records would otherwise
-      // settle early and leak its bytes into the NEXT query's delta).
-      var prevSeen = (-1L, -1L)
-      var spins = 0
-      while ((jobRows.get(), jobBytes.get()) != prevSeen && spins < 50) {
-        prevSeen = (jobRows.get(), jobBytes.get())
-        Thread.sleep(100); spins += 1
-      }
-      val totRows = jobRows.get() - rows0
-      val totMb = (jobBytes.get() - bytes0) / (1024 * 1024)
       println(s"[audit] $name :: $flags rows_scanned=$rowsScanned " +
         s"scan_mb=${scanBytes / (1024 * 1024)} " +
-        s"job_rows_read=$totRows job_mb_read=$totMb")
+        s"job_rows_read=${layers.rowsRead} " +
+        s"job_mb_read=${layers.bytesRead / (1024 * 1024)}")
     }
   }
 
@@ -178,43 +141,6 @@ object Diag {
         w.println(explain("extended"))
       } finally w.close()
       println(s"[plandump] $name -> $out")
-    }
-  }
-
-  private def jobs(spark: SparkSession, dir: String): (String, Query) => Unit = {
-    val started = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val spans = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[(Int, Long, Long, String)]())
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        started.put(j.jobId, (j.time,
-          Option(j.properties.getProperty("spark.job.description"))
-            .orElse(Option(j.properties.getProperty("callSite.short")))
-            .getOrElse("?")))
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val (t0, d) = started.getOrDefault(j.jobId, (j.time, "?"))
-        spans.add((j.jobId, t0, j.time, d))
-      }
-    })
-    val warm = Bench.warmDir(dir)
-    (name, fn) => {
-      fn(spark, warm).write.format("noop").mode("overwrite").save()
-      Thread.sleep(500)
-      spans.clear()
-      val t0 = System.nanoTime()
-      val df = fn(spark, dir)
-      val tc = (System.nanoTime() - t0) / 1e6
-      df.write.format("noop").mode("overwrite").save()
-      val wallMs = (System.nanoTime() - t0) / 1e6
-      Thread.sleep(500)
-      println(s"== $name construct=${tc.round}ms wall=${wallMs.round}ms " +
-        s"jobs=${spans.size}")
-      spans.synchronized {
-        val base = if (spans.isEmpty) 0L else spans.get(0)._2
-        spans.forEach { case (id, s, e, d) =>
-          println(f"  job $id%3d +${s - base}%6dms dur=${e - s}%5dms  ${d.take(90)}")
-        }
-      }
     }
   }
 }

@@ -42,6 +42,17 @@ object GraftSession {
       .withExtensions(new GraftExtensions)
       .getOrCreate()
 
+  /** Cores of every `graft` main's session: `SPARK_GRAFT_CPUS`, default 4. */
+  def mainCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** The session every `graft` main runs on: `local[n]` with `n`
+    * shuffle partitions, n = [[mainCpus]]. */
+  def forMain(logLevel: String = "WARN"): SparkSession = {
+    val spark = build(s"local[$mainCpus]", mainCpus)
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Load one of the driver-generated tables from an sf directory. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")

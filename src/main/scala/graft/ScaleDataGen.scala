@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * NOT an oracle corpus — scaling evidence only; correctness stays
   * gated on the driver's own SFs.
   *
-  * Run: sbt "runMain graft.ScaleDataGen <srcDir> <outDir> <k>"
+  * Run: SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleDataGen <srcDir> <outDir> <k>"
   */
 object ScaleDataGen {
   def main(args: Array[String]): Unit = {
@@ -42,9 +42,7 @@ object ScaleDataGen {
     // the per-copy alphabet rotation has period 26: copy 26 would
     // repeat copy 0's text and every doc would gain a verbatim twin
     require(k >= 1 && k <= 26, s"copy count k must be in 1..26 (got $k)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     val OFF = 10000000L
     val alpha = "abcdefghijklmnopqrstuvwxyz"
 

@@ -8,15 +8,15 @@ import graft.log.TopicLog
 /** Scale smoke: drives TopicLog well past the unit-test sizes to check
   * that the design holds as volume grows — append throughput, replay
   * tail-scan cost vs full-scan, compaction. Run manually:
-  *   sbt "runMain graft.ScaleSmoke [nRecords] [nBatches] [nPartitions]"
+  *   SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=20g \
+  *     sbt "runMain graft.ScaleSmoke [nRecords] [nBatches] [nPartitions]"
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(2000000)
     val batches = args.lift(1).map(_.toInt).getOrElse(4)
     val parts = args.lift(2).map(_.toInt).getOrElse(32)
-    val spark = GraftSession.build(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
 
     val dir = Files.createTempDirectory("scale-topic").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = parts)
@@ -723,8 +723,8 @@ object ScaleSmoke {
     // signatures and one band/kc segment are computed for the new docs
     // only, the standing segment carries forward BY REFERENCE (its
     // files provably untouched), and the star-cap state updates from
-    // the ≤160-entry manifest warm list. Measured with a task-listener
-    // rows-read delta, split across both entry points:
+    // the ≤160-entry manifest warm list. Measured as the rows its tasks
+    // read ([[QueryProfile]]), split across both entry points:
     //  - assumeNew (the curateCycle path — caller already anti-joined):
     //    reads ≈ batch bands, a few re-reads of the batch's own
     //    segment; NOTHING index-sized;
@@ -735,31 +735,15 @@ object ScaleSmoke {
     // rewrote the whole probe table — 4.2-4.35 s measured at r10.
     val segBefore = new java.io.File(s"$ixRoot/ix/seg-1f/bands").listFiles()
       .map(f => (f.getName, f.length, f.lastModified)).toSet
-    val appendRows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val appendListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          appendRows.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
-    def settleListener(): Unit = {
-      var prev = -1L
-      while (prev != appendRows.get()) { prev = appendRows.get(); Thread.sleep(100) }
-    }
+    val profile = QueryProfile.install(spark)
     val batchHalfA = incrBatch.filter(col("doc_id") < 950000L) // 10k re-posts
     val batchHalfB = incrBatch.filter(col("doc_id") >= 950000L) // 10k novel
-    spark.sparkContext.addSparkListener(appendListener)
-    t0 = System.nanoTime()
-    graft.operators.LshIndex.append(lshIx, batchHalfA, assumeNew = true)
-    settleListener()
-    val ixAppendNewSec = (System.nanoTime() - t0) / 1e9
-    val ixAppendNewRows = appendRows.get()
-    t0 = System.nanoTime()
-    graft.operators.LshIndex.append(lshIx, batchHalfB) // default: anti-join
-    settleListener()
-    val ixAppendSec = (System.nanoTime() - t0) / 1e9
-    val ixAppendRows = appendRows.get() - ixAppendNewRows
-    spark.sparkContext.removeSparkListener(appendListener)
+    val (_, appendNew) = profile.measure(
+      graft.operators.LshIndex.append(lshIx, batchHalfA, assumeNew = true))(_ => ())
+    val (_, appendIdem) = profile.measure( // default: anti-join
+      graft.operators.LshIndex.append(lshIx, batchHalfB))(_ => ())
+    val (ixAppendNewSec, ixAppendNewRows) = (appendNew.wallMs / 1e3, appendNew.rowsRead)
+    val (ixAppendSec, ixAppendRows) = (appendIdem.wallMs / 1e3, appendIdem.rowsRead)
     require(new java.io.File(s"$ixRoot/ix/seg-1f/bands").listFiles()
       .map(f => (f.getName, f.length, f.lastModified)).toSet == segBefore,
       "appends must never rewrite the standing band segment")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Blocking-key skew audit: the q50 lesson (round 8: the top-8-bit
@@ -75,8 +75,7 @@ object SkewAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.build("local[8]", 8)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain("ERROR")
     import graft.operators.{Dedup, Similarity}
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")

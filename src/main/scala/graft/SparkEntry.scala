@@ -23,6 +23,13 @@ object SparkEntry {
       Spectral.queries ++ Extract.queries ++ Classify.queries ++
       EventStats.queries ++ TopK.queries
 
+  /** The queries whose names match `nameRegex` (all without one), in
+    * name order: the one query loop of `Bench`, `Verify` and `Diag`. */
+  def selected(nameRegex: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val keep = nameRegex.map(_.r)
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => keep.forall(_.findFirstIn(n).isDefined) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check. */
   def oracleSql: Map[String, String] =

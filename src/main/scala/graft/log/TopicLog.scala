@@ -53,8 +53,9 @@ import org.apache.spark.sql.functions._
   *    affected `log_part` subtrees; untouched partitions' files are
   *    byte-identical afterwards.
   *  - Directory swaps are crash-safe: live dirs are renamed aside
-  *    before the staged result moves in, and [[recover]] (run on open)
-  *    rolls a torn swap back, so a crash never leaves the log absent.
+  *    (into `log.aside`, outside the tree a read lists) before the
+  *    staged result moves in, and [[recover]] (run on open) rolls a
+  *    torn swap back, so a crash never leaves the log absent.
   *  - CONCURRENT PUBLISHERS are safe (the reference gets this from
   *    MongoDB's atomic inserts, `topic.js:26-41`): [[publish]] runs
   *    under a `_publish.lock` lease file acquired with an atomic
@@ -76,6 +77,7 @@ import org.apache.spark.sql.functions._
 final class TopicLog(val spark: SparkSession, val path: String, val numPartitions: Int = 8) {
 
   private val logDir = s"$path/log"
+  private val asideDir = s"$path/log.aside"
   private val subsDir = s"$path/subscribers"
   private val headsPath = s"$path/_offsets.json"
   private val lockPath = new Path(s"$path/_publish.lock")
@@ -669,8 +671,12 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
 
   /** Rewrite exactly the given partition subdirs (relative to logDir)
     * with df's output; everything else is untouched. Crash-safe per
-    * subdir: live is renamed to `_old.<dir>` before staging moves in;
-    * [[recover]] rolls back any torn swap. */
+    * subdir: live is renamed aside to `log.aside/<parent>/_old.<dir>`
+    * before staging moves in; [[recover]] rolls back any torn swap. The
+    * aside tree sits next to `log/`, not in it: Spark's listing skips
+    * underscore names only when they hold no "=", so an in-tree
+    * `_old.log_part=5` would fail a lock-free read() planned mid-swap
+    * with CONFLICTING_PARTITION_COLUMN_NAMES. */
   private def swapLogSubdirs(df: DataFrame, subdirs: Seq[String],
       held: FsLease.Held): Unit = {
     val tmp = s"$logDir.staging"
@@ -684,40 +690,37 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     subdirs.foreach { rel =>
       val live = new Path(s"$logDir/$rel")
       val stag = new Path(s"$tmp/$rel")
-      // "_old." PREFIX, which recover() keys on. Spark's listing skips
-      // underscore names only when they hold no "=", so a lock-free
-      // read() planned mid-swap still lists "_old.log_part=5" and can
-      // fail with CONFLICTING_PARTITION_COLUMN_NAMES
-      val old = new Path(live.getParent, "_old." + live.getName)
+      val old = new Path(s"$asideDir/${rel.replaceFirst("[^/]+$", "_old.$0")}")
       fs.delete(old, true)
-      if (fs.exists(live)) fs.rename(live, old)
+      if (fs.exists(live)) { fs.mkdirs(old.getParent); fs.rename(live, old) }
       if (fs.exists(stag)) { fs.mkdirs(live.getParent); fs.rename(stag, live) }
       fs.delete(old, true)
     }
     fs.delete(new Path(tmp), true)
+    fs.delete(new Path(asideDir), true)
   }
 
   /** Roll back any swap a crash tore mid-flight: an `_old.log_part=N`
-    * or `_old.log_date=D` dir whose live twin is missing is renamed
-    * back; a leftover `_old.` dir with a healthy live twin and the
-    * `log.staging` dir are droppable garbage. Compaction/retention are
-    * idempotent, so rolling BACK is always safe — the caller just
-    * re-runs. */
+    * or `_old.log_date=D` dir (in the `log.aside` tree, or in `log/`
+    * itself where builds before the aside tree left it) whose live twin
+    * is missing is renamed back; one with a healthy live twin, the
+    * aside tree and `log.staging` are droppable garbage.
+    * Compaction/retention are idempotent, so rolling BACK is always
+    * safe — the caller just re-runs. */
   private def recover(): Unit = {
-    def heal(dir: Path): Unit = {
-      if (!fs.exists(dir)) return
-      fs.listStatus(dir).foreach { st =>
+    def rollBack(aside: Path, live: Path): Unit =
+      if (fs.exists(aside)) fs.listStatus(aside).filter(_.isDirectory).foreach { st =>
         val n = st.getPath.getName
         if (n.startsWith("_old.")) {
-          val live = new Path(dir, n.stripPrefix("_old."))
-          if (!fs.exists(live)) fs.rename(st.getPath, live)
+          val twin = new Path(live, n.stripPrefix("_old."))
+          if (!fs.exists(twin)) { fs.mkdirs(live); fs.rename(st.getPath, twin) }
           else fs.delete(st.getPath, true)
-        } else if (n.endsWith(".staging")) fs.delete(st.getPath, true)
+        } else if (n.startsWith("log_part=")) rollBack(st.getPath, new Path(live, n))
       }
-    }
-    heal(new Path(path))                 // log.staging
-    heal(new Path(logDir))               // _old.log_part=N
-    listSubdirs(logDir, "log_part=").foreach(heal) // _old.log_date=D
+    fs.delete(new Path(s"$logDir.staging"), true)
+    rollBack(new Path(asideDir), new Path(logDir))
+    rollBack(new Path(logDir), new Path(logDir))
+    fs.delete(new Path(asideDir), true)
     // A leftover publish lock past its lease = a publisher died between
     // append and sidecar write; reconcile so heads() never re-issues
     // offsets (FsLease.breakIfStale runs onStaleBreak = reconcileHeads

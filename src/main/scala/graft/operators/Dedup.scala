@@ -1425,9 +1425,11 @@ object Dedup {
       // CC over its candidate pairs), the CDC rolling-hash checkpoint,
       // and the semantic rung (RHP ckpt + CC inside semDedup) — are
       // mutually independent, but ran strictly serially because the
-      // builder called them serially (`graft.Diag jobs`: 48 jobs, >half the
-      // wall in construction). They now build concurrently; each
-      // rung's frames are identical, so the report's bytes are too.
+      // builder called them serially (48 jobs, >half the wall in
+      // construction; `graft.Bench` reports both per query as
+      // `spark.construct_jobs` and `construct_ms`). They now build
+      // concurrently; each rung's frames are identical, so the
+      // report's bytes are too.
       //
       // near-dup rung off the STANDING LshIndex for this corpus
       // snapshot (r10): the report is a per-snapshot artifact, so its

@@ -103,4 +103,34 @@ class BenchGateSpec extends AnyFunSuite {
       assert(mapper.readValue(lit, classOf[String]) == s, lit)
     }
   }
+
+  test("the rendered result lines: full line parses, carries layers, value last; total line compact") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val layers = QueryLayers(12.5, 340.25, 3, 1, 24, 4096, 900, 10, 2048)
+    val report = Bench.Report("/root/testdata/sf0.1", "/root/testdata/sf0.1", 32,
+      Seq("q9_bad: line one\nline two"), 1.0123, Seq.empty, "[0.5,0.4,0.3]",
+      "[1.0,0.9,0.8]", 0.25,
+      Seq(Map("q1_ok" -> 0.5, "q9_bad" -> -1.0), Map("q1_ok" -> 0.4, "q9_bad" -> -1.0)),
+      Map("q1_ok" -> Bench.Run(0.4000001, 7L, 900L, layers), "q9_bad" -> Bench.FailedRun))
+    for (rounded <- Seq(true, false)) {
+      val line = Bench.fullLine(report, rounded)
+      val tree = mapper.readTree(line)
+      assert(tree.get("failed").asInt == 1 && tree.get("value").asDouble == 0.4000001, line)
+      val qs = tree.get("queries")
+      assert(qs.get("q1_ok").asDouble == (if (rounded) 0.4 else 0.4000001), line)
+      val keys = Bench.layerFields(layers).map(_._1)
+      assert(keys.take(3) == Seq("construct_ms", "exec_ms", "spark.jobs"))
+      Seq("q1_ok", "q9_bad").foreach { q =>
+        val l = tree.get("layers").get(q)
+        assert(keys.forall(l.has), s"$q layers: $l")
+      }
+      assert(tree.get("layers").get("q1_ok").get("spark.jobs").asLong == 3)
+      assert(tree.get("layers").get("q9_bad").get("spark.jobs").asLong == -1)
+      import scala.jdk.CollectionConverters._
+      assert(tree.fieldNames.asScala.toSeq.last == "value", line)
+    }
+    val total = Bench.totalLine(report)
+    assert(total.length < 200, total)
+    assert(mapper.readTree(total).get("cpus").asInt == 32, total)
+  }
 }

@@ -351,10 +351,10 @@ class TopicLogSpec extends AnyFunSuite {
     val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
     topic.publish(mkRecords(20))
     val n = topic.read().count()
-    // crash state mid-swap: live partition renamed to its staging-aside
-    // name (_old. prefix — Spark partition discovery ignores it, so a
-    // concurrent reader planned mid-swap can never see an unparseable
-    // "log_part=N.old" partition value)
+    // crash state of a swap torn by a build that renamed live dirs
+    // aside INSIDE log/ (_old. prefix): a topic torn that way must
+    // still heal on open. Spark's listing does not skip such a name
+    // (it holds "="), so until the reopen a read() of this topic fails
     val parts = new java.io.File(s"$dir/log").listFiles()
       .filter(_.getName.startsWith("log_part=")).sortBy(_.getName)
     val p0 = parts.head
@@ -362,6 +362,25 @@ class TopicLogSpec extends AnyFunSuite {
       p0.getParent + "/_old." + p0.getName)))
     val again = TopicLog.prepare(spark, dir, numPartitions = 2)
     assert(again.read().count() == n, "rolled back from _old. prefix")
+    assert(p0.isDirectory, "live partition dir restored")
+  }
+
+  test("a torn swap never breaks a lock-free read of the other partitions") {
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
+    topic.publish(mkRecords(20))
+    val others = topic.read().filter(col("log_part") =!= 0).count()
+    assert(others > 0 && others < 20, s"records must span both partitions: $others")
+    // crash state between the two renames of a whole-partition swap:
+    // live log_part=0 renamed aside, its staged twin never moved in.
+    // The same instance reads before any reopen (recover) runs.
+    val aside = new java.io.File(s"$dir/log.aside")
+    assert(aside.mkdirs())
+    assert(new java.io.File(s"$dir/log/log_part=0")
+      .renameTo(new java.io.File(aside, "_old.log_part=0")))
+    assert(topic.read().count() == others,
+      "a mid-swap read must list only the live partitions")
+    assert(TopicLog.prepare(spark, dir, numPartitions = 2).read().count() == 20)
   }
 
   test("prepare works with an explicit file:// URI (Hadoop mkdirs, not java.io)") {
@@ -378,19 +397,22 @@ class TopicLogSpec extends AnyFunSuite {
     topic.publish(mkRecords(20))
     val n = topic.read().count()
     // crash state at the date level: one live log_date dir renamed
-    // aside, its staged twin never moved in, and the staging tree left
-    // behind
+    // into the aside tree, its staged twin never moved in, and the
+    // staging tree left behind
     val part = new java.io.File(s"$dir/log").listFiles()
       .filter(_.getName.startsWith("log_part=")).minBy(_.getName)
     val date = part.listFiles()
       .filter(_.getName.startsWith("log_date=")).minBy(_.getName)
-    val aside = new java.io.File(part, "_old." + date.getName)
+    val asideParent = new java.io.File(s"$dir/log.aside/${part.getName}")
+    assert(asideParent.mkdirs())
+    val aside = new java.io.File(asideParent, "_old." + date.getName)
     assert(date.renameTo(aside))
     val staging = new java.io.File(s"$dir/log.staging/${part.getName}")
     assert(staging.mkdirs())
     val reopened = TopicLog.prepare(spark, dir, numPartitions = 2)
     assert(reopened.read().count() == n, "rolled back from _old.log_date")
     assert(date.isDirectory && !aside.exists(), "live date dir restored")
+    assert(!new java.io.File(s"$dir/log.aside").exists(), "aside tree dropped")
     assert(!new java.io.File(s"$dir/log.staging").exists(), "staging dropped")
   }
 

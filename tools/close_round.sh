@@ -44,5 +44,15 @@ print(f"bench: total={d['value']:.1f}s failed={d['failed']} "
       f"flags={len(d['regressions'])} load={d['loadavg_begin']}")
 for r in d["regressions"]:
     print("  flag:", r)
+# where the slowest queries' walls went: construction vs execution
+layers = d.get("layers", {})
+slow = sorted(((v, q) for q, v in d["queries"].items() if v >= 0), reverse=True)[:10]
+print(f"  {'query':<32} {'wall_s':>7} {'construct_ms':>12} {'exec_ms':>9} "
+      f"{'jobs':>5} {'construct_jobs':>14}")
+for v, q in slow:
+    l = layers.get(q, {})
+    print(f"  {q:<32} {v:>7.3f} {l.get('construct_ms', -1):>12.1f} "
+          f"{l.get('exec_ms', -1):>9.1f} {l.get('spark.jobs', -1):>5} "
+          f"{l.get('spark.construct_jobs', -1):>14}")
 EOF
 echo "== done: PLAN_AUDIT_r${N}.txt SKEW_AUDIT_r${N}.txt BENCH_LOCAL_r${N}.json =="
