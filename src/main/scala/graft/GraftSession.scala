@@ -78,6 +78,37 @@ object GraftSession {
       df.checkpoint()
     } else df.localCheckpoint()
 
+  /** Release the checkpoint behind a frame an iterative loop has
+    * superseded (its plan ROOT is the `LogicalRDD` an eager [[ckpt]]
+    * leaves). Call only after nothing reads the frame again — i.e.
+    * after the round's last read, just before re-binding the loop
+    * variable. Root-only on purpose: a derived frame (e.g. an Aggregate
+    * OVER a round's output) contains a LogicalRDD deeper in its tree,
+    * and matching there would drop a checkpoint that is still read.
+    * The FINAL round's checkpoint is kept (the caller still consumes
+    * it).
+    *  - reliable checkpoint ([[ReliableCheckpointsConf]]): delete its
+    *    files, so a long loop does not grow the shared checkpoint dir
+    *    by one copy of its state PER ROUND (the driver GC's
+    *    `cleanCheckpoints` conf is off by default and fires late);
+    *  - local checkpoint: unpersist its blocks — a long loop otherwise
+    *    carries every superseded round in executor memory until driver
+    *    GC notices (the ScaleSmoke CC phase tipped a 16G heap over
+    *    exactly this).
+    * The checkpoint file is present exactly when [[ckpt]] took the
+    * reliable branch, so the frame itself says which applies. */
+  private[graft] def dropCkpt(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.getCheckpointFile.map(new org.apache.hadoop.fs.Path(_))
+          .foreach { p =>
+            p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+              .delete(p, true)
+          }
+        r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
+
   // ---- concurrent query construction (guide §2.6) --------------------
   // Spark's scheduler happily runs several jobs at once inside one
   // application; eager construction steps (lineage-truncation ckpts,

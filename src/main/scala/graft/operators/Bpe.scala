@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession.{ckpt, table}
+import graft.GraftSession.{ckpt, dropCkpt, table}
 
 /** BPE tokenizer training over a document corpus (SURVEY.md §2.C —
   * training-data pipeline pack). The two ops every byte-pair-encoding
@@ -97,12 +97,14 @@ object Bpe {
         val b = top(0).getString(1)
         val m = a + b
         rules += ((step.toLong, a, b, m, top(0).getAs[Long]("cnt")))
-        vocab = ckpt(vocab.withColumn("syms",
+        val next = ckpt(vocab.withColumn("syms",
           aggregate(col("syms"), array().cast("array<string>"),
             (acc, x) => when(size(acc) > 0 &&
                 element_at(acc, -1) === lit(a) && x === lit(b),
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(m))))
               .otherwise(concat(acc, array(x))))))
+        dropCkpt(vocab) // round N-1 no longer read
+        vocab = next
       } else {
         // barren round: no word has >= 2 symbols left, and the vocab
         // cannot change — every remaining round would re-run the same

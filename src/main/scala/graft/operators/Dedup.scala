@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession.{ckpt, table}
+import graft.GraftSession.{ckpt, dropCkpt, table}
 
 /** Pack C (dedup) — training-data deduplication operators
   * (SURVEY.md §2.C1-C5): exact hash dedup, MinHash signatures,
@@ -209,37 +208,6 @@ object Dedup {
   }
   private val ccLog = org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
 
-  /** Drop the checkpoint behind a ROTATED round frame (its plan ROOT
-    * is the `LogicalRDD` an eager [[ckpt]] leaves). Call only after
-    * nothing reads the frame again — i.e. after the round's
-    * convergence check, just before re-binding the loop variable.
-    * Root-only on purpose: a derived frame (e.g. the returned labels,
-    * an Aggregate OVER the last round's edges) contains a LogicalRDD
-    * deeper in its tree, and matching there would drop a checkpoint
-    * that is still read. The FINAL round's checkpoint is intentionally
-    * kept (the caller still consumes it).
-    *  - reliable checkpoint (`spark.graft.reliableCheckpoints`): delete
-    *    its files, so a long clustering loop does not grow the shared
-    *    checkpoint dir by one copy of the edge set PER ROUND (the
-    *    driver GC's `cleanCheckpoints` conf is off by default and fires
-    *    late);
-    *  - local checkpoint: unpersist its blocks — a long loop otherwise
-    *    carries every superseded edge set in executor memory until
-    *    driver GC notices (the ScaleSmoke CC phase tipped a 16G heap
-    *    over exactly this).
-    * The checkpoint file is present exactly when [[ckpt]] took the
-    * reliable branch, so the frame itself says which applies. */
-  private def dropRoundCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.getCheckpointFile.map(new Path(_)).foreach { p =>
-          p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
-        r.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
-
   /** Rounds the most recent [[connectedComponents]] call took to
     * converge (diagnostics for ScaleSmoke's CC phase and the specs).
     * 0 when the call took the [[unionFindLabels]] small-graph fast
@@ -355,7 +323,7 @@ object Dedup {
       val arr = edges.collect().map(r => (
         r.get(0).asInstanceOf[Number].longValue(),
         r.get(1).asInstanceOf[Number].longValue()))
-      dropRoundCheckpoint(edges)
+      dropCkpt(edges)
       lastCcRounds = 0
       return unionFindLabels(pairs.sparkSession, arr)
     }
@@ -396,7 +364,7 @@ object Dedup {
             "full_outer")
           .filter(col("n.hi").isNull || col("o.hi").isNull).isEmpty
       w = wNext
-      dropRoundCheckpoint(edges) // round N-1 no longer read
+      dropCkpt(edges) // round N-1 no longer read
       edges = next
       i += 1
     }
@@ -415,16 +383,6 @@ object Dedup {
   def lshCandidates(docs: DataFrame): DataFrame =
     lshCandidatesFromSignatures(minhashSignatures(docs))
 
-  /** The full near-dup pipeline as a pair table: LSH candidates →
-    * exact shingle-set Jaccard verification (the q61 machinery,
-    * public so composers — q178's per-doc kNN — reuse the verified
-    * pairs). Only candidate pairs (never the corpus cross-product)
-    * reach the verification join. Deliberately NOT checkpointed: the
-    * shingle scan re-runs per consumer, but it is cheap per pass while
-    * its materialization is enormous (every (doc, shingle-hash) row) —
-    * measured 2.31 s recomputed vs 2.99 s checkpointed at sf0.1.
-    * Returns (doc_a, doc_b, n_shared_bands, n_a, n_b, n_inter,
-    * jaccard) with doc_a < doc_b. */
   /** Corpus self-candidate pairs for the gated per-snapshot consumers
     * (q32/q72/q77/q93/q179 and q143's near rung), served from the
     * STANDING [[LshIndex]] for this corpus snapshot: the whole LSH
@@ -440,6 +398,16 @@ object Dedup {
       LshIndex.buildOrLoad(s, table(s, dir, "documents"),
         s"$dir/documents.parquet"))
 
+  /** The full near-dup pipeline as a pair table: LSH candidates →
+    * exact shingle-set Jaccard verification (the q61 machinery,
+    * public so composers — q178's per-doc kNN — reuse the verified
+    * pairs). Only candidate pairs (never the corpus cross-product)
+    * reach the verification join. Deliberately NOT checkpointed: the
+    * shingle scan re-runs per consumer, but it is cheap per pass while
+    * its materialization is enormous (every (doc, shingle-hash) row) —
+    * measured 2.31 s recomputed vs 2.99 s checkpointed at sf0.1.
+    * Returns (doc_a, doc_b, n_shared_bands, n_a, n_b, n_inter,
+    * jaccard) with doc_a < doc_b. */
   def lshVerifiedPairs(docs: DataFrame): DataFrame = {
     // NOTE (r15, measured): ckpt'ing `cand` and `sh` here looks like
     // the q93 multi-consumer rule but is a LOSS (q61 1.77→2.07 s,
@@ -480,15 +448,16 @@ object Dedup {
     val bb = bands(minhashSignatures(batch))
       .select(col("doc_id").as("batch_id"), col("band"), col("k1"),
         col("k2"))
-    // Same star-cap rule as [[lshCandidatesFromSignatures]], probe
-    // flavor: a probe doc landing in an oversized CORPUS bucket (a
-    // viral duplicate family) would otherwise match every member —
-    // batch × bucket candidate rows. The bucket's ANCHOR alone is the
-    // representative match (the q93/q141 cluster-representative
-    // discipline); cold buckets are untouched, so natural corpora
-    // never see the guard. ckpt the signatures (see
-    // [[lshCandidatesFromSignatures]]): corpus bands feed the
-    // key-count agg and the probe join (the multi-consumer rule).
+    // Same star-cap as [[lshCandidatesFromSignatures]], probe shape
+    // ([[Blocking.starCapProbeSide]]): a probe doc landing in an
+    // oversized CORPUS bucket (a viral duplicate family) would
+    // otherwise match every member — batch × bucket candidate rows.
+    // The bucket's ANCHOR alone is the representative match (the
+    // q93/q141 cluster-representative discipline); cold buckets are
+    // untouched, so natural corpora never see the guard. ckpt the
+    // signatures (see [[lshCandidatesFromSignatures]]): corpus bands
+    // feed the key-count agg and the probe join (the multi-consumer
+    // rule).
     //
     // The guard is BATCH-PRICED, not corpus-priced (r9 verdict ask
     // #2): corpus band rows semi-join the broadcast batch band keys
@@ -509,14 +478,10 @@ object Dedup {
       .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("anchor"))
     val tot = sig.agg((count(lit(1)) * lit(BANDS)).as("tot"))
     val hotKeys = keyCounts.crossJoin(broadcast(tot))
-      .filter(col("bn") * lit(20 * BANDS) > col("tot") && col("bn") > lit(64))
+      .filter(Blocking.isHot(col("bn"), col("tot"), BANDS))
       .select(col("band"), col("k1"), col("k2"), col("anchor"))
-    val cold = hit.join(broadcast(hotKeys.drop("anchor")),
-      Seq("band", "k1", "k2"), "left_anti")
-    val probeSide = cold.unionByName(
-      hotKeys.select(col("band"), col("k1"), col("k2"),
-        col("anchor").as("doc_id")))
-    probeSide.join(broadcast(bb), Seq("band", "k1", "k2"))
+    Blocking.starCapProbeSide(hit, hotKeys)
+      .join(broadcast(bb), Seq("band", "k1", "k2"))
       .groupBy(col("batch_id"), col("doc_id").as("corpus_id"))
       .agg(count(lit(1)).as("n_shared_bands"))
   }
@@ -619,9 +584,9 @@ object Dedup {
     * measured by the --skew fuzz corpus: a 150-copy cluster = 11,175
     * of q32's 16,117 pairs). The q50 cure (drop the hot key) is wrong
     * for near-dup candidates — it would LOSE the corpus's biggest dup
-    * cluster, the one dedup most needs. Instead, a bucket whose
-    * membership exceeds the catalog cap rule (> n/20 AND > 64) emits
-    * only its STAR: (anchor = min doc_id, member) pairs — linear in
+    * cluster, the one dedup most needs. Instead, a bucket that is hot
+    * by [[Blocking]]'s rule (> n/20 AND > 64 members) emits only its
+    * STAR: (anchor = min doc_id, member) pairs — linear in
     * bucket size, and connected-components downstream are PROVABLY
     * identical (the star spans exactly the members the clique did).
     * Effects of the cap, mirrored term-for-term in every consumer's
@@ -629,9 +594,8 @@ object Dedup {
     * non-anchor in-bucket pairs, n_shared_bands counts a hot band
     * only toward its anchor's pairs, densities/degrees shift — but
     * cluster membership and survivor choice never change. Buckets at
-    * or below the floor are untouched (64 members = 2,016 pairs,
-    * harmless on any reducer), so natural corpora (sf0.1 max bucket:
-    * 10 docs, SKEW_AUDIT_r9) never see the guard engage. */
+    * or below the floor are untouched, so natural corpora (sf0.1 max
+    * bucket: 10 docs) never see the guard engage. */
   private[operators] def lshCandidatesFromSignatures(sig: DataFrame): DataFrame = {
     // ckpt the SIGNATURES, not the banded explode: the band rows feed
     // the key-count agg, both self-join sides and the hot-star branch
@@ -642,29 +606,13 @@ object Dedup {
     val b = bands(ckpt(sig))
     val keyCounts = b.groupBy(col("band"), col("k1"), col("k2"))
       .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("anchor"))
-    // n docs = tot / BANDS (fixed fanout), so the cap predicate
-    // bn > n/20 evaluates in-plan off this 1-row broadcast. A hot key
-    // holds > 1/20 of each band's rows, so there are PROVABLY at most
-    // 20 × BANDS hot keys — broadcast class by construction, which
-    // keeps the cold side a map-side anti-join and the pair self-join
-    // its original single-exchange shape.
+    // n docs = tot / BANDS (fixed fanout), so the hot-key rule
+    // evaluates in-plan off this 1-row broadcast
     val tot = keyCounts.agg(sum(col("bn")).as("tot"))
     val hotKeys = keyCounts.crossJoin(broadcast(tot))
-      .filter(col("bn") * lit(20 * BANDS) > col("tot") && col("bn") > lit(64))
+      .filter(Blocking.isHot(col("bn"), col("tot"), BANDS))
       .select(col("band"), col("k1"), col("k2"), col("anchor"))
-    val cold = b.join(broadcast(hotKeys.drop("anchor")),
-      Seq("band", "k1", "k2"), "left_anti")
-    val coldPairs = cold.as("a").join(cold.as("b"),
-        col("a.band") === col("b.band") && col("a.k1") === col("b.k1")
-          && col("a.k2") === col("b.k2")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val hotStars = b.join(broadcast(hotKeys), Seq("band", "k1", "k2"))
-      .filter(col("doc_id") =!= col("anchor"))
-      .select(col("anchor").as("doc_a"), col("doc_id").as("doc_b"))
-    coldPairs.union(hotStars)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
+    Blocking.starCapPairs(b, hotKeys)
   }
   /** Oracle mirrors of the star-capped candidate join: `bx` annotates
     * a `bands` CTE with its bucket anchor + hot flag, `cand` is the
@@ -672,7 +620,7 @@ object Dedup {
     * oracle so they all provably mirror [[lshCandidatesFromSignatures]]. */
   private[operators] def lshBxSqlFrom(bandsCte: String): String =
     s"""SELECT b.doc_id, b.band, b.k1, b.k2, s.anchor,
-       |  (s.bn * ${20 * BANDS} > t.tot AND s.bn > 64) AS hot
+       |  (s.bn * ${Blocking.CapDen * BANDS} > t.tot AND s.bn > ${Blocking.CapFloor}) AS hot
        |FROM $bandsCte b
        |JOIN (SELECT band, k1, k2, COUNT(*) AS bn, MIN(doc_id) AS anchor
        |      FROM $bandsCte GROUP BY 1, 2, 3) s
@@ -737,20 +685,15 @@ object Dedup {
 
   /** Skew-safe simhash16 near-dup pairs (doc_a, doc_b, hamming <= 3):
     * block on 4x4-bit bands of the fingerprint (pigeonhole: a pair
-    * within hamming 3 always shares >= 1 clean band) and drop
-    * "stop-print" band keys held by more than 1/capDen of the corpus
-    * (the q112 stop-print rule; integer-exact `keyn*capDen <= n`), so
-    * no blocking key is ever quadratic in a duplicate cluster —
-    * candidate mass per key is bounded by (n/capDen)^2. Recall is 1
-    * for tight near-dups unless EVERY clean band of the pair is
+    * within hamming 3 always shares >= 1 clean band) and drop hot
+    * "stop-print" band keys ([[Blocking]]'s rule, DROP action), so no
+    * blocking key is ever quadratic in a duplicate cluster. Recall is
+    * 1 for tight near-dups unless EVERY clean band of the pair is
     * stop-capped, which by construction only happens inside corpus-
     * fraction-scale duplicate clusters — exactly the pairs a dedup
     * pipeline resolves via cluster representatives (q93), not via an
-    * O(cluster^2) pair list. Keys with ≤ capFloor members are always
-    * kept (≤ 2,016 pairs at 64 — harmless on any reducer; without the
-    * floor a corpus smaller than capDen caps every key to zero). */
-  def simhashPairsBanded(shIn: DataFrame, capDen: Int = 20,
-      capFloor: Int = 64): DataFrame = {
+    * O(cluster^2) pair list. */
+  def simhashPairsBanded(shIn: DataFrame): DataFrame = {
     val sh = shIn.select(col("doc_id"), col("simhash16"))
     val bandStructs = (0 until 4).map(b =>
       struct(lit(b).as("band"),
@@ -765,8 +708,7 @@ object Dedup {
         explode(array(bandStructs: _*)).as("bs"))
       .select(col("doc_id"), col("simhash16"),
         col("bs.band").as("band"), col("bs.bval").as("bval")))
-    val ok = Blocking.stopCapped(bands, Seq("band", "bval"),
-      fanout = 4, capDen = capDen, capFloor = capFloor)
+    val ok = Blocking.stopCapped(bands, Seq("band", "bval"), fanout = 4)
     ok.as("a").join(ok.as("b"),
         col("a.band") === col("b.band") && col("a.bval") === col("b.bval")
           && col("a.doc_id") < col("b.doc_id"))
@@ -836,9 +778,8 @@ object Dedup {
   }
 
   /** Skew-safe simhash64 near-dup pairs (q64): block on the 4×16-bit
-    * bands, but drop "stop-print" band keys held by more than
-    * 1/capDen of the corpus first — the same cull as
-    * [[simhashPairsBanded]], because 16-bit band VALUES are just as
+    * bands, but drop hot "stop-print" band keys first — the same cull
+    * as [[simhashPairsBanded]], because 16-bit band VALUES are just as
     * content-derived as 4-bit ones (measured at sf0.1: the hottest
     * raw band key held 5.75% of the corpus, and that share is
     * scale-invariant, so the uncapped join is skew-quadratic at
@@ -846,14 +787,10 @@ object Dedup {
     * hamming ≤ 3 pair always shares ≥ 1 band (pigeonhole over 4);
     * it is lost only if every such band is stop-capped, which only
     * happens inside corpus-fraction-scale duplicate clusters —
-    * q93 cluster-representative territory, not pair-list territory.
-    * Keys with ≤ capFloor members are always kept (bounded pairs,
-    * and tiny corpora would otherwise cap to zero candidates). */
-  def simhash64PairsBanded(shIn: DataFrame, capDen: Int = 20,
-      capFloor: Int = 64): DataFrame = {
+    * q93 cluster-representative territory, not pair-list territory. */
+  def simhash64PairsBanded(shIn: DataFrame): DataFrame = {
     val bands = ckpt(simhash64Bands(shIn)) // one fingerprint pass for 3 consumers
-    val ok = Blocking.stopCapped(bands, Seq("band", "bval"),
-      fanout = 4, capDen = capDen, capFloor = capFloor)
+    val ok = Blocking.stopCapped(bands, Seq("band", "bval"), fanout = 4)
     ok.as("a").join(ok.as("b"),
         col("a.band") === col("b.band") && col("a.bval") === col("b.bval")
           && col("a.doc_id") < col("b.doc_id"))
@@ -2037,7 +1974,7 @@ object Dedup {
          |          MIN(doc_id) AS anchor
          |        FROM bc GROUP BY 1, 2, 3) s
          |  CROSS JOIN (SELECT COUNT(*) AS tot FROM bc) t
-         |  WHERE s.bn * ${20 * BANDS} > t.tot AND s.bn > 64),
+         |  WHERE s.bn * ${Blocking.CapDen * BANDS} > t.tot AND s.bn > ${Blocking.CapFloor}),
          |cprobe AS (
          |  SELECT c.doc_id, c.band, c.k1, c.k2 FROM bc c
          |  WHERE NOT EXISTS (SELECT 1 FROM chot h
@@ -2230,7 +2167,7 @@ object Dedup {
          |  FROM bands d
          |  JOIN keyn k ON d.band = k.band AND d.bval = k.bval
          |  CROSS JOIN total t
-         |  WHERE k.keyn * 20 <= t.n OR k.keyn <= 64)
+         |  WHERE k.keyn * ${Blocking.CapDen} <= t.n OR k.keyn <= ${Blocking.CapFloor})
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          | MIN(CAST(bit_count(xor(a.simhash16, b.simhash16)) AS INT)) AS hamming
          |FROM ok a JOIN ok b
@@ -2277,7 +2214,7 @@ object Dedup {
          |  FROM bands d
          |  JOIN keyn k ON d.band = k.band AND d.bval = k.bval
          |  CROSS JOIN total t
-         |  WHERE k.keyn * 20 <= t.n OR k.keyn <= 64)
+         |  WHERE k.keyn * ${Blocking.CapDen} <= t.n OR k.keyn <= ${Blocking.CapFloor})
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          | COUNT(*) AS n_shared_bands,
          | MIN(CAST(bit_count(xor(a.simhash64, b.simhash64)) AS INT)) AS hamming

@@ -101,6 +101,7 @@ object LinkGraph {
       moved = if (d.isNullAt(0)) 0L
       else if (d.getLong(0) <= tolPerNode * d.getLong(1)) 0L
       else d.getLong(0)
+      graft.GraftSession.dropCkpt(ranks) // round N-1 no longer read
       ranks = next
       rounds += 1
     }

@@ -45,9 +45,9 @@ import graft.log.FsLease
   *
   * == The warm list: exact star-caps without corpus-wide aggregates ==
   *
-  * The probe side must star-cap HOT keys (bn > 64 AND bn·20·BANDS >
-  * tot — [[Dedup.lshCandidatesFromSignatures]]'s catalog rule) to stay
-  * byte-identical to the index-free path. Maintaining that exactly
+  * The probe side must star-cap HOT keys ([[Blocking]]'s rule:
+  * bn > 64 AND bn·20·BANDS > tot) to stay byte-identical to the
+  * index-free path. Maintaining that exactly
   * used to cost a corpus-wide key-count aggregate per append. Instead
   * the manifest inlines the WARM list — every key holding more than
   * `1/(2·20·BANDS)` = 1/160 of all band rows, with its exact (bn,
@@ -105,10 +105,10 @@ object LshIndex {
     * a cached index from an older build must not be trusted. */
   private val FormatVersion = 2
 
-  /** Warm-list ratio denominator: 2 × the hot rule's `20·BANDS`, so
-    * hot ⊆ warm with a full 2× maintenance margin. Also the bound on
-    * warm-list size and per-batch risky keys (see the scaladoc). */
-  private val WarmFactor = 2 * 20 * Dedup.BANDS
+  /** Warm-list ratio denominator: 2 × the hot rule's `CapDen·BANDS`,
+    * so hot ⊆ warm with a full 2× maintenance margin. Also the bound
+    * on warm-list size and per-batch risky keys (see the scaladoc). */
+  private val WarmFactor = 2 * Blocking.CapDen * Dedup.BANDS
 
   /** Size-tiered segment compaction (the LSM discipline): a segment's
     * TIER is log_[[TierFactor]] of its band-row count (tier 0 holds
@@ -150,9 +150,9 @@ object LshIndex {
       retainK: Long = 2L) {
     def tot: Long = sigRows * Dedup.BANDS
     /** The star-cap set, derived from warm (hot ⊆ warm by the 2×
-      * ratio margin): the catalog cap rule, evaluated exactly. */
+      * ratio margin): [[Blocking]]'s rule, evaluated exactly. */
     def hot: Seq[KeyStat] =
-      warm.filter(w => w.bn > 64 && w.bn * (20L * Dedup.BANDS) > tot)
+      warm.filter(w => Blocking.isHot(w.bn, tot, Dedup.BANDS))
   }
 
   final case class Index(spark: SparkSession, path: String) {
@@ -171,9 +171,9 @@ object LshIndex {
         .groupBy(col("band"), col("k1"), col("k2"))
         .agg(sum(col("bn")).as("bn"), min(col("anchor")).as("anchor"))
     }
-    /** The star-capped probe side for the CURRENT generation: segment
-      * band rows minus hot keys (map-side anti-join against the ≤80-
-      * entry broadcast hot list) plus one anchor row per hot key. The
+    /** The star-capped probe side for the CURRENT generation
+      * ([[Blocking.starCapProbeSide]]: segment band rows minus hot keys
+      * plus one anchor row per hot key). The
       * manifest is resolved ONCE here, so a planned probe keeps its
       * generation snapshot across concurrent appends. */
     def probeSide: DataFrame = probeSideFor(this, currentManifest)
@@ -866,11 +866,11 @@ object LshIndex {
 
         // Below ~2,560 docs the whole key-count table is smaller than
         // one shuffle partition: recompute warm outright. Above it the
-        // warm ratio ALONE implies the 64-member hot floor
-        // (tot/WarmFactor ≥ 64), which the incremental path's
+        // warm ratio ALONE implies the hot rule's member floor
+        // (tot/WarmFactor ≥ CapFloor), which the incremental path's
         // soundness argument relies on.
         val warmNew: Seq[KeyStat] =
-          if (totNew < 64L * WarmFactor)
+          if (totNew < Blocking.CapFloor.toLong * WarmFactor)
             kcUnion(m0.segs :+ SegInfo(segName, batchBands))
               .groupBy(col("band"), col("k1"), col("k2"))
               .agg(sum(col("bn")).as("bn"), min(col("anchor")).as("anchor"))
@@ -1067,70 +1067,30 @@ object LshIndex {
     * checkpoint: the manifest already carries the exact (bn, anchor)
     * of every key that can be hot (warm ⊇ hot by the 2× ratio margin),
     * so the star-cap is decided at PLAN time from ≤160 driver-held
-    * rows. On a clean corpus (hot empty — the common case) the whole
-    * plan collapses to segment-read → self-join → pair count; the
-    * in-plan path must still run its key-count aggregate, its 1-row
-    * `tot` broadcast, an anti-join and an (empty) hot-star branch just
-    * to discover that. The per-snapshot dedup report (q143's near-dup
-    * rung) is the standing consumer. */
+    * rows. On a clean corpus (hot empty — the common case) the empty
+    * local hot frame optimizes the anti-join and the star branch away,
+    * and the plan collapses to segment-read → self-join → pair count
+    * (LshIndexSpec pins it). The per-snapshot dedup report (q143's
+    * near-dup rung) is the standing consumer. */
   def candidatePairs(index: Index): DataFrame = {
     val m = index.currentManifest
-    val b = bandRowsFor(index, m)
-    val hot = m.hot
-    val base =
-      if (hot.isEmpty) b
-      else b.join(broadcast(keysDf(index.spark, hot)),
-        Seq("band", "k1", "k2"), "left_anti")
-    val coldPairs = base.as("a").join(base.as("b"),
-        col("a.band") === col("b.band") && col("a.k1") === col("b.k1")
-          && col("a.k2") === col("b.k2")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val pairs =
-      if (hot.isEmpty) coldPairs
-      else {
-        // hot buckets emit their STAR (anchor, member) — exactly
-        // lshCandidatesFromSignatures' capped branch, with the
-        // bucket's exact anchor read from the manifest instead of a
-        // corpus-wide min
-        val hotDf = index.spark.createDataFrame(
-          java.util.Arrays.asList(hot.map(h =>
-            Row(h.band, h.k1, h.k2, h.anchor)): _*),
-          StructType(keyStatSchema(withStats = false).fields :+
-            StructField("anchor", LongType)))
-        val hotStars = b.join(broadcast(hotDf), Seq("band", "k1", "k2"))
-          .filter(col("doc_id") =!= col("anchor"))
-          .select(col("anchor").as("doc_a"), col("doc_id").as("doc_b"))
-        coldPairs.union(hotStars)
-      }
-    pairs.groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
+    Blocking.starCapPairs(bandRowsFor(index, m), hotDf(index.spark, m.hot))
   }
 
   private def bandRowsFor(ix: Index, m: Manifest): DataFrame =
     m.segs.map(sg => ix.spark.read.parquet(s"${ix.path}/${sg.name}/bands"))
       .reduce(_.unionByName(_))
 
-  private def probeSideFor(ix: Index, m: Manifest): DataFrame = {
-    val bandRows = bandRowsFor(ix, m)
-    val hot = m.hot
-    if (hot.isEmpty) bandRows
-    else {
-      // EXACTLY lshCandidatesFromSignatures' star-cap: drop hot keys'
-      // member rows (map-side anti vs the ≤80-entry broadcast), enter
-      // each hot bucket through its min-doc_id anchor alone
-      val anchors = ix.spark.createDataFrame(
-        java.util.Arrays.asList(hot.map(h =>
-          Row(h.anchor, h.band, h.k1, h.k2)): _*),
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("band", IntegerType), StructField("k1", LongType),
-          StructField("k2", LongType))))
-      bandRows.join(broadcast(keysDf(ix.spark, hot)),
-          Seq("band", "k1", "k2"), "left_anti")
-        .unionByName(anchors.select(col("doc_id"), col("band"),
-          col("k1"), col("k2")))
-    }
-  }
+  private def probeSideFor(ix: Index, m: Manifest): DataFrame =
+    Blocking.starCapProbeSide(bandRowsFor(ix, m), hotDf(ix.spark, m.hot))
+
+  /** The manifest's hot keys as the star cap's local (band, k1, k2,
+    * anchor) frame. */
+  private def hotDf(spark: SparkSession, hot: Seq[KeyStat]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(hot.map(h => Row(h.band, h.k1, h.k2, h.anchor)): _*),
+      StructType(keyStatSchema(withStats = false).fields :+
+        StructField("anchor", LongType)))
 
   // ------------------------------------------------- snapshot caching
 

@@ -87,29 +87,21 @@ object Similarity {
   }
 
   /** Band-blocked candidate pairs (vec_a < vec_b), deduped across
-    * bands, with the stop-print cap (r9): band keys whose population
-    * exceeds n/capDen are dropped whole before the self-join. RHP
-    * sign bits are NOT uniform in general — they are content-derived
-    * exactly like simhash bits (the q50 lesson), so clustered or
-    * mean-shifted embedding corpora pile into few band values (a
-    * shared diurnal shape, a dominant topic cluster). On an isotropic
-    * corpus the cap is a no-op (sf0.1 audit: hottest raw key 1.3%);
-    * on a clustered one it bounds every join bucket at (n/capDen)²
-    * pairs instead of letting one hot key go quadratic. A capped pair
-    * is findable only inside corpus-fraction-scale clusters — the
-    * cluster-representative path (q93/q141), not a pair list.
-    * `capFloor`: keys with ≤ capFloor members are always kept — a
-    * 64-member key yields ≤ 2,016 pairs, harmless on any reducer at
-    * any corpus size, and without the floor a tiny corpus
-    * (n < capDen) would cap every key to zero candidates. */
-  def rhpCandidatePairs(emb: DataFrame, planes: Int = 32, bands: Int = 4,
-      capDen: Int = 20, capFloor: Int = 64): DataFrame = {
+    * bands, with hot band keys dropped whole before the self-join
+    * ([[Blocking]]'s rule, DROP action). RHP sign bits are NOT uniform
+    * in general — they are content-derived exactly like simhash bits
+    * (the q50 lesson), so clustered or mean-shifted embedding corpora
+    * pile into few band values (a shared diurnal shape, a dominant
+    * topic cluster). On an isotropic corpus the cap is a no-op (sf0.1:
+    * hottest raw key 1.3%); on a clustered one it bounds every join
+    * bucket instead of letting one hot key go quadratic. */
+  def rhpCandidatePairs(emb: DataFrame, planes: Int = 32,
+      bands: Int = 4): DataFrame = {
     // ckpt: the RHP sketch (scan-side plane folds, or a whole
     // aggregation pipeline when emb is computed — q92) feeds three
     // consumers: keyCounts and both sides of the pair self-join
     val bb = ckpt(rhpBandBlocks(emb, planes, bands))
-    val ok = Blocking.stopCapped(bb, Seq("band", "bv"),
-      fanout = bands, capDen = capDen, capFloor = capFloor)
+    val ok = Blocking.stopCapped(bb, Seq("band", "bv"), fanout = bands)
     ok.as("a").join(ok.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv")
           && col("a.vec_id") < col("b.vec_id"))
@@ -634,7 +626,7 @@ object Similarity {
         |  FROM bands d
         |  JOIN keyn k ON d.band = k.band AND d.bv = k.bv
         |  CROSS JOIN total t
-        |  WHERE k.keyn * 20 <= t.n OR k.keyn <= 64),
+        |  WHERE k.keyn * ${Blocking.CapDen} <= t.n OR k.keyn <= ${Blocking.CapFloor}),
         |cand AS (
         |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         |  FROM ok a JOIN ok b
@@ -675,7 +667,7 @@ object Similarity {
         |SELECT vec_id, label, CAST(bucket AS BIGINT) AS bucket
         |FROM bits ORDER BY vec_id""".stripMargin,
     "q53_embedding_near_dup" ->
-      """WITH planes AS (
+      s"""WITH planes AS (
         |  SELECT pp.p, dd.d,
         |    ('0x'||substr(md5(pp.p||':'||dd.d),1,8))::BIGINT / 2147483648.0 - 1.0 AS coef
         |  FROM (SELECT UNNEST(generate_series(0,31)) AS p) pp,
@@ -702,7 +694,7 @@ object Similarity {
         |  FROM bands d
         |  JOIN keyn k ON d.band = k.band AND d.bv = k.bv
         |  CROSS JOIN total t
-        |  WHERE k.keyn * 20 <= t.n OR k.keyn <= 64),
+        |  WHERE k.keyn * ${Blocking.CapDen} <= t.n OR k.keyn <= ${Blocking.CapFloor}),
         |cand AS (
         |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         |  FROM ok a JOIN ok b

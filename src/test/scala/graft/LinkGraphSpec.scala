@@ -55,6 +55,32 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(got == ranks(iters = 2))
   }
 
+  test("pagerankConverged: reliable round checkpoints rotate, only the last survives") {
+    val nodes = (1L to 4L).toDF("node")
+    val links = Seq((2L, 1L), (3L, 1L), (4L, 1L)).toDF("src", "tgt")
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty, "test assumes no ambient checkpoint dir")
+    val ckptDir = java.nio.file.Files.createTempDirectory("pr-rotate")
+    sc.setCheckpointDir(ckptDir.toString)
+    spark.conf.set(GraftSession.ReliableCheckpointsConf, "true")
+    try {
+      val (ranksDf, rounds) = LinkGraph.pagerankConverged(
+        nodes, links, maxIters = 20, tolPerNode = 0L)
+      assert(rounds == 3, s"expected 3 rounds, got $rounds")
+      assert(ranksDf.count() == 4L, "the final round's ranks stay readable")
+      val rddDirs = {
+        val s = java.nio.file.Files.walk(ckptDir)
+        try s.filter(p => p.getFileName.toString.startsWith("rdd-")).count()
+        finally s.close()
+      }
+      assert(rddDirs <= 1,
+        s"expected <=1 surviving checkpoint after $rounds rounds, found $rddDirs")
+    } finally {
+      spark.conf.unset(GraftSession.ReliableCheckpointsConf)
+      sc.setCheckpointDir(null)
+    }
+  }
+
   test("hits: mass conserved, structure respected, bit-stable") {
     val nodes = (1L to 5L).toDF("node")
     // 1,2,3 all point at 4; 5 is an orphan; 4 points at 1

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -409,6 +411,14 @@ class LshIndexSpec extends AnyFunSuite {
     val clean = LshIndex.build(corpus, s"$dir/clean")
     assert(pairSet(LshIndex.candidatePairs(clean)) ==
       pairSet(Dedup.lshCandidates(corpus)))
+    // the empty hot frame leaves no anti-join and no star branch in
+    // the optimized plan (the q32/q72/q77/q93/q143/q179 feed)
+    val cleanPlan = LshIndex.candidatePairs(clean).queryExecution.optimizedPlan
+    assert(cleanPlan.find {
+      case j: Join => j.joinType == LeftAnti
+      case _: Union => true
+      case _ => false
+    }.isEmpty, s"clean candidatePairs plan kept a star-cap branch:\n$cleanPlan")
     // viral corpus: 150 copies -> every copied band key is hot
     val viral = docs(((0L until 150L).map(i => (500L + i) -> base) ++
       Seq(1L -> ("one ordinary standalone document with completely " +

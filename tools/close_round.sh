@@ -1,13 +1,12 @@
 #!/usr/bin/env bash
 # Round-close artifact gate (r11 verdict ask #4): one command emits the
-# three closing artifacts so no round ships without them —
+# two closing artifacts so no round ships without them —
 #   PLAN_AUDIT_r<N>.txt  — per-query plan red-flag audit at sf0.01
-#   SKEW_AUDIT_r<N>.txt  — blocking-key skew audit (pre/post cull)
 #   bench_full_latest.json + BENCH_LOCAL_r<N>.json — full sf0.1 bench;
 #       any regression flag carries its own isolated min-of-3
 #       re-measure (`isolated_s`, done inside graft.Bench itself, so
 #       the grading driver's independent run self-adjudicates too).
-# Order: audits first (cheap), bench LAST and alone — the bench is the
+# Order: audit first (cheap), bench LAST and alone — the bench is the
 # only load-sensitive artifact and must not share the box with an
 # audit JVM.
 set -euo pipefail
@@ -18,11 +17,6 @@ echo "== plan audit (sf0.01) =="
 sbt -batch "runMain graft.Diag audit /root/testdata/sf0.01" 2>&1 \
   | grep -a '\[audit\]' | sed 's/^\[info\] //' > "PLAN_AUDIT_r${N}.txt"
 wc -l "PLAN_AUDIT_r${N}.txt"
-
-echo "== skew audit (sf0.01) =="
-sbt -batch "runMain graft.SkewAudit /root/testdata/sf0.01" 2>&1 \
-  | grep -a '\[skew\]' | sed 's/^\[info\] //' > "SKEW_AUDIT_r${N}.txt"
-wc -l "SKEW_AUDIT_r${N}.txt"
 
 echo "== bench (sf0.1, exclusive; waiting for the box to settle) =="
 for _ in $(seq 1 40); do
@@ -55,4 +49,4 @@ for v, q in slow:
           f"{l.get('exec_ms', -1):>9.1f} {l.get('spark.jobs', -1):>5} "
           f"{l.get('spark.construct_jobs', -1):>14}")
 EOF
-echo "== done: PLAN_AUDIT_r${N}.txt SKEW_AUDIT_r${N}.txt BENCH_LOCAL_r${N}.json =="
+echo "== done: PLAN_AUDIT_r${N}.txt BENCH_LOCAL_r${N}.json =="
