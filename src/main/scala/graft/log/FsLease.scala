@@ -216,12 +216,14 @@ object FsLease {
   /** Test-only injection point fired inside every fence, BEFORE the
     * token read, with the step's label — lets a spec steal the lock
     * (or simulate a crash) at the exact pre-commit instant the fence
-    * must catch. Labels: TopicLog's "the heads sidecar",
-    * "txn marker <id>", "txn-marker pruning", "retention directory
-    * drops", "retention drop of <dir>", "size-capped retention
-    * deletions", "retention trim of <file>", "the N partition-dir
-    * swap(s)"; LshIndex's staged dir name (`seg-N`, `seg-Nf`,
-    * `seg-NmR`), "gen-N manifest", "gen-N marker" and "gc <dir>". */
+    * must catch. Labels: TopicLog's two publish-commit fences, in
+    * order, "txn marker <id>" (idempotent publishes only: after the
+    * append, before the marker write) and "the heads sidecar", plus
+    * "txn-marker pruning", "retention directory drops", "retention
+    * drop of <dir>", "size-capped retention deletions", "retention
+    * trim of <file>", "the N partition-dir swap(s)"; LshIndex's staged
+    * dir name (`seg-N`, `seg-Nf`, `seg-NmR`), "gen-N manifest",
+    * "gen-N marker" and "gc <dir>". */
   private[graft] var testBeforeFence: String => Unit = _ => ()
 
   /** Test-only injection point inside `release()`'s check-then-act

@@ -79,6 +79,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   private val logDir = s"$path/log"
   private val asideDir = s"$path/log.aside"
   private val subsDir = s"$path/subscribers"
+  private val txnsDir = s"$path/txns"
   private val headsPath = s"$path/_offsets.json"
   private val lockPath = new Path(s"$path/_publish.lock")
 
@@ -222,78 +223,49 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * Observation on the write job itself — publishing does zero reads
     * of the log. */
   def publish(records: DataFrame): Map[Int, TopicLog.OffsetRange] =
-    withPublishLock { held => publishLocked(records, held) }
+    withPublishLock { held => publishLocked(records, held, None) }
 
-  /** Publish AT MOST ONCE per `txnId`: a committed transaction id
-    * records its offset ranges in `txns/<txnId>` (tmp+rename, under
-    * the writer lease), and any later call with the same id returns
-    * the recorded ranges WITHOUT appending. This closes the dominant
-    * duplicate window of a checkpointed streaming sink — foreachBatch
-    * re-executes its last uncommitted batch on restart AFTER the
-    * publish itself committed (see
-    * [[graft.streaming.TopicStream.publishSinkExactlyOnce]]). A crash
-    * BETWEEN the data append and the marker write remains
-    * at-least-once (the stale-lease reconcile keeps offsets sane, the
-    * retry re-appends) — the same producer contract Kafka has without
-    * full transactions, and strictly stronger than the reference's
-    * fire-and-forget insert (topic.js:26-41).
-    *
-    * Residual fence window (r13 ADVICE, surfaced distinctly): when the
-    * lease is stale-broken AFTER the heads-sidecar commit inside
-    * [[publishLocked]] but BEFORE the txn marker lands, the batch IS
-    * published (offsets advanced, visible to readers) yet no marker
-    * records it — a blind retry of the same txnId would republish it
-    * at new offsets, silently degrading at-most-once-per-txnId to
-    * at-least-once. That window throws
-    * [[TopicLog.CommittedButUnmarkedException]] (carrying the
-    * committed ranges) instead of a plain fence error, so a
-    * supervisor can distinguish "retry the txn" (any other failure)
-    * from "the txn is in; do NOT blind-retry" — or probe
-    * [[hasTxnMarker]] first and treat its absence plus this error's
-    * history as committed. */
+  /** Publish EXACTLY ONCE per `txnId`: the commit records the batch's
+    * offset ranges in a `txns/<txnId>` marker (tmp+rename, under the
+    * writer lease) BEFORE the heads-sidecar replace, and any later call
+    * with the same id returns the recorded ranges WITHOUT appending. A
+    * call that returned is in; ANY exception means "retry the same
+    * txnId" — a failure after the marker landed makes the retry a
+    * no-op, which is what closes the duplicate window of a checkpointed
+    * streaming sink (foreachBatch re-executes its last uncommitted
+    * batch under the same id on restart; see
+    * [[graft.streaming.TopicStream.publishSinkExactlyOnce]]). One
+    * at-least-once window remains: a crash or abort BETWEEN the data
+    * append and the marker leaves the appended copy behind (the
+    * reconcile keeps offsets sane) and the retry re-appends — the same
+    * producer contract Kafka has without full transactions, and
+    * strictly stronger than the reference's fire-and-forget insert
+    * (topic.js:26-41). */
   def publishIdempotent(records: DataFrame, txnId: String): Map[Int, TopicLog.OffsetRange] = {
     require(txnId.nonEmpty && !txnId.exists(c => c == '/' || c == ':'),
       s"txnId must be a plain token: '$txnId'")
     withPublishLock { held =>
-      val marker = new Path(s"$path/txns/$txnId")
-      readKv(marker) match {
-        case Some(kv) =>
-          // committed before: ranges were flattened as p -> base and
-          // (p + numPartitions) -> count
-          kv.collect { case (p, base) if p < numPartitions =>
-            p -> TopicLog.OffsetRange(base, kv(p + numPartitions))
-          }
-        case None =>
-          val ranges = publishLocked(records, held)
-          // from here the batch IS committed (publishLocked replaced
-          // the heads sidecar) — ANY failure before the marker lands
-          // (the fence, or the marker write itself) is the
-          // committed-but-unmarked window and must not look like a
-          // retryable publish failure
-          try {
-            held.fence(s"txn marker $txnId")
-            writeKv(marker, ranges.flatMap { case (p, r) =>
-              Seq(p -> r.base, (p + numPartitions) -> r.count)
-            })
-          } catch {
-            case e: Throwable =>
-              throw new TopicLog.CommittedButUnmarkedException(txnId, ranges, e)
-          }
-          ranges
-      }
+      // committed before: ranges were flattened as p -> base and
+      // (p + numPartitions) -> count
+      readKv(txnMarker(txnId)).map { kv =>
+        kv.collect { case (p, base) if p < numPartitions =>
+          p -> TopicLog.OffsetRange(base, kv(p + numPartitions))
+        }
+      }.getOrElse(publishLocked(records, held, Some(txnId)))
     }
   }
 
-  /** Whether a committed-txn marker exists for `txnId` — the
-    * supervisor's check after [[TopicLog.CommittedButUnmarkedException]]
-    * before deciding whether to retry that txn. Lock-free read —
-    * markers are written tmp+rename, so the probe is atomic; it can
-    * only race a CONCURRENT commit of the same id. */
-  def hasTxnMarker(txnId: String): Boolean =
-    readKv(new Path(s"$path/txns/$txnId")).isDefined
+  private def txnMarker(txnId: String): Path = new Path(txnsDir, txnId)
 
-  private def publishLocked(records: DataFrame,
-      held: FsLease.Held): Map[Int, TopicLog.OffsetRange] = {
+  /** The one publish commit: append the batch, then — each behind its
+    * own fence — the txn marker (only when `txn` is set) and the
+    * heads-sidecar replace. The marker goes FIRST: it is written only
+    * after the append landed under a held lease, so every later
+    * reconcile (stale-break, the catch-all below, recovery on reopen)
+    * folds the batch into heads, and a failure after it turns the
+    * txn's retry into a no-op. */
+  private def publishLocked(records: DataFrame, held: FsLease.Held,
+      txn: Option[String]): Map[Int, TopicLog.OffsetRange] = {
     val base = headsPersist()
     // per-partition base offsets as an array literal indexed by
     // log_part: no join (and no broadcast job), and the literal reaches
@@ -321,15 +293,21 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
       val n = got(s"n_$p") match { case null => 0L; case x: Number => x.longValue() }
       if (n > 0) Some(p -> TopicLog.OffsetRange(base.getOrElse(p, -1L), n)) else None
     }.toMap
-    // fence BEFORE the sidecar replace: if our lease was stale-broken
-    // during the append job, the thief already reconciled heads (and
-    // may have advanced them with its own publish) — our last-writer-
-    // wins replace would REGRESS them and every later publish would
-    // re-issue the thief's offsets until the next stale break. The
-    // appended data files staying behind without a sidecar update is
-    // the same at-least-once window a crash here always had; the
-    // reconcile heals it.
+    // fence BEFORE the marker and the sidecar replace: if our lease
+    // was stale-broken during the append job, the thief already
+    // reconciled heads (and may have advanced them with its own
+    // publish) — our last-writer-wins replace would REGRESS them and
+    // every later publish would re-issue the thief's offsets until the
+    // next stale break. The appended data files staying behind without
+    // a marker or sidecar update is the same at-least-once window a
+    // crash here always had; the reconcile heals it.
     try {
+      txn.foreach { id =>
+        held.fence(s"txn marker $id")
+        writeKv(txnMarker(id), ranges.flatMap { case (p, r) =>
+          Seq(p -> r.base, (p + numPartitions) -> r.count)
+        })
+      }
       held.fence("the heads sidecar")
       writeSidecar(base ++ ranges.map { case (p, r) => p -> (r.base + r.count) })
     } catch {
@@ -337,19 +315,19 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
       // reconciled (and may be advancing heads right now) — hands off
       // the sidecar, surface the abort, let the caller retry
       case e: FsLease.FencedException => throw e
-      // any OTHER failure here (an IO error replacing the sidecar; a
-      // crash injected at the fence) leaves the batch APPENDED with
-      // the sidecar stale — and nothing would heal it: the lock is
-      // released normally on the way out, so no stale-break reconcile
-      // ever runs, and the NEXT publish (any process) would read the
-      // stale heads and re-issue this batch's offsets — permanent
-      // duplicate (part, offset) pairs, the one invariant the lock
-      // exists to protect (r14 chaos-spec-found: only process DEATH
-      // was covered, not a surviving writer whose commit step threw).
-      // We still hold the lease, so reconcile (elementwise max of
-      // sidecar and scan — folds the orphaned append in) before
-      // rethrowing; the records stay behind as the usual
-      // at-least-once window.
+      // any OTHER failure here (an IO error writing the marker or
+      // replacing the sidecar; a crash injected at a fence) leaves the
+      // batch APPENDED with the sidecar stale — and nothing would heal
+      // it: the lock is released normally on the way out, so no
+      // stale-break reconcile ever runs, and the NEXT publish (any
+      // process) would read the stale heads and re-issue this batch's
+      // offsets — permanent duplicate (part, offset) pairs, the one
+      // invariant the lock exists to protect (r14 chaos-spec-found:
+      // only process DEATH was covered, not a surviving writer whose
+      // commit step threw). We still hold the lease, so reconcile
+      // (elementwise max of sidecar and scan — folds the orphaned
+      // append in) before rethrowing; without a marker the records
+      // stay behind as the usual at-least-once window.
       case e: Throwable =>
         try reconcileHeads()
         catch { case r: Throwable => e.addSuppressed(r) }
@@ -472,7 +450,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     withPublishLock { held => pruneTxnMarkersLocked(held) }
 
   private def pruneTxnMarkersLocked(held: FsLease.Held): Unit = {
-    val d = new Path(s"$path/txns")
+    val d = new Path(txnsDir)
     if (fs.exists(d)) {
       held.fence("txn-marker pruning")
       val cutoff = System.currentTimeMillis() - TopicLog.TxnMarkerTtlMs
@@ -776,24 +754,6 @@ object TopicLog {
     def first: Long = base + 1
     def last: Long = base + count
   }
-
-  /** [[TopicLog.publishIdempotent]]'s residual fence window, surfaced
-    * distinctly (r13 ADVICE): the batch COMMITTED — its heads-sidecar
-    * replace landed and `ranges` carries the assigned offsets — but
-    * the lease was stale-broken before the txn marker could record it.
-    * A supervisor must NOT blind-retry this txnId (the retry finds no
-    * marker and republishes the batch at new offsets); treat the txn
-    * as published using the ranges carried here, or re-verify with
-    * [[TopicLog.hasTxnMarker]] before any retry decision. */
-  final class CommittedButUnmarkedException(
-      val txnId: String,
-      val ranges: Map[Int, OffsetRange],
-      cause: Throwable) extends IllegalStateException(
-    s"txn '$txnId' committed (offsets advanced: $ranges) but its " +
-      "idempotence marker was not written — the publish lease was " +
-      "stale-broken between the sidecar commit and the marker write. " +
-      "Do NOT blind-retry this txnId: the retry would republish the " +
-      "batch at new offsets.", cause)
 
   /** Canonical log record schema (SURVEY.md §3). `log_part`/`log_date`
     * are the physical partition directory columns — they must come LAST

@@ -113,8 +113,10 @@ object Curation {
     * micro-batch via the topic's txn markers (the
     * [[graft.streaming.TopicStream.publishSinkExactlyOnce]] id
     * discipline: checkpoint + persistent query id + epoch batch id),
-    * so a foreachBatch re-execution after a crash never double-writes
-    * a batch's verdicts. */
+    * so a foreachBatch re-execution after any failure past its
+    * publish's marker never double-writes a batch's verdicts; only an
+    * abort between the append and the marker re-appends
+    * ([[graft.log.TopicLog.publishIdempotent]]). */
   def screenNearDupsToTopic(docs: DataFrame, ix: LshIndex.Index,
       corpus: => DataFrame, verdictTopic: graft.log.TopicLog,
       checkpointDir: String, minJaccard: Double = 0.0)

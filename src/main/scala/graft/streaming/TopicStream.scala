@@ -149,16 +149,17 @@ object TopicStream {
     * checkpoint location, the streaming query's PERSISTENT id, and the
     * epoch batch id. The query id (minted at query start, stored in
     * `<checkpoint>/metadata`) is stable across restarts of the SAME
-    * checkpoint — so a foreachBatch re-execution after a
-    * crash-before-checkpoint-commit finds its marker and skips the
-    * append — but is RE-MINTED when the checkpoint dir is wiped and
-    * the query restarted (routine ops recovery). Without it, batchIds
-    * restart at 0 while the old run's txn markers persist in the
-    * topic, and genuinely NEW batches would be "skipped" as replays —
-    * silent data loss; with it, a post-wipe run gets fresh txn ids and
-    * degrades to at-least-once, the survivable direction
-    * ([[graft.log.TopicLog.publishIdempotent]] documents the remaining
-    * at-least-once windows). */
+    * checkpoint — so a foreachBatch re-execution after ANY failure
+    * once its publish's marker landed (a crash before the checkpoint
+    * commit, or a publish that threw after its marker) finds the
+    * marker and skips the append — but is RE-MINTED when the
+    * checkpoint dir is wiped and the query restarted (routine ops
+    * recovery). Without it, batchIds restart at 0 while the old run's
+    * txn markers persist in the topic, and genuinely NEW batches would
+    * be "skipped" as replays — silent data loss; with it, a post-wipe
+    * run gets fresh txn ids and degrades to at-least-once, the
+    * survivable direction ([[graft.log.TopicLog.publishIdempotent]]
+    * documents the one remaining at-least-once window). */
   def publishSinkExactlyOnce(records: DataFrame, topic: TopicLog,
       checkpointDir: String): DataStreamWriter[Row] = {
     val mint = new TxnIdMinter(topic.spark, checkpointDir)

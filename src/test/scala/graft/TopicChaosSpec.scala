@@ -30,11 +30,10 @@ import graft.log.{FsLease, TopicLog}
   *    missing-file window of a lock-free read racing a compaction
   *    swap), never sees the content at a (part, offset) change, and
   *    ends having seen every published record;
-  *  - `publishIdempotent` is exactly-once per txnId: a marker-committed
-  *    txn redelivered afterwards returns its recorded ranges without
-  *    appending, and the committed-but-unmarked window surfaces as
-  *    [[TopicLog.CommittedButUnmarkedException]] so the supervisor
-  *    (the writer loop here) does NOT blind-retry it.
+  *  - `publishIdempotent` is exactly-once per txnId: the supervisor
+  *    (the writer loop here) retries the same txnId on ANY failure,
+  *    and afterwards every txn has its marker and a redelivery returns
+  *    the recorded ranges without appending.
   *
   * Injection model (and why the steal reconciles first): a KILL
   * (thrown exception) models an IO failure / crash inside the fence —
@@ -44,12 +43,14 @@ import graft.log.{FsLease, TopicLog}
   * BEFORE deleting the lock (FsLease.breakStale), so the injection
   * reconciles then deletes; a raw delete would simulate a protocol
   * violation no conforming waiter commits. A writer abort at the
-  * heads-sidecar fence lands AFTER the data append, so each one
-  * orphans one extra copy of its batch (the documented at-least-once
-  * window); the orphan's offsets are folded into heads by the
-  * reconcile, the retry re-appends at higher offsets, and compaction
-  * (unique keys) collapses orphans back out — the assertions below
-  * account for exactly that.
+  * txn-marker fence lands AFTER the data append and before the marker,
+  * so each one orphans one extra copy of its batch (the documented
+  * at-least-once window); the orphan's offsets are folded into heads
+  * by the reconcile, the retry re-appends at higher offsets, and
+  * compaction (unique keys) collapses orphans back out — the
+  * assertions below account for exactly that. An abort at the
+  * heads-sidecar fence lands after the marker: the retry finds it and
+  * appends nothing, so it orphans nothing.
   */
 class TopicChaosSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -95,8 +96,6 @@ class TopicChaosSpec extends AnyFunSuite {
 
       val committed =
         new java.util.concurrent.ConcurrentHashMap[String, Map[Int, TopicLog.OffsetRange]]()
-      val unmarked =
-        java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       val baseIds = 9000 until 9010
       committed.put("base", main.publish(batchDf(baseIds)))
       val batchIds: Map[String, Seq[Int]] =
@@ -112,23 +111,18 @@ class TopicChaosSpec extends AnyFunSuite {
       FsLease.testBeforeFence = what => {
         val name = Thread.currentThread().getName
         if (name.startsWith("topicchaos-writer")) {
-          if (what == "the heads sidecar") {
-            // post-append, pre-sidecar: an abort here orphans the
-            // appended copy (at-least-once window) — count it
-            val r = roll()
+          // a publish fences "txn marker <id>" (post-append, pre-marker:
+          // an abort orphans the appended copy, the at-least-once
+          // window — count it), then "the heads sidecar" (post-marker:
+          // the retry finds the marker, no orphan)
+          val r = roll()
+          if (r < 0.33) {
+            firings.incrementAndGet()
+            if (what.startsWith("txn marker")) orphans.incrementAndGet()
             if (r < 0.18) {
-              firings.incrementAndGet(); orphans.incrementAndGet()
               main.reconcileHeadsForTest() // the breaker's onStaleBreak
               lock.delete()
-            } else if (r < 0.33) {
-              firings.incrementAndGet(); orphans.incrementAndGet()
-              throw new ChaosKill // holder's catch-all must reconcile
-            }
-          } else if (what.startsWith("txn marker")) {
-            // post-commit, pre-marker: the CommittedButUnmarked window
-            val r = roll()
-            if (r < 0.12) { firings.incrementAndGet(); lock.delete() }
-            else if (r < 0.24) { firings.incrementAndGet(); throw new ChaosKill }
+            } else throw new ChaosKill // holder's catch-all must reconcile
           }
         } else if (name.startsWith("topicchaos-maint")) {
           // marker pruning, partition-dir swaps, size-retention fences
@@ -150,12 +144,7 @@ class TopicChaosSpec extends AnyFunSuite {
             while (!done && tries < 15) {
               tries += 1
               try { committed.put(txn, topic.publishIdempotent(df, txn)); done = true }
-              catch {
-                case e: TopicLog.CommittedButUnmarkedException =>
-                  // the txn IS in — a supervisor must NOT blind-retry
-                  committed.put(txn, e.ranges); unmarked.add(txn); done = true
-                case _: Throwable => () // fenced/killed — supervisor restarts
-              }
+              catch { case _: Throwable => () } // fenced/killed — retry the txn
             }
             if (!done) writerErrs.add(s"$txn gave up after $tries tries")
           }
@@ -283,7 +272,7 @@ class TopicChaosSpec extends AnyFunSuite {
       assert(dupPo.isEmpty, s"duplicate (part, offset) pairs: ${dupPo.keySet}")
       assert(raw.map(_.getInt(2)).toSet == expectedIds,
         "the raw log's id set diverged from the published union")
-      // each heads-fence abort orphans one whole 12-record batch copy;
+      // each pre-marker abort orphans one whole 12-record batch copy;
       // compaction may have already collapsed some back out
       val maxRows = expectedIds.size + orphans.get() * 12
       assert(raw.length >= expectedIds.size && raw.length <= maxRows,
@@ -317,20 +306,14 @@ class TopicChaosSpec extends AnyFunSuite {
           s"txn $txn landed at $got but its publish reported $want")
       }
 
-      // exactly-once per txnId survives the chaos aftermath: a
-      // marker-committed txn redelivered now returns its recorded
-      // ranges without appending; an unmarked one is exactly the
-      // documented do-not-blind-retry window
+      // exactly-once per txnId survives the chaos aftermath: every
+      // txn has its marker, and a redelivery now returns its recorded
+      // ranges without appending
       batchIds.keys.foreach { txn =>
-        if (unmarked.contains(txn))
-          assert(!maintTopic.hasTxnMarker(txn),
-            s"$txn surfaced CommittedButUnmarked yet has a marker")
-        else {
-          assert(maintTopic.hasTxnMarker(txn), s"$txn lost its marker")
-          val again = writerTopics(0).publishIdempotent(batchDf(batchIds(txn)), txn)
-          assert(again == committed.get(txn),
-            s"redelivered $txn returned $again, recorded ${committed.get(txn)}")
-        }
+        assert(new java.io.File(s"$dir/txns/$txn").exists(), s"$txn lost its marker")
+        val again = writerTopics(0).publishIdempotent(batchDf(batchIds(txn)), txn)
+        assert(again == committed.get(txn),
+          s"redelivered $txn returned $again, recorded ${committed.get(txn)}")
       }
       assert(main.read().count() == expectedIds.size.toLong,
         "redelivered txns must not re-append")

@@ -62,12 +62,12 @@ class TopicLogSpec extends AnyFunSuite {
   }
 
   test("publishIdempotent contract edge: a lost marker re-appends (documented at-least-once window)") {
-    // the documented limitation, pinned as behavior: the txn marker is
-    // written AFTER the data commit, so losing the marker (crash in
-    // that window) makes the retry re-append — at-least-once, exactly
-    // like a non-transactional Kafka producer. If this test ever sees
-    // 30 rows, the marker has become atomic with the data and the
-    // Scaladoc should be upgraded.
+    // the documented limitation, pinned as behavior: the marker is the
+    // only record of a txn — the data files are appended before it —
+    // so a retry that finds no marker re-appends: at-least-once,
+    // exactly like a non-transactional Kafka producer. If this test
+    // ever sees 30 rows, the marker has become atomic with the data
+    // and the Scaladoc should be upgraded.
     val dir = Files.createTempDirectory("topic").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 4)
     topic.publishIdempotent(mkRecords(30), "fragile-txn")
@@ -869,38 +869,86 @@ class TopicLogSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("corrupt _partitions"))
   }
 
-  test("publishIdempotent: the committed-but-unmarked window surfaces distinctly, never as a retryable failure") {
-    // r13 ADVICE: a fence abort BETWEEN the heads-sidecar commit and
-    // the txn-marker write means the batch IS published but nothing
-    // recorded the txnId — a supervisor blind-retrying the "failed"
-    // txn would republish it at new offsets. The window must throw
-    // CommittedButUnmarkedException (carrying the committed ranges),
-    // not a plain fence error.
+  test("publish fences only the heads sidecar; publishIdempotent fences its marker first") {
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    FsLease.testBeforeFence = what => labels.add(what)
+    try {
+      topic.publish(mkRecords(10))
+      assert(labels.toArray.toSeq == Seq("the heads sidecar"))
+      labels.clear()
+      topic.publishIdempotent(mkRecords(10, startId = 10), "tx-order")
+      assert(labels.toArray.toSeq == Seq("txn marker tx-order", "the heads sidecar"))
+    } finally FsLease.testBeforeFence = _ => ()
+  }
+
+  private def dupOffsets(topic: TopicLog): Long =
+    topic.read().groupBy(col("log_part"), col("offset"))
+      .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
+
+  test("publishIdempotent aborted after its marker: the retry returns the recorded ranges and appends nothing") {
+    // the marker is part of the publish commit, written before the
+    // heads sidecar: a lease stolen between the two aborts the publish,
+    // yet the txn is in — a supervisor's retry of the same id (the
+    // only rule it needs) is a no-op, never a second copy
     val dir = Files.createTempDirectory("topic").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
     val lock = new java.io.File(s"$dir/_publish.lock")
     FsLease.testBeforeFence = what =>
-      if (what.startsWith("txn marker")) {
+      if (what == "the heads sidecar") {
+        FsLease.testBeforeFence = _ => () // fire once
+        // a real breaker: onStaleBreak (the reconcile), then the steal
+        topic.reconcileHeadsForTest()
         lock.delete()
         java.nio.file.Files.writeString(lock.toPath, "thief-token")
       }
+    try intercept[FsLease.FencedException] {
+      topic.publishIdempotent(mkRecords(20), "tx-window")
+    } finally FsLease.testBeforeFence = _ => ()
+    assert(lock.delete(), "the fenced-out publisher must spare the thief's lock")
+    assert(new java.io.File(s"$dir/txns/tx-window").exists())
+    assert(topic.read().count() == 20)
+    val again = topic.publishIdempotent(mkRecords(20), "tx-window")
+    assert(again.values.map(_.count).sum == 20L)
+    assert(again.forall { case (p, r) => r.base == -1L && topic.heads()(p) == r.last },
+      s"redelivery returned $again, heads ${topic.heads()}")
+    assert(topic.read().count() == 20, "the retry re-appended a committed txn")
+    assert(dupOffsets(topic) == 0L)
+    assert(topic.heads().values.map(_ + 1).sum == 20L,
+      "heads must account for exactly the records published")
+  }
+
+  test("publishIdempotent killed before its marker: heads reconciled, no marker, the redelivery re-appends once") {
+    // the one at-least-once window left: the append landed, the marker
+    // did not. The commit's catch-all must reconcile heads (so offsets
+    // stay unique) and the retry re-appends the batch exactly once.
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
+    final class Boom extends RuntimeException("simulated crash before the marker")
+    FsLease.testBeforeFence = what =>
+      if (what == "txn marker tx-orphan") {
+        FsLease.testBeforeFence = _ => () // fire once
+        throw new Boom
+      }
     val ex =
-      try intercept[TopicLog.CommittedButUnmarkedException] {
-        topic.publishIdempotent(mkRecords(20), "tx-window")
+      try intercept[RuntimeException] {
+        topic.publishIdempotent(mkRecords(20), "tx-orphan")
       } finally FsLease.testBeforeFence = _ => ()
-    assert(ex.txnId == "tx-window")
-    assert(ex.ranges.values.map(_.count).sum == 20L,
-      "the exception must carry the COMMITTED ranges")
-    assert(topic.read().count() == 20, "the batch is published, not lost")
-    assert(!topic.hasTxnMarker("tx-window"),
-      "the marker is exactly what could not be written")
-    // a supervisor that (correctly) treats the txn as committed moves
-    // on; offsets continue uniquely once the thief's lock clears
-    assert(lock.delete())
-    topic.publishIdempotent(mkRecords(10, startId = 50), "tx-next")
-    val dup = topic.read().groupBy(col("log_part"), col("offset"))
-      .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
-    assert(dup == 0L)
+    assert(ex.isInstanceOf[Boom], ex.toString)
+    assert(!new java.io.File(s"$dir/txns/tx-orphan").exists(),
+      "the kill landed before the marker write")
+    assert(topic.heads().values.map(_ + 1).sum == 20L,
+      "the catch-all must fold the orphaned append into heads")
+    topic.publish(mkRecords(5, startId = 100))
+    assert(dupOffsets(topic) == 0L)
+    // the redelivery re-appends once (the documented orphan copy), and
+    // its marker then makes further redeliveries no-ops
+    val r = topic.publishIdempotent(mkRecords(20), "tx-orphan")
+    assert(topic.read().count() == 45)
+    assert(topic.publishIdempotent(mkRecords(20), "tx-orphan") == r)
+    assert(topic.read().count() == 45)
+    assert(dupOffsets(topic) == 0L)
   }
 
   test("a publish whose commit step fails reconciles heads before surfacing: no duplicate offsets ever") {

@@ -5,9 +5,10 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.log.TopicLog
+import graft.log.{FsLease, TopicLog}
 import graft.streaming.TopicStream
 
 class TopicStreamSpec extends AnyFunSuite {
@@ -158,13 +159,45 @@ class TopicStreamSpec extends AnyFunSuite {
     assert(dst.read().count() == 30)
     // simulate the crash-before-checkpoint-commit redelivery: replay
     // the SAME derived txn id by hand — the marker must make it a no-op
-    val sinkId = java.util.UUID.nameUUIDFromBytes(
-      ckpt.getBytes("UTF-8")).toString.replace("-", "")
-    val queryTag = TopicStream.persistentQueryId(spark, ckpt)
     dst.publishIdempotent(src.read()
       .select(col("event"), col("key"), col("message"), col("ts")),
-      s"sink${sinkId}q${queryTag}b0")
+      new TopicStream.TxnIdMinter(spark, ckpt)("sink", 0))
     assert(dst.read().count() == 30, "redelivered batch 0 duplicated rows")
+  }
+
+  test("publishSinkExactlyOnce: a batch whose publish failed after its marker is not re-appended on restart") {
+    // the lease is stolen at batch 0's heads-sidecar fence, after its
+    // txn marker landed: the query dies, and the restart re-runs
+    // batch 0 under the same txn id — the marker makes that a no-op
+    val dirIn = Files.createTempDirectory("pf-in").toString
+    val dirOut = Files.createTempDirectory("pf-out").toString
+    val ckpt = Files.createTempDirectory("pf-ckpt").toString
+    val src = TopicLog.prepare(spark, dirIn, numPartitions = 2)
+    val dst = TopicLog.prepare(spark, dirOut, numPartitions = 2)
+    src.publish(mkRecords(30))
+    val lock = new java.io.File(s"$dirOut/_publish.lock")
+    FsLease.testBeforeFence = what =>
+      if (what == "the heads sidecar") {
+        FsLease.testBeforeFence = _ => () // fire once
+        dst.reconcileHeadsForTest()
+        lock.delete()
+        Files.writeString(lock.toPath, "thief-token")
+      }
+    val q1 = TopicStream.publishSinkExactlyOnce(
+      TopicStream.subscribe(src, fromNow = false), dst, ckpt).start()
+    val died =
+      try intercept[StreamingQueryException](q1.processAllAvailable())
+      finally { q1.stop(); FsLease.testBeforeFence = _ => () }
+    assert(Iterator.iterate[Throwable](died)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[FsLease.FencedException]), died.toString)
+    assert(lock.delete(), "the thief's lock must survive the fenced publish")
+    val q2 = TopicStream.publishSinkExactlyOnce(
+      TopicStream.subscribe(src, fromNow = false), dst, ckpt).start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(dst.read().count() == 30, "the restart re-appended batch 0")
+    val dup = dst.read().groupBy(col("log_part"), col("offset"))
+      .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
+    assert(dup == 0L)
   }
 
   test("publishSinkExactlyOnce: a checkpoint wipe must NOT silently skip new batches") {
