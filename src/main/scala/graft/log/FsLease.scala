@@ -148,11 +148,11 @@ object FsLease {
     * before anyone may break its lock. */
   val RenewEveryMs: Long = 60 * 1000L
 
+  /** The lock's token; `""` when there is no lock or it cannot be read
+    * (a lock released under us compares unequal to every token). */
   private def readToken(fs: FileSystem, lockPath: Path): String =
-    try {
-      val in = fs.open(lockPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    } catch { case _: java.io.IOException => "" }
+    try AtomicFiles.read(fs, lockPath).getOrElse("")
+    catch { case _: java.io.IOException => "" }
 
   /** Thrown by [[Held.fence]] before an irreversible commit step: the
     * lease was stale-broken (renewal starvation) and a thief may be

@@ -158,37 +158,25 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     read().groupBy(col("log_part")).agg(max(col("offset")).as("head"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
-  /** Sidecar format (heads + per-subscriber watermarks): one
-    * `int:long` pair per line — trivially parseable, atomically
-    * replaced via [[AtomicFiles.writeReplace]] (token-unique temp +
-    * `java.nio` ATOMIC_MOVE on `file:`). Two prior generations of this
-    * method were each falsified by a later finding (r14): the r9
-    * delete-then-rename had a reader-visible missing-file window, and
-    * its FileContext-OVERWRITE replacement had the SAME window on the
-    * local scheme (Hadoop's local `Rename.OVERWRITE` is itself
-    * delete-then-rename — the r13 LSH chaos suite caught a prober
-    * reading `found: None` mid-replace) plus a fixed `.tmp` scratch
-    * name two racing ackers of the SAME subscriber could interleave
-    * on, renaming torn bytes into place that `readKv`'s `Array(k, v)`
-    * match then throws on. The shared helper closes both:
-    * a concurrent reader sees old or new WHOLE bytes, never a missing
-    * or torn file, and same-target racers land last-writer-wins. */
+  /** Sidecar format (heads, per-subscriber watermarks, txn markers,
+    * the `_partitions` pin): one `int:long` pair per line — trivially
+    * parseable, atomically replaced via [[AtomicFiles.writeReplace]],
+    * so a concurrent reader sees old or new WHOLE bytes, never a
+    * missing or torn file, and same-target racers land
+    * last-writer-wins. */
   private def writeKv(target: Path, kv: Map[Int, Long]): Unit =
     AtomicFiles.writeReplace(fs, spark.sparkContext.hadoopConfiguration,
       target, kv.toSeq.sorted.map { case (p, h) => s"$p:$h" }
         .mkString("", "\n", "\n").getBytes("UTF-8"))
 
+  /** A [[writeKv]] sidecar, `None` when absent; a read error
+    * propagates ([[AtomicFiles.read]]). */
   private def readKv(p: Path): Option[Map[Int, Long]] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some(text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { l =>
+    AtomicFiles.read(fs, p).map(_.split("\n").iterator.map(_.trim)
+      .filter(_.nonEmpty).map { l =>
         val Array(k, v) = l.split(":")
         k.toInt -> v.toLong
       }.toMap)
-    }
 
   private def writeSidecar(heads: Map[Int, Long]): Unit =
     writeKv(new Path(headsPath), heads)
@@ -342,6 +330,13 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * Explicit schema so empty (just-prepared) topics read as 0 rows. */
   def read(): DataFrame =
     spark.read.schema(TopicLog.SCHEMA).parquet(logDir)
+
+  /** The log as a streaming file source: [[read]]'s schema and
+    * directory, listed incrementally (the log is append-only), at most
+    * 32 new files per micro-batch. */
+  def readStream(): DataFrame =
+    spark.readStream.schema(TopicLog.SCHEMA)
+      .option("maxFilesPerTrigger", "32").parquet(logDir)
 
   /** Typed view of the log for callers that want compile-time field
     * checks on record handling. */

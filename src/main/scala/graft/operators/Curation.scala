@@ -66,10 +66,9 @@ object Curation {
     *
     * Scale shape, per micro-batch: batch-sized signature work + ONE
     * pruned read of the index's star-capped probe table + a literal-IN
-    * candidate-pruned corpus read ([[Dedup.indexProbeVerified]] with
-    * `pruneByIds = true` — parquet pushes the collected candidate id
-    * set into the scan, so the corpus text is never streamed off disk
-    * per batch; the id set is bounded by the star-capped candidate
+    * candidate-pruned corpus read ([[Dedup.indexProbeVerified]] —
+    * parquet pushes the collected candidate id set into the scan, so
+    * the corpus text is never streamed off disk per batch; the id set is bounded by the star-capped candidate
     * count, batch-proportional by construction). The index GENERATION
     * is resolved once per batch (the probe side pins its manifest
     * snapshot at plan time), so a screen running concurrently with
@@ -100,8 +99,7 @@ object Curation {
         val b = batch.select(col("doc_id"), col("text")).persist()
         try {
           if (b.limit(1).count() > 0)
-            emit(Dedup.indexProbeVerified(ix, b, corpus, pruneByIds = true),
-              batchId)
+            emit(Dedup.indexProbeVerified(ix, b, corpus), batchId)
         } finally { b.unpersist(); () }
       }
       .start()

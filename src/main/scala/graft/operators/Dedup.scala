@@ -496,23 +496,18 @@ object Dedup {
     * Corpus-side cost: the index probe (one pruned read of the
     * persisted star-capped probe table — no signature recompute, no
     * corpus-wide aggregate) plus ONE candidate-pruned pass to shingle
-    * hashes. The pruning has two shapes:
-    *  - `pruneByIds = false` (batch gates): the corpus frame left-semi
-    *    joins the broadcast candidate id set — one corpus scan,
-    *    filtered before its only shuffle; right for large offline
-    *    batches where the candidate set may exceed driver comfort.
-    *  - `pruneByIds = true` (the per-micro-batch screen, q131):
-    *    candidate corpus ids are COLLECTED — capped at 10k, the
-    *    normal micro-batch regime — and pushed into the corpus scan
-    *    as a literal IN predicate. Above
-    *    `spark.sql.parquet.pushdown.inFilterThreshold` (default 10)
-    *    Spark pushes the IN to parquet as its min/max RANGE, so
-    *    row-group pruning is by id range, not exact membership — on
-    *    an id-sorted corpus that still skips the untouched tails, and
-    *    the Spark-side IN filter keeps results exact regardless.
-    *    Beyond the cap (a batch hitting warm-but-not-hot buckets,
-    *    whose fan-out is corpus- not batch-proportional) it falls
-    *    back to the semi-join shape. Identical results either way.
+    * hashes. Candidate corpus ids are COLLECTED — capped at 10k, the
+    * normal micro-batch regime — and pushed into the corpus scan as a
+    * literal IN predicate. Above
+    * `spark.sql.parquet.pushdown.inFilterThreshold` (default 10) Spark
+    * pushes the IN to parquet as its min/max RANGE, so row-group
+    * pruning is by id range, not exact membership — on an id-sorted
+    * corpus that still skips the untouched tails, and the Spark-side
+    * IN filter keeps results exact regardless. Beyond the cap (a batch
+    * hitting warm-but-not-hot buckets, whose fan-out is corpus- not
+    * batch-proportional) the corpus frame left-semi joins the
+    * broadcast candidate id set instead — one corpus scan, filtered
+    * before its only shuffle. Identical results either way.
     *
     * The batch's distinct shingle-hash set is the shared root of
     * everything batch-side (signatures via the multiset-invariant min,
@@ -522,7 +517,7 @@ object Dedup {
     * verification join re-plans file scans at probe time —
     * DedupReportPlanSpec pins both). */
   def indexProbeVerified(ix: LshIndex.Index, batch: DataFrame,
-      corpus: DataFrame, pruneByIds: Boolean = false): DataFrame = {
+      corpus: DataFrame): DataFrame = {
     val shB = ckpt(shingleHashes(batch))
     // the batch's distinct-shingle count (the exact-Jaccard size term)
     // rides the minhash groupBy and the probe's collision aggregate
@@ -538,22 +533,16 @@ object Dedup {
     // broadcast semi-join beyond it (same answer, one corpus pass) so
     // an adversarial micro-batch can never OOM a long-running screen.
     val maxLiteralIds = 10000
+    val ids = cand.select(col("corpus_id")).distinct()
+      .limit(maxLiteralIds + 1)
+      .collect().map(_.getLong(0)).toSeq
     val candDocs =
-      if (!pruneByIds)
+      if (ids.isEmpty) corpus.limit(0)
+      else if (ids.size > maxLiteralIds)
         corpus.join(
           broadcast(cand.select(col("corpus_id").as("doc_id")).distinct()),
           Seq("doc_id"), "left_semi")
-      else {
-        val ids = cand.select(col("corpus_id")).distinct()
-          .limit(maxLiteralIds + 1)
-          .collect().map(_.getLong(0)).toSeq
-        if (ids.isEmpty) corpus.limit(0)
-        else if (ids.size > maxLiteralIds)
-          corpus.join(
-            broadcast(cand.select(col("corpus_id").as("doc_id")).distinct()),
-            Seq("doc_id"), "left_semi")
-        else corpus.filter(col("doc_id").isin(ids: _*))
-      }
+      else corpus.filter(col("doc_id").isin(ids: _*))
     val shC = ckpt(shingleHashes(candDocs))
     val cntC = shC.groupBy(col("doc_id")).agg(count(lit(1)).as("n_corpus"))
     val inter = cand
@@ -1461,11 +1450,9 @@ object Dedup {
       val ix = LshIndex.buildOrLoad(s, corpus, s"$dir/documents.parquet")
       // the verification body is shared with the live per-micro-batch
       // screen (Curation.screenNearDups) — one code path for both
-      // faces. pruneByIds: the candidate id set is micro-batch-sized
-      // here, so the literal-IN path row-group-prunes the corpus scan
-      // (with the capped collect's semi-join fallback guarding the
-      // adversarial fan-out case — identical results either way)
-      indexProbeVerified(ix, batch, corpus, pruneByIds = true)
+      // faces: the micro-batch-sized candidate id set row-group-prunes
+      // the corpus scan as a literal IN
+      indexProbeVerified(ix, batch, corpus)
         .orderBy(col("batch_id"), col("corpus_id"))
     }),
 

@@ -132,9 +132,7 @@ object LshIndex {
 
   /** One band/kc segment: its dir name and band-row count (the
     * tiering and weighted-pigeonhole key — exact by construction:
-    * fresh segments count their batch, merges sum their parts; a
-    * legacy manifest line without a count fails the parse and the
-    * index re-derives once). */
+    * fresh segments count their batch, merges sum their parts). */
   final case class SegInfo(name: String, rows: Long)
 
   /** One generation's published state. `warm` carries exact stats for
@@ -147,12 +145,48 @@ object LshIndex {
     * GC a generation a slow K=3 prober still depends on. */
   final case class Manifest(gen: Long, sigRows: Long, sigDir: String,
       fingerprint: String, segs: Seq[SegInfo], warm: Seq[KeyStat],
-      retainK: Long = 2L) {
+      retainK: Long) {
     def tot: Long = sigRows * Dedup.BANDS
     /** The star-cap set, derived from warm (hot ⊆ warm by the 2×
       * ratio margin): [[Blocking]]'s rule, evaluated exactly. */
     def hot: Seq[KeyStat] =
       warm.filter(w => Blocking.isHot(w.bn, tot, Dedup.BANDS))
+  }
+
+  /** The manifest's one on-disk format: a header naming this build's
+    * [[marker]], one `key value` line per scalar field, one `seg` line
+    * per segment, one `warm` line per warm key, and an `end` sentinel. */
+  object Manifest {
+    private def header = s"graft-lsh-manifest $marker"
+    private val Scalars = Set("gen", "sigRows", "sigDir", "fingerprint", "retainK")
+
+    private[operators] def render(m: Manifest): String =
+      (Seq(header, s"gen ${m.gen}", s"sigRows ${m.sigRows}",
+        s"sigDir ${m.sigDir}", s"fingerprint ${m.fingerprint}",
+        s"retainK ${m.retainK}") ++
+        m.segs.map(sg => s"seg ${sg.name} ${sg.rows}") ++
+        m.warm.map(w => s"warm ${w.band} ${w.k1} ${w.k2} ${w.bn} ${w.anchor}") :+
+        "end" // truncation sentinel: a torn manifest never parses
+      ).mkString("", "\n", "\n")
+
+    /** The manifest of generation `gen` in `text`, or `None` when the
+      * text is not exactly what [[render]] writes for it: a torn file
+      * (no `end`), another build's header, a different `gen`, an
+      * unknown or repeated key, a missing field, or a malformed line. */
+    private[operators] def parse(text: String, gen: Long): Option[Manifest] =
+      scala.util.Try {
+        val lines = text.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+        require(lines.headOption.contains(header) && lines.last == "end")
+        val body = lines.slice(1, lines.size - 1).map(_.split(" ").toList)
+        val segs = body.collect { case List("seg", n, r) => SegInfo(n, r.toLong) }
+        val warm = body.collect { case List("warm", b, k1, k2, bn, a) =>
+          KeyStat(b.toInt, k1.toLong, k2.toLong, bn.toLong, a.toLong) }
+        val f = body.collect { case List(k, v) if Scalars(k) => k -> v }.toMap
+        // every line matched exactly one shape, and no scalar repeats
+        require(segs.size + warm.size + f.size == body.size)
+        Manifest(f("gen").toLong, f("sigRows").toLong, f("sigDir"),
+          f("fingerprint"), segs, warm, f("retainK").toLong)
+      }.toOption.filter(_.gen == gen)
   }
 
   final case class Index(spark: SparkSession, path: String) {
@@ -200,31 +234,23 @@ object LshIndex {
   private def lease(spark: SparkSession, path: String): FsLease =
     new FsLease(fs(spark, path), lockPath(path))
 
-  private def readMarker(spark: SparkSession, path: String): Option[String] = {
-    val f = fs(spark, path)
-    try {
-      if (!f.exists(markerPath(path))) None
-      else {
-        val in = f.open(markerPath(path))
-        val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        Some(txt.trim)
-      }
-    } catch { case _: java.io.IOException => None }
-  }
+  /** The generation the marker points at — `None` when there is no
+    * marker, it cannot be read, or another build wrote it. */
+  private def markerGen(spark: SparkSession, path: String): Option[Long] =
+    try graft.log.AtomicFiles.read(fs(spark, path), markerPath(path))
+      .map(_.trim).filter(_.startsWith(marker + " gen="))
+      .flatMap(_.stripPrefix(marker + " gen=").trim.toLongOption)
+    catch { case _: java.io.IOException => None }
 
   /** An index exists iff its version marker says this build wrote it. */
   def exists(spark: SparkSession, path: String): Boolean =
-    readMarker(spark, path).exists(_.startsWith(marker + " gen="))
+    markerGen(spark, path).isDefined
 
   /** The generation the marker currently points at — the unit of
     * atomic publish for the derived state. */
   private def currentGen(spark: SparkSession, path: String): Long =
-    readMarker(spark, path) match {
-      case Some(m) if m.startsWith(marker + " gen=") =>
-        m.stripPrefix(marker + " gen=").trim.toLong
-      case other => throw new IllegalStateException(
-        s"no valid LSH index marker at $path (found: $other)")
-    }
+    markerGen(spark, path).getOrElse(throw new IllegalStateException(
+      s"no valid LSH index marker at $path"))
 
   private def marker: String =
     s"v$FormatVersion k=${Dedup.K} bands=${Dedup.BANDS}"
@@ -235,17 +261,6 @@ object LshIndex {
     new Path(s"$path/gen-$gen/manifest")
 
   private def writeManifest(spark: SparkSession, path: String, m: Manifest): Unit = {
-    val sb = new StringBuilder
-    sb.append(s"graft-lsh-manifest $marker\n")
-    sb.append(s"gen ${m.gen}\n")
-    sb.append(s"sigRows ${m.sigRows}\n")
-    sb.append(s"sigDir ${m.sigDir}\n")
-    sb.append(s"fingerprint ${m.fingerprint}\n")
-    sb.append(s"retainK ${m.retainK}\n")
-    m.segs.foreach(sg => sb.append(s"seg ${sg.name} ${sg.rows}\n"))
-    m.warm.foreach(w =>
-      sb.append(s"warm ${w.band} ${w.k1} ${w.k2} ${w.bn} ${w.anchor}\n"))
-    sb.append("end\n") // truncation sentinel: a torn manifest never parses
     testOnManifestWrite(m.gen)
     // token-unique temp + atomic rename (AtomicFiles): a collision on
     // the same generation number (a fenced-out writer racing the thief
@@ -255,7 +270,7 @@ object LshIndex {
     // residual check-then-act window (documented there)
     graft.log.AtomicFiles.writeReplace(fs(spark, path),
       spark.sparkContext.hadoopConfiguration,
-      manifestPath(path, m.gen), sb.toString.getBytes("UTF-8"))
+      manifestPath(path, m.gen), Manifest.render(m).getBytes("UTF-8"))
   }
 
   /** Test-only observation point: fires with the generation number of
@@ -265,46 +280,14 @@ object LshIndex {
     * merely repaired). */
   private[graft] var testOnManifestWrite: Long => Unit = _ => ()
 
+  /** Generation `gen`'s manifest; `None` when it is absent, cannot be
+    * read, or does not parse — each of which means "repair" to
+    * validation. */
   private def readManifest(spark: SparkSession, path: String,
       gen: Long): Option[Manifest] =
-    try {
-      val f = fs(spark, path)
-      val in = f.open(manifestPath(path, gen))
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      val lines = txt.split("\n").map(_.trim).filter(_.nonEmpty)
-      if (lines.isEmpty || lines.head != s"graft-lsh-manifest $marker" ||
-          lines.last != "end") None
-      else {
-        var g = -1L; var rows = -1L; var sigDir = "signatures"; var fp = "-"
-        var retainK = 2L // legacy manifests (no retainK line) ran at the default
-        val segs = Seq.newBuilder[SegInfo]
-        val warm = Seq.newBuilder[KeyStat]
-        lines.tail.dropRight(1).foreach { ln =>
-          val p = ln.split(" ")
-          p(0) match {
-            case "gen" => g = p(1).toLong
-            case "sigRows" => rows = p(1).toLong
-            case "sigDir" => sigDir = p(1)
-            case "fingerprint" => fp = p(1)
-            case "retainK" => retainK = p(1).toLong
-            // a count-less seg line (pre-tiering manifest) parses as
-            // rows = -1, which fails the completeness check below —
-            // the index then re-derives once under the lease (cheap
-            // one-time upgrade; MaxValue sentinels would instead leak
-            // into the tier/pigeonhole arithmetic and overflow)
-            case "seg" => segs += SegInfo(p(1),
-              if (p.length > 2) p(2).toLong else -1L)
-            case "warm" => warm += KeyStat(p(1).toInt, p(2).toLong,
-              p(3).toLong, p(4).toLong, p(5).toLong)
-            case _ => () // forward-compatible: ignore unknown keys
-          }
-        }
-        val sgs = segs.result()
-        if (g == gen && rows >= 0 && sgs.forall(_.rows >= 0))
-          Some(Manifest(g, rows, sigDir, fp, sgs, warm.result(), retainK))
-        else None
-      }
-    } catch { case _: java.io.IOException => None }
+    try graft.log.AtomicFiles.read(fs(spark, path), manifestPath(path, gen))
+      .flatMap(Manifest.parse(_, gen))
+    catch { case _: java.io.IOException => None }
 
   // --------------------------------------------- validation + repair
 
@@ -521,33 +504,18 @@ object LshIndex {
     m
   }
 
-  /** Max `retainK` over every readable generation manifest on disk —
-    * the repair path's retention floor when the current manifest is
-    * torn (see [[deriveAll]]). Parsed leniently, like [[gcRefs]]: a
-    * manifest that fails to read contributes nothing (erring toward
-    * the other survivors' max), and no readable manifest at all falls
-    * back to the config floor of 2. */
+  /** Max `retainK` over every generation manifest on disk that parses
+    * — the repair path's retention floor when the current manifest is
+    * torn (see [[deriveAll]]) — with a floor of 2. A torn manifest
+    * inside the retention window also stops seg GC for the repair
+    * publish ([[gcRefs]]), so no segment an in-flight probe reads is
+    * deleted, whatever K is recovered. */
   private def recoverRetainK(spark: SparkSession, path: String): Long =
-    try {
-      val f = fs(spark, path)
-      val ks = f.listStatus(new Path(path)).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-        .flatMap { st =>
-          try {
-            val mp = new Path(st.getPath, "manifest")
-            if (!f.exists(mp)) None
-            else {
-              val in = f.open(mp)
-              val txt = try new String(in.readAllBytes(), "UTF-8")
-                finally in.close()
-              txt.split("\n").map(_.trim).collectFirst {
-                case ln if ln.startsWith("retainK ") => ln.split(" ")(1).toLong
-              }
-            }
-          } catch { case _: Exception => None }
-        }
-      if (ks.isEmpty) 2L else ks.max
-    } catch { case _: Exception => 2L }
+    fs(spark, path).listStatus(new Path(path)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("gen-"))
+      .flatMap(_.stripPrefix("gen-").toLongOption)
+      .flatMap(readManifest(spark, path, _)).map(_.retainK)
+      .foldLeft(2L)(math.max)
 
   /** kc segments land sorted by `bn` DESCENDING so the risky-key
     * lookup's pushed `bn >= threshold` filter row-group-prunes to the
@@ -597,7 +565,7 @@ object LshIndex {
   private def fenceStagingDelete(spark: SparkSession, held: FsLease.Held,
       path: String, gen: Long, what: String): Unit = {
     held.fence(what)
-    if (markerGenOr(spark, path, -1L) >= gen)
+    if (markerGen(spark, path).getOrElse(-1L) >= gen)
       throw new FsLease.FencedException(
         s"gen-$gen was published while we staged $what (our generation " +
           "read went stale mid-steal); aborting the staging rewrite")
@@ -618,55 +586,34 @@ object LshIndex {
     math.max(2L,
       spark.conf.get("spark.graft.lsh.retainGenerations", "2").toLong)
 
-  /** Seg/sig dir names referenced by a generation's manifest, parsed
-    * LENIENTLY (no header/count/sentinel validation) — the GC live-set
-    * must also see generations this build can no longer fully parse
-    * (a pre-tiering manifest mid-upgrade, a torn write): failing to
-    * read one must err toward KEEPING, never toward deleting files an
-    * in-flight probe planned against. Three outcomes (r12 ADVICE —
-    * a transient read error must not read as "no references"):
-    *  - `Some(refs)` — manifest read and scanned;
-    *  - `Some(empty)` — the manifest file does NOT exist (the
-    *    generation was already retired): genuinely no references;
-    *  - `None` — the file exists but could not be read (transient
-    *    IO): the caller must skip seg/sig GC for this publish
-    *    entirely rather than treat the refs as absent. */
+  /** Seg/sig dir names referenced by a generation's manifest — the GC
+    * live set's input, read with [[Manifest.parse]] like every other
+    * manifest read. Failing to read one must err toward KEEPING, never
+    * toward deleting files an in-flight probe planned against (a
+    * transient read error must not read as "no references"):
+    *  - `Some(refs)` — the manifest parsed: its `seg` dirs and `sigDir`;
+    *  - `Some(empty)` — the manifest does NOT exist (the generation was
+    *    already retired): genuinely no references;
+    *  - `None` — it exists but could not be read or does not parse
+    *    (torn, another layout), or any other error: its references
+    *    are unknown, and the caller skips seg/sig GC for this publish
+    *    entirely. */
   private def gcRefs(spark: SparkSession, path: String,
       gen: Long): Option[Seq[String]] =
     try {
       testGcRefsRead(path, gen)
-      val f = fs(spark, path)
-      if (!f.exists(manifestPath(path, gen))) Some(Seq.empty)
-      else {
-        val in = f.open(manifestPath(path, gen))
-        val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        Some(txt.split("\n").map(_.trim).collect {
-          case ln if ln.startsWith("seg ") => ln.split(" ")(1)
-          case ln if ln.startsWith("sigDir ") => ln.split(" ")(1)
-        }.toSeq)
+      graft.log.AtomicFiles.read(fs(spark, path), manifestPath(path, gen)) match {
+        case None => Some(Seq.empty)
+        case Some(txt) =>
+          Manifest.parse(txt, gen).map(m => m.segs.map(_.name) :+ m.sigDir)
       }
-    } catch {
-      case _: java.io.FileNotFoundException => Some(Seq.empty)
-      case _: Exception => None
-    }
+    } catch { case _: Exception => None }
 
   /** Test-only injection point fired as [[gcRefs]] starts reading a
     * generation's manifest — lets a spec simulate a transient read
     * error and pin that GC keeps (not deletes) that generation's
     * segment dirs. */
   private[graft] var testGcRefsRead: (String, Long) => Unit = (_, _) => ()
-
-  /** The marker's current generation, or −1 when no marker exists yet
-    * (a first build) — the cheap publish-collision probe for the
-    * pre-write fence below. */
-  private def markerGenOr(spark: SparkSession, path: String,
-      default: Long): Long =
-    readMarker(spark, path) match {
-      case Some(mk) if mk.startsWith(marker + " gen=") =>
-        scala.util.Try(mk.stripPrefix(marker + " gen=").trim.toLong)
-          .getOrElse(default)
-      case _ => default
-    }
 
   /** Atomically publish a new generation: manifest, then one marker
     * rename — FENCED on the writer lease token at BOTH steps.
@@ -693,16 +640,14 @@ object LshIndex {
     *
     * Retires generation dirs older than the manifest's retention
     * window ([[Manifest.retainK]]) and any segment / signature dir
-    * referenced by NONE of the retained generations' manifests
-    * (parsed leniently — a legacy manifest keeps its dirs for the
-    * grace window even though it no longer parses, and a manifest
-    * that exists but cannot be READ skips seg/sig GC for this publish
-    * entirely). */
+    * referenced by NONE of the retained generations' manifests (a
+    * retained manifest that exists but cannot be read or parsed skips
+    * seg/sig GC for this publish entirely — see [[gcRefs]]). */
   private def publish(spark: SparkSession, path: String, m: Manifest,
       held: FsLease.Held): Unit = {
     val f = fs(spark, path)
     held.fence(s"gen-${m.gen} manifest")
-    if (markerGenOr(spark, path, -1L) >= m.gen)
+    if (markerGen(spark, path).getOrElse(-1L) >= m.gen)
       throw new FsLease.FencedException(
         s"gen-${m.gen} was already published by another writer " +
           s"(our lease must have been stale-broken); aborting")

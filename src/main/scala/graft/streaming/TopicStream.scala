@@ -133,11 +133,8 @@ object TopicStream {
     * in the first place. */
   private def subscribeAfter(topic: TopicLog, watermarks: Map[Int, Long],
       event: Option[String]): DataFrame = {
-    val base = topic.spark.readStream
-      .schema(TopicLog.SCHEMA)
-      .option("maxFilesPerTrigger", "32")
-      .parquet(s"${topic.path}/log")
-    val afterMark = TopicLog.after(base, watermarks, topic.numPartitions)
+    val afterMark = TopicLog.after(topic.readStream(), watermarks,
+      topic.numPartitions)
     event.fold(afterMark)(e => afterMark.filter(col("event") === e))
   }
 
@@ -201,16 +198,12 @@ object TopicStream {
       checkpointDir: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$checkpointDir/metadata")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def unreadable(cause: Throwable) = new IllegalStateException(
+      s"cannot read streaming query metadata at $p — " +
+        "exactly-once txn ids need the query's persistent id", cause)
     val text =
-      try {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      } catch {
-        case e: java.io.IOException => throw new IllegalStateException(
-          s"cannot read streaming query metadata at $p — " +
-            "exactly-once txn ids need the query's persistent id", e)
-      }
+      try graft.log.AtomicFiles.read(fs, p).getOrElse(throw unreadable(null))
+      catch { case e: java.io.IOException => throw unreadable(e) }
     """"id"\s*:\s*"([0-9a-fA-F-]+)"""".r.findFirstMatchIn(text)
       .map(_.group(1).replace("-", ""))
       .getOrElse(throw new IllegalStateException(

@@ -694,13 +694,16 @@ class LshIndexSpec extends AnyFunSuite {
     assert(reloaded.signatures.select("doc_id").distinct().count() == 6L)
   }
 
-  test("gcRefs transient read error keeps (not deletes) the retained generation's segments") {
-    // r12 ADVICE: gcRefs used to return empty on ANY exception, so a
-    // transient IO error reading a retained manifest dropped its seg
-    // dirs from the live set and publish deleted them — the opposite
-    // of err-toward-keeping. Build a state where gen-(N-1) references
-    // segments the new gen-N manifest does NOT (a compaction publish),
-    // fail the gen-(N-1) read, and pin that the inputs survive.
+  /** A state where gen-(N-1) references segments the new gen-N
+    * manifest does NOT (a compaction publish): gen-1 holds seg-1f,
+    * gens 2..8 add seven tier-0 segments, and the 8th small append
+    * merges them, so gen-9 references the merged segment only and
+    * seg-2..seg-8 stay live solely through gcRefs(gen-8). `onGcRead`
+    * is the [[LshIndex.testGcRefsRead]] hook for that compaction
+    * publish; the segments and a probe planned against gen-8 must
+    * survive it, and the next publish, which retires gen-8, must
+    * collect them. */
+  private def compactionKeepsGen8Segments(onGcRead: (String, Long) => Unit): Unit = {
     val dir = Files.createTempDirectory("lshix").toString
     val standing = docs((0L until 200L).map(i => i ->
       s"standing document number $i with vocabulary ${i * 31} and ${i * 97} tail"): _*)
@@ -714,11 +717,7 @@ class LshIndexSpec extends AnyFunSuite {
       docs(9000L -> "appended batch 3 doc 1 about 40 lighthouses"))
     val expected = probeSet(LshIndex.probe(ix,
       docs(9000L -> "appended batch 3 doc 1 about 40 lighthouses")))
-    // the 8th small append triggers the tier-0 compaction: gen-9's
-    // manifest references the merged segment only, so seg-2..seg-8 are
-    // held live solely by gcRefs(gen-8) — whose read we now fail
-    LshIndex.testGcRefsRead = (_, gen) =>
-      if (gen == 8L) throw new RuntimeException("injected transient IO error")
+    LshIndex.testGcRefsRead = onGcRead
     try LshIndex.append(ix, docs((0L until 4L).map(j => (20000L + j) ->
         s"final batch doc $j about ${j * 17} orchards"): _*), assumeNew = true)
     finally LshIndex.testGcRefsRead = (_, _) => ()
@@ -726,15 +725,42 @@ class LshIndexSpec extends AnyFunSuite {
       s"precondition: compaction must have merged, got ${ix.currentManifest.segs}")
     for (g <- 2 to 8)
       assert(new java.io.File(s"$dir/ix/seg-$g").exists(),
-        s"seg-$g was GC'd despite the unreadable retained manifest — " +
-          "a transient read error must err toward KEEPING")
+        s"seg-$g was GC'd although gen-8's references were unknown — " +
+          "GC must err toward KEEPING")
     assert(probeSet(inFlight) == expected,
       "the in-flight gen-8 probe lost its files to an over-eager GC")
-    // once the manifest reads again, the next publish retires them
     LshIndex.append(ix, docs(30000L ->
       "one more appended document about granite observatories"), assumeNew = true)
+    assert(!new java.io.File(s"$dir/ix/gen-8").exists())
     assert(!new java.io.File(s"$dir/ix/seg-2").exists(),
       "GC must resume once the retained manifests read cleanly")
+  }
+
+  test("gcRefs transient read error keeps (not deletes) the retained generation's segments") {
+    // r12 ADVICE: gcRefs used to return empty on ANY exception, so a
+    // transient IO error reading a retained manifest dropped its seg
+    // dirs from the live set and publish deleted them — the opposite
+    // of err-toward-keeping
+    compactionKeepsGen8Segments { (_, gen) =>
+      if (gen == 8L) throw new RuntimeException("injected transient IO error")
+    }
+  }
+
+  test("a torn retained manifest keeps (not deletes) its generation's segments") {
+    // gcRefs reads a retained manifest with the one strict parse: one
+    // that reads but does not parse has unknown references, so seg GC
+    // stops for that publish rather than drop them. gen-8's manifest
+    // is torn (its `end` sentinel dropped) as the GC reads it.
+    val torn = new java.util.concurrent.atomic.AtomicBoolean(false)
+    compactionKeepsGen8Segments { (path, gen) =>
+      if (gen == 8L) {
+        val mf = java.nio.file.Paths.get(s"$path/gen-8/manifest")
+        val text = java.nio.file.Files.readString(mf)
+        java.nio.file.Files.writeString(mf, text.stripSuffix("end\n"))
+        torn.set(text.endsWith("end\n"))
+      }
+    }
+    assert(torn.get(), "gen-8's manifest must have been read whole, then torn")
   }
 
   test("retention K persists in the manifest: a default-conf writer cannot shrink a K=3 window") {

@@ -465,6 +465,16 @@ class TopicStreamSpec extends AnyFunSuite {
     assert(fresh.collect { case f: Filter => f }.isEmpty, fresh.toString)
   }
 
+  test("persistentQueryId fails fast on a checkpoint dir with no metadata") {
+    // txn ids minted without the query's persistent id would reopen the
+    // checkpoint-wipe silent-skip hazard, so absence must throw
+    val dir = Files.createTempDirectory("ckpt").toString
+    val e = intercept[IllegalStateException](
+      TopicStream.persistentQueryId(spark, dir))
+    assert(e.getMessage.contains("cannot read streaming query metadata"),
+      e.getMessage)
+  }
+
   test("watermarks missing some partitions: replay and replayThenLive keep those partitions whole") {
     val dir = Files.createTempDirectory("partial").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 4)
