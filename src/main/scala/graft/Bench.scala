@@ -58,12 +58,37 @@ object Bench {
       "value" -> r.total.toString))
   }
 
+  /** The per-query walls (rounded to ms, -1 = failed) as compact lines
+    * `{"metric":"chunk","i":k,"of":n,"qs":{…}}`, k = 1..n, each under
+    * 200 chars: a bounded stdout tail that front-clips the full line
+    * still keeps whole chunks of it. */
+  private[graft] def chunkLines(r: Report): Seq[String] = {
+    val entries = r.best.toSeq.sortBy(_._1).map { case (q, run) =>
+      Json.str(q) + ":" + fmt(run.wallS) }
+    // room for the frame with k and n at their widest
+    val digits = entries.size.toString.length
+    val room = 199 - s"""{"metric":"chunk","i":,"of":,"qs":{}}""".length - 2 * digits
+    val groups = entries.foldLeft(Vector.empty[Vector[String]]) { (gs, e) =>
+      if (gs.nonEmpty && (gs.last :+ e).mkString(",").length <= room)
+        gs.init :+ (gs.last :+ e)
+      else gs :+ Vector(e)
+    }
+    groups.zipWithIndex.map { case (g, i) =>
+      s"""{"metric":"chunk","i":${i + 1},"of":${groups.size},"qs":{${g.mkString(",")}}}"""
+    }
+  }
+
   /** The last stdout line, compact (<200 chars): a bounded stdout tail
     * front-clips the full line into unparseable JSON, but always keeps
     * this one intact. */
   private[graft] def totalLine(r: Report): String =
-    s"""{"metric":"total","unit":"sec","sf":"${r.sf}","cpus":${r.cpus},""" +
+    s"""{"metric":"total","unit":"sec","sf":${Json.str(r.sf)},"cpus":${r.cpus},""" +
       s""""failed":${r.failed},"n":${r.best.size},"value":${r.total}}"""
+
+  /** Every stdout line of a run, in order: the full line, the chunks,
+    * the total line. */
+  private[graft] def printedLines(r: Report): Seq[String] =
+    (fullLine(r, rounded = true) +: chunkLines(r)) :+ totalLine(r)
 
   /** Resolve the standing LSH index for `sfDir`'s documents before
     * any measured query — every main that measures queries calls this
@@ -234,8 +259,7 @@ object Bench {
     } catch { case e: java.io.IOException =>
       System.err.println(s"bench: could not write $fullPath: $e")
     }
-    println(fullLine(report, rounded = true))
-    println(totalLine(report))
+    printedLines(report).foreach(println)
     spark.stop()
   }
 

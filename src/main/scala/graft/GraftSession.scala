@@ -36,8 +36,9 @@ object GraftSession {
       // small local[N] rigs (all task slots block in its async close);
       // plain checkpoint files are fine for our durability model.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // `file:` through FileSystem and FileContext sets permissions in
-      // process instead of forking chmod per file (see ForkFreeLocalFs)
+      // `file:` through FileSystem and FileContext sets permissions and
+      // checks for symlinks in process instead of forking chmod per
+      // created file and readlink per checkpoint rename (see ForkFreeLocalFs)
       .config(graft.log.ForkFreeLocalFs.confs)
       .withExtensions(new GraftExtensions)
       .getOrCreate()

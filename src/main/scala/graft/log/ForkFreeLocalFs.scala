@@ -5,26 +5,39 @@ import java.nio.file.{FileSystems, Files}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsServerDefaults,
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults,
   LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Hadoop's raw local filesystem with an in-process `setPermission`.
+/** Hadoop's raw local filesystem without the two kinds of process
+  * stock Hadoop forks on `file:`.
   *
-  * Without the native `libhadoop`, stock `RawLocalFileSystem` sets the
-  * mode of every file and directory it creates by forking
-  * `chmod <mode> <path>` — a parquet append with its `.crc` twins,
-  * committer `_temporary` directories and `_SUCCESS` marker forks some
-  * 40 processes, each costing milliseconds in a large JVM. Here the same
-  * rwx bits go through one `Files.setPosixFilePermissions` call. Hadoop
-  * computes the mode (defaults and umask) before calling this method, so
-  * the bits on disk are identical to stock.
+  *  - `setPermission`: without the native `libhadoop`, stock sets the
+  *    mode of every file and directory it creates by forking
+  *    `chmod <mode> <path>` — a parquet append with its `.crc` twins,
+  *    committer `_temporary` directories and `_SUCCESS` marker forks
+  *    some 40 processes, each costing milliseconds in a large JVM. Here
+  *    the same rwx bits go through one `Files.setPosixFilePermissions`
+  *    call. Hadoop computes the mode (defaults and umask) before calling
+  *    this method, so the bits on disk are identical to stock. A mode
+  *    with a bit beyond rwx (sticky, setuid, setgid: `PosixFilePermission`
+  *    cannot express them) takes Hadoop's path.
+  *  - `getFileLinkStatus`: stock forks `readlink <path>` to tell a
+  *    symlink apart, native IO or not. `FileContext.rename(…, OVERWRITE)`
+  *    asks it of the source and the destination, and `ChecksumFs`
+  *    renames the `.crc` twin the same way, so every streaming
+  *    checkpoint file (offset log, file-source seen-files log, commit
+  *    log: three per micro-batch) forks `readlink` four times. Here a
+  *    path that `java.nio` does not see as a symlink gets
+  *    `getFileStatus`, which is what stock returns when `readlink`
+  *    prints nothing (an absent path still throws
+  *    `FileNotFoundException`). Symlinks, dangling ones included, take
+  *    Hadoop's path.
   *
-  * Falls back to Hadoop's own path when native IO is loaded (it already
-  * chmods in process), when the mode carries a bit beyond rwx (sticky,
-  * setuid, setgid: `PosixFilePermission` cannot express them), and when
-  * the default filesystem is not POSIX.
+  * Both take Hadoop's own path unless [[ForkFreeLocalFs.inProcess]]
+  * holds: native IO not loaded (it already chmods in process) and a
+  * POSIX default filesystem.
   *
   * [[graft.GraftSession.build]] registers it for `file:` through
   * [[ForkFreeLocalFs.confs]]. Hadoop's `FileSystem` cache is JVM-global
@@ -38,6 +51,10 @@ class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
       Files.setPosixFilePermissions(pathToFile(p).toPath, ForkFreeLocalFs.posix(mode))
     else super.setPermission(p, permission)
   }
+
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (ForkFreeLocalFs.inProcess && !Files.isSymbolicLink(pathToFile(f).toPath)) getFileStatus(f)
+    else super.getFileLinkStatus(f)
 }
 
 /** `fs.file.impl`: Hadoop's checksumming `LocalFileSystem` over
@@ -58,8 +75,9 @@ object ForkFreeLocalFs {
     "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
 
-  /** Whether rwx modes are set in process; false routes every call to
-    * Hadoop's own `setPermission` (stock behaviour). */
+  /** Whether rwx modes and link statuses are taken in process; false
+    * routes every call to Hadoop's own `setPermission` and
+    * `getFileLinkStatus` (stock behaviour). */
   @volatile private[graft] var inProcess: Boolean =
     !org.apache.hadoop.io.nativeio.NativeIO.isAvailable &&
       FileSystems.getDefault.supportedFileAttributeViews.contains("posix")

@@ -332,8 +332,9 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     spark.read.schema(TopicLog.SCHEMA).parquet(logDir)
 
   /** The log as a streaming file source: [[read]]'s schema and
-    * directory, listed incrementally (the log is append-only), at most
-    * 32 new files per micro-batch. */
+    * directory, at most 32 new files per micro-batch. Spark re-lists the
+    * whole directory on every trigger and keeps the files its seen-files
+    * log has not recorded; nothing makes the listing incremental. */
   def readStream(): DataFrame =
     spark.readStream.schema(TopicLog.SCHEMA)
       .option("maxFilesPerTrigger", "32").parquet(logDir)

@@ -88,10 +88,12 @@ final class Subscription private[streaming] (
   *  - event filter (topic.js:169-171): a row filter applied after the
   *    read, not pushed into the source.
   *
-  * At cluster scale the file source incrementally lists only new files
-  * (the log is append-only), state is bounded by watermarks, and
-  * per-key session state lives in the state store (RocksDB-backed on a
-  * real cluster).
+  * The file source re-lists the whole log directory on every trigger
+  * and keeps only the files its seen-files log has not recorded, so an
+  * idle subscriber's cost grows with the number of log files (keep it
+  * bounded with retention and compaction); state is bounded by
+  * watermarks, and per-key session state lives in the state store
+  * (RocksDB-backed on a real cluster).
   *
   * Compaction contract: [[graft.log.TopicLog.compact]] REWRITES log
   * files (swap-in of new file names), and a file-source subscriber
@@ -127,10 +129,10 @@ object TopicStream {
 
   /** Backlog cut: records strictly after the per-partition watermarks
     * ([[graft.log.TopicLog.after]], the same per-row predicate as batch
-    * [[graft.log.TopicLog.replay]]). File-source LISTING stays
-    * incremental (append-only log); partition-directory pruning is not
-    * available to a streaming source, which is why the cut is per-row
-    * in the first place. */
+    * [[graft.log.TopicLog.replay]]). The file source lists the whole
+    * log on every trigger and drops the files it has already seen;
+    * partition-directory pruning is not available to a streaming
+    * source, which is why the cut is per-row in the first place. */
   private def subscribeAfter(topic: TopicLog, watermarks: Map[Int, Long],
       event: Option[String]): DataFrame = {
     val afterMark = TopicLog.after(topic.readStream(), watermarks,

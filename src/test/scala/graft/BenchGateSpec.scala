@@ -133,4 +133,38 @@ class BenchGateSpec extends AnyFunSuite {
     assert(total.length < 200, total)
     assert(mapper.readTree(total).get("cpus").asInt == 32, total)
   }
+
+  test("every printed line parses once sbt's [info] prefix is stripped; chunks cover the queries") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    import scala.jdk.CollectionConverters._
+    val layers = QueryLayers(1.0, 2.0, 1, 0, 4, 0, 3, 0, 0)
+    // 60 queries with realistic names, one failed; an sf with a quote
+    // and a backslash, which the total line must escape
+    val best = (1 to 60).map { i =>
+      f"q$i%03d_operator_pack_query_name" ->
+        (if (i == 7) Bench.FailedRun else Bench.Run(i * 0.0123456, 1L, 2L, layers))
+    }.toMap
+    val report = Bench.Report("/data/sf\"0.1\\x", "", 4, Seq.empty, 1.0, Seq.empty,
+      "[]", "[]", -1.0, Seq(best.view.mapValues(_.wallS).toMap), best)
+    val lines = Bench.printedLines(report)
+      .map("[info] " + _).map(_.stripPrefix("[info] "))
+    val trees = lines.map(l => l -> mapper.readTree(l))
+    assert(trees.forall(_._2.get("metric") != null), lines)
+    assert(trees.head._2.get("metric").asText == "total" && trees.head._2.has("queries"))
+    assert(trees.last._2.get("metric").asText == "total" && !trees.last._2.has("queries"))
+    assert(trees.last._2.get("sf").asText == report.sf, trees.last._1)
+    val chunks = trees.drop(1).dropRight(1)
+    assert(chunks.size > 1, "60 queries must not fit one chunk")
+    chunks.zipWithIndex.foreach { case ((l, t), i) =>
+      assert(l.length < 200, l)
+      assert(t.get("metric").asText == "chunk" && t.get("i").asInt == i + 1 &&
+        t.get("of").asInt == chunks.size, l)
+    }
+    val fromChunks = chunks.flatMap { case (_, t) =>
+      t.get("qs").fields.asScala.map(e => e.getKey -> e.getValue.asDouble) }
+    val full = trees.head._2.get("queries").fields.asScala
+      .map(e => e.getKey -> e.getValue.asDouble).toSeq
+    assert(fromChunks == full)
+    assert(fromChunks.toMap.apply("q007_operator_pack_query_name") == -1.0)
+  }
 }

@@ -1,11 +1,14 @@
 package graft
 
+import java.io.FileNotFoundException
 import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => NioPath}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, LocalFileSystem, Options,
+  Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -124,5 +127,82 @@ class LocalFsSpec extends AnyFunSuite {
     // java.nio cannot set the sticky bit: it is there only if the
     // call fell back to Hadoop's chmod
     assert(mode(dir) == sticky)
+  }
+
+  /** Runs `body` with [[ForkFreeLocalFs.inProcess]] set to `on`. */
+  private def withInProcess[T](on: Boolean)(body: => T): T = {
+    val saved = ForkFreeLocalFs.inProcess
+    ForkFreeLocalFs.inProcess = on
+    try body finally ForkFreeLocalFs.inProcess = saved
+  }
+
+  /** What a caller sees of a link status: path, length, kind and link
+    * target, or the exception class. */
+  private def linkView(fs: FileSystem, p: Path): Either[String, (Path, Long, Boolean, Boolean, Option[Path])] =
+    try {
+      val st = fs.getFileLinkStatus(p)
+      Right((st.getPath, st.getLen, st.isDirectory, st.isSymlink,
+        if (st.isSymlink) Some(st.getSymlink) else None))
+    } catch { case e: java.io.IOException => Left(e.getClass.getName) }
+
+  test("getFileLinkStatus equals stock Hadoop's on a file, a directory and symlinks") {
+    val dir = Files.createTempDirectory("localfs")
+    val file = Files.write(dir.resolve("file"), "twelve bytes".getBytes(UTF_8))
+    val sub = Files.createDirectory(dir.resolve("dir"))
+    val link = Files.createSymbolicLink(dir.resolve("link"), file)
+    val dangling = Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("absent"))
+    val fast = new ForkFreeRawLocalFileSystem
+    val stock = new RawLocalFileSystem
+    Seq(fast, stock).foreach(_.initialize(new URI("file:///"), hconf))
+    // a bare path and its qualified `file:` form: stock hands the path's
+    // string to `readlink`, so only the bare form is seen as a link
+    val paths = Seq(file, sub, link, dangling).flatMap(p =>
+      Seq(new Path(p.toString), new Path(p.toUri)))
+    val views = withInProcess(on = true)(paths.map(linkView(fast, _)))
+    paths.zip(views).foreach { case (p, v) =>
+      assert(v == linkView(stock, p), s"$p")
+    }
+    val byPath = paths.zip(views).toMap
+    assert(byPath(new Path(file.toString)).map(_._2) == Right(12L))
+    assert(byPath(new Path(sub.toString)).map(_._3) == Right(true))
+    // the symlink cases took Hadoop's own path and came out as links
+    assert(byPath(new Path(link.toString)).map(_._4) == Right(true))
+    assert(byPath(new Path(dangling.toString)).map(_._4) == Right(true))
+  }
+
+  test("getFileLinkStatus of an absent path throws FileNotFoundException, fast and stock") {
+    val absent = new Path(Files.createTempDirectory("localfs").resolve("absent").toUri)
+    val fast = new ForkFreeRawLocalFileSystem
+    val stock = new RawLocalFileSystem
+    Seq(fast, stock).foreach(_.initialize(new URI("file:///"), hconf))
+    withInProcess(on = true)(intercept[FileNotFoundException](fast.getFileLinkStatus(absent)))
+    intercept[FileNotFoundException](stock.getFileLinkStatus(absent))
+  }
+
+  test("a checkpoint-style FileContext rename with OVERWRITE leaves stock's tree, bytes and .crc twins") {
+    def scenario(inProcess: Boolean): Map[String, (Int, Seq[Byte])] = {
+      val dir = Files.createTempDirectory("localfs")
+      val fc = FileContext.getFileContext(dir.toUri, hconf)
+      def write(name: String, text: String): Path = {
+        val p = new Path(dir.resolve(name).toUri)
+        val out = fc.create(p, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+        try out.write(text.getBytes(UTF_8)) finally out.close()
+        p
+      }
+      val dst = write("0", "v1\n{\"old\":true}")
+      val src = write(".0.tmp", "v1\n{\"new\":true,\"batch\":0}")
+      withInProcess(inProcess)(fc.rename(src, dst, Options.Rename.OVERWRITE))
+      val walk = Files.walk(dir)
+      try walk.iterator.asScala.filter(_ != dir).map { p =>
+        dir.relativize(p).toString ->
+          (mode(p), if (Files.isRegularFile(p)) Files.readAllBytes(p).toSeq else Seq.empty[Byte])
+      }.toMap
+      finally walk.close()
+    }
+    val fast = scenario(inProcess = true)
+    val stock = scenario(inProcess = false)
+    assert(fast == stock)
+    assert(fast.keySet == Set("0", ".0.crc"))
+    assert(new String(fast("0")._2.toArray, UTF_8) == "v1\n{\"new\":true,\"batch\":0}")
   }
 }

@@ -24,8 +24,8 @@ for _ in $(seq 1 40); do
   awk -v l="$load" 'BEGIN { exit !(l < 0.8) }' && break
   sleep 15
 done
-# graft.Bench prints two "metric" lines: the full one (with "queries")
-# and a compact total; the artifact is the full one alone
+# graft.Bench prints "metric" lines: the full one (with "queries"), the
+# per-query chunks and a compact total; the artifact is the full one alone
 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   sbt -batch "runMain graft.Bench" 2>/dev/null \
   | grep -a '"metric"' | grep -a '"queries"' | sed 's/^\[info\] //' \
