@@ -46,13 +46,6 @@ object GraftFunctions {
   /** Whitespace tokens of a text column. */
   def tokens(text: Column): Column = split(text, "\\s+")
 
-  /** 3-word shingles of a token-array column (empty if < 3 tokens). */
-  def shingles3(toks: Column): Column =
-    when(size(toks) >= 3,
-      transform(sequence(lit(1), size(toks) - 2),
-        i => concat_ws(" ", slice(toks, i, lit(3)))))
-      .otherwise(array())
-
   /** Hamming distance of two integral columns (codegen'd popcount).
     * Requires GraftExtensions. */
   def hamming_dist(a: Column, b: Column): Column =

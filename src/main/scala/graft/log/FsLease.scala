@@ -25,14 +25,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    judge a live, renewing holder dead; a long publish needs no
   *    longer lease, because renewal covers it.
   *
-  * There is no sidecar to reconcile on a stale break — callers pass
-  * `onStaleBreak` when breaking a dead holder's lock must first repair
-  * the artifact it was mid-way through writing BEFORE the break frees
-  * other waiters to build on it (TopicLog's heads reconcile). The
-  * LshIndex deliberately passes NONE: its repair runs post-acquisition
-  * (`validatedManifestLocked` re-checks the signature watermark as the
-  * first act under any fresh lease), which covers the stale-break path
-  * and every other entry equally.
+  * The lease repairs nothing itself — callers pass `onStaleBreak` when
+  * breaking a dead holder's lock must first repair the artifact it was
+  * mid-way through writing BEFORE the break frees other waiters to
+  * build on it (TopicLog's heads reconcile). It may run while a waiter
+  * that broke the same lock first holds the lease, so it drops nothing;
+  * destructive repair runs as the first act under a fresh lease (the
+  * LshIndex's `validatedManifestLocked`, TopicLog's torn-swap heal).
+  * Only [[acquire]] breaks; an observer that must not wait reads
+  * [[liveHolder]].
   *
   * A stale break means a SLOW holder may still be alive (GC pause, FS
   * hang past the stale window) and now believes it holds a lock it
@@ -99,15 +100,6 @@ final class FsLease(fs: FileSystem, lockPath: Path,
         fs.delete(lockPath, false)
     } catch { case _: java.io.IOException => () } // already released
   }
-
-  /** Break the lock iff it is OBSERVED stale right now — the
-    * open/recover path: heal a dead holder's leftovers (running
-    * `onStaleBreak` first, exactly like a waiter's break) WITHOUT
-    * acquiring. A fresh lock — a live holder in another process — is
-    * left alone to complete its own commit. */
-  def breakIfStale(): Unit =
-    lockMtime().filter(isStale).foreach(m =>
-      breakStale(m, FsLease.readToken(fs, lockPath)))
 
   /** Blocks until the lease is held; returns a handle whose `release()`
     * stops renewal and frees the lock. Default wait outlasts a live
@@ -183,8 +175,11 @@ object FsLease {
       * irreversible step. Fires [[testBeforeFence]] with `what` first. */
     def check(what: String): Boolean = {
       testBeforeFence(what)
-      readToken(fs, lockPath) == token
+      holds()
     }
+
+    /** [[check]] without the injection point, for a failure path's repair. */
+    private[log] def holds(): Boolean = readToken(fs, lockPath) == token
 
     /** [[check]], throwing [[FencedException]] when it fails: the
       * caller aborts and retries from the re-validated artifact under
@@ -221,9 +216,10 @@ object FsLease {
     * append, before the marker write) and "the heads sidecar", plus
     * "txn-marker pruning", "retention directory drops", "retention
     * drop of <dir>", "size-capped retention deletions", "retention
-    * trim of <file>", "the N partition-dir swap(s)"; LshIndex's staged
-    * dir name (`seg-N`, `seg-Nf`, `seg-NmR`), "gen-N manifest",
-    * "gen-N marker" and "gc <dir>". */
+    * trim of <file>", "the N partition-dir swap(s)" and then "the swap
+    * of <subdir>" per subdir; LshIndex's staged dir name (`seg-N`,
+    * `seg-Nf`, `seg-NmR`), "gen-N manifest", "gen-N marker" and
+    * "gc <dir>". */
   private[graft] var testBeforeFence: String => Unit = _ => ()
 
   /** Test-only injection point inside `release()`'s check-then-act

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   *    sidecar maintained by every mutation, so [[heads]] and therefore
   *    [[publish]] are O(partitions) metadata reads — the log itself is
   *    NEVER scanned to assign offsets (a cold sidecar falls back to a
-  *    one-time scan and writes the sidecar).
+  *    one-time scan, which the next lease holder writes back).
   *  - [[publish]]'s per-partition record counts are collected with an
   *    [[org.apache.spark.sql.Observation]] piggybacked on the write
   *    job — no second pass over the batch, no read-back.
@@ -54,21 +54,18 @@ import org.apache.spark.sql.functions._
   *    byte-identical afterwards.
   *  - Directory swaps are crash-safe: live dirs are renamed aside
   *    (into `log.aside`, outside the tree a read lists) before the
-  *    staged result moves in, and [[recover]] (run on open) rolls a
-  *    torn swap back, so a crash never leaves the log absent.
+  *    staged result moves in, and [[heal]] rolls a torn swap back
+  *    before the next writer writes, so a crash never leaves the log
+  *    absent.
   *  - CONCURRENT PUBLISHERS are safe (the reference gets this from
   *    MongoDB's atomic inserts, `topic.js:26-41`): [[publish]] runs
   *    under a `_publish.lock` lease file acquired with an atomic
   *    create-if-absent, so two producers serialize and assign disjoint,
-  *    gapless offset ranges. The lock doubles as the crash marker: a
-  *    publisher that died mid-append leaves its lock behind, and
-  *    whoever breaks the stale lease first reconciles the sidecar
-  *    against a log scan (elementwise max — correct both for a crashed
-  *    append, where the scan is ahead, and for a fully-trimmed
-  *    partition, where the sidecar is ahead). Compaction and retention
-  *    take the SAME lease, so a maintenance swap can never race a
-  *    concurrent publish (which would silently drop the appended
-  *    batch); the lease renews itself for the duration of long jobs.
+  *    gapless offset ranges. Compaction and retention take the SAME
+  *    lease, so a swap can never race a publish (which would silently
+  *    drop the appended batch); the lease renews itself for long jobs.
+  *  - Repair is ONE path, [[heal]], run only under the lease; a stale
+  *    break only reconciles heads, and an open never repairs lock-free.
   *  - Replay is `offset > watermark` + event filter, evaluated per row
   *    after the scan: the watermark is a per-partition array literal
   *    indexed by `log_part` ([[TopicLog.after]]), which parquet cannot
@@ -77,27 +74,23 @@ import org.apache.spark.sql.functions._
 final class TopicLog(val spark: SparkSession, val path: String, val numPartitions: Int = 8) {
 
   private val logDir = s"$path/log"
+  private val stagingDir = s"$path/log.staging"
   private val asideDir = s"$path/log.aside"
   private val subsDir = s"$path/subscribers"
   private val txnsDir = s"$path/txns"
   private val headsPath = s"$path/_offsets.json"
+  private val pinPath = new Path(s"$path/_partitions")
   private val lockPath = new Path(s"$path/_publish.lock")
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The topic's writer lease. `onStaleBreak` is the sidecar
-    * reconcile: a stale lock means a publisher died between append and
-    * sidecar write, and the breaker must heal heads BEFORE freeing
-    * other waiters to publish against them. Every write that COMMITS
-    * state under the lease — the heads-sidecar replace, a txn marker, a
-    * partition-dir swap, each retention deletion — first passes
-    * `held.fence`: a renewal-starved publisher whose lock was
-    * stale-broken must not land them, because the thief reconciled
-    * heads and may be committing its own (a zombie sidecar replace
-    * would REGRESS heads the thief advanced; a zombie swap or deletion
-    * could drop records the thief just published). Declared before the
-    * constructor's [[recover]] call, which uses it. */
+  /** The topic's writer lease. `onStaleBreak` is [[reconcileHeads]]
+    * alone: a waiter that lost the race to break a lock runs it while
+    * the winner holds the lease, so it must drop nothing. Every write
+    * that COMMITS state under the lease first passes `held.fence`: a
+    * stale-broken zombie must not regress heads or drop records the
+    * thief has written since. */
   private val publishLease: FsLease =
     new FsLease(fs, lockPath, () => reconcileHeads())
 
@@ -111,9 +104,9 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   // GraftConnection cache guard only protects a single process; this
   // protects reopen-after-close and cross-process opens. A
   // pre-sidecar log adopts the requested count once (unverifiable).
-  // Checked BEFORE recover(): a wrong-count open must not get to
-  // break locks or reconcile sidecars first.
-  readKv(new Path(s"$path/_partitions")) match {
+  // Checked BEFORE any heal: a wrong-count open must not get to break
+  // locks or reconcile sidecars first.
+  private def pinned(): Boolean = readKv(pinPath) match {
     case Some(kv) =>
       // a present-but-keyless sidecar is CORRUPTION, not absence: fall
       // back to the caller's count and a truncated pin silently
@@ -126,33 +119,35 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
       require(disk == numPartitions.toLong,
         s"topic at $path was created with $disk partitions; " +
           s"reopening with $numPartitions would corrupt routing/offsets")
-    case None =>
-      writeKv(new Path(s"$path/_partitions"), Map(0 -> numPartitions.toLong))
+      true
+    case None => false
   }
 
-  recover()
-  fs.mkdirs(new Path(logDir)) // prepareTopic creates the topic infra (works for hdfs://, file://, plain paths alike)
+  // The open writes nothing lock-free: a first open pins the count
+  // under the lease (re-read there, so of two first opens with
+  // different counts the second is refused), and a pinned one takes
+  // the lease only when no live holder does and a dead one left a
+  // stale lock or a torn swap.
+  if (!pinned() || (!publishLease.liveHolder() &&
+      (fs.exists(lockPath) || swapLeftovers() || tornSwaps().nonEmpty)))
+    publishLease.withLeaseHeld { _ =>
+      if (!pinned()) {
+        fs.mkdirs(new Path(logDir))
+        writeKv(pinPath, Map(0 -> numPartitions.toLong))
+      }
+      if (swapLeftovers() || tornSwaps().nonEmpty) heal()
+    }
 
   // ---------------------------------------------------------------- heads
 
   /** Current per-partition head offsets (−1 when empty): an
     * O(partitions) read of the `_offsets.json` sidecar — no log scan.
-    * A missing sidecar (e.g. a pre-sidecar log) is rebuilt once from a
-    * full scan and persisted. Heads survive retention: a fully-trimmed
+    * A missing sidecar (e.g. a pre-sidecar log) falls back to a full
+    * scan, which only the next lease holder persists (see
+    * [[withPublishLock]]). Heads survive retention: a fully-trimmed
     * partition keeps its head so offsets stay monotonic forever (Kafka's
     * log-end-offset semantics). */
   def heads(): Map[Int, Long] = readSidecar().getOrElse(scanHeads())
-
-  /** [[heads]] + sidecar persist — called ONLY under the publish lock:
-    * a lock-free reader must never write the sidecar (its delete+
-    * rename could race a publisher's replace and resurrect stale heads
-    * → duplicate offsets). Readers pay the one-time scan until a
-    * locked operation materializes the sidecar. */
-  private def headsPersist(): Map[Int, Long] = readSidecar().getOrElse {
-    val scanned = scanHeads()
-    writeSidecar(scanned)
-    scanned
-  }
 
   private def scanHeads(): Map[Int, Long] =
     read().groupBy(col("log_part")).agg(max(col("offset")).as("head"))
@@ -186,12 +181,22 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
 
   // -------------------------------------------------------------- publish
 
-  /** Run `body` holding the topic's exclusive writer lease, renewed
-    * for the duration. Publish, compaction, and retention all take it:
-    * a compactor swapping a partition directory while a publisher
-    * appends into it would silently drop the concurrent batch. */
-  private def withPublishLock[T](body: FsLease.Held => T): T =
-    publishLease.withLeaseHeld(body)
+  /** Run `body` holding the topic's writer lease (publish, compaction
+    * and retention all take it), handing it the current heads. The
+    * prologue heals a swap the last holder left, so nothing lands in a
+    * torn partition, and is the one place that rebuilds a missing heads
+    * sidecar: never a lock-free reader (its replace could race a
+    * publisher's), always before maintenance can drop a head record. */
+  private def withPublishLock[T](body: (FsLease.Held, Map[Int, Long]) => T): T =
+    publishLease.withLeaseHeld { held =>
+      if (swapLeftovers()) heal()
+      val heads = readSidecar().getOrElse {
+        val scanned = scanHeads()
+        writeSidecar(scanned)
+        scanned
+      }
+      body(held, heads)
+    }
 
   /** Test-only accessor: acquire the topic's publish lease directly
     * (the lock-honoring/stale-window specs need to drive `acquire`
@@ -211,7 +216,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * Observation on the write job itself — publishing does zero reads
     * of the log. */
   def publish(records: DataFrame): Map[Int, TopicLog.OffsetRange] =
-    withPublishLock { held => publishLocked(records, held, None) }
+    withPublishLock { (held, heads) => publishLocked(records, held, heads, None) }
 
   /** Publish EXACTLY ONCE per `txnId`: the commit records the batch's
     * offset ranges in a `txns/<txnId>` marker (tmp+rename, under the
@@ -232,29 +237,28 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   def publishIdempotent(records: DataFrame, txnId: String): Map[Int, TopicLog.OffsetRange] = {
     require(txnId.nonEmpty && !txnId.exists(c => c == '/' || c == ':'),
       s"txnId must be a plain token: '$txnId'")
-    withPublishLock { held =>
+    withPublishLock { (held, heads) =>
       // committed before: ranges were flattened as p -> base and
       // (p + numPartitions) -> count
       readKv(txnMarker(txnId)).map { kv =>
         kv.collect { case (p, base) if p < numPartitions =>
           p -> TopicLog.OffsetRange(base, kv(p + numPartitions))
         }
-      }.getOrElse(publishLocked(records, held, Some(txnId)))
+      }.getOrElse(publishLocked(records, held, heads, Some(txnId)))
     }
   }
 
   private def txnMarker(txnId: String): Path = new Path(txnsDir, txnId)
 
-  /** The one publish commit: append the batch, then — each behind its
-    * own fence — the txn marker (only when `txn` is set) and the
-    * heads-sidecar replace. The marker goes FIRST: it is written only
-    * after the append landed under a held lease, so every later
-    * reconcile (stale-break, the catch-all below, recovery on reopen)
-    * folds the batch into heads, and a failure after it turns the
-    * txn's retry into a no-op. */
+  /** The one publish commit: append the batch on top of the `base`
+    * heads the lease prologue read, then — each behind its own fence —
+    * the txn marker (only when `txn` is set) and the heads-sidecar
+    * replace. The marker goes FIRST: it is written only after the
+    * append landed under a held lease, so every later
+    * [[reconcileHeads]] folds the batch into heads, and a failure after
+    * it turns the txn's retry into a no-op. */
   private def publishLocked(records: DataFrame, held: FsLease.Held,
-      txn: Option[String]): Map[Int, TopicLog.OffsetRange] = {
-    val base = headsPersist()
+      base: Map[Int, Long], txn: Option[String]): Map[Int, TopicLog.OffsetRange] = {
     // per-partition base offsets as an array literal indexed by
     // log_part: no join (and no broadcast job), and the literal reaches
     // generated code by reference, so the code is the same on every
@@ -281,15 +285,11 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
       val n = got(s"n_$p") match { case null => 0L; case x: Number => x.longValue() }
       if (n > 0) Some(p -> TopicLog.OffsetRange(base.getOrElse(p, -1L), n)) else None
     }.toMap
-    // fence BEFORE the marker and the sidecar replace: if our lease
-    // was stale-broken during the append job, the thief already
-    // reconciled heads (and may have advanced them with its own
-    // publish) — our last-writer-wins replace would REGRESS them and
-    // every later publish would re-issue the thief's offsets until the
-    // next stale break. The appended data files staying behind without
-    // a marker or sidecar update is the same at-least-once window a
-    // crash here always had; the reconcile heals it.
-    try {
+    // fence BEFORE the marker and the sidecar replace: a thief that
+    // broke our lease during the append may have advanced heads, which
+    // our replace would REGRESS. Data files without a marker stay
+    // behind either way: the documented at-least-once window.
+    healOnFailure(held) {
       txn.foreach { id =>
         held.fence(s"txn marker $id")
         writeKv(txnMarker(id), ranges.flatMap { case (p, r) =>
@@ -298,31 +298,21 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
       }
       held.fence("the heads sidecar")
       writeSidecar(base ++ ranges.map { case (p, r) => p -> (r.base + r.count) })
-    } catch {
-      // a FENCED abort means a thief broke our lease and already
-      // reconciled (and may be advancing heads right now) — hands off
-      // the sidecar, surface the abort, let the caller retry
-      case e: FsLease.FencedException => throw e
-      // any OTHER failure here (an IO error writing the marker or
-      // replacing the sidecar; a crash injected at a fence) leaves the
-      // batch APPENDED with the sidecar stale — and nothing would heal
-      // it: the lock is released normally on the way out, so no
-      // stale-break reconcile ever runs, and the NEXT publish (any
-      // process) would read the stale heads and re-issue this batch's
-      // offsets — permanent duplicate (part, offset) pairs, the one
-      // invariant the lock exists to protect (r14 chaos-spec-found:
-      // only process DEATH was covered, not a surviving writer whose
-      // commit step threw). We still hold the lease, so reconcile
-      // (elementwise max of sidecar and scan — folds the orphaned
-      // append in) before rethrowing; without a marker the records
-      // stay behind as the usual at-least-once window.
-      case e: Throwable =>
-        try reconcileHeads()
-        catch { case r: Throwable => e.addSuppressed(r) }
-        throw e
     }
     ranges
   }
+
+  /** Run a step that changes the tree under `held`; a failure heals
+    * before it rethrows, since no stale break will follow the normal
+    * release. Not once the lease is lost, fenced abort or not: a
+    * zombie's write can fail on a tree the thief is rewriting. */
+  private def healOnFailure[T](held: FsLease.Held)(step: => T): T =
+    try step catch {
+      case e: FsLease.FencedException => throw e
+      case e: Throwable =>
+        try { if (held.holds()) heal() } catch { case r: Throwable => e.addSuppressed(r) }
+        throw e
+    }
 
   // ---------------------------------------------------------------- reads
 
@@ -443,7 +433,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * keeps its marker directory bounded; callers with no maintenance
     * schedule can invoke it directly. */
   def pruneTxnMarkers(): Unit =
-    withPublishLock { held => pruneTxnMarkersLocked(held) }
+    withPublishLock { (held, _) => pruneTxnMarkersLocked(held) }
 
   private def pruneTxnMarkersLocked(held: FsLease.Held): Unit = {
     val d = new Path(txnsDir)
@@ -467,15 +457,13 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * semantics: a record whose `message` is null is a tombstone, and a
     * key whose LATEST record is a tombstone is removed entirely (the
     * tombstone row included). Publishing `(key, null)` therefore
-    * deletes the key from the compacted view. Since the dropped
-    * tombstone may be a partition's head record, the offset sidecar is
-    * materialized first — a later cold-rebuild scan must never
-    * under-compute heads and re-issue the tombstone's offset. */
+    * deletes the key from the compacted view. The dropped tombstone
+    * may be a partition's head record; heads survive it because the
+    * lease prologue has written the sidecar before any row vanishes. */
   def compact(partitions: Seq[Int] = 0 until numPartitions,
       dropTombstones: Boolean = false): Unit =
-    withPublishLock { held =>
+    withPublishLock { (held, _) =>
       pruneTxnMarkersLocked(held)
-      if (dropTombstones) headsPersist() // pin heads before rows can vanish
       val affected = partitions.distinct.filter(p =>
         fs.exists(new Path(s"$logDir/log_part=$p")))
       if (affected.nonEmpty) {
@@ -510,9 +498,8 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * the single boundary `log_date` partition is rewritten, and only in
     * partitions that have it. Heads (sidecar) are unchanged, so offsets
     * stay monotonic even if a partition empties. */
-  def retainAfter(minTs: java.sql.Timestamp): Unit = withPublishLock { held =>
+  def retainAfter(minTs: java.sql.Timestamp): Unit = withPublishLock { (held, _) =>
     pruneTxnMarkersLocked(held)
-    headsPersist() // materialize the sidecar before trimming (fallback = scan)
     // log_date was written via to_date(ts), which resolves in the SESSION
     // timezone — derive the whole-day cutoff in the same zone, or the
     // directory drops would misalign with the ts >= minTs predicate.
@@ -556,9 +543,8 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * per-partition offset watermarks (records with offset >= the
     * watermark survive). Rewrites only the named partitions' subtrees.
     * Heads (sidecar) are unchanged. */
-  def retainFrom(minOffsets: Map[Int, Long]): Unit = withPublishLock { held =>
+  def retainFrom(minOffsets: Map[Int, Long]): Unit = withPublishLock { (held, _) =>
     pruneTxnMarkersLocked(held)
-    headsPersist() // materialize the sidecar before trimming
     val affected = minOffsets.keys.toSeq.distinct.filter(p =>
       fs.exists(new Path(s"$logDir/log_part=$p")))
     if (affected.nonEmpty) {
@@ -575,9 +561,8 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * log's total size fits maxBytes. Pure file-listing metadata work —
     * NO data is read or rewritten, newest records always survive, and
     * offsets/heads are stable (sidecar untouched). */
-  def retainToSize(maxBytes: Long): Unit = withPublishLock { held =>
+  def retainToSize(maxBytes: Long): Unit = withPublishLock { (held, _) =>
     pruneTxnMarkersLocked(held)
-    headsPersist() // materialize the sidecar before trimming
     case class DataFile(p: Path, date: String, mtime: Long, size: Long)
     val files = listSubdirs(logDir, "log_part=").flatMap { partDir =>
       listSubdirs(partDir.toString, "log_date=").flatMap { dateDir =>
@@ -611,13 +596,29 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     }
   }
 
-  // ------------------------------------------------- publish lock / lease
+  // ------------------------------------------------------------ repair
 
-  /** Heal the sidecar against the log itself: elementwise max of the
-    * sidecar and a one-time scan. Max is correct in both failure
-    * directions — a crashed publish leaves the SCAN ahead (data landed,
-    * sidecar stale); a fully-trimmed partition leaves the SIDECAR ahead
-    * (heads outlive retention by design). */
+  /** The one repair of the topic's tree: roll torn swaps back (an
+    * `_old.` dir whose live twin is missing is renamed back; one with a
+    * twin is a completed swap's old copy), drop `log.staging` and the
+    * aside tree, and [[reconcileHeads]]. Rolling BACK is safe:
+    * compaction and retention are idempotent. Only a lease holder runs
+    * it: a live compactor's staging is its rewrite, and a partition
+    * published into after a crash makes its aside copy look stale. */
+  private def heal(): Unit = {
+    tornSwaps().foreach { case (old, live) =>
+      if (fs.exists(live)) fs.delete(old, true)
+      else { fs.mkdirs(live.getParent); fs.rename(old, live) }
+    }
+    fs.delete(new Path(stagingDir), true)
+    fs.delete(new Path(asideDir), true)
+    reconcileHeads()
+  }
+
+  /** Set the heads sidecar to the elementwise max of itself and a log
+    * scan: a crashed publish leaves the scan ahead, a fully-trimmed
+    * partition the sidecar. The stale break's repair; it only ever
+    * moves a head forward and drops nothing. */
   private def reconcileHeads(): Unit = {
     val sidecar = readSidecar().getOrElse(Map.empty[Int, Long])
     val scanned = scanHeads()
@@ -626,12 +627,31 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     }.toMap)
   }
 
-  /** Test-only: the chaos suite's steal injection must model the FULL
-    * breaker protocol — a real waiter runs `onStaleBreak` (this
-    * reconcile) BEFORE deleting a stale lock, so a raw lock delete
-    * without it would simulate a protocol violation no conforming
-    * breaker commits. */
+  /** Test-only: a steal injection models a real breaker, which runs
+    * `onStaleBreak` (this reconcile) BEFORE it deletes the lock. */
   private[graft] def reconcileHeadsForTest(): Unit = reconcileHeads()
+
+  /** Every `_old.log_part=N` or `_old.log_date=D` dir a torn swap left
+    * behind, paired with its live twin: in the `log.aside` tree, and
+    * in `log/` itself where builds before the aside tree left them. */
+  private def tornSwaps(): Seq[(Path, Path)] = {
+    // absent, or vanished under an open's lock-free look: nothing
+    def olds(dir: Path, live: Path): Seq[(Path, Path)] =
+      (try fs.listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty })
+        .filter(_.isDirectory).flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("_old.")) Seq(st.getPath -> new Path(live, n.stripPrefix("_old.")))
+        else if (n.startsWith("log_part=")) olds(st.getPath, new Path(live, n))
+        else Seq.empty
+      }
+    olds(new Path(asideDir), new Path(logDir)) ++ olds(new Path(logDir), new Path(logDir))
+  }
+
+  /** Whether a swap left its staging or aside tree for [[heal]]. Only
+    * the open also looks for in-tree `_old.` dirs (legacy swaps). */
+  private def swapLeftovers(): Boolean =
+    fs.exists(new Path(stagingDir)) || fs.exists(new Path(asideDir))
 
   // ------------------------------------------------------ swap machinery
 
@@ -646,62 +666,35 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   /** Rewrite exactly the given partition subdirs (relative to logDir)
     * with df's output; everything else is untouched. Crash-safe per
     * subdir: live is renamed aside to `log.aside/<parent>/_old.<dir>`
-    * before staging moves in; [[recover]] rolls back any torn swap. The
+    * before staging moves in, and [[heal]] rolls back a torn swap. The
     * aside tree sits next to `log/`, not in it: Spark's listing skips
     * underscore names only when they hold no "=", so an in-tree
     * `_old.log_part=5` would fail a lock-free read() planned mid-swap
-    * with CONFLICTING_PARTITION_COLUMN_NAMES. */
+    * with CONFLICTING_PARTITION_COLUMN_NAMES. Failures go through
+    * [[healOnFailure]], as a publish commit's do. */
   private def swapLogSubdirs(df: DataFrame, subdirs: Seq[String],
-      held: FsLease.Held): Unit = {
-    val tmp = s"$logDir.staging"
-    fs.delete(new Path(tmp), true)
+      held: FsLease.Held): Unit = healOnFailure(held) {
+    fs.delete(new Path(stagingDir), true)
     df.write.mode(SaveMode.Overwrite)
-      .partitionBy("log_part", "log_date").parquet(tmp)
+      .partitionBy("log_part", "log_date").parquet(stagingDir)
     // fenced AFTER the (long) staging write, immediately before the
     // live swaps: a zombie compactor swapping a partition dir a thief
     // just published into would silently drop the concurrent batch
     held.fence(s"the ${subdirs.size} partition-dir swap(s)")
     subdirs.foreach { rel =>
+      // RE-fenced per subdir, as the retention loops are: a lease
+      // stolen mid-loop stops the swaps before the next live dir moves
+      held.fence(s"the swap of $rel")
       val live = new Path(s"$logDir/$rel")
-      val stag = new Path(s"$tmp/$rel")
+      val stag = new Path(s"$stagingDir/$rel")
       val old = new Path(s"$asideDir/${rel.replaceFirst("[^/]+$", "_old.$0")}")
       fs.delete(old, true)
       if (fs.exists(live)) { fs.mkdirs(old.getParent); fs.rename(live, old) }
       if (fs.exists(stag)) { fs.mkdirs(live.getParent); fs.rename(stag, live) }
       fs.delete(old, true)
     }
-    fs.delete(new Path(tmp), true)
+    fs.delete(new Path(stagingDir), true)
     fs.delete(new Path(asideDir), true)
-  }
-
-  /** Roll back any swap a crash tore mid-flight: an `_old.log_part=N`
-    * or `_old.log_date=D` dir (in the `log.aside` tree, or in `log/`
-    * itself where builds before the aside tree left it) whose live twin
-    * is missing is renamed back; one with a healthy live twin, the
-    * aside tree and `log.staging` are droppable garbage.
-    * Compaction/retention are idempotent, so rolling BACK is always
-    * safe — the caller just re-runs. */
-  private def recover(): Unit = {
-    def rollBack(aside: Path, live: Path): Unit =
-      if (fs.exists(aside)) fs.listStatus(aside).filter(_.isDirectory).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_old.")) {
-          val twin = new Path(live, n.stripPrefix("_old."))
-          if (!fs.exists(twin)) { fs.mkdirs(live); fs.rename(st.getPath, twin) }
-          else fs.delete(st.getPath, true)
-        } else if (n.startsWith("log_part=")) rollBack(st.getPath, new Path(live, n))
-      }
-    fs.delete(new Path(s"$logDir.staging"), true)
-    rollBack(new Path(asideDir), new Path(logDir))
-    rollBack(new Path(logDir), new Path(logDir))
-    fs.delete(new Path(asideDir), true)
-    // A leftover publish lock past its lease = a publisher died between
-    // append and sidecar write; reconcile so heads() never re-issues
-    // offsets (FsLease.breakIfStale runs onStaleBreak = reconcileHeads
-    // BEFORE the compare-and-delete). A FRESH lock is a live publisher
-    // in another process — left alone to complete its own sidecar
-    // update.
-    publishLease.breakIfStale()
   }
 }
 

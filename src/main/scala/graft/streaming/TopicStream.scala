@@ -101,10 +101,14 @@ final class Subscription private[streaming] (
   * across a compaction sees the compacted survivors again as "new"
   * files (duplicate delivery of already-seen offsets), the same
   * at-least-once caveat Kafka consumers have around log-compaction
-  * races. Run compaction on topics with no live subscriptions (its
-  * writer lease already excludes concurrent PUBLISHERS, not readers),
-  * or dedup downstream on `(log_part, offset)` — [[dedupByContent]]'s
-  * keyed-state pattern does exactly this. Batch [[graft.log.TopicLog.replay]]
+  * races. Spec-pinned across a compaction: no survivor is lost, every
+  * redelivered `(log_part, offset)` is a survivor, and the acked
+  * watermark never moves back. Run compaction on topics with no live
+  * subscriptions (its writer lease already excludes concurrent
+  * PUBLISHERS, not readers; a listing that races the partition-dir
+  * swap can fail the query), or dedup downstream on
+  * `(log_part, offset)` — [[dedupByContent]]'s keyed-state pattern
+  * does exactly this. Batch [[graft.log.TopicLog.replay]]
   * is unaffected: offsets survive compaction, so a durable subscriber's
   * watermark keeps meaning "everything after" (spec-pinned).
   */
@@ -178,39 +182,29 @@ object TopicStream {
     * change to the scheme lands everywhere at once):
     * `<prefix><sinkId>q<queryTag>b<batchId>`, where sinkId derives
     * from the checkpoint location and queryTag from the query's
-    * PERSISTENT id (resolved lazily on first use — the metadata file
-    * is written at query start, before any foreachBatch runs; see
-    * [[publishSinkExactlyOnce]]'s scaladoc for why the query id must
-    * participate). */
+    * PERSISTENT id, read from the `sql.streaming.queryId` local
+    * property Spark sets on the thread that runs each batch (the id
+    * stored in `<checkpoint>/metadata`, not the per-start run id; see
+    * [[publishSinkExactlyOnce]]'s scaladoc for why it must
+    * participate). Minting outside a streaming batch fails fast:
+    * deriving txn ids without the query id would reopen the
+    * checkpoint-wipe silent-skip hazard. */
   private[graft] final class TxnIdMinter(spark: SparkSession,
       checkpointDir: String) {
     private val sinkId = java.util.UUID.nameUUIDFromBytes(
       checkpointDir.getBytes("UTF-8")).toString.replace("-", "")
-    private lazy val queryTag = persistentQueryId(spark, checkpointDir)
-    def apply(prefix: String, batchId: Long): String =
-      s"$prefix${sinkId}q${queryTag}b$batchId"
+    def apply(prefix: String, batchId: Long): String = {
+      val queryId = Option(spark.sparkContext.getLocalProperty(QueryIdKey))
+        .getOrElse(throw new IllegalStateException(
+          s"no streaming query id on this thread ($QueryIdKey unset) — " +
+            "exactly-once txn ids are minted inside a streaming batch"))
+      s"$prefix${sinkId}q${queryId.replace("-", "")}b$batchId"
+    }
   }
 
-  /** The streaming query's persistent id, read from the
-    * `<checkpoint>/metadata` file Spark writes at query start (same id
-    * across same-checkpoint restarts; a fresh id when the checkpoint
-    * is recreated). Fails fast if absent — deriving txn ids without it
-    * would reopen the checkpoint-wipe silent-skip hazard. */
-  private[graft] def persistentQueryId(spark: SparkSession,
-      checkpointDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$checkpointDir/metadata")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def unreadable(cause: Throwable) = new IllegalStateException(
-      s"cannot read streaming query metadata at $p — " +
-        "exactly-once txn ids need the query's persistent id", cause)
-    val text =
-      try graft.log.AtomicFiles.read(fs, p).getOrElse(throw unreadable(null))
-      catch { case e: java.io.IOException => throw unreadable(e) }
-    """"id"\s*:\s*"([0-9a-fA-F-]+)"""".r.findFirstMatchIn(text)
-      .map(_.group(1).replace("-", ""))
-      .getOrElse(throw new IllegalStateException(
-        s"no query id found in $p: $text"))
-  }
+  /** The local property carrying the running query's persistent id
+    * (Spark's `StreamExecution.QUERY_ID_KEY`). */
+  private[graft] val QueryIdKey = "sql.streaming.queryId"
 
   /** The one durable-consumer query behind [[subscribeDurable]] and
     * [[drainOnce]]: [[replayThenLive]] from the subscriber's acked

@@ -68,29 +68,31 @@ class FsLeaseSpec extends AnyFunSuite {
     assert(labels.toSeq == Seq("plain step", "steal here", "after the steal"))
   }
 
-  test("breakIfStale repairs before its compare-and-delete and spares a fresh lock") {
+  test("a stale break repairs before its compare-and-delete and spares a fresh lock") {
     val (f, p) = freshLock()
     val stale = FsLease.StaleAfterMs + 10 * 1000L
-    // a dead holder's lock: the repair runs while the lock still exists,
-    // then the lock is deleted
+    // a dead holder's lock: the acquirer's repair runs while the lock
+    // still exists, then the lock is deleted and taken over
     var lockSeenByRepair = false
     writeLock(f, "dead-token", stale)
     val lease = new FsLease(fsOf(p), p, () => lockSeenByRepair = f.exists())
     assert(!lease.liveHolder())
-    lease.breakIfStale()
+    val held = lease.acquire(300L)
     assert(lockSeenByRepair, "onStaleBreak must run before the delete")
-    assert(!f.exists(), "a stale lock is broken")
-    assert(!lease.liveHolder())
+    assert(Files.readString(f.toPath) != "dead-token", "a stale lock is broken")
+    held.release()
+    assert(!f.exists() && !lease.liveHolder())
     // a waiter re-acquires while our repair runs: the compare-and-delete
     // sees a different (mtime, token) and leaves the live lock alone
     writeLock(f, "dead-token", stale)
-    new FsLease(fsOf(p), p, () => writeLock(f, "live-token", 0L)).breakIfStale()
+    intercept[IllegalStateException](
+      new FsLease(fsOf(p), p, () => writeLock(f, "live-token", 0L)).acquire(300L))
     assert(f.exists() && Files.readString(f.toPath) == "live-token")
     // a fresh lock is a live holder: no repair, no delete
     var repaired = false
     val observer = new FsLease(fsOf(p), p, () => repaired = true)
     assert(observer.liveHolder())
-    observer.breakIfStale()
+    intercept[IllegalStateException](observer.acquire(300L))
     assert(!repaired && f.exists(), "a fresh lock must be left alone")
   }
 
@@ -106,7 +108,7 @@ class FsLeaseSpec extends AnyFunSuite {
         System.currentTimeMillis() - (FsLease.StaleAfterMs - 30 * 1000L)))
       Thread.sleep(FsLease.RenewEveryMs + 5 * 1000L)
       assert(lease.liveHolder(), "the daemon must have refreshed the mtime")
-      lease.breakIfStale()
+      intercept[IllegalStateException](lease.acquire(300L))
       assert(f.exists() && Files.readString(f.toPath) == token,
         "a renewed lock must not be broken")
       held.fence("after the renewal")

@@ -17,7 +17,8 @@ import graft.log.{FsLease, TopicLog}
   * with SEEDED random steal/kill injections at every commit fence
   * (`FsLease.testBeforeFence`), a compaction + retention +
   * marker-pruning maintainer, and a replaying/acking durable consumer
-  * running throughout, and asserts the invariants that must survive
+  * running throughout, plus a reopener calling `TopicLog.prepare`
+  * again and again, and asserts the invariants that must survive
   * ANY interleaving:
   *
   *  - (log_part, offset) pairs are globally unique end-to-end — the
@@ -85,10 +86,9 @@ class TopicChaosSpec extends AnyFunSuite {
     test(s"topic chaos: 3 idempotent publishers x maintenance x a replaying consumer (seed $seed)") {
       val dir = Files.createTempDirectory("topicchaos").toString
       val main = TopicLog.prepare(spark, dir, numPartitions = 2)
-      // all "processes" are opened BEFORE chaos starts: TopicLog's
-      // constructor recovery (torn-swap heal) is not designed to run
-      // concurrently with a live compactor's swap, same as real
-      // deployments opening topics at process start
+      // every actor's "process" opens before chaos starts; the
+      // reopener below keeps opening the topic throughout, which an
+      // open must survive: it heals only under the lease
       val writerTopics = (0 until 3).map(_ =>
         TopicLog.prepare(spark, dir, numPartitions = 2))
       val maintTopic = TopicLog.prepare(spark, dir, numPartitions = 2)
@@ -168,6 +168,19 @@ class TopicChaosSpec extends AnyFunSuite {
         }
       }, "topicchaos-maint")
 
+      // reopener: a process opening the topic again and again while
+      // writers and maintenance run; an open may touch the tree only
+      // under the lease, so it must never break a live holder's swap
+      val opens = new AtomicInteger(0)
+      val reopenErrs = new ConcurrentLinkedQueue[Throwable]()
+      val reopener = new Thread(() => {
+        while (!stop.get()) {
+          try { TopicLog.prepare(spark, dir, numPartitions = 2); opens.incrementAndGet() }
+          catch { case t: Throwable => reopenErrs.add(t) }
+          Thread.sleep(20)
+        }
+      }, "topicchaos-reopener")
+
       // heads watcher: the sidecar must only ever move FORWARD
       val headsMax = scala.collection.mutable.Map.empty[Int, Long]
       val regressions = new ConcurrentLinkedQueue[String]()
@@ -245,18 +258,20 @@ class TopicChaosSpec extends AnyFunSuite {
       }, "topicchaos-consumer")
 
       try {
-        watcher.start(); maint.start(); consumer.start()
+        watcher.start(); maint.start(); consumer.start(); reopener.start()
         writers.foreach(_.start())
         writers.foreach(_.join())
       } finally {
         stop.set(true)
-        maint.join(); consumer.join(); watcher.join()
+        maint.join(); consumer.join(); watcher.join(); reopener.join()
         FsLease.testBeforeFence = _ => ()
       }
 
       assert(firings.get() > 0, "seed produced zero injections — the test exercised nothing")
       assert(compactions.get() >= 1, "no compaction completed during the chaos run")
       assert(writerErrs.isEmpty, s"writers gave up: $writerErrs")
+      assert(reopenErrs.isEmpty, s"an open failed: ${reopenErrs.peek()}")
+      assert(opens.get() > 0, "the reopener never opened the topic")
       assert(committed.size == 7, s"missing committed txns: ${committed.keySet}")
       assert(regressions.isEmpty, s"heads regressed: ${regressions.peek()}")
       assert(consumerFatal.isEmpty, s"consumer errored: ${consumerFatal.peek()}")

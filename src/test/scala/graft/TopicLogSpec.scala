@@ -373,7 +373,7 @@ class TopicLogSpec extends AnyFunSuite {
     assert(others > 0 && others < 20, s"records must span both partitions: $others")
     // crash state between the two renames of a whole-partition swap:
     // live log_part=0 renamed aside, its staged twin never moved in.
-    // The same instance reads before any reopen (recover) runs.
+    // The same instance reads before any reopen (and its heal) runs.
     val aside = new java.io.File(s"$dir/log.aside")
     assert(aside.mkdirs())
     assert(new java.io.File(s"$dir/log/log_part=0")
@@ -381,6 +381,162 @@ class TopicLogSpec extends AnyFunSuite {
     assert(topic.read().count() == others,
       "a mid-swap read must list only the live partitions")
     assert(TopicLog.prepare(spark, dir, numPartitions = 2).read().count() == 20)
+  }
+
+  test("an open during a compaction leaves the staged rewrite alone") {
+    // a compactor holds the lease between its staging write and its
+    // swap. An open from another instance must neither wait for that
+    // lease nor touch the tree: an open that dropped `log.staging` here
+    // would make the swap move the live partition aside, find no
+    // staged twin, and delete the aside copy
+    import spark.implicits._
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 1)
+    // unique keys: compaction keeps every record
+    topic.publish((0 until 20).map { i =>
+      ("evt", s"key-$i", s"""{"i":$i}""", new java.sql.Timestamp(1700000000000L + i * 1000L))
+    }.toDF("event", "key", "message", "ts"))
+    def records() = topic.read().select(col("offset"), col("message"))
+      .as[(Long, String)].collect().toSet
+    val before = records()
+    val opened = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    FsLease.testBeforeFence = what =>
+      if (what == "the 1 partition-dir swap(s)") {
+        FsLease.testBeforeFence = _ => () // fire once
+        val opener = new Thread(() =>
+          try { TopicLog.prepare(spark, dir, numPartitions = 1); opened.set(true) }
+          catch { case t: Throwable => failures.add(t) })
+        opener.start(); opener.join(60 * 1000L)
+      }
+    try topic.compact() finally FsLease.testBeforeFence = _ => ()
+    assert(failures.isEmpty, s"the open failed: ${failures.peek()}")
+    assert(opened.get(), "the open waited for the compactor's lease")
+    assert(records() == before, "the compaction lost records")
+  }
+
+  test("a publish into a partition torn by a crashed swap keeps every pre-crash record") {
+    // crash state of a whole-partition swap: log_part=0 renamed into
+    // the aside tree, its staged twin never moved in, and the dead
+    // compactor's lock left behind past the stale window. An instance
+    // opened before the crash publishes first; it breaks the stale
+    // lock, and its first act under the lease heals (rolling the
+    // partition back) before the batch lands. A lock-free heal on the next open would
+    // find the partition recreated by that publish and delete the
+    // aside copy: every pre-crash record of the partition.
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
+    topic.publish(mkRecords(20))
+    val aside = new java.io.File(s"$dir/log.aside")
+    assert(aside.mkdirs())
+    assert(new java.io.File(s"$dir/log/log_part=0")
+      .renameTo(new java.io.File(aside, "_old.log_part=0")))
+    val lock = new java.io.File(s"$dir/_publish.lock")
+    Files.writeString(lock.toPath, "dead-compactor")
+    assert(lock.setLastModified(
+      System.currentTimeMillis() - FsLease.StaleAfterMs - 10 * 1000L))
+    val post = topic.publish(mkRecords(20, startId = 20))
+    assert(post.contains(0), s"test shape: the batch must reach partition 0: $post")
+    val rows = TopicLog.prepare(spark, dir, numPartitions = 2).read()
+      .select(get_json_object(col("message"), "$.i").cast("int"),
+        col("log_part"), col("offset"))
+      .collect()
+    assert(rows.map(_.getInt(0)).sorted.toSeq == (0 until 40),
+      "pre- and post-crash records must all read back")
+    assert(rows.map(r => (r.getInt(1), r.getLong(2))).distinct.length == 40,
+      "(log_part, offset) must stay unique")
+  }
+
+  test("a swap that fails mid-loop heals before it surfaces; a fenced one hands off") {
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
+    topic.publish(mkRecords(40)) // 5 keys over both partitions
+    val latest = topic.read().groupBy(col("key")).agg(max(col("offset")).as("o"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    final class Boom extends RuntimeException("simulated IO failure mid-swap")
+    FsLease.testBeforeFence = what =>
+      if (what == "the swap of log_part=1") throw new Boom
+    val ex =
+      try intercept[RuntimeException](topic.compact())
+      finally FsLease.testBeforeFence = _ => ()
+    assert(ex.isInstanceOf[Boom], ex.toString)
+    // log_part=0 swapped, log_part=1 untouched; the heal dropped the
+    // staging and aside trees the failed swap left
+    assert(!new java.io.File(s"$dir/log.staging").exists(), "staging left behind")
+    assert(!new java.io.File(s"$dir/log.aside").exists(), "aside tree left behind")
+    val p0 = topic.read().filter(col("log_part") === 0)
+    assert(p0.count() == p0.select("key").distinct().count(), "log_part=0 compacted")
+    assert(topic.read().filter(col("log_part") === 1).count() > 5, "log_part=1 untouched")
+    // a steal at the same fence aborts without touching the tree: the
+    // thief owns the staging it may be writing
+    val lock = new java.io.File(s"$dir/_publish.lock")
+    FsLease.testBeforeFence = what =>
+      if (what == "the swap of log_part=1") {
+        lock.delete(); Files.writeString(lock.toPath, "thief-token")
+      }
+    try intercept[FsLease.FencedException](topic.compact())
+    finally FsLease.testBeforeFence = _ => ()
+    assert(new java.io.File(s"$dir/log.staging").exists(), "a fenced swap must leave staging")
+    assert(lock.delete())
+    topic.compact() // idempotent: the re-run completes
+    assert(topic.read().collect().map(r => r.getAs[String]("key") -> r.getAs[Long]("offset"))
+      .toMap == latest)
+  }
+
+  test("a zombie whose staging write fails after a steal leaves the thief's tree alone") {
+    // renewal starvation: a thief broke the compactor's lease, dropped
+    // its staged rewrite (the thief's first act under the lease) and is
+    // mid-swap itself, with the live partition moved aside. The
+    // zombie's staging write then fails with a plain IO error, not a
+    // fenced abort; a heal from the zombie would roll the thief's swap
+    // back under it
+    import spark.implicits._
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 1)
+    topic.publish((0 until 20).map { i =>
+      ("evt", s"key-$i", s"""{"i":$i}""", new java.sql.Timestamp(1700000000000L + i * 1000L))
+    }.toDF("event", "key", "message", "ts"))
+    def records() = topic.read().select(col("offset"), col("message"))
+      .as[(Long, String)].collect().toSet
+    val before = records()
+    val lock = new java.io.File(s"$dir/_publish.lock")
+    val aside = new java.io.File(s"$dir/log.aside/_old.log_part=0")
+    val live = new java.io.File(s"$dir/log/log_part=0")
+    FsLease.testBeforeFence = what =>
+      if (what == "the 1 partition-dir swap(s)") {
+        FsLease.testBeforeFence = _ => () // fire once
+        lock.delete(); Files.writeString(lock.toPath, "thief-token")
+        assert(org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$dir/log.staging")))
+        assert(aside.getParentFile.mkdirs() && live.renameTo(aside))
+        throw new java.io.IOException("the staging write lost its output")
+      }
+    try intercept[java.io.IOException](topic.compact())
+    finally FsLease.testBeforeFence = _ => ()
+    assert(Files.readString(lock.toPath) == "thief-token", "the zombie freed the thief's lock")
+    assert(aside.isDirectory && !live.exists(), "the zombie rolled back the thief's swap")
+    // the thief dies mid-swap; the next open breaks its lock and heals
+    assert(lock.setLastModified(
+      System.currentTimeMillis() - FsLease.StaleAfterMs - 10 * 1000L))
+    TopicLog.prepare(spark, dir, numPartitions = 1)
+    assert(records() == before, "records lost across the steal")
+  }
+
+  test("a stale break reconciles heads only: a winning waiter's staging survives it") {
+    // two waiters judge the same dead lock stale; the one that broke it
+    // first may already hold the lease and be writing its staged
+    // rewrite when the other runs its onStaleBreak
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
+    topic.publish(mkRecords(20))
+    val staging = new java.io.File(s"$dir/log.staging/log_part=0")
+    assert(staging.mkdirs())
+    val lock = new java.io.File(s"$dir/_publish.lock")
+    Files.writeString(lock.toPath, "dead-writer")
+    assert(lock.setLastModified(
+      System.currentTimeMillis() - FsLease.StaleAfterMs - 10 * 1000L))
+    topic.acquirePublishLockForTest(5000L).release()
+    assert(staging.isDirectory, "a stale break dropped a staging tree")
+    assert(topic.heads().values.map(_ + 1).sum == 20L)
   }
 
   test("prepare works with an explicit file:// URI (Hadoop mkdirs, not java.io)") {

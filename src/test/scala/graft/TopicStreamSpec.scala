@@ -83,6 +83,70 @@ class TopicStreamSpec extends AnyFunSuite {
     assert(topic.replay("resumer").count() == 0, "the restart acked its batch")
   }
 
+  test("a live durable subscriber across compact(): no survivor lost, the ack never moves back") {
+    // the at-least-once caveat of TopicStream's class doc: compaction
+    // rewrites files, and a file-source subscriber may see survivors
+    // again. What must hold whatever the source: every record that
+    // survives compaction is delivered, every redelivered (log_part,
+    // offset) is a survivor, and the acked watermark only moves forward.
+    // The subscriber is paused mid-batch while compact() runs, so its
+    // listing cannot race the partition-dir swap (the documented
+    // transient window of reading a tree mid-swap)
+    val dir = Files.createTempDirectory("stream").toString
+    val ckpt = Files.createTempDirectory("ckpt").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
+    topic.publish(mkRecords(40)) // 5 keys: compaction keeps 5 records
+    val delivered = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val acked = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val regressions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def checkAck(): Unit = topic.watermarks("moving").foreach { case (p, o) =>
+      val prev = acked.getOrDefault(p, -1L)
+      if (o < prev) regressions.add(s"part $p: ack $prev -> $o")
+      acked.put(p, math.max(o, prev))
+    }
+    val pauseArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val paused = new java.util.concurrent.CountDownLatch(1)
+    val resume = new java.util.concurrent.CountDownLatch(1)
+    val sub = TopicStream.subscribeDurable(topic, "moving", ckpt) { b =>
+      checkAck() // the previous batch's ack
+      b.select(col("log_part"), col("offset")).collect()
+        .foreach(r => delivered.add((r.getInt(0), r.getLong(1))))
+      if (pauseArmed.compareAndSet(true, false)) {
+        paused.countDown()
+        assert(resume.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      }
+    }
+    val survivors = try {
+      sub.drain()
+      assert(delivered.size == 40)
+      pauseArmed.set(true)
+      topic.publish(mkRecords(10, startId = 40))
+      assert(paused.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "the subscriber never reached the new batch")
+      val kept =
+        try {
+          topic.compact()
+          topic.read().select(col("log_part"), col("offset")).collect()
+            .map(r => (r.getInt(0), r.getLong(1))).toSet
+        } finally resume.countDown()
+      sub.drain()
+      topic.publish(mkRecords(10, startId = 50))
+      sub.drain()
+      checkAck()
+      kept
+    } finally sub.unsubscribe()
+    assert(survivors.size == 5, s"test shape: compaction keeps one record per key: $survivors")
+    val all = delivered.asScala.toSeq
+    val live = topic.read().select(col("log_part"), col("offset")).collect()
+      .map(r => (r.getInt(0), r.getLong(1))).toSet
+    assert(live.subsetOf(all.toSet), s"records never delivered: ${live -- all.toSet}")
+    val redelivered = all.groupBy(identity).collect { case (po, n) if n.size > 1 => po }.toSet
+    assert(redelivered.subsetOf(survivors),
+      s"redelivered non-survivors: ${redelivered -- survivors}")
+    assert(regressions.isEmpty, s"the ack moved back: ${regressions.peek()}")
+    assert(topic.watermarks("moving") == topic.heads(), "the ack must end at the heads")
+  }
+
   test("watermarked windowed aggregation over the live topic") {
     val dir = Files.createTempDirectory("stream").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 4)
@@ -158,10 +222,15 @@ class TopicStreamSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
     assert(dst.read().count() == 30)
     // simulate the crash-before-checkpoint-commit redelivery: replay
-    // the SAME derived txn id by hand — the marker must make it a no-op
+    // the SAME derived txn id by hand, minted on a thread carrying the
+    // query's persistent id as a batch thread does — the marker must
+    // make it a no-op
+    spark.sparkContext.setLocalProperty(TopicStream.QueryIdKey, q.id.toString)
+    val txn =
+      try new TopicStream.TxnIdMinter(spark, ckpt)("sink", 0)
+      finally spark.sparkContext.setLocalProperty(TopicStream.QueryIdKey, null)
     dst.publishIdempotent(src.read()
-      .select(col("event"), col("key"), col("message"), col("ts")),
-      new TopicStream.TxnIdMinter(spark, ckpt)("sink", 0))
+      .select(col("event"), col("key"), col("message"), col("ts")), txn)
     assert(dst.read().count() == 30, "redelivered batch 0 duplicated rows")
   }
 
@@ -465,14 +534,15 @@ class TopicStreamSpec extends AnyFunSuite {
     assert(fresh.collect { case f: Filter => f }.isEmpty, fresh.toString)
   }
 
-  test("persistentQueryId fails fast on a checkpoint dir with no metadata") {
+  test("minting outside a streaming batch fails fast") {
     // txn ids minted without the query's persistent id would reopen the
-    // checkpoint-wipe silent-skip hazard, so absence must throw
+    // checkpoint-wipe silent-skip hazard, so a thread that carries no
+    // query id must throw
     val dir = Files.createTempDirectory("ckpt").toString
+    assert(spark.sparkContext.getLocalProperty(TopicStream.QueryIdKey) == null)
     val e = intercept[IllegalStateException](
-      TopicStream.persistentQueryId(spark, dir))
-    assert(e.getMessage.contains("cannot read streaming query metadata"),
-      e.getMessage)
+      new TopicStream.TxnIdMinter(spark, dir)("sink", 0))
+    assert(e.getMessage.contains("no streaming query id"), e.getMessage)
   }
 
   test("watermarks missing some partitions: replay and replayThenLive keep those partitions whole") {

@@ -7,14 +7,15 @@
 #
 # Usage: tools/fuzz_gate.sh [query-name-regex]
 #   (regex narrows the gate for targeted iteration; default = full
-#   suite, ~8 min on 32 cpus)
+#   suite on local[nproc] unless SPARK_GRAFT_CPUS is set: ~8 min on
+#   32 cpus, longer on fewer)
 #
 # Exit 0 iff every corpus reports "fail=0" (PASS/weak both count as
 # green — weak = rows-only sketch gates, by design).
 set -u
 cd "$(dirname "$0")/.."
 FILTER="${1:-}"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 WORK="${FUZZ_GATE_DIR:-/tmp/graft-fuzz-gate}"
 rc=0
 for spec in "7:" "103:--tiny" "203:--skew"; do
