@@ -25,13 +25,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    judge a live, renewing holder dead; a long publish needs no
   *    longer lease, because renewal covers it.
   *
-  * The lease repairs nothing itself — callers pass `onStaleBreak` when
-  * breaking a dead holder's lock must first repair the artifact it was
-  * mid-way through writing BEFORE the break frees other waiters to
-  * build on it (TopicLog's heads reconcile). It may run while a waiter
-  * that broke the same lock first holds the lease, so it drops nothing;
-  * destructive repair runs as the first act under a fresh lease (the
-  * LshIndex's `validatedManifestLocked`, TopicLog's torn-swap heal).
+  * The lease repairs nothing: a stale break is a bare compare-and-delete
+  * of the dead holder's lock. Repair of the artifact it was mid-way
+  * through writing is the next holder's first act under a fresh lease
+  * (the LshIndex's `validatedManifestLocked`, TopicLog's `heal`), so
+  * only a caller that owns the artifact ever repairs it.
   * Only [[acquire]] breaks; an observer that must not wait reads
   * [[liveHolder]].
   *
@@ -52,8 +50,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * state; the thief's own next fence catches a killed lock) —
   * injected-steal specs pin both windows.
   */
-final class FsLease(fs: FileSystem, lockPath: Path,
-    onStaleBreak: () => Unit = () => ()) {
+final class FsLease(fs: FileSystem, lockPath: Path) {
 
   private def tryCreate(token: String): Boolean =
     if (fs.getScheme == "file") {
@@ -88,18 +85,15 @@ final class FsLease(fs: FileSystem, lockPath: Path,
     * crashed writer's leftovers without acquiring. */
   def liveHolder(): Boolean = lockMtime().exists(m => !isStale(m))
 
-  /** Compare-and-delete of a lock OBSERVED as stale: `onStaleBreak`
-    * (the artifact repair) may take seconds, so only delete if the
+  /** Compare-and-delete of a lock OBSERVED as stale: only delete if the
     * lock is still the exact (mtime, token) we judged dead — another
-    * waiter may have broken it and a live holder re-acquired. */
-  private def breakStale(observedMod: Long, observedToken: String): Unit = {
-    onStaleBreak()
+    * waiter may have broken it and a live holder re-acquired since. */
+  private def breakStale(observedMod: Long, observedToken: String): Unit =
     try {
       if (fs.getFileStatus(lockPath).getModificationTime == observedMod &&
           FsLease.readToken(fs, lockPath) == observedToken)
         fs.delete(lockPath, false)
     } catch { case _: java.io.IOException => () } // already released
-  }
 
   /** Blocks until the lease is held; returns a handle whose `release()`
     * stops renewal and frees the lock. Default wait outlasts a live
@@ -178,7 +172,7 @@ object FsLease {
       holds()
     }
 
-    /** [[check]] without the injection point, for a failure path's repair. */
+    /** [[check]] without the injection point, for repair and clean-up. */
     private[log] def holds(): Boolean = readToken(fs, lockPath) == token
 
     /** [[check]], throwing [[FencedException]] when it fails: the

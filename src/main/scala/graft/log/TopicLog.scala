@@ -64,8 +64,10 @@ import org.apache.spark.sql.functions._
   *    gapless offset ranges. Compaction and retention take the SAME
   *    lease, so a swap can never race a publish (which would silently
   *    drop the appended batch); the lease renews itself for long jobs.
-  *  - Repair is ONE path, [[heal]], run only under the lease; a stale
-  *    break only reconciles heads, and an open never repairs lock-free.
+  *  - Repair is ONE path, [[heal]], run only under the lease: a stale
+  *    break writes nothing but the lock, a crashed publish's intent
+  *    file tells the next holder to heal, and an open never repairs
+  *    lock-free.
   *  - Replay is `offset > watermark` + event filter, evaluated per row
   *    after the scan: the watermark is a per-partition array literal
   *    indexed by `log_part` ([[TopicLog.after]]), which parquet cannot
@@ -81,18 +83,18 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   private val headsPath = s"$path/_offsets.json"
   private val pinPath = new Path(s"$path/_partitions")
   private val lockPath = new Path(s"$path/_publish.lock")
+  private val intentPath = new Path(s"$path/_publish.intent")
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The topic's writer lease. `onStaleBreak` is [[reconcileHeads]]
-    * alone: a waiter that lost the race to break a lock runs it while
-    * the winner holds the lease, so it must drop nothing. Every write
-    * that COMMITS state under the lease first passes `held.fence`: a
-    * stale-broken zombie must not regress heads or drop records the
-    * thief has written since. */
-  private val publishLease: FsLease =
-    new FsLease(fs, lockPath, () => reconcileHeads())
+  /** The topic's writer lease, a lock with fences: its stale break
+    * writes nothing but the lock, and the next holder heals what the
+    * dead one left ([[withPublishLock]]). Every write that COMMITS
+    * state under the lease first passes `held.fence`: a stale-broken
+    * zombie must not regress heads or drop records the thief has
+    * written since. */
+  private val publishLease: FsLease = new FsLease(fs, lockPath)
 
   // Partition count is LAYOUT, not a per-open knob: record routing
   // (pmod(hash, numPartitions)), offset assignment, and the
@@ -126,17 +128,21 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   // The open writes nothing lock-free: a first open pins the count
   // under the lease (re-read there, so of two first opens with
   // different counts the second is refused), and a pinned one takes
-  // the lease only when no live holder does and a dead one left a
-  // stale lock or a torn swap.
-  if (!pinned() || (!publishLease.liveHolder() &&
-      (fs.exists(lockPath) || swapLeftovers() || tornSwaps().nonEmpty)))
-    publishLease.withLeaseHeld { _ =>
+  // the lease and heals only when no live holder does and a dead one
+  // left its lock (all a publish that crashed before the intent
+  // existed left), a publish intent or a torn swap.
+  locally {
+    val unpinned = !pinned()
+    val crashed = !publishLease.liveHolder() &&
+      (fs.exists(lockPath) || leftovers() || tornSwaps().nonEmpty)
+    if (unpinned || crashed) publishLease.withLeaseHeld { _ =>
       if (!pinned()) {
         fs.mkdirs(new Path(logDir))
         writeKv(pinPath, Map(0 -> numPartitions.toLong))
       }
-      if (swapLeftovers() || tornSwaps().nonEmpty) heal()
+      if (crashed) heal()
     }
+  }
 
   // ---------------------------------------------------------------- heads
 
@@ -183,13 +189,14 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
 
   /** Run `body` holding the topic's writer lease (publish, compaction
     * and retention all take it), handing it the current heads. The
-    * prologue heals a swap the last holder left, so nothing lands in a
-    * torn partition, and is the one place that rebuilds a missing heads
-    * sidecar: never a lock-free reader (its replace could race a
-    * publisher's), always before maintenance can drop a head record. */
+    * prologue heals what the last holder left unfinished, so nothing
+    * builds on stale heads or in a torn partition, and is the one place
+    * that rebuilds a missing heads sidecar: never a lock-free reader
+    * (its replace could race a publisher's), always before maintenance
+    * can drop a head record. */
   private def withPublishLock[T](body: (FsLease.Held, Map[Int, Long]) => T): T =
     publishLease.withLeaseHeld { held =>
-      if (swapLeftovers()) heal()
+      if (leftovers()) heal()
       val heads = readSidecar().getOrElse {
         val scanned = scanHeads()
         writeSidecar(scanned)
@@ -256,7 +263,11 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * replace. The marker goes FIRST: it is written only after the
     * append landed under a held lease, so every later
     * [[reconcileHeads]] folds the batch into heads, and a failure after
-    * it turns the txn's retry into a no-op. */
+    * it turns the txn's retry into a no-op. The publish intent is
+    * written before the append and removed after the sidecar replace
+    * only while the lease holds, so a zombie never clears a thief's.
+    * Neither the intent nor the append is fenced: a writer that lost
+    * its lease still writes both until its next fence aborts it. */
   private def publishLocked(records: DataFrame, held: FsLease.Held,
       base: Map[Int, Long], txn: Option[String]): Map[Int, TopicLog.OffsetRange] = {
     // per-partition base offsets as an array literal indexed by
@@ -269,6 +280,8 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     val obs = Observation()
     val counts = (0 until numPartitions).map(p =>
       sum(when(col("log_part") === p, 1L).otherwise(0L)).as(s"n_$p"))
+    AtomicFiles.writeReplace(fs, spark.sparkContext.hadoopConfiguration,
+      intentPath, Array.emptyByteArray)
     records
       .withColumn("log_part",
         pmod(hash(coalesce(col("key"), col("message"))), lit(numPartitions)).cast("int"))
@@ -299,13 +312,14 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
       held.fence("the heads sidecar")
       writeSidecar(base ++ ranges.map { case (p, r) => p -> (r.base + r.count) })
     }
+    if (held.holds()) fs.delete(intentPath, false)
     ranges
   }
 
   /** Run a step that changes the tree under `held`; a failure heals
-    * before it rethrows, since no stale break will follow the normal
-    * release. Not once the lease is lost, fenced abort or not: a
-    * zombie's write can fail on a tree the thief is rewriting. */
+    * before it rethrows, so the release leaves a whole tree. Not once
+    * the lease is lost, fenced abort or not: a zombie's write can fail
+    * on a tree the thief is rewriting. */
   private def healOnFailure[T](held: FsLease.Held)(step: => T): T =
     try step catch {
       case e: FsLease.FencedException => throw e
@@ -601,10 +615,11 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   /** The one repair of the topic's tree: roll torn swaps back (an
     * `_old.` dir whose live twin is missing is renamed back; one with a
     * twin is a completed swap's old copy), drop `log.staging` and the
-    * aside tree, and [[reconcileHeads]]. Rolling BACK is safe:
-    * compaction and retention are idempotent. Only a lease holder runs
-    * it: a live compactor's staging is its rewrite, and a partition
-    * published into after a crash makes its aside copy look stale. */
+    * aside tree, [[reconcileHeads]], and last drop the publish intent,
+    * so a heal cut short is redone. Rolling BACK is safe: compaction
+    * and retention are idempotent. Only a lease holder runs it: a live
+    * compactor's staging is its rewrite, and a partition published
+    * into after a crash makes its aside copy look stale. */
   private def heal(): Unit = {
     tornSwaps().foreach { case (old, live) =>
       if (fs.exists(live)) fs.delete(old, true)
@@ -613,12 +628,13 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     fs.delete(new Path(stagingDir), true)
     fs.delete(new Path(asideDir), true)
     reconcileHeads()
+    fs.delete(intentPath, false)
   }
 
   /** Set the heads sidecar to the elementwise max of itself and a log
     * scan: a crashed publish leaves the scan ahead, a fully-trimmed
-    * partition the sidecar. The stale break's repair; it only ever
-    * moves a head forward and drops nothing. */
+    * partition the sidecar. [[heal]]'s heads step; it only ever moves
+    * a head forward and drops nothing. */
   private def reconcileHeads(): Unit = {
     val sidecar = readSidecar().getOrElse(Map.empty[Int, Long])
     val scanned = scanHeads()
@@ -626,10 +642,6 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
       p -> math.max(sidecar.getOrElse(p, -1L), scanned.getOrElse(p, -1L))
     }.toMap)
   }
-
-  /** Test-only: a steal injection models a real breaker, which runs
-    * `onStaleBreak` (this reconcile) BEFORE it deletes the lock. */
-  private[graft] def reconcileHeadsForTest(): Unit = reconcileHeads()
 
   /** Every `_old.log_part=N` or `_old.log_date=D` dir a torn swap left
     * behind, paired with its live twin: in the `log.aside` tree, and
@@ -648,9 +660,10 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     olds(new Path(asideDir), new Path(logDir)) ++ olds(new Path(logDir), new Path(logDir))
   }
 
-  /** Whether a swap left its staging or aside tree for [[heal]]. Only
-    * the open also looks for in-tree `_old.` dirs (legacy swaps). */
-  private def swapLeftovers(): Boolean =
+  /** Whether the last holder left a publish intent or a swap's staging
+    * or aside tree for [[heal]]. Only the open also looks for a dead
+    * lock and in-tree `_old.` dirs (legacy swaps). */
+  private def leftovers(): Boolean = fs.exists(intentPath) ||
     fs.exists(new Path(stagingDir)) || fs.exists(new Path(asideDir))
 
   // ------------------------------------------------------ swap machinery

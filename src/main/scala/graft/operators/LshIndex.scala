@@ -355,16 +355,9 @@ object LshIndex {
             // re-validation under a fresh lease normally succeeds
             // without re-deriving at all, so retry bounded instead of
             // surfacing the transient to a probe.
-            def attempt(n: Int): Manifest =
-              try lease(spark, path).withLeaseHeld { held =>
-                validatedManifestLocked(spark, path, held)
-              } catch {
-                case e: FsLease.FencedException if n > 1 =>
-                  org.slf4j.LoggerFactory.getLogger(getClass)
-                    .warn(s"retrying fenced LSH repair on $path: $e")
-                  attempt(n - 1)
-              }
-            attempt(3)
+            withLeaseRetrying(spark, path, "repair") { (held, _) =>
+              validatedManifestLocked(spark, path, held)
+            }
         }
     }
   }
@@ -376,7 +369,7 @@ object LshIndex {
     *
     * The in-JVM `validated` cache is trusted here ONLY because every
     * crashed same-JVM writer path invalidates it on the way out
-    * ([[appendSignaturesOnce]]'s throw-wrap): a writer killed AFTER
+    * ([[withLeaseRetrying]]): a writer killed AFTER
     * its signature write who retried in the same JVM used to reuse
     * the pre-crash verdict, anti-join-skip its own orphaned rows, and
     * leave them out of every segment forever — the exact silent skip
@@ -723,188 +716,183 @@ object LshIndex {
     appendSignatures(index, Dedup.minhashSignatures(newDocs), assumeNew)
 
   def appendSignatures(index: Index, newSig: DataFrame,
-      assumeNew: Boolean = false): Index =
-    appendSignaturesRetrying(index, newSig, assumeNew, attempts = 3)
-
-  /** The append body, with a bounded retry on a FENCED publish: a
-    * fence abort means our lease was stale-broken mid-append (renewal
-    * starvation) — the marker still points at the published state, so
-    * the retry re-acquires the lease and its watermark re-validation
-    * folds our orphaned signature rows in via the standard crash
-    * repair. The thief's publish (if any) is never torn: the marker
-    * rename is the only visible commit and last-writer-wins. */
-  private def appendSignaturesRetrying(index: Index, newSig: DataFrame,
-      assumeNew: Boolean, attempts: Int): Index =
-    try appendSignaturesOnce(index, newSig, assumeNew)
-    catch {
-      case e: FsLease.FencedException if attempts > 1 =>
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"retrying fenced LSH append on ${index.path}: $e")
-        // drop this path's in-JVM watermark verdicts: our aborted
-        // attempt left signatures ahead of the manifest under the SAME
-        // generation the cache already validated — without this the
-        // retry would trust the stale verdict, skip the repair, and
-        // the orphaned rows would be anti-join-skipped yet invisible
-        // to probes (the exact silent-skip the watermark check exists
-        // to prevent); a racing thief's publish is re-read too
-        validated.removeIf(_._1 == index.path)
-        // NEVER assumeNew on a retry: the fenced attempt may have
-        // landed its signature rows (the repair then counts them), so
-        // the caller's fresh-ids guarantee no longer holds — the
-        // anti-join skip is what makes the retry exactly-once
-        appendSignaturesRetrying(index, newSig, assumeNew = false,
-          attempts - 1)
-    }
-
-  /** One append attempt. ANY failure (fence, injected kill, OOM, a
-    * concurrent delete racing a staging write) drops this path's
-    * in-JVM watermark verdicts before rethrowing: a crashed attempt
-    * may have landed signature rows the cached verdict predates, and
-    * a same-JVM retry — ours or the caller's own supervision loop —
-    * must re-validate and fold them in via the watermark repair
-    * rather than anti-join-skip them into segment-less oblivion
-    * (chaos-spec-pinned). */
-  private def appendSignaturesOnce(index: Index, newSig: DataFrame,
-      assumeNew: Boolean): Index =
-    try appendSignaturesBody(index, newSig, assumeNew)
-    catch {
-      case t: Throwable =>
-        validated.removeIf(_._1 == index.path)
-        throw t
-    }
-
-  private def appendSignaturesBody(index: Index, newSig: DataFrame,
-      assumeNew: Boolean): Index = {
-    val spark = index.spark
-    val path = index.path
-    lease(spark, path).withLeaseHeld { held =>
-      // watermark check FIRST (under the lease): a crashed previous
-      // append leaves signatures ahead of the manifest — repair before
-      // compounding on top of it
-      val m0 = validatedManifestLocked(spark, path, held)
-      val fresh = graft.GraftSession.ckpt(
-        if (assumeNew) newSig
-        else newSig.join(
-          spark.read.parquet(s"$path/${m0.sigDir}").select(col("doc_id")),
-          Seq("doc_id"), "left_anti"))
-      val freshN = fresh.count()
-      if (freshN > 0L) {
-        fresh.write.mode("append").parquet(s"$path/${m0.sigDir}")
-        val gen = m0.gen + 1
-        val segName = s"seg-$gen"
-        val f = fs(spark, path)
-        fenceStagingDelete(spark, held, path, gen, segName) // crashed-append orphan
-        f.delete(new Path(s"$path/$segName"), true)
-        Dedup.bands(fresh)
-          .sortWithinPartitions("band", "k1", "k2")
-          .write.parquet(s"$path/$segName/bands")
-        writeKc(spark.read.parquet(s"$path/$segName/bands")
-          .groupBy(col("band"), col("k1"), col("k2"))
-          .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("anchor")),
-          s"$path/$segName/kc", wide = false)
-        val kcB = spark.read.parquet(s"$path/$segName/kc")
-        val batchBands = freshN * Dedup.BANDS
-        val totNew = (m0.sigRows + freshN) * Dedup.BANDS
-        def kcUnion(segs: Seq[SegInfo]): DataFrame =
-          segs.map(sg => spark.read.parquet(s"$path/${sg.name}/kc"))
-            .reduce(_.unionByName(_))
-
-        // Below ~2,560 docs the whole key-count table is smaller than
-        // one shuffle partition: recompute warm outright. Above it the
-        // warm ratio ALONE implies the hot rule's member floor
-        // (tot/WarmFactor ≥ CapFloor), which the incremental path's
-        // soundness argument relies on.
-        val warmNew: Seq[KeyStat] =
-          if (totNew < Blocking.CapFloor.toLong * WarmFactor)
-            kcUnion(m0.segs :+ SegInfo(segName, batchBands))
-              .groupBy(col("band"), col("k1"), col("k2"))
-              .agg(sum(col("bn")).as("bn"), min(col("anchor")).as("anchor"))
-              .filter(col("bn") * lit(WarmFactor) > lit(totNew))
-              .collect().map(rowToKeyStat).toSeq
-          else {
-            // exact batch contribution to each standing warm key
-            // (≤160 collected rows)
-            val touched: Map[(Int, Long, Long), (Long, Long)] =
-              if (m0.warm.isEmpty) Map.empty
-              else kcB.join(broadcast(keysDf(spark, m0.warm)),
-                  Seq("band", "k1", "k2"), "left_semi")
-                .collect()
-                .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
-                  (r.getLong(3), r.getLong(4))).toMap
-            val warmUpdated = m0.warm.map { w =>
-              val (dBn, dAnchor) =
-                touched.getOrElse((w.band, w.k1, w.k2), (0L, Long.MaxValue))
-              KeyStat(w.band, w.k1, w.k2, w.bn + dBn, math.min(w.anchor, dAnchor))
-            }
-            // risky keys: > 1/WarmFactor of the BATCH's own band rows
-            // (provably < WarmFactor of them) — the only keys that can
-            // newly cross the warm ratio this append (the induction in
-            // the class scaladoc). A batch smaller than WarmFactor
-            // bands makes every touched key nominally risky, so the
-            // lookup is TWO-PHASE to stay sub-index:
-            //  1. candidates: WEIGHTED pigeonhole (r11 — robust to
-            //     tiering's larger segment counts): a key with
-            //     standing total ≥ lo+1 over R total band rows must
-            //     hold count ≥ ceil((lo+1)·rows_i/R) in SOME segment i
-            //     (if every share were below its weighted bar the sum
-            //     would fall short of lo+1). Each segment gets its own
-            //     bar ∝ its size — near-exact pruning on the big
-            //     standing segment, where the old uniform
-            //     ceil((lo+1)/nSegs) bar collapsed toward 1 as tiering
-            //     multiplies nSegs. Filters push to the bn-desc-sorted
-            //     kc parquet, so clean segments are skipped on footer
-            //     stats alone (rows read: zero).
-            //  2. exact totals (all segments, keyed semi-join) only
-            //     for risky ∩ candidates — near-hot keys genuinely
-            //     being crossed, normally none.
-            val warmKeySet = m0.warm.map(w => (w.band, w.k1, w.k2)).toSet
-            val risky = kcB
-              .filter(col("bn") * lit(WarmFactor) > lit(batchBands))
-              .collect().map(rowToKeyStat)
-              .filter(k => !warmKeySet.contains((k.band, k.k1, k.k2))).toSeq
-            val riskyTotals: Seq[KeyStat] =
-              if (risky.isEmpty) Seq.empty
-              else {
-                val lo = totNew / WarmFactor - risky.map(_.bn).max
-                val totStanding = math.max(1L, m0.segs.map(_.rows).sum)
-                val candidates = m0.segs.map { sg =>
-                    val bar = math.max(1L,
-                      ((lo + 1L) * sg.rows + totStanding - 1L) / totStanding)
-                    spark.read.parquet(s"$path/${sg.name}/kc")
-                      .filter(col("bn") >= lit(bar))
-                  }
-                  .reduce(_.unionByName(_))
-                  .join(broadcast(keysDf(spark, risky)),
-                    Seq("band", "k1", "k2"), "left_semi")
-                  .select(col("band"), col("k1"), col("k2"))
-                  .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-                  .toSet
-                val lookup = risky.filter(k =>
-                  candidates.contains((k.band, k.k1, k.k2)))
-                if (lookup.isEmpty) Seq.empty
-                else kcUnion(m0.segs :+ SegInfo(segName, batchBands))
-                  .join(broadcast(keysDf(spark, lookup)),
-                    Seq("band", "k1", "k2"), "left_semi")
-                  .groupBy(col("band"), col("k1"), col("k2"))
-                  .agg(sum(col("bn")).as("bn"), min(col("anchor")).as("anchor"))
-                  .collect().map(rowToKeyStat).toSeq
-              }
-            warmUpdated ++ riskyTotals
-          }
-        val warmKept = warmNew.filter(w => w.bn * WarmFactor > totNew)
-
-        // size-tiered segment compaction — see [[TierFactor]]'s doc:
-        // merges only within a full size class, so one append's
-        // rewrite work is bounded by that class, never the index
-        val segsFinal = compactTiers(spark, path, gen,
-          m0.segs :+ SegInfo(segName, batchBands), held)
-
-        publish(spark, path, Manifest(gen, m0.sigRows + freshN, m0.sigDir,
-          m0.fingerprint, segsFinal, warmKept,
-          retainK = math.max(retainGens(spark), m0.retainK)), held)
-      }
+      assumeNew: Boolean = false): Index = {
+    withLeaseRetrying(index.spark, index.path, "append") { (held, attempt) =>
+      // NEVER assumeNew on a retry: the fenced attempt may have landed
+      // its signature rows (the repair then counts them), so the
+      // caller's fresh-ids guarantee no longer holds — the anti-join
+      // skip is what makes the retry exactly-once
+      appendSignaturesLocked(index, newSig, assumeNew && attempt == 1, held)
     }
     index
+  }
+
+  /** Run a writer body under `path`'s lease, with a bounded retry on a
+    * FENCED abort: up to 3 attempts, each retry logged. A fence abort
+    * means our lease was stale-broken mid-write (renewal starvation) —
+    * the marker still points at the published state, so the retry
+    * re-acquires the lease and its watermark re-validation folds our
+    * orphaned signature rows in via the standard crash repair. The
+    * thief's publish (if any) is never torn: the marker rename is the
+    * only visible commit and last-writer-wins. `body` gets the 1-based
+    * attempt number.
+    *
+    * ANY failure (fence, injected kill, OOM, a concurrent delete racing
+    * a staging write) drops this path's in-JVM watermark verdicts
+    * before the retry or the rethrow: a failed attempt may have landed
+    * signature rows under the SAME generation the cache already
+    * validated, and a same-JVM retry — ours or the caller's own
+    * supervision loop — must re-validate and fold them in via the
+    * watermark repair rather than anti-join-skip them into
+    * segment-less oblivion (chaos-spec-pinned). */
+  private def withLeaseRetrying[T](spark: SparkSession, path: String,
+      what: String)(body: (FsLease.Held, Int) => T): T = {
+    def attempt(n: Int): T =
+      try lease(spark, path).withLeaseHeld(body(_, n))
+      catch {
+        case e: Throwable =>
+          validated.removeIf(_._1 == path)
+          e match {
+            case f: FsLease.FencedException if n < 3 =>
+              org.slf4j.LoggerFactory.getLogger(getClass)
+                .warn(s"retrying fenced LSH $what on $path: $f")
+              attempt(n + 1)
+            case _ => throw e
+          }
+      }
+    attempt(1)
+  }
+
+  /** One append attempt, under the writer lease `held`. */
+  private def appendSignaturesLocked(index: Index, newSig: DataFrame,
+      assumeNew: Boolean, held: FsLease.Held): Unit = {
+    val spark = index.spark
+    val path = index.path
+    // watermark check FIRST (under the lease): a crashed previous
+    // append leaves signatures ahead of the manifest — repair before
+    // compounding on top of it
+    val m0 = validatedManifestLocked(spark, path, held)
+    val fresh = graft.GraftSession.ckpt(
+      if (assumeNew) newSig
+      else newSig.join(
+        spark.read.parquet(s"$path/${m0.sigDir}").select(col("doc_id")),
+        Seq("doc_id"), "left_anti"))
+    val freshN = fresh.count()
+    if (freshN > 0L) {
+      fresh.write.mode("append").parquet(s"$path/${m0.sigDir}")
+      val gen = m0.gen + 1
+      val segName = s"seg-$gen"
+      val f = fs(spark, path)
+      fenceStagingDelete(spark, held, path, gen, segName) // crashed-append orphan
+      f.delete(new Path(s"$path/$segName"), true)
+      Dedup.bands(fresh)
+        .sortWithinPartitions("band", "k1", "k2")
+        .write.parquet(s"$path/$segName/bands")
+      writeKc(spark.read.parquet(s"$path/$segName/bands")
+        .groupBy(col("band"), col("k1"), col("k2"))
+        .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("anchor")),
+        s"$path/$segName/kc", wide = false)
+      val kcB = spark.read.parquet(s"$path/$segName/kc")
+      val batchBands = freshN * Dedup.BANDS
+      val totNew = (m0.sigRows + freshN) * Dedup.BANDS
+      def kcUnion(segs: Seq[SegInfo]): DataFrame =
+        segs.map(sg => spark.read.parquet(s"$path/${sg.name}/kc"))
+          .reduce(_.unionByName(_))
+
+      // Below ~2,560 docs the whole key-count table is smaller than
+      // one shuffle partition: recompute warm outright. Above it the
+      // warm ratio ALONE implies the hot rule's member floor
+      // (tot/WarmFactor ≥ CapFloor), which the incremental path's
+      // soundness argument relies on.
+      val warmNew: Seq[KeyStat] =
+        if (totNew < Blocking.CapFloor.toLong * WarmFactor)
+          kcUnion(m0.segs :+ SegInfo(segName, batchBands))
+            .groupBy(col("band"), col("k1"), col("k2"))
+            .agg(sum(col("bn")).as("bn"), min(col("anchor")).as("anchor"))
+            .filter(col("bn") * lit(WarmFactor) > lit(totNew))
+            .collect().map(rowToKeyStat).toSeq
+        else {
+          // exact batch contribution to each standing warm key
+          // (≤160 collected rows)
+          val touched: Map[(Int, Long, Long), (Long, Long)] =
+            if (m0.warm.isEmpty) Map.empty
+            else kcB.join(broadcast(keysDf(spark, m0.warm)),
+                Seq("band", "k1", "k2"), "left_semi")
+              .collect()
+              .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
+                (r.getLong(3), r.getLong(4))).toMap
+          val warmUpdated = m0.warm.map { w =>
+            val (dBn, dAnchor) =
+              touched.getOrElse((w.band, w.k1, w.k2), (0L, Long.MaxValue))
+            KeyStat(w.band, w.k1, w.k2, w.bn + dBn, math.min(w.anchor, dAnchor))
+          }
+          // risky keys: > 1/WarmFactor of the BATCH's own band rows
+          // (provably < WarmFactor of them) — the only keys that can
+          // newly cross the warm ratio this append (the induction in
+          // the class scaladoc). A batch smaller than WarmFactor
+          // bands makes every touched key nominally risky, so the
+          // lookup is TWO-PHASE to stay sub-index:
+          //  1. candidates: WEIGHTED pigeonhole (r11 — robust to
+          //     tiering's larger segment counts): a key with
+          //     standing total ≥ lo+1 over R total band rows must
+          //     hold count ≥ ceil((lo+1)·rows_i/R) in SOME segment i
+          //     (if every share were below its weighted bar the sum
+          //     would fall short of lo+1). Each segment gets its own
+          //     bar ∝ its size — near-exact pruning on the big
+          //     standing segment, where the old uniform
+          //     ceil((lo+1)/nSegs) bar collapsed toward 1 as tiering
+          //     multiplies nSegs. Filters push to the bn-desc-sorted
+          //     kc parquet, so clean segments are skipped on footer
+          //     stats alone (rows read: zero).
+          //  2. exact totals (all segments, keyed semi-join) only
+          //     for risky ∩ candidates — near-hot keys genuinely
+          //     being crossed, normally none.
+          val warmKeySet = m0.warm.map(w => (w.band, w.k1, w.k2)).toSet
+          val risky = kcB
+            .filter(col("bn") * lit(WarmFactor) > lit(batchBands))
+            .collect().map(rowToKeyStat)
+            .filter(k => !warmKeySet.contains((k.band, k.k1, k.k2))).toSeq
+          val riskyTotals: Seq[KeyStat] =
+            if (risky.isEmpty) Seq.empty
+            else {
+              val lo = totNew / WarmFactor - risky.map(_.bn).max
+              val totStanding = math.max(1L, m0.segs.map(_.rows).sum)
+              val candidates = m0.segs.map { sg =>
+                  val bar = math.max(1L,
+                    ((lo + 1L) * sg.rows + totStanding - 1L) / totStanding)
+                  spark.read.parquet(s"$path/${sg.name}/kc")
+                    .filter(col("bn") >= lit(bar))
+                }
+                .reduce(_.unionByName(_))
+                .join(broadcast(keysDf(spark, risky)),
+                  Seq("band", "k1", "k2"), "left_semi")
+                .select(col("band"), col("k1"), col("k2"))
+                .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+                .toSet
+              val lookup = risky.filter(k =>
+                candidates.contains((k.band, k.k1, k.k2)))
+              if (lookup.isEmpty) Seq.empty
+              else kcUnion(m0.segs :+ SegInfo(segName, batchBands))
+                .join(broadcast(keysDf(spark, lookup)),
+                  Seq("band", "k1", "k2"), "left_semi")
+                .groupBy(col("band"), col("k1"), col("k2"))
+                .agg(sum(col("bn")).as("bn"), min(col("anchor")).as("anchor"))
+                .collect().map(rowToKeyStat).toSeq
+            }
+          warmUpdated ++ riskyTotals
+        }
+      val warmKept = warmNew.filter(w => w.bn * WarmFactor > totNew)
+
+      // size-tiered segment compaction — see [[TierFactor]]'s doc:
+      // merges only within a full size class, so one append's
+      // rewrite work is bounded by that class, never the index
+      val segsFinal = compactTiers(spark, path, gen,
+        m0.segs :+ SegInfo(segName, batchBands), held)
+
+      publish(spark, path, Manifest(gen, m0.sigRows + freshN, m0.sigDir,
+        m0.fingerprint, segsFinal, warmKept,
+        retainK = math.max(retainGens(spark), m0.retainK)), held)
+    }
   }
 
   // ------------------------------------------------------- compaction

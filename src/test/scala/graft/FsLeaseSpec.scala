@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.log.FsLease
@@ -68,32 +68,38 @@ class FsLeaseSpec extends AnyFunSuite {
     assert(labels.toSeq == Seq("plain step", "steal here", "after the steal"))
   }
 
-  test("a stale break repairs before its compare-and-delete and spares a fresh lock") {
+  test("a stale break is a bare compare-and-delete and spares a re-taken or fresh lock") {
     val (f, p) = freshLock()
     val stale = FsLease.StaleAfterMs + 10 * 1000L
-    // a dead holder's lock: the acquirer's repair runs while the lock
-    // still exists, then the lock is deleted and taken over
-    var lockSeenByRepair = false
+    // a dead holder's lock is deleted and taken over
     writeLock(f, "dead-token", stale)
-    val lease = new FsLease(fsOf(p), p, () => lockSeenByRepair = f.exists())
+    val lease = new FsLease(fsOf(p), p)
     assert(!lease.liveHolder())
     val held = lease.acquire(300L)
-    assert(lockSeenByRepair, "onStaleBreak must run before the delete")
     assert(Files.readString(f.toPath) != "dead-token", "a stale lock is broken")
     held.release()
     assert(!f.exists() && !lease.liveHolder())
-    // a waiter re-acquires while our repair runs: the compare-and-delete
-    // sees a different (mtime, token) and leaves the live lock alone
+    // a waiter re-acquires between our staleness judgment (the first
+    // stat of the lock) and our compare (the second): the compare sees
+    // a different (mtime, token) and leaves the live lock alone
     writeLock(f, "dead-token", stale)
-    intercept[IllegalStateException](
-      new FsLease(fsOf(p), p, () => writeLock(f, "live-token", 0L)).acquire(300L))
+    val stats = new java.util.concurrent.atomic.AtomicInteger(0)
+    val racing = new FilterFileSystem(fsOf(p)) {
+      override def getScheme: String = "file"
+      override def getFileStatus(q: Path): FileStatus = {
+        if (q == p && stats.incrementAndGet() == 2) writeLock(f, "live-token", 0L)
+        super.getFileStatus(q)
+      }
+    }
+    intercept[IllegalStateException](new FsLease(racing, p).acquire(300L))
+    assert(stats.get() >= 2, "the compare never ran")
     assert(f.exists() && Files.readString(f.toPath) == "live-token")
-    // a fresh lock is a live holder: no repair, no delete
-    var repaired = false
-    val observer = new FsLease(fsOf(p), p, () => repaired = true)
+    // a fresh lock is a live holder: no delete
+    val observer = new FsLease(fsOf(p), p)
     assert(observer.liveHolder())
     intercept[IllegalStateException](observer.acquire(300L))
-    assert(!repaired && f.exists(), "a fresh lock must be left alone")
+    assert(f.exists() && Files.readString(f.toPath) == "live-token",
+      "a fresh lock must be left alone")
   }
 
   test("the renewal daemon keeps a held lock live past the stale window") {

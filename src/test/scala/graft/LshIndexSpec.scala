@@ -818,10 +818,10 @@ class LshIndexSpec extends AnyFunSuite {
   }
 
   test("stale dead-holder lock: the breaker repairs the half-written state before appending") {
-    // The FsLease scaladoc contract (r11 verdict ask #5): LshIndex
-    // passes NO onStaleBreak because its repair runs post-acquisition
-    // — a waiter that breaks a dead holder's lock must still fold the
-    // dead holder's orphaned signature rows in before building on top.
+    // The FsLease scaladoc contract: a stale break repairs nothing, and
+    // LshIndex's repair runs post-acquisition — a waiter that breaks a
+    // dead holder's lock must still fold the dead holder's orphaned
+    // signature rows in before building on top.
     val dir = Files.createTempDirectory("lshix").toString
     val ix = LshIndex.build(corpus, s"$dir/ix")
     // dead holder: signature rows landed, no publish, lock left behind

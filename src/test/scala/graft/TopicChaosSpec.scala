@@ -36,22 +36,21 @@ import graft.log.{FsLease, TopicLog}
   *    and afterwards every txn has its marker and a redelivery returns
   *    the recorded ranges without appending.
   *
-  * Injection model (and why the steal reconciles first): a KILL
-  * (thrown exception) models an IO failure / crash inside the fence —
-  * the holder's own catch-all reconcile (r14) must absorb it. A STEAL
-  * models a waiter's token-CAS break after renewal starvation — and a
-  * REAL breaker always runs `onStaleBreak` (the heads reconcile)
-  * BEFORE deleting the lock (FsLease.breakStale), so the injection
-  * reconciles then deletes; a raw delete would simulate a protocol
-  * violation no conforming waiter commits. A writer abort at the
-  * txn-marker fence lands AFTER the data append and before the marker,
-  * so each one orphans one extra copy of its batch (the documented
-  * at-least-once window); the orphan's offsets are folded into heads
-  * by the reconcile, the retry re-appends at higher offsets, and
-  * compaction (unique keys) collapses orphans back out — the
-  * assertions below account for exactly that. An abort at the
-  * heads-sidecar fence lands after the marker: the retry finds it and
-  * appends nothing, so it orphans nothing.
+  * Injection model: a KILL (thrown exception) models an IO failure /
+  * crash inside the fence — the holder's own catch-all reconcile
+  * (r14) must absorb it. A STEAL models a waiter's token-CAS break
+  * after renewal starvation: the break deletes the lock and writes
+  * nothing else (FsLease.breakStale), so the injection only deletes
+  * it, and the fenced-out writer's publish intent makes the next
+  * holder heal. A writer abort at the txn-marker fence lands AFTER the
+  * data append and before the marker, so each one orphans one extra
+  * copy of its batch (the documented at-least-once window); the
+  * orphan's offsets are folded into heads by the heal, the retry
+  * re-appends at higher offsets, and compaction (unique keys)
+  * collapses orphans back out — the assertions below account for
+  * exactly that. An abort at the heads-sidecar fence lands after the
+  * marker: the retry finds it and appends nothing, so it orphans
+  * nothing.
   */
 class TopicChaosSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -119,10 +118,8 @@ class TopicChaosSpec extends AnyFunSuite {
           if (r < 0.33) {
             firings.incrementAndGet()
             if (what.startsWith("txn marker")) orphans.incrementAndGet()
-            if (r < 0.18) {
-              main.reconcileHeadsForTest() // the breaker's onStaleBreak
-              lock.delete()
-            } else throw new ChaosKill // holder's catch-all must reconcile
+            if (r < 0.18) lock.delete() // the next holder heals
+            else throw new ChaosKill // holder's catch-all must reconcile
           }
         } else if (name.startsWith("topicchaos-maint")) {
           // marker pruning, partition-dir swaps, size-retention fences

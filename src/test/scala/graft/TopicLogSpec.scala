@@ -102,6 +102,13 @@ class TopicLogSpec extends AnyFunSuite {
     // exactly the documented marker-loss contract
     topic.publishIdempotent(mkRecords(10), "old-txn")
     assert(topic.read().count() == 30)
+    // the direct trigger, for a topic with no maintenance schedule
+    val freshMarker = new org.apache.hadoop.fs.Path(s"$dir/txns/fresh-txn")
+    fs.setTimes(freshMarker,
+      System.currentTimeMillis() - TopicLog.TxnMarkerTtlMs - 60000L, -1L)
+    topic.pruneTxnMarkers()
+    assert(!fs.exists(freshMarker), "expired marker not pruned by pruneTxnMarkers")
+    assert(fs.exists(oldMarker), "a fresh marker must survive pruneTxnMarkers")
   }
 
   test("publishIdempotent: two publishers racing the SAME txn commit it once") {
@@ -521,22 +528,51 @@ class TopicLogSpec extends AnyFunSuite {
     assert(records() == before, "records lost across the steal")
   }
 
-  test("a stale break reconciles heads only: a winning waiter's staging survives it") {
+  test("a stale break writes nothing but the lock: staging and the heads sidecar survive it, the next holder heals") {
     // two waiters judge the same dead lock stale; the one that broke it
     // first may already hold the lease and be writing its staged
-    // rewrite when the other runs its onStaleBreak
+    // rewrite or its publish when the other breaks. So a break deletes
+    // the lock and nothing else, even after a crashed publish: the
+    // next holder heals that
     val dir = Files.createTempDirectory("topic").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 2)
     topic.publish(mkRecords(20))
-    val staging = new java.io.File(s"$dir/log.staging/log_part=0")
-    assert(staging.mkdirs())
     val lock = new java.io.File(s"$dir/_publish.lock")
-    Files.writeString(lock.toPath, "dead-writer")
+    // a crashed publish: the lease is stolen at the sidecar fence, so
+    // the batch is appended and the heads sidecar is left behind
+    FsLease.testBeforeFence = what =>
+      if (what == "the heads sidecar") {
+        FsLease.testBeforeFence = _ => () // fire once
+        lock.delete()
+        Files.writeString(lock.toPath, "dead-writer")
+      }
+    try intercept[FsLease.FencedException](topic.publish(mkRecords(20, startId = 20)))
+    finally FsLease.testBeforeFence = _ => ()
+    assert(topic.read().count() == 40)
+    // the thief dies too, and a compactor's staging tree is in place
     assert(lock.setLastModified(
       System.currentTimeMillis() - FsLease.StaleAfterMs - 10 * 1000L))
+    val staging = new java.io.File(s"$dir/log.staging/log_part=0")
+    assert(staging.mkdirs())
+    val sidecar = java.nio.file.Paths.get(s"$dir/_offsets.json")
+    val sidecarBefore = Files.readAllBytes(sidecar)
     topic.acquirePublishLockForTest(5000L).release()
     assert(staging.isDirectory, "a stale break dropped a staging tree")
-    assert(topic.heads().values.map(_ + 1).sum == 20L)
+    assert(java.util.Arrays.equals(Files.readAllBytes(sidecar), sidecarBefore),
+      "a stale break rewrote the heads sidecar")
+    // the staging tree's owner finishes and drops it, so only the
+    // crashed publish's intent is left to make the next holder heal:
+    // its publish continues after the crashed batch and re-issues none
+    // of its offsets
+    assert(org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$dir/log.staging")))
+    val landed = topic.read().groupBy(col("log_part")).agg(max(col("offset")))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val r = topic.publish(mkRecords(10, startId = 100))
+    assert(r.nonEmpty && r.forall { case (p, rng) => rng.base == landed(p) },
+      s"ranges $r do not start after the crashed batch's $landed")
+    assert(dupOffsets(topic) == 0L)
+    assert(topic.heads().values.map(_ + 1).sum == 50L,
+      "heads must account for every record")
   }
 
   test("prepare works with an explicit file:// URI (Hadoop mkdirs, not java.io)") {
@@ -1054,8 +1090,7 @@ class TopicLogSpec extends AnyFunSuite {
     FsLease.testBeforeFence = what =>
       if (what == "the heads sidecar") {
         FsLease.testBeforeFence = _ => () // fire once
-        // a real breaker: onStaleBreak (the reconcile), then the steal
-        topic.reconcileHeadsForTest()
+        // a waiter breaks our lock and takes the lease
         lock.delete()
         java.nio.file.Files.writeString(lock.toPath, "thief-token")
       }

@@ -248,7 +248,6 @@ class TopicStreamSpec extends AnyFunSuite {
     FsLease.testBeforeFence = what =>
       if (what == "the heads sidecar") {
         FsLease.testBeforeFence = _ => () // fire once
-        dst.reconcileHeadsForTest()
         lock.delete()
         Files.writeString(lock.toPath, "thief-token")
       }

@@ -8,9 +8,12 @@
 #       the grading driver's independent run self-adjudicates too).
 # Order: audit first (cheap), bench LAST and alone — the bench is the
 # only load-sensitive artifact and must not share the box with an
-# audit JVM.
+# audit JVM. The bench runs on local[CPUS]; CPUS defaults to the
+# machine's core count (as tools/fuzz_gate.sh and the tier-1 command
+# do), so set CPUS=32 to reproduce a 32-core artifact.
 set -euo pipefail
 N="${1:?usage: close_round.sh <round-number>}"
+CPUS="${CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 cd "$(dirname "$0")/.."
 
 echo "== plan audit (sf0.01) =="
@@ -26,7 +29,7 @@ for _ in $(seq 1 40); do
 done
 # graft.Bench prints "metric" lines: the full one (with "queries"), the
 # per-query chunks and a compact total; the artifact is the full one alone
-SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
+SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   sbt -batch "runMain graft.Bench" 2>/dev/null \
   | grep -a '"metric"' | grep -a '"queries"' | sed 's/^\[info\] //' \
   > "BENCH_LOCAL_r${N}.json"
